@@ -173,38 +173,6 @@ object Bench {
   private[graft] def cotenancyClean(samples: Seq[LoadSample]): Boolean =
     samples.forall(s => s.otherJava == 0 && s.load1 <= MaxCleanLoad1)
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // v2 commit algorithm: task-side output promotion instead of a
-      // driver-side serial rename of every file — the staged (stage-table
-      // IO) shape's commit cost then scales with cores instead of being a
-      // fixed serial fraction (VERDICT r2: staged 2→8 Amdahl-capped at
-      // ~0.57 by the driver-side commit)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // Force the serialized (Unsafe) shuffle writer. With
-      // shuffle.partitions = cores (< the default bypassMergeThreshold of
-      // 200) every SQL exchange here selects the bypass-merge writer,
-      // which opens numPartitions shuffle files per map task — a writer a
-      // 100 TB cluster run (partitions >> 200) never uses. Forcing the
-      // cluster-scale writer (one sorted file + index per map task) both
-      // matches what production would run and removes the profiled ~25%
-      // of busy executor samples spent in shuffle file IO at local[32]:
-      // interleaved flagship A/B best-of-3 11.1s -> 8.4s at 32 cores, a
-      // wash at 2 and 8 cores (r7 KgTime A/B).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.shuffle.file.buffer", "256k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** (triples counted, seconds) for one full KG pipeline run at `mult`×
     * the sf corpus — the job must run long enough at the LOW core count
     * that parallel work, not fixed per-query overhead, dominates.
@@ -307,7 +275,7 @@ object Bench {
     var lo = Side(Nil, Nil, Nil)
     var hi = Side(Nil, Nil, Nil)
     (1 to rounds).foreach { round =>
-      val sLo = session(loCores)
+      val sLo = Sessions.local(loCores)
       // the noop control runs once per ROUND per side, in the SAME session
       // as that round's rep (VERDICT r5 next #1: a single round-1 noop
       // subtracted from a best-rep in a different window shipped negative
@@ -325,7 +293,7 @@ object Bench {
       }
       val (nn, tLo, phLo) = kgRun(sLo, sfDir, mult, staged)
       sLo.stop()
-      val sHi = session(hiCores)
+      val sHi = Sessions.local(hiCores)
       if (staged) {
         noopRun(sHi, sfDir, mult) // warm-up, discarded
         hi = hi.copy(noops = hi.noops :+ noopRun(sHi, sfDir, mult))
@@ -589,7 +557,7 @@ object Bench {
 
   private def queryAttempt(sfDir: String, reps: Int = 2): QueryAttempt = {
     val pre = probe()
-    val s32 = session(32)
+    val s32 = Sessions.local(32)
     var failures = List.empty[(String, String)]
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => oracleOnly.contains(name) }
@@ -640,7 +608,7 @@ object Bench {
     * replays, not just in a test). THE SAME traversal as the PipelineSpec/
     * Round7Spec plan asserts — [[graft.util.PlanOps]], one definition. */
   private def stagedReadbackExchanges(sfDir: String): Int = {
-    val s = session(8)
+    val s = Sessions.local(8)
     val dir = java.nio.file.Files.createTempDirectory("graft_bench_rb")
     try {
       val base = SparkEntry.cfgOf(sfDir)
@@ -715,7 +683,7 @@ object Bench {
     // global warm-up: JIT + codegen + automaton caches are JVM-wide; the
     // throwaway bw measurement pages in the 512 MB probe array so the
     // first real probe doesn't read low on first-touch faults
-    val sWarm = session(8)
+    val sWarm = Sessions.local(8)
     kgRun(sWarm, sfDir, multA)
     sWarm.stop()
     memBwBytesPerSec(8, 1)
@@ -759,7 +727,7 @@ object Bench {
     // pairs are standing on bucket luck (measured: sf0.01 gate corpus 5 —
     // inside the ball; sf0.1 reaches 12, documented as luck-recalled).
     val (mhDropped, shDropped, mhRecallDropped, shRecallDropped, shMaxHam) = {
-      val s = session(8)
+      val s = Sessions.local(8)
       try {
         val docs = s.read.parquet(s"$sfDir/documents.parquet")
         (operators.Dedup.minhashDroppedBuckets(docs, "doc_id", "text",

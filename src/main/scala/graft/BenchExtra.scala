@@ -1,170 +1,115 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Extra benchmark harness for optimization work (guide §1: measure first,
-  * isolate, re-measure). NOT the driver contract — [[Bench]] is frozen and
-  * stays the official surface; this main exists so per-query timings and
-  * `.explain("formatted")` plans can be taken quickly under EXACTLY the
-  * bench's session configuration (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions=cores, AQE on, serialized shuffle writer) without
-  * paying the ~45-minute scaling blocks.
+  * isolate, re-measure). NOT the driver contract — [[Bench]] stays the
+  * official surface; this main takes per-query timings, flagship-DAG
+  * timings and `.explain("formatted")` plans quickly under the bench's
+  * session configuration ([[Sessions.local]] at [[Sessions.hostCores]])
+  * without paying the ~45-minute scaling blocks. Every timed unit is
+  * followed by its per-stage profile (wall, executor run/CPU/GC time,
+  * shuffle read/write).
   *
-  * Usage:
-  *   sbt "runMain graft.BenchExtra [reps] [query ...]"          — time
-  *   sbt "runMain graft.BenchExtra explain [query ...]"         — plans
-  * Defaults: reps=2, all queries except the oracle-only cartesian baseline
-  * (dd_embed_neardup), same exclusion as Bench.
+  * Usage (sf dir from `SPARK_GRAFT_SF_DIR`, default sf0.1):
+  *   sbt "runMain graft.BenchExtra [reps] [query ...]"   — time queries
+  *   sbt "runMain graft.BenchExtra kg [mult] [reps]"     — time Pipeline.triples
+  *   sbt "runMain graft.BenchExtra explain [query ...]"  — plans
+  * Query defaults: reps=2, all queries except the oracle-only cartesian
+  * baseline (dd_embed_neardup), same exclusion as Bench. In timing mode
+  * only the last rep's stages are printed.
   */
 object BenchExtra {
 
-  private def session(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.shuffle.file.buffer", "256k")
-      .config("spark.ui.enabled", "false")
-    // BENCHX_CONF="k=v;k=v": measurement-only conf overrides for A/B
-    // experiments (never the bench contract — Bench.scala is frozen)
-    val s = sys.env.get("BENCHX_CONF").map(_.split(";").filter(_.contains("="))
-        .foldLeft(b) { (bb, kv) =>
-          val Array(k, v) = kv.split("=", 2); bb.config(k, v)
-        }).getOrElse(b)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** Buffers one line per completed stage until [[flush]]. */
+  private final class StageProfile extends SparkListener {
+    private val lines = new ConcurrentLinkedQueue[String]()
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val si = sc.stageInfo
+      val m = si.taskMetrics
+      val wall = (for { t0 <- si.submissionTime; t1 <- si.completionTime }
+        yield (t1 - t0) / 1e3).getOrElse(-1.0)
+      lines.add(f"  stage ${si.stageId}%4d tasks=${si.numTasks}%4d " +
+        f"wall=$wall%7.2f run=${m.executorRunTime / 1e3}%8.2f " +
+        f"cpu=${m.executorCpuTime / 1e9}%8.2f gc=${m.jvmGCTime / 1e3}%6.2f " +
+        f"shR=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.1fMB " +
+        f"shW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fMB " +
+        si.name.takeWhile(_ != '\n').take(60))
+    }
+    def clear(): Unit = lines.clear()
+    /** Prints and clears the buffered lines. The listener bus is
+      * asynchronous, so give the last stage events a moment to land. */
+    def flush(): Unit = {
+      Thread.sleep(300)
+      lines.forEach(l => println(l))
+      lines.clear()
+    }
+  }
+
+  /** Queries may cache their stage-table analogue; drop it between runs. */
+  private def sweep(s: SparkSession): Unit = {
+    s.catalog.clearCache()
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // kg mode: time the scaling-block DAG (Pipeline.triples at mult× the
-    // sf corpus — what the frozen Bench's kgRun measures) outside the
-    // 45-minute protocol. Usage: runMain graft.BenchExtra kg <mult> [reps]
-    if (args.headOption.contains("kg")) {
-      val mult = args.lift(1).map(_.toInt).getOrElse(64)
-      val reps = args.lift(2).map(_.toInt).getOrElse(2)
-      val s = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      if (sys.env.contains("BENCHX_STAGES"))
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val wall = (for { t0 <- si.submissionTime; t1 <- si.completionTime }
-              yield (t1 - t0) / 1e3).getOrElse(-1.0)
-            val m = si.taskMetrics
-            stages.add(f"  stage ${si.stageId}%4d tasks=${si.numTasks}%4d " +
-              f"wall=$wall%7.2f run=${m.executorRunTime / 1e3}%8.2f " +
-              f"gc=${m.jvmGCTime / 1e3}%6.2f shR=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.1fMB " +
-              f"shW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fMB " +
-              si.name.takeWhile(_ != '\n').take(60))
-          }
-        })
-      val base = SparkEntry.cfgOf(sfDir)
-      val cfg = base.copy(nConvs = base.nConvs * mult)
-      (1 to reps).foreach { r =>
-        stages.clear()
-        s.sparkContext.setJobDescription(s"kg mult=$mult rep $r")
-        val t0 = System.nanoTime()
-        val n = Pipeline.triples(s, cfg).count()
-        println(f"BENCHKG mult=$mult rep=$r n=$n sec=${(System.nanoTime() - t0) / 1e9}%.3f")
-        if (sys.env.contains("BENCHX_STAGES")) {
-          Thread.sleep(300); stages.forEach(l => println(l)); stages.clear()
-        }
-        s.catalog.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-      s.stop()
-      return
+    val s = Sessions.local(Sessions.hostCores)
+    val stages = new StageProfile
+    s.sparkContext.addSparkListener(stages)
+    try args.toSeq match {
+      case "kg" +: rest => kg(s, sfDir, stages, rest.map(_.toInt))
+      case "explain" +: names => explain(s, sfDir, stages, queryNames(names))
+      case rest =>
+        val reps = rest.headOption.flatMap(_.toIntOption)
+        time(s, sfDir, stages, reps.getOrElse(2),
+          queryNames(rest.drop(reps.size)))
+    } finally s.stop()
+  }
+
+  private def queryNames(args: Seq[String]): Seq[String] =
+    if (args.nonEmpty) args
+    else SparkEntry.queries.keys.toSeq.sorted.filterNot(_ == "dd_embed_neardup")
+
+  /** The scaling-block DAG (Pipeline.triples at mult× the sf corpus — what
+    * Bench's kgRun measures) outside the 45-minute protocol. */
+  private def kg(s: SparkSession, sfDir: String, stages: StageProfile,
+      args: Seq[Int]): Unit = {
+    val mult = args.lift(0).getOrElse(64)
+    val reps = args.lift(1).getOrElse(2)
+    val base = SparkEntry.cfgOf(sfDir)
+    val cfg = base.copy(nConvs = base.nConvs * mult)
+    (1 to reps).foreach { r =>
+      stages.clear()
+      s.sparkContext.setJobDescription(s"kg mult=$mult rep $r")
+      val t0 = System.nanoTime()
+      val n = Pipeline.triples(s, cfg).count()
+      println(f"BENCHKG mult=$mult rep=$r n=$n sec=${(System.nanoTime() - t0) / 1e9}%.3f")
+      stages.flush()
+      sweep(s)
     }
-    // dbg: one-off decomposition timings for optimization work
-    if (args.headOption.contains("dbg")) {
-      val s = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      import org.apache.spark.sql.functions.col
-      if (sys.env.contains("BENCHX_STAGES"))
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val wall = (for { t0 <- si.submissionTime; t1 <- si.completionTime }
-              yield (t1 - t0) / 1e3).getOrElse(-1.0)
-            val sub = si.submissionTime.map(t => (t % 100000) / 1e3).getOrElse(-1.0)
-            println(f"  stage ${si.stageId}%4d tasks=${si.numTasks}%4d " +
-              f"sub=$sub%7.2f wall=$wall%6.2f run=${si.taskMetrics.executorRunTime / 1e3}%7.2f " +
-              si.name.takeWhile(_ != '\n').take(70) + " | " +
-              si.details.linesIterator.filter(_.contains("graft")).take(2).mkString(" <- "))
-          }
-        })
-      def time[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"DBG $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      (1 to 2).foreach { rep =>
-        println(s"--- rep $rep")
-        val raw = s.read.parquet(sfDir + "/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        time("scan.count")(raw.count())
-        time("scan.noop")(raw.write.format("noop").mode("overwrite").save())
-        val fanned = graft.util.Par.fanOut(raw)
-        time("fanout.noop")(fanned.write.format("noop").mode("overwrite").save())
-        val ck = time("fanout.localCheckpoint")(fanned.localCheckpoint())
-        val idx = java.nio.file.Files.createTempDirectory("graft_dbg_idx")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(idx.toFile)
-        time("buildMinhashIndex")(graft.operators.Dedup.buildMinhashIndex(
-          ck.filter(col("doc_id") % 5 =!= 4), "doc_id", "text", idx.toString))
-        time("probe.count")(graft.operators.Dedup.incrementalTrueJaccardPairs(
-          s, idx.toString, ck.filter(col("doc_id") % 5 === 4), "doc_id", "text").count())
-        s.catalog.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-      s.stop()
-      return
+  }
+
+  private def explain(s: SparkSession, sfDir: String, stages: StageProfile,
+      names: Seq[String]): Unit =
+    names.foreach { n =>
+      println(s"========== $n ==========")
+      stages.clear()
+      s.sparkContext.setJobDescription(s"explain:$n")
+      println(SparkEntry.queries(n)(s, sfDir)
+        .queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      stages.flush()
+      sweep(s)
     }
-    val explain = args.headOption.contains("explain")
-    val (reps, names0) =
-      if (explain) (1, args.drop(1).toSeq)
-      else args.headOption.flatMap(a => scala.util.Try(a.toInt).toOption) match {
-        case Some(r) => (r, args.drop(1).toSeq)
-        case None => (2, args.toSeq)
-      }
-    val names =
-      if (names0.nonEmpty) names0
-      else SparkEntry.queries.keys.toSeq.sorted.filterNot(_ == "dd_embed_neardup")
-    val s = session(cores)
-    // BENCHX_STAGES=1: per-stage wall/run profile of each query's LAST rep
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    if (sys.env.contains("BENCHX_STAGES"))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = (for { t0 <- si.submissionTime; t1 <- si.completionTime }
-            yield (t1 - t0) / 1e3).getOrElse(-1.0)
-          stages.add(f"  stage ${si.stageId}%4d tasks=${si.numTasks}%4d " +
-            f"wall=$wall%7.2f run=${si.taskMetrics.executorRunTime / 1e3}%8.2f " +
-            si.name.takeWhile(_ != '\n').take(80))
-        }
-      })
-    if (explain) {
-      names.foreach { n =>
-        println(s"========== $n ==========")
-        s.sparkContext.setJobDescription(s"explain:$n")
-        println(SparkEntry.queries(n)(s, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        s.catalog.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-      s.stop()
-      return
-    }
+
+  /** Best-of-`reps` per query after one warm-up query, then the total as
+    * one JSON line. */
+  private def time(s: SparkSession, sfDir: String, stages: StageProfile,
+      reps: Int, names: Seq[String]): Unit = {
     // one warmup pass over a cheap query so JIT/codegen caches are hot
     s.sparkContext.setJobDescription("warmup")
     SparkEntry.queries("q01_agg")(s, sfDir).count()
@@ -175,19 +120,13 @@ object BenchExtra {
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(s, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        s.catalog.clearCache()
-        s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        sweep(s)
         dt
       }
       println(f"BENCHX $n%-24s best=${times.min}%.3f reps=${times.map(t => f"$t%.3f").mkString(",")}")
-      if (sys.env.contains("BENCHX_STAGES")) {
-        Thread.sleep(300)
-        stages.forEach(l => println(l))
-        stages.clear()
-      }
+      stages.flush()
       n -> times.min
     }
-    s.stop()
     val total = results.map(_._2).sum
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")

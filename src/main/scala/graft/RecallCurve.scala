@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -26,18 +25,9 @@ import graft.operators.Similarity
   * read 1.0 at scan fraction 1.0 for IVF full probe). */
 object RecallCurve {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    .appName("graft-recall-curve")
-    .config("spark.sql.shuffle.partitions", 32)
-    .config("spark.ui.enabled", false)
-    .config("spark.driver.memory", "8g")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallCurve <sfDir> [<sfDir> ...]")
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.hostCores)
     val perSf = args.toSeq.map { dir =>
       val sf = dir.split('/').last
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")

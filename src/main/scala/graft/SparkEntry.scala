@@ -918,7 +918,7 @@ object SparkEntry {
       // land in one job and extraction runs twice anyway. Mention rows are
       // compact (no text column), so the columnar cache write is cheap —
       // unlike the wide flagship rows where recompute-with-overlap wins
-      // (Pipeline.triples scaladoc). Bench/QueryTime unpersist after.
+      // (Pipeline.triples scaladoc). Verify/Bench/BenchExtra unpersist after.
       val m = Pipeline.mentions(s, cfg, Pipeline.turns(s, cfg).toDF()).cache()
       m.count()
       Linking.linkBySurface(m, Pipeline.gazetteer(s, cfg)._1)

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // cluster-scale shuffle writer (see Bench.session): one file per
-      // map task instead of numPartitions files at partitions < 200
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.shuffle.file.buffer", "256k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.hostCores)
     // scheme-resolved mkdir (VERDICT r6 next #5: the driver may hand any
     // filesystem URI; java.io.File silently no-ops on non-local schemes)
     val outPath = new org.apache.hadoop.fs.Path(outDir)

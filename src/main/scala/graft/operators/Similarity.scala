@@ -281,7 +281,16 @@ object Similarity {
     * exactness contract over corpus ∪ delta is preserved by construction
     * (tested). Centroid drift under sustained appends is a rebuild
     * decision, not an append-time side effect. `epoch` uniquely names
-    * this batch (> 0); a retry of the same epoch is idempotent. */
+    * this batch (> 0); a retry of the same epoch is idempotent.
+    *
+    * Compaction cadence: appends are written unclustered (no exchange on
+    * `ivf_cid`, same trade as the build), so each epoch scatters up to
+    * (delta tasks × touched lists) small files, and every probe of a list
+    * opens all of them across all epochs. Callers must run
+    * [[compactVectorIndex]] once the accumulated append files per list
+    * outgrow the build's ~one (e.g. every few epochs, or when the epoch
+    * count reaches the delta's task count) and flip to the compacted copy;
+    * nothing here bounds the growth on its own. */
   def appendToIvfIndex(delta: DataFrame, idCol: String, vecCol: String,
       path: String, epoch: Long): Unit = {
     require(epoch > 0, s"append epoch must be > 0 (0 is the build), got $epoch")

@@ -19,8 +19,16 @@ object Par {
     * runs on a fresh daemon thread, `b` on the caller's thread — no
     * shared pool, so NESTED calls (e.g. a caller overlapping an index
     * build that itself overlaps its two table writes) can never
-    * pool-starve into a deadlock. Both sides always complete; the first
-    * failure is rethrown. */
+    * pool-starve into a deadlock. Both sides always run to completion
+    * before this returns. If one side fails, its error is rethrown; if
+    * both fail, `a`'s error is rethrown with `b`'s attached via
+    * `addSuppressed`, so neither failure is lost.
+    *
+    * Interrupts are not forwarded to `a`'s thread. An interrupt of the
+    * caller while `b` runs reaches only `b`. If the caller is interrupted
+    * while waiting for `a` (or `b` returns with the interrupt flag still
+    * set), the wait throws InterruptedException at once; `a` then keeps
+    * running on its daemon thread and its outcome is discarded. */
   def concurrently(a: => Unit, b: => Unit): Unit = {
     @volatile var ea: Throwable = null
     val t = new Thread(() => try a catch { case x: Throwable => ea = x },
@@ -29,7 +37,10 @@ object Par {
     t.start()
     val eb = try { b; null } catch { case x: Throwable => x }
     t.join()
-    if (ea != null) throw ea
+    if (ea != null) {
+      if (eb != null) ea.addSuppressed(eb)
+      throw ea
+    }
     if (eb != null) throw eb
   }
 

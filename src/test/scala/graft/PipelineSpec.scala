@@ -143,6 +143,40 @@ class PipelineSpec extends GraftSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
   }
 
+  test("the mentions and asserts branches share one extraction exchange, " +
+      "and the no-op key filter that enables it drops no per-turn rows") {
+    // Triples.all's isNotNull(conv_id, turn_idx) filter exists only so the
+    // two turnAgg consumers canonicalize equal; both halves of that bargain
+    // are pinned here, so a source that breaks either fails loudly instead
+    // of silently re-running extraction or dropping triples. AQE off: the
+    // non-adaptive executed plan shows ReuseExchange's result up front.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions.col
+    val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = Pipeline.triples(spark, cfg).queryExecution.executedPlan
+      // the reuse that matters is the extraction→perTurn exchange; other
+      // exchanges (turn synthesis, linking broadcasts) are reused even
+      // when the two turnAgg branches canonicalize unequal
+      val perTurnReuse = plan.collect {
+        case r: ReusedExchangeExec => r.child.outputPartitioning
+      }.collect { case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name }
+      }.filter(_ == Seq("conv_id", "turn_idx", "source", "code"))
+      assert(perTurnReuse.size === 1, plan.treeString)
+      val t = Pipeline.turns(spark, cfg).toDF()
+      val turnAgg = graft.operators.Aggregation.perTurn(
+        Pipeline.linked(spark, cfg, Pipeline.mentions(spark, cfg, t)))
+      assert(turnAgg.count() > 0)
+      assert(turnAgg.filter(col("conv_id").isNull || col("turn_idx").isNull)
+        .count() === 0)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("entry(): staged pipeline through the resumable sink, read back, rows > 0") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)

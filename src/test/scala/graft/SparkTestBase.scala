@@ -5,21 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (guide: one session per suite). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 }
 
 abstract class GraftSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkTestBase.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkTestBase.spark
 }
