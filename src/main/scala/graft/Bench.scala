@@ -227,8 +227,7 @@ object Bench {
     val sec =
       if (phases.nonEmpty) phases.sum else (System.nanoTime() - t0) / 1e9
     // drop this run's persisted intermediates so repeats don't accumulate
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    Sessions.sweep(spark)
     (n, sec, phases)
   }
 
@@ -491,7 +490,7 @@ object Bench {
     * oracle baselines whose plans are deliberately naive (the O(n²)
     * cartesian near-dup). They still run in Verify at sf0.01 for the
     * DuckDB gate; the scalable variant is what gets timed here. */
-  private val oracleOnly: Map[String, String] = Map(
+  private[graft] val oracleOnly: Map[String, String] = Map(
     "dd_embed_neardup" ->
       "O(n^2) cartesian oracle baseline; bench surface is dd_embed_neardup_lsh")
 
@@ -582,13 +581,8 @@ object Bench {
           }
           if (ok) times :+= (System.nanoTime() - t0) / 1e9
           // queries may cache their stage-table analogue; don't let 50
-          // queries accumulate cached blocks. clearCache() removes the
-          // CacheManager ENTRIES (RDD-level unpersist alone leaves a dead
-          // registration that turns the next query's .cache() of the same
-          // plan into a silent no-op); the RDD sweep then catches
-          // localCheckpoint blocks, which live outside the catalog.
-          s32.catalog.clearCache()
-          s32.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+          // queries accumulate cached blocks
+          Sessions.sweep(s32)
           r += 1
         }
         if (ok) Some(name -> times.toSeq) else None

@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.BenchExtra [reps] [query ...]"   — time queries
   *   sbt "runMain graft.BenchExtra kg [mult] [reps]"     — time Pipeline.triples
   *   sbt "runMain graft.BenchExtra explain [query ...]"  — plans
-  * Query defaults: reps=2, all queries except the oracle-only cartesian
-  * baseline (dd_embed_neardup), same exclusion as Bench. In timing mode
+  * Query defaults: reps=2, all queries except Bench's oracle-only
+  * baselines ([[Bench.oracleOnly]]). In timing mode
   * only the last rep's stages are printed.
   */
 object BenchExtra {
@@ -49,12 +49,6 @@ object BenchExtra {
     }
   }
 
-  /** Queries may cache their stage-table analogue; drop it between runs. */
-  private def sweep(s: SparkSession): Unit = {
-    s.catalog.clearCache()
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val s = Sessions.local(Sessions.hostCores)
@@ -72,7 +66,7 @@ object BenchExtra {
 
   private def queryNames(args: Seq[String]): Seq[String] =
     if (args.nonEmpty) args
-    else SparkEntry.queries.keys.toSeq.sorted.filterNot(_ == "dd_embed_neardup")
+    else SparkEntry.queries.keys.toSeq.sorted.filterNot(Bench.oracleOnly.contains)
 
   /** The scaling-block DAG (Pipeline.triples at mult× the sf corpus — what
     * Bench's kgRun measures) outside the 45-minute protocol. */
@@ -89,7 +83,7 @@ object BenchExtra {
       val n = Pipeline.triples(s, cfg).count()
       println(f"BENCHKG mult=$mult rep=$r n=$n sec=${(System.nanoTime() - t0) / 1e9}%.3f")
       stages.flush()
-      sweep(s)
+      Sessions.sweep(s)
     }
   }
 
@@ -103,7 +97,7 @@ object BenchExtra {
         .queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       stages.flush()
-      sweep(s)
+      Sessions.sweep(s)
     }
 
   /** Best-of-`reps` per query after one warm-up query, then the total as
@@ -120,7 +114,7 @@ object BenchExtra {
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(s, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        sweep(s)
+        Sessions.sweep(s)
         dt
       }
       println(f"BENCHX $n%-24s best=${times.min}%.3f reps=${times.map(t => f"$t%.3f").mkString(",")}")

@@ -46,4 +46,14 @@ object Sessions {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Drops everything queries left cached in `spark`. `clearCache` goes
+    * first: it removes the CacheManager entries, and an RDD-level unpersist
+    * alone leaves a dead registration that turns the next `.cache()` of the
+    * same plan into a silent no-op. The RDD sweep then catches
+    * `localCheckpoint` blocks, which live outside the catalog. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
 }

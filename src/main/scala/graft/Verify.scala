@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,30 +24,12 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries may cache their stage-table analogue; sweep between queries
-      // (clearCache removes CacheManager entries — an RDD-level unpersist
-      // alone leaves a dead registration that no-ops the next .cache() of
-      // the same plan; the RDD sweep catches localCheckpoint blocks)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Sessions.sweep(spark) // queries may cache their stage-table analogue
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Belt-and-braces: emit each oracle under BOTH the bare name and the
     // `<name>.parquet` form so either driver keying convention matches.
-    val json = SparkEntry.oracleSql
-      .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Serialization.write(SparkEntry.oracleSql
+      .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) })(DefaultFormats)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
