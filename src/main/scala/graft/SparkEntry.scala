@@ -2,7 +2,7 @@ package graft
 
 import graft.operators._
 import graft.sources.Gazetteer
-import graft.util.Par
+import graft.util.{Par, PartitionedParquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1195,33 +1195,22 @@ object SparkEntry {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           // foreachBatch is at-least-once: a retried micro-batch re-runs
-          // with the SAME batchId, so each batch overwrites its own
-          // batchId-keyed subdirectory — idempotent per batch; a plain
-          // append would double-count the replayed rows
-          Aggregation.perTurn(sources.DocCorpus.linked(batch))
-            .write.mode("overwrite").parquet(s"$out/b$batchId")
+          // with the SAME batchId and overwrites exactly its own batch_id
+          // partition; a plain append would double-count the replayed rows
+          PartitionedParquet.scopedOverwrite(
+              Aggregation.perTurn(sources.DocCorpus.linked(batch))
+                .withColumn("batch_id", lit(batchId)), "batch_id")
+            .parquet(out)
           ()
         }
         .start()
       q.awaitTermination()
-      // read back the EXPLICIT list of committed batch dirs, not a "b*"
-      // glob (a batch retried mid-overwrite can leave a _temporary dir a
-      // glob might match on some filesystems), and guard the zero-batch
-      // case — an empty source produced no b<i> dir at all, where the glob
-      // read would throw PATH_NOT_FOUND instead of returning the empty
-      // result. Hadoop-FS listing, scheme-resolved — out may be any
-      // filesystem a production run points at.
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      val outFs = outPath.getFileSystem(s.sessionState.newHadoopConf())
-      val batchDirs =
-        (if (outFs.exists(outPath)) outFs.listStatus(outPath)
-         else Array.empty[org.apache.hadoop.fs.FileStatus])
-          .filter(st => st.isDirectory && st.getPath.getName.matches("b\\d+"))
-          .map(_.getPath.toString)
+      // zero-batch guard: an empty source commits no partition, where a
+      // bare read of `out` would throw instead of returning the empty result
       val streamed =
-        if (batchDirs.isEmpty)
-          Aggregation.perTurn(sources.DocCorpus.linked(docs.limit(0)))
-        else s.read.parquet(batchDirs.toSeq: _*)
+        if (PartitionedParquet.hasData(s, out))
+          PartitionedParquet.readPartitioned(s, out, "batch_id")
+        else Aggregation.perTurn(sources.DocCorpus.linked(docs.limit(0)))
       streamed.select(supportCols: _*)
     }),
 

@@ -98,7 +98,7 @@ object SignatureExprs {
   }
 
   /** Random-hyperplane LSH signature kernel (r8): the native form of
-    * Similarity.lshSignatureHof (bit-parity asserted in Round8Spec) — the
+    * HofReference.lshSignatureHof (bit-parity asserted in Round8Spec) — the
     * HOF form allocated one sequence + one zip array per plane per row. */
   case class LshSigExpr(child: Expression, bits: Int)
       extends UnaryExpression {

@@ -73,7 +73,7 @@ object Signatures {
   }
 
   /** MinHash signature over the distinct shingle hashes: sig(j) =
-    * min_s xxhash64(s, j) — mirrors Dedup.minhashSignature (empty set ⇒
+    * min_s xxhash64(s, j) — mirrors HofReference.minhashSignature (empty set ⇒
     * all Long.MaxValue, unreachable in practice since shingleHashes ≥ 1). */
   def minhashSig(text: UTF8String, m: Int, k: Int): Array[Long] = {
     val sh = shingleHashes(text, k)
@@ -174,7 +174,7 @@ object Signatures {
   }
 
   /** `bits`-bit random-hyperplane LSH signature — mirrors
-    * Similarity.lshSignatureHof bit-for-bit: plane p's ±1 component for
+    * HofReference.lshSignatureHof bit-for-bit: plane p's ±1 component for
     * dimension i is the parity of xxhash64(i·31 + p·100003) (an INT input,
     * Spark seed 42), the projection is the in-order left fold
     * Σ x_i·sign_i over the double-cast elements, and bit p is set iff the
@@ -203,7 +203,7 @@ object Signatures {
     sig
   }
 
-  /** SimHash-64 of the token multiset — mirrors Dedup.simhash64: per token
+  /** SimHash-64 of the token multiset — mirrors HofReference.simhash64: per token
     * hash, ±1 per bit, sign-bit sig. */
   def simhash64(text: UTF8String): Long = {
     val ts = tokens(text)

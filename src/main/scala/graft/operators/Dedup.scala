@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.util.Par
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import graft.util.{Par, PartitionedParquet}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,35 +27,10 @@ object Dedup {
   def words(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), w => length(w) > 0)
 
-  /** k-word shingle hashes (distinct) as array<long>. */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val ws = words(text)
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(ws) - k, lit(0))),
-      i => xxhash64(array_join(slice(ws, i + 1, lit(k)), " "))))
-  }
-
   /** Exact dedup: canonical row per identical text (md5 content key). */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("dup_count"))
-
-  /** MinHash signature: m hash functions h_j(s) = xxhash64(s, j), each
-    * minimized over the shingle set. Written as ONE fold over the shingles
-    * (per shingle: all m hashes; accumulator: element-wise min) instead of
-    * the textbook m-passes form — Catalyst re-evaluates a lambda's input
-    * per outer-loop iteration and does no cross-lambda CSE, so the m-passes
-    * form re-shingled the document m times (measured ~30× slower).
-    * Empty shingle set ⇒ all-Long.MaxValue signature (callers filter). */
-  def minhashSignatureOf(shingleCol: Column, m: Int = 32): Column =
-    aggregate(
-      transform(shingleCol,
-        s => transform(sequence(lit(0), lit(m - 1)), j => xxhash64(s, j))),
-      array_repeat(lit(Long.MaxValue), m),
-      (acc, hs) => zip_with(acc, hs, (a, b) => least(a, b)))
-
-  def minhashSignature(text: Column, m: Int = 32, k: Int = 3): Column =
-    minhashSignatureOf(shingles(text, k), m)
 
   /** Drop bucket keys whose member count exceeds `maxBucket`, returning the
     * surviving (bucket-key..., id) rows. A degenerate corpus — k identical
@@ -190,7 +165,7 @@ object Dedup {
       m: Int = 32, bands: Int = 8, threshold: Double = 0.7, k: Int = 3,
       maxBucket: Int = 1000): DataFrame = {
     // native codegen'd signature kernel (graft.functions.SignatureExprs);
-    // bit-identical to minhashSignature (parity-tested), ~10× faster.
+    // bit-identical to its HOF reference form (parity-tested), ~10× faster.
     // Computed ONCE (persist): banding + both re-attach joins share it
     val sig = minhashSigTable(corpusSrc(df, idCol, textCol), idCol, textCol, m, k)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -312,29 +287,6 @@ object Dedup {
     val canon = withComp.groupBy("comp").agg(min(col("orig")).as("canonical_id"))
     withComp.join(canon, "comp")
       .select(col("orig").as(idCol), col("canonical_id"))
-  }
-
-  /** SimHash-64 of the word multiset as a pure column expression: for each
-    * bit position, sum ±1 over token hashes and take the sign bit.
-    * Written as ONE fold over the tokens (accumulator = 64 bit-counters,
-    * per token all 64 contributions) — the textbook per-bit outer loop
-    * would re-tokenize the document 64 times (Catalyst re-evaluates a
-    * lambda's input per iteration, no cross-lambda CSE; see
-    * [[minhashSignatureOf]]). (`call_function` because the Scala
-    * `shiftright`/`shiftleft` helpers only take literal Int shift amounts,
-    * not lambda-bound columns.) */
-  def simhash64(text: Column): Column = {
-    val counters = aggregate(
-      transform(words(text), w => xxhash64(w)),
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(63)),
-        (a, b) => a + when(call_function("shiftright", h, b.cast("int"))
-          .bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))))
-    aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)),
-        (c, b) => when(c > 0,
-          call_function("shiftleft", lit(1L), b.cast("int"))).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
   }
 
   /** The nBlocks × (64/nBlocks)-bit block keys of a corpus's simhash
@@ -532,50 +484,27 @@ object Dedup {
       nShards: Int = 64): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // repartition by the partition column BEFORE the partitioned write
-    // (guide §6): each write task then holds whole bshards — ~nShards
-    // files total instead of (tasks × nShards) row-group shards — and the
-    // signature kernel upstream runs parallel (fan-out inside
-    // bandedMinhash) instead of on the source's scan splits
+    // the signature kernel runs parallel (fan-out inside bandedMinhash)
+    // instead of on the source's scan splits; the bands write clusters by
+    // bshard (PartitionedParquet.writeEpoch) so each task holds whole shards
     val src = corpusSrc(df, idCol, textCol)
     // the bands and docs writes are INDEPENDENT jobs over the same source
     // — run them concurrently so one job's kernel/commit back-fills the
     // other's straggler tail (guide §2.6). meta is the commit marker and
     // stays strictly after both.
     Par.concurrently(
-      bandedMinhash(src, idCol, textCol, m, bands, k)
-        .withColumn("bshard", pmod(col("bkey"), lit(nShards.toLong)))
-        // EXPLICIT partition count: a bare repartition(col) is an AQE-
-        // coalescible exchange, and on a small corpus AQE folds it to ONE
-        // partition — a single task then writes all nShards partition
-        // dirs serially (profiled 1.1 s of the 2.6 s build at sf0.1).
-        // Pinning to defaultParallelism keeps the write as parallel as
-        // the session at every scale; each task still holds whole shards.
-        .repartition(spark.sparkContext.defaultParallelism, col("bshard"))
-        .withColumn("epoch", lit(0L))
-        .write.mode("overwrite").partitionBy("epoch", "bshard")
-        .parquet(s"$path/bands"),
-      shingleTable(src, idCol, textCol, k)
-        .withColumn("epoch", lit(0L))
-        .write.mode("overwrite").partitionBy("epoch").parquet(s"$path/docs"))
+      PartitionedParquet.writeEpoch(bandedMinhash(src, idCol, textCol, m, bands, k)
+          .withColumn("bshard", pmod(col("bkey"), lit(nShards.toLong))),
+        s"$path/bands", 0L, Some("bshard")),
+      PartitionedParquet.writeEpoch(shingleTable(src, idCol, textCol, k),
+        s"$path/docs", 0L))
     // FULL doc count (short docs included — `docs` excludes them), so the
     // incremental cap is computed on the same corpus∪delta count as the
     // batch path's effectiveCap(df) and the equality contract holds on
     // short-doc-heavy corpora too
-    Seq((df.count(), -1L)).toDF("n_docs", "fold_upto")
-      .withColumn("epoch", lit(0L))
-      .write.mode("overwrite").partitionBy("epoch").parquet(s"$path/meta")
+    PartitionedParquet.writeEpoch(
+      Seq((df.count(), -1L)).toDF("n_docs", "fold_upto"), s"$path/meta", 0L)
   }
-
-  /** The compaction fence: the smallest epoch id an append to this index
-    * may legally use. 1 for a never-compacted index (0 is the build);
-    * max-folded-epoch + 1 once [[compactMinhashIndex]] has run. Reading it
-    * here (and requiring it in [[appendToMinhashIndex]]) turns the
-    * "never reuse an epoch id that was folded into a compacted copy"
-    * contract from scaladoc into an error (VERDICT r6 next #3). Shared
-    * with the vector indexes via [[graft.util.IndexFence]]. */
-  def minNextEpoch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = graft.util.IndexFence.minNextEpoch(spark, path)
 
   /** The stream-fold watermark: the highest `uptoBatch` any committed
     * fold epoch covers (-1 if none). Derived from meta — the epoch commit
@@ -651,8 +580,8 @@ object Dedup {
     * basis) until the retry completes it.
     *
     * Compaction fence (r7, VERDICT r6 next #3): an epoch below the index's
-    * [[minNextEpoch]] was already folded into this compacted copy — a late
-    * retry of it would re-add its rows and duplicate the index, so it
+    * fence ([[graft.util.PartitionedParquet.minNextEpoch]]) was already
+    * folded into this compacted copy — a late retry of it would re-add its rows and duplicate the index, so it
     * FAILS LOUDLY here instead. `foldUpto` is set only by
     * [[graft.streaming.StreamingDedup.foldAndRetire]]: the highest stream
     * batch this epoch covers, recorded in the meta row so the fold
@@ -660,22 +589,16 @@ object Dedup {
   def appendToMinhashIndex(delta: DataFrame, idCol: String, textCol: String,
       path: String, epoch: Long, m: Int = 32, bands: Int = 16, k: Int = 3,
       nShards: Int = 64, foldUpto: Long = -1L): Unit = {
-    require(epoch > 0, s"append epoch must be > 0 (0 is the build), got $epoch")
     val spark = delta.sparkSession
-    graft.util.IndexFence.requireAbove(spark, path, epoch)
+    PartitionedParquet.requireAppendable(spark, path, epoch)
     import spark.implicits._
-    def dyn(df: DataFrame, cols: Seq[String], sub: String): Unit =
-      df.withColumn("epoch", lit(epoch))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(cols: _*).parquet(s"$path/$sub")
-    dyn(bandedMinhash(delta, idCol, textCol, m, bands, k)
-      .withColumn("bshard", pmod(col("bkey"), lit(nShards.toLong)))
-      .repartition(col("bshard")), // one file per touched shard (guide §6)
-      Seq("epoch", "bshard"), "bands")
-    dyn(shingleTable(delta, idCol, textCol, k), Seq("epoch"), "docs")
-    dyn(Seq((delta.count(), foldUpto)).toDF("n_docs", "fold_upto"),
-      Seq("epoch"), "meta")
+    PartitionedParquet.writeEpoch(bandedMinhash(delta, idCol, textCol, m, bands, k)
+        .withColumn("bshard", pmod(col("bkey"), lit(nShards.toLong))),
+      s"$path/bands", epoch, Some("bshard"))
+    PartitionedParquet.writeEpoch(shingleTable(delta, idCol, textCol, k),
+      s"$path/docs", epoch)
+    PartitionedParquet.writeEpoch(
+      Seq((delta.count(), foldUpto)).toDF("n_docs", "fold_upto"), s"$path/meta", epoch)
   }
 
   /** Fold a multi-epoch index (build + any number of appends) back into
@@ -725,28 +648,13 @@ object Dedup {
     val carriedFold =
       if (metaRows.isEmpty) -1L
       else metaRows.map(r => if (r.isNullAt(2)) -1L else r.getLong(2)).max
-    spark.read.parquet(s"$srcPath/bands")
-      .filter(col("epoch").isin(committed: _*))
-      .select(col("id"), col("band"), col("bkey"),
-        col("bshard").cast("long").as("bshard"))
-      .repartition(col("bshard"))
-      .withColumn("epoch", lit(0L))
-      .write.mode("overwrite").partitionBy("epoch", "bshard")
-      .parquet(s"$dstPath/bands")
-    spark.read.parquet(s"$srcPath/docs")
-      .filter(col("epoch").isin(committed: _*))
-      .select(col("id"), col("sh"))
-      .withColumn("epoch", lit(0L))
-      .write.mode("overwrite").partitionBy("epoch").parquet(s"$dstPath/docs")
-    Seq((carriedDocs, carriedFold))
-      .toDF("n_docs", "fold_upto")
-      .withColumn("epoch", lit(0L))
-      .write.mode("overwrite").partitionBy("epoch").parquet(s"$dstPath/meta")
-    // the fence, written last: every folded epoch id is now illegal to
-    // append (at src OR dst — carry src's own fence forward if higher)
-    Seq(math.max(committed.max + 1L, minNextEpoch(spark, srcPath)))
-      .toDF("min_next_epoch")
-      .write.mode("overwrite").parquet(s"$dstPath/fence")
+    PartitionedParquet.compactEpochs(spark, s"$srcPath/bands",
+      s"$dstPath/bands", committed, Some("bshard"))
+    PartitionedParquet.compactEpochs(spark, s"$srcPath/docs",
+      s"$dstPath/docs", committed)
+    PartitionedParquet.writeEpoch(Seq((carriedDocs, carriedFold))
+      .toDF("n_docs", "fold_upto"), s"$dstPath/meta", 0L)
+    PartitionedParquet.writeFence(spark, srcPath, dstPath, committed)
   }
 
   /** Verified near-dup pairs TOUCHING the delta: delta×corpus plus the

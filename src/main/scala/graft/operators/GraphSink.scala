@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.PartitionedParquet
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Resume = left_anti join of the bucket space against the manifest (J4):
   * already-committed buckets are skipped; re-running after a partial
   * failure is idempotent because each bucket directory is overwritten
-  * atomically (dynamic partition overwrite) and the manifest row is
+  * atomically ([[PartitionedParquet.scopedOverwrite]]) and the manifest row is
   * written only after the data commit.
   */
 object GraphSink {
@@ -46,12 +47,10 @@ object GraphSink {
   def readManifest(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(manifestPath(dir))
 
-  def committedBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) readManifest(spark, dir).select("bucket").distinct()
+  def committedBuckets(spark: SparkSession, dir: String): DataFrame =
+    if (PartitionedParquet.exists(spark, manifestPath(dir)))
+      readManifest(spark, dir).select("bucket").distinct()
     else spark.emptyDataFrame.withColumn("bucket", lit(0L)).limit(0).select("bucket")
-  }
 
   /** Write only the not-yet-committed buckets; returns #buckets written.
     *
@@ -65,11 +64,6 @@ object GraphSink {
   def writeResumable(triples: DataFrame, dir: String, runId: String,
       nBuckets: Int = 16, onlyBuckets: Option[Seq[Long]] = None): Long = {
     val spark = triples.sparkSession
-    // NOTE: dynamic partition overwrite routes task output through
-    // .spark-staging and promotes partition dirs on the DRIVER — the v2
-    // task-side committer does not apply to this write (it does apply to
-    // the plain-overwrite stage-table writes, see Pipeline.triplesStaged)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // the committed-bucket set is tiny by construction (≤ nBuckets rows per
     // completed run) — collected once, it drives BOTH the resume anti-filter
     // and the pruned metrics read-back
@@ -77,7 +71,7 @@ object GraphSink {
     def notDone(c: org.apache.spark.sql.Column) =
       if (doneList.isEmpty) lit(true) else !c.isin(doneList: _*)
     // Stale-output sweep (ADVICE r3): a crashed prior attempt can leave
-    // files in a NOT-yet-committed bucket; dynamic partition overwrite only
+    // files in a NOT-yet-committed bucket; the scoped overwrite only
     // rewrites buckets present in THIS run's output, so a stale bucket that
     // receives zero rows this run would survive, be counted by the metrics
     // read-back below, and abort every retry (recorded != written) until
@@ -89,24 +83,9 @@ object GraphSink {
     // its own bucket range — concurrent writers on disjoint onlyBuckets
     // stay safe (an unrestricted sweep would destroy a sibling's in-flight
     // output). Driver-side FS ops on ≤ nBuckets directories.
-    val triplesDir = new org.apache.hadoop.fs.Path(s"$dir/triples")
-    val fs = triplesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(triplesDir)) {
-      val done = doneList.toSet
-      val inScope: Long => Boolean =
-        onlyBuckets.map(bs => bs.toSet.contains _).getOrElse((_: Long) => true)
-      fs.listStatus(triplesDir).foreach { st =>
-        val name = st.getPath.getName
-        // unparseable bucket dirs (HIVE_DEFAULT_PARTITION, foreign debris)
-        // are skipped, not crashed on — they are outside the resume
-        // contract either way (never written by bucketCol, never read back)
-        if (name.startsWith("bucket=")) {
-          scala.util.Try(name.stripPrefix("bucket=").toLong).foreach { b =>
-            if (!done.contains(b) && inScope(b)) fs.delete(st.getPath, true)
-          }
-        }
-      }
-    }
+    val done = doneList.toSet
+    PartitionedParquet.deletePartitions(spark, s"$dir/triples", "bucket")(b =>
+      !done.contains(b) && onlyBuckets.forall(_.contains(b)))
     val withBucket = triples.withColumn("bucket", bucketCol(nBuckets))
     val restricted = onlyBuckets match {
       case Some(bs) => withBucket.filter(col("bucket").isin(bs: _*))
@@ -117,7 +96,10 @@ object GraphSink {
     val obs = org.apache.spark.sql.Observation(s"graft_sink_$runId")
     val todo = restricted.filter(notDone(col("bucket")))
       .observe(obs, count(lit(1)).as("rows_written"))
-    todo.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(s"$dir/triples")
+    // the scoped overwrite promotes partition dirs on the DRIVER, so the
+    // v2 task-side committer does not apply to this write (it does apply
+    // to the plain-overwrite stage-table writes, see Pipeline.triplesStaged)
+    PartitionedParquet.scopedOverwrite(todo, "bucket").parquet(s"$dir/triples")
     // zero-task writes (nothing left to resume) never evaluate the
     // CollectMetrics node — an absent metric means zero rows
     val written = obs.get.getOrElse("rows_written", 0L).asInstanceOf[Long]
@@ -146,8 +128,5 @@ object GraphSink {
   }
 
   def readTriples(spark: SparkSession, dir: String): DataFrame =
-    // partition-column discovery infers int; normalize to the long the
-    // writer/manifest use
-    spark.read.parquet(s"$dir/triples")
-      .withColumn("bucket", col("bucket").cast("long"))
+    PartitionedParquet.readPartitioned(spark, s"$dir/triples", "bucket")
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.PartitionedParquet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -19,20 +20,10 @@ object Similarity {
 
   /** Cosine similarity of two array<float|double> columns — the native
     * codegen'd kernel (graft.functions.SignatureExprs.CosineExpr);
-    * bit-identical to [[cosineHof]] (parity-tested), ~10× faster per pair. */
+    * bit-identical to its higher-order-function reference form
+    * (parity-tested), ~10× faster per pair. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.SignatureExprs.cosine(a, b)
-
-  /** Reference higher-order-function form of [[cosine]] (SURVEY §2.8 F6):
-    * kept as the executable spec the native expression is verified against. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val ad = transform(a, x => x.cast("double"))
-    val bd = transform(b, x => x.cast("double"))
-    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (s, v) => s + v)
-    val na = sqrt(aggregate(transform(ad, x => x * x), lit(0.0), (s, v) => s + v))
-    val nb = sqrt(aggregate(transform(bd, x => x * x), lit(0.0), (s, v) => s + v))
-    when(na > 0 && nb > 0, dot / (na * nb)).otherwise(lit(0.0))
-  }
 
   /** Exact top-k by cosine against one query vector. */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
@@ -43,34 +34,13 @@ object Similarity {
       .limit(k)
   }
 
-  /** Deterministic ±1 hyperplane component for (plane, dim): parity of
-    * xxhash64(plane * 100003 + dim). Same formula on both the data and the
-    * query side — no stored model. */
-  private def planeSign(plane: Int, dim: Column): Column =
-    when(pmod(xxhash64(dim * 31 + lit(plane * 100003)), lit(2)) === 0, lit(1.0))
-      .otherwise(lit(-1.0))
-
   /** `bits`-bit random-hyperplane signature of a vector column — the
     * native codegen'd kernel (r8; graft.functions.SignatureExprs.LshSigExpr,
-    * bit-identical to [[lshSignatureHof]], parity-tested in Round8Spec):
+    * bit-identical to its HOF reference form, parity-tested in Round8Spec):
     * the HOF form allocated one sequence + one zip array per plane per
     * row and evaluated `bits` separate aggregates. */
   def lshSignature(vec: Column, bits: Int): Column =
     graft.functions.SignatureExprs.lshSig(vec, bits)
-
-  /** Reference higher-order-function form of [[lshSignature]] — kept as
-    * the executable spec the native expression is verified against. */
-  def lshSignatureHof(vec: Column, bits: Int): Column = {
-    val vd = transform(vec, x => x.cast("double"))
-    val bitCols = (0 until bits).map { p =>
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1),
-          (x, i) => x * planeSign(p, i)),
-        lit(0.0), (s, v) => s + v)
-      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bitCols.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** The multi-probe bucket set: the signature plus every variant within
     * hamming ≤ `probeHamming` bit flips — Σ C(bits, i) probes of 2^bits
@@ -231,45 +201,9 @@ object Similarity {
       sampleCentroids(emb, idCol, vecCol, nCentroids), lloydIters)
     centroids.toSeq.toDF("cid", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    writeEpochPartitioned(
+    PartitionedParquet.writeEpoch(
       emb.withColumn("ivf_cid", assignCol(centroids, vecCol)),
-      s"$path/vectors", "ivf_cid", epoch = 0L, build = true, cluster = false)
-  }
-
-  /** Shared epoch-scoped vectors writer of both persisted ANN indexes:
-    * the build writes everything under `epoch=0`; an append writes a
-    * dynamic partition overwrite scoped to its own epoch, so a RETRIED
-    * append job replaces its previous (possibly partial) output instead
-    * of duplicating index rows — the same replay contract as
-    * [[Dedup.appendToMinhashIndex]] and the streaming sink. Partition
-    * pruning on `listCol` (ivf_cid / lsh_prefix) is unaffected by the
-    * epoch nesting (plan-asserted in the index specs). */
-  private def writeEpochPartitioned(df: DataFrame, dir: String,
-      listCol: String, epoch: Long, build: Boolean,
-      cluster: Boolean = true): Unit = {
-    // cluster=true: repartition by the partition column before the
-    // partitioned write (guide §6) — each task writes whole lists, ~one
-    // file per list instead of (tasks × lists) shards. Only worth it when
-    // the list column has enough distinct values to keep the write
-    // parallel (LSH: 2^prefixBits = 64 prefixes — measured win); the IVF
-    // build passes cluster=false because hashing 16 cids caps the write
-    // at 16 tasks and the exchange measured a net loss (buildIvfIndex
-    // scaladoc). The BUILD pins an explicit partition count: a bare
-    // repartition(col) is AQE-coalescible and a small corpus folds it to
-    // ONE partition — a single task then writes every list dir serially
-    // (the same pathology profiled in Dedup.buildMinhashIndex). Appends
-    // stay coalescible on purpose: a tiny delta SHOULD collapse to one
-    // file per touched dir.
-    val c =
-      if (cluster && build)
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-          col(listCol))
-      else if (cluster) df.repartition(col(listCol))
-      else df
-    val w = c.withColumn("epoch", lit(epoch))
-      .write.mode("overwrite")
-    (if (build) w else w.option("partitionOverwriteMode", "dynamic"))
-      .partitionBy("epoch", listCol).parquet(dir)
+      s"$path/vectors", 0L, Some("ivf_cid"), cluster = false)
   }
 
   /** Append a delta of vectors to a persisted IVF index (the embedding
@@ -293,15 +227,14 @@ object Similarity {
     * nothing here bounds the growth on its own. */
   def appendToIvfIndex(delta: DataFrame, idCol: String, vecCol: String,
       path: String, epoch: Long): Unit = {
-    require(epoch > 0, s"append epoch must be > 0 (0 is the build), got $epoch")
-    requireAboveFence(delta.sparkSession, path, epoch)
     val spark = delta.sparkSession
+    PartitionedParquet.requireAppendable(spark, path, epoch)
     val centroids: Array[(Long, Seq[Double])] =
       spark.read.parquet(s"$path/centroids").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    writeEpochPartitioned(
+    PartitionedParquet.writeEpoch(
       delta.withColumn("ivf_cid", assignCol(centroids, vecCol)),
-      s"$path/vectors", "ivf_cid", epoch, build = false, cluster = false)
+      s"$path/vectors", epoch, Some("ivf_cid"), cluster = false)
   }
 
   /** The (lsh_sig, lsh_prefix) signature derivation shared by the LSH
@@ -335,42 +268,20 @@ object Similarity {
     * append is ONE write job, atomic at the job commit. */
   def compactVectorIndex(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String, listCol: String): Unit = {
-    import spark.implicits._
     // epoch ids from the epoch=N partition DIRECTORY names — a metadata
     // listing, not a distinct() over every vector row (the r7 review: that
     // extra full scan is exactly the IO this operator exists to bound)
     val srcEpochs =
-      graft.util.IndexFence.epochIds(spark, s"$srcPath/vectors")
+      PartitionedParquet.partitionIds(spark, s"$srcPath/vectors", "epoch")
     require(srcEpochs.nonEmpty,
       s"$srcPath/vectors has no epoch=N partitions — not a vector index")
-    spark.read.parquet(s"$srcPath/vectors")
-      .drop("epoch")
-      .withColumn(listCol, col(listCol).cast("long"))
-      .repartition(col(listCol))
-      .withColumn("epoch", lit(0L))
-      .write.mode("overwrite").partitionBy("epoch", listCol)
-      .parquet(s"$dstPath/vectors")
-    // Hadoop FS, not java.io.File: srcPath may be an object-store URI
-    val (fs, centroids) =
-      graft.util.IndexFence.fsOf(spark, s"$srcPath/centroids")
-    if (fs.exists(centroids))
-      spark.read.parquet(centroids.toString)
+    PartitionedParquet.compactEpochs(spark, s"$srcPath/vectors",
+      s"$dstPath/vectors", srcEpochs, Some(listCol))
+    if (PartitionedParquet.exists(spark, s"$srcPath/centroids"))
+      spark.read.parquet(s"$srcPath/centroids")
         .coalesce(1).write.mode("overwrite").parquet(s"$dstPath/centroids")
-    Seq(math.max(srcEpochs.max + 1L, minNextVectorEpoch(spark, srcPath)))
-      .toDF("min_next_epoch")
-      .write.mode("overwrite").parquet(s"$dstPath/fence")
+    PartitionedParquet.writeFence(spark, srcPath, dstPath, srcEpochs)
   }
-
-  /** The compaction fence of a persisted vector index: the smallest epoch
-    * an append may legally use — 1 for a never-compacted index, max folded
-    * epoch + 1 after [[compactVectorIndex]]. The SAME protocol (and code —
-    * [[graft.util.IndexFence]]) as the minhash index's fence. */
-  def minNextVectorEpoch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = graft.util.IndexFence.minNextEpoch(spark, path)
-
-  private def requireAboveFence(spark: org.apache.spark.sql.SparkSession,
-      path: String, epoch: Long): Unit =
-    graft.util.IndexFence.requireAbove(spark, path, epoch)
 
   /** Append to a persisted LSH signature index. The signature is a pure
     * function of the vector (data-independent hyperplanes), so an append
@@ -379,10 +290,9 @@ object Similarity {
     * this batch (> 0); a retry of the same epoch is idempotent. */
   def appendToLshIndex(delta: DataFrame, idCol: String, vecCol: String,
       path: String, epoch: Long, bits: Int = 12, prefixBits: Int = 6): Unit = {
-    require(epoch > 0, s"append epoch must be > 0 (0 is the build), got $epoch")
-    requireAboveFence(delta.sparkSession, path, epoch)
-    writeEpochPartitioned(withLshColumns(delta, vecCol, bits, prefixBits),
-      s"$path/vectors", "lsh_prefix", epoch, build = false)
+    PartitionedParquet.requireAppendable(delta.sparkSession, path, epoch)
+    PartitionedParquet.writeEpoch(withLshColumns(delta, vecCol, bits, prefixBits),
+      s"$path/vectors", epoch, Some("lsh_prefix"))
   }
 
   /** ANN top-k served from a [[buildIvfIndex]] table: route the query on
@@ -415,9 +325,9 @@ object Similarity {
     // fan-out before the signature kernel: a single-file corpus otherwise
     // computes every row's signature on one scan split (guide §2/§6;
     // profiled as a 1.4 s single-task stage at sf0.1)
-    writeEpochPartitioned(
+    PartitionedParquet.writeEpoch(
       withLshColumns(graft.util.Par.fanOut(emb), vecCol, bits, prefixBits),
-      s"$path/vectors", "lsh_prefix", epoch = 0L, build = true)
+      s"$path/vectors", 0L, Some("lsh_prefix"))
 
   /** ANN top-k served from a [[buildLshIndex]] table. Probe set = the query
     * signature plus all 1-bit flips — the SAME probes as [[lshTopK]], so

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.util.PartitionedParquet
+import graft.util.PartitionedParquet.{deletePartitions, hasData, readPartitioned,
+  scopedOverwrite}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -36,20 +38,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * bounds.
   *
   * Replay safety (Spark redelivers a batchId after a failure): both
-  * outputs are written with a write-scoped dynamic partition overwrite
-  * under their own `batch_id` partition, and the prior-seen read is
-  * filtered to `batch_id < batchId` — a replayed batch sees exactly the
-  * prior state its first run saw and overwrites exactly its own output
-  * (tested, including replay-after-later-batches). The overwrite mode is
-  * a per-write `.option`, never a session-wide conf mutation (a session
-  * flipped to dynamic would silently change every later
-  * `mode("overwrite").partitionBy` rebuild in the same session into a
-  * partial overwrite).
+  * outputs are written with a scoped overwrite under their own `batch_id`
+  * partition, and the prior-seen read is filtered to `batch_id < batchId`
+  * — a replayed batch sees exactly the prior state its first run saw and
+  * overwrites exactly its own output (tested, including
+  * replay-after-later-batches).
   *
-  * All filesystem access goes through the Hadoop FS API resolved from
-  * each path's own scheme (VERDICT r5 next #7) — `outDir` may be a local
-  * path, an explicit `file:` URI (tested), or an object-store URI; no
-  * `java.io.File` anywhere in this lifecycle. */
+  * All filesystem access goes through [[PartitionedParquet]] (VERDICT r5
+  * next #7) — `outDir` may be a local path, an explicit `file:` URI
+  * (tested), or an object-store URI. */
 object StreamingDedup {
 
   /** The zero-row schema sentinel's directory name. Deliberately NOT
@@ -58,9 +55,6 @@ object StreamingDedup {
     * explicit-path exemption (ADVICE r5 — the old `_schema` name made
     * every readback emit an 'All paths were ignored' WARN). */
   private val SchemaSentinel = "schema_sentinel"
-
-  private def fsOf(spark: SparkSession, path: String): (FileSystem, Path) =
-    graft.util.IndexFence.fsOf(spark, path)
 
   /** One-shot layout migration of a pre-r7 `accepted_folded` dir: r6 folds
     * wrote `fold_epoch=E` partitions with `batch_id` as a data column; r7
@@ -74,53 +68,17 @@ object StreamingDedup {
     * the rewrite and the delete leaves a transiently mixed dir that the
     * next fold's retry of this same migration heals (the rewrite is a
     * dynamic overwrite of the same batch partitions). */
-  private def migrateLegacyFolded(spark: SparkSession, fs: FileSystem,
-      outDir: String): Unit = {
-    val root = new Path(s"$outDir/accepted_folded")
-    if (!fs.exists(root)) return
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith("fold_epoch=")).foreach { st =>
-        val epoch = st.getPath.getName.stripPrefix("fold_epoch=").toLong
-        // reading the partition dir DIRECTLY strips fold_epoch: restore it
-        spark.read.parquet(st.getPath.toString)
+  private def migrateLegacyFolded(spark: SparkSession, outDir: String): Unit = {
+    val root = s"$outDir/accepted_folded"
+    PartitionedParquet.partitionIds(spark, root, "fold_epoch").foreach { epoch =>
+      // reading the partition dir DIRECTLY strips fold_epoch: restore it
+      scopedOverwrite(spark.read.parquet(s"$root/fold_epoch=$epoch")
           .withColumn("batch_id", col("batch_id").cast("long"))
-          .withColumn("fold_epoch", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(root.toString)
-        fs.delete(st.getPath, true)
-      }
-  }
-
-  /** True iff `dir` exists and holds at least one parquet data file
-    * (recursively) — a dynamic overwrite of an empty frame writes no
-    * files at all, so existence of the directory alone proves nothing. */
-  private def hasParquet(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = fsOf(spark, dir)
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
+          .withColumn("fold_epoch", lit(epoch)), "batch_id")
+        .parquet(root)
+      deletePartitions(spark, root, "fold_epoch")(_ == epoch)
     }
   }
-
-  /** Parquet read with `batch_id` normalized to long: the per-batch
-    * partition dirs infer their `batch_id` as int while the sentinel and
-    * the folded table store it as an explicit long — one type everywhere
-    * or unions and comparisons drift (ADVICE r5). */
-  private def readBatched(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-
-  private def writeDynamic(df: DataFrame, path: String, batchId: Long): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
 
   /** One idempotent micro-batch: probe index → dedup vs prior seen →
     * within-batch supersede → journal the batch, write survivors. Also
@@ -142,8 +100,7 @@ object StreamingDedup {
       textCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val sentinelDir = s"$outDir/$SchemaSentinel"
-    val (fs, sentinelPath) = fsOf(spark, sentinelDir)
-    if (!fs.exists(sentinelPath))
+    if (!PartitionedParquet.exists(spark, sentinelDir))
       batch.select(col(idCol), col(textCol))
         .withColumn("batch_id", lit(-1L)).limit(0)
         .write.mode(SaveMode.Overwrite).parquet(sentinelDir)
@@ -191,10 +148,12 @@ object StreamingDedup {
       // leaves a half-committed batch in EITHER order, and the batch-id-
       // scoped dynamic overwrite of the replayed batchId heals both
       // (replay-after-later-batches is Round5/7Spec-tested).
+      def commit(df: DataFrame, sub: String): Unit =
+        scopedOverwrite(df.withColumn("batch_id", lit(batchId)), "batch_id")
+          .parquet(s"$outDir/$sub")
       graft.util.Par.concurrently(
-        writeDynamic(batch.select(col(idCol), col(textCol)),
-          s"$outDir/seen", batchId),
-        writeDynamic(survivors, s"$outDir/accepted", batchId))
+        commit(batch.select(col(idCol), col(textCol)), "seen"),
+        commit(survivors, "accepted"))
     } finally {
       s1.unpersist(false)
       cross.foreach(_.unpersist(false))
@@ -211,9 +170,9 @@ object StreamingDedup {
   private def priorSeen(spark: SparkSession, outDir: String,
       batchId: Long, idCol: String, textCol: String): Option[DataFrame] = {
     val dir = s"$outDir/seen"
-    if (!hasParquet(spark, dir)) None
+    if (!hasData(spark, dir)) None
     else {
-      val prior = readBatched(spark, dir)
+      val prior = readPartitioned(spark, dir, "batch_id")
         .filter(col("batch_id") < batchId)
         .select(col(idCol), col(textCol))
       if (prior.isEmpty) None else Some(prior)
@@ -291,60 +250,37 @@ object StreamingDedup {
     val seenDir = s"$outDir/seen"
     val accDir = s"$outDir/accepted"
     val lastFolded = Dedup.foldWatermark(spark, indexPath)
-    val (fs, _) = fsOf(spark, outDir)
-    migrateLegacyFolded(spark, fs, outDir)
-    retireUpto(fs, seenDir, lastFolded)
-    retireUpto(fs, accDir, lastFolded)
-    if (uptoBatch <= lastFolded || !hasParquet(spark, seenDir)) return
-    val seen = readBatched(spark, seenDir)
+    migrateLegacyFolded(spark, outDir)
+    // step 0: safe by the fold's ordering — a batch at or under the
+    // committed watermark has its rows in the index and its accepted rows
+    // in `accepted_folded` (step 1 runs before the step-2 commit)
+    def retire(drop: Long => Boolean): Unit =
+      Seq(seenDir, accDir).foreach(deletePartitions(spark, _, "batch_id")(drop))
+    retire(_ <= lastFolded)
+    if (uptoBatch <= lastFolded || !hasData(spark, seenDir)) return
+    val seen = readPartitioned(spark, seenDir, "batch_id")
       .filter(col("batch_id") > lastFolded && col("batch_id") <= uptoBatch)
     // bounded driver collect: one row per covered batch
     val covered = seen.select(col("batch_id")).distinct()
       .collect().map(_.getLong(0)).sorted
     if (covered.isEmpty) return
-    val epoch = Seq(uptoBatch + 1, Dedup.minNextEpoch(spark, indexPath),
-      maxCommittedEpoch(spark, indexPath) + 1).max
-    if (hasParquet(spark, accDir)) {
-      val acc = readBatched(spark, accDir)
+    // the highest committed epoch is the uniqueness floor when the index
+    // also received direct (non-fold) appends — read from meta's epoch
+    // directory names, no job
+    val epoch = Seq(uptoBatch + 1,
+      PartitionedParquet.minNextEpoch(spark, indexPath),
+      PartitionedParquet.partitionIds(spark, s"$indexPath/meta", "epoch").max + 1).max
+    if (hasData(spark, accDir)) {
+      val acc = readPartitioned(spark, accDir, "batch_id")
         .filter(col("batch_id") > lastFolded && col("batch_id") <= uptoBatch)
       if (!acc.isEmpty)
-        acc.withColumn("fold_epoch", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
+        scopedOverwrite(acc.withColumn("fold_epoch", lit(epoch)), "batch_id")
           .parquet(s"$outDir/accepted_folded")
     }
     Dedup.appendToMinhashIndex(seen.select(col(idCol), col(textCol)),
       idCol, textCol, indexPath, epoch, m, bands, k, nShards,
       foldUpto = uptoBatch)
-    covered.foreach { b =>
-      fs.delete(new Path(s"$seenDir/batch_id=$b"), true)
-      fs.delete(new Path(s"$accDir/batch_id=$b"), true)
-    }
-  }
-
-  /** Highest committed epoch in the index's meta (bounded collect: one row
-    * per epoch) — the uniqueness floor for a fold's epoch choice when the
-    * index also received direct (non-fold) appends. */
-  private def maxCommittedEpoch(spark: SparkSession, indexPath: String): Long =
-    spark.read.parquet(s"$indexPath/meta")
-      .agg(max(col("epoch").cast("long"))).head().getLong(0)
-
-  /** Delete every `batch_id=N` child of `dir` with `N <= upto` — the
-    * retire sweep for dirs a crashed fold left behind. Safe by the fold's
-    * ordering: a batch at or under the committed watermark has its rows in
-    * the index and its accepted rows in `accepted_folded` (step 1 runs
-    * before the step-2 commit). */
-  private def retireUpto(fs: FileSystem, dir: String, upto: Long): Unit = {
-    val p = new Path(dir)
-    if (upto >= 0 && fs.exists(p))
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch_id=") &&
-            scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
-              .exists(_ <= upto))
-          fs.delete(st.getPath, true)
-      }
+    retire(covered.toSet)
   }
 
   /** Read back everything the stream has accepted so far: the folded
@@ -364,10 +300,10 @@ object StreamingDedup {
     val folded = s"$outDir/accepted_folded"
     val seen = s"$outDir/seen"
     val tail =
-      if (hasParquet(spark, acc)) Some(readBatched(spark, acc)) else None
+      if (hasData(spark, acc)) Some(readPartitioned(spark, acc, "batch_id")) else None
     val hist =
-      if (hasParquet(spark, folded))
-        Some(readBatched(spark, folded).drop("fold_epoch"))
+      if (hasData(spark, folded))
+        Some(readPartitioned(spark, folded, "batch_id").drop("fold_epoch"))
       else None
     (hist, tail) match {
       case (Some(h), Some(t)) =>
@@ -377,11 +313,10 @@ object StreamingDedup {
       case (Some(h), None) => h
       case (None, Some(t)) => t
       case (None, None) =>
-        if (hasParquet(spark, seen)) readBatched(spark, seen).limit(0)
+        if (hasData(spark, seen)) readPartitioned(spark, seen, "batch_id").limit(0)
         else {
           val sentinelDir = s"$outDir/$SchemaSentinel"
-          val (fs, p) = fsOf(spark, sentinelDir)
-          require(fs.exists(p),
+          require(PartitionedParquet.exists(spark, sentinelDir),
             s"$outDir: no committed batches (no accepted/seen data, no $SchemaSentinel)")
           spark.read.parquet(sentinelDir)
         }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.model.{GazRow, Mention}
 import graft.operators._
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import graft.util.PartitionedParquet
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -18,7 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - per-unit processing → the same narrow segment→extract stages run
   *    unchanged on a streaming Dataset (append mode, zero state);
   *  - commit/supersede → foreachBatch writes each micro-batch's triples
-  *    under `(batch_id, bucket)` partitions with dynamic overwrite, so a
+  *    under `(batch_id, bucket)` partitions with a scoped overwrite
+  *    ([[graft.util.PartitionedParquet.scopedOverwrite]]), so a
   *    replayed micro-batch (Spark redelivers the same batchId after a
   *    failure) overwrites exactly its own output — idempotent, and the
   *    manifest row (one per batch × bucket, lineage = batch id) is written
@@ -55,23 +57,15 @@ object StreamingTriples {
     val triples = Triples.all(Aggregation.perTurn(linked), batch)
       .withColumn("bucket", GraphSink.bucketCol(nBuckets))
       .withColumn("batch_id", lit(batchId))
-    // dynamic overwrite as a WRITE-SCOPED option, not a session conf flip:
-    // a session left in dynamic mode silently turns every later
-    // mode("overwrite").partitionBy rebuild in the same session into a
-    // partial overwrite that keeps stale partitions
-    triples.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "bucket").parquet(s"$dir/triples")
+    PartitionedParquet.scopedOverwrite(triples, "batch_id", "bucket")
+      .parquet(s"$dir/triples")
     // The manifest commit must be as idempotent as the data commit: a
     // redelivered batchId re-runs this whole function, and an APPEND here
     // would duplicate the batch's manifest rows (consumers summing
-    // triple_count double-count). Partitioning by run_id + dynamic
+    // triple_count double-count). Partitioning by run_id + a scoped
     // overwrite makes the replay overwrite exactly its own rows.
-    GraphSink.metrics(triples)
-      .withColumn("run_id", concat(lit("batch-"), lit(batchId)))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_id")
+    PartitionedParquet.scopedOverwrite(GraphSink.metrics(triples)
+        .withColumn("run_id", concat(lit("batch-"), lit(batchId))), "run_id")
       .parquet(GraphSink.manifestPath(dir))
   }
 

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scale-adaptive fan-out of narrow sources (optimization guide §2: make
   * partitioning scale-adaptive rather than a constant; §6: a small input
@@ -24,19 +24,35 @@ object Par {
     * both fail, `a`'s error is rethrown with `b`'s attached via
     * `addSuppressed`, so neither failure is lost.
     *
-    * Interrupts are not forwarded to `a`'s thread. An interrupt of the
-    * caller while `b` runs reaches only `b`. If the caller is interrupted
-    * while waiting for `a` (or `b` returns with the interrupt flag still
-    * set), the wait throws InterruptedException at once; `a` then keeps
-    * running on its daemon thread and its outcome is discarded. */
+    * `a`'s Spark jobs carry a job tag unique to this call (a tag, not a
+    * job group: `a` keeps the caller's group, by which callers attribute
+    * work). If the caller is interrupted while waiting for `a` (or `b`
+    * ends in an InterruptedException), the jobs with that tag are
+    * cancelled, `a` is joined, and the InterruptedException is rethrown
+    * with any failure of either side attached as suppressed. A body that
+    * runs no Spark job is not cancelled; the wait then lasts until it
+    * returns. */
   def concurrently(a: => Unit, b: => Unit): Unit = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
     @volatile var ea: Throwable = null
-    val t = new Thread(() => try a catch { case x: Throwable => ea = x },
+    val t = new Thread(() =>
+      try { sc.foreach(_.addJobTag(tag)); a } catch { case x: Throwable => ea = x },
       "graft-par")
     t.setDaemon(true)
     t.start()
     val eb = try { b; null } catch { case x: Throwable => x }
-    t.join()
+    try {
+      if (eb.isInstanceOf[InterruptedException]) throw eb
+      t.join()
+    } catch {
+      case ie: InterruptedException =>
+        sc.foreach(_.cancelJobsWithTag(tag))
+        t.join()
+        Seq(ea, eb).filter(e => e != null && (e ne ie)).foreach(ie.addSuppressed)
+        throw ie
+    }
     if (ea != null) {
       if (eb != null) ea.addSuppressed(eb)
       throw ea

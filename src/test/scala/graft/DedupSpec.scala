@@ -34,7 +34,7 @@ class DedupSpec extends GraftSuite {
     val nearDup = (1 to 58).map(i => s"word$i").mkString(" ") + " tail"
     val other = (100 to 160).map(i => s"tok$i").mkString(" ")
     val sigs = docs((1L, base), (2L, base), (3L, nearDup), (4L, other))
-      .select(col("doc_id"), Dedup.simhash64(col("text")).as("sig"))
+      .select(col("doc_id"), HofReference.simhash64(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) === sigs(2L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)

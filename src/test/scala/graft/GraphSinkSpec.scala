@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.GraphSink
+import graft.operators.{Dedup, GraphSink}
 import org.apache.spark.sql.functions._
 
 class GraphSinkSpec extends GraftSuite {
@@ -43,5 +43,31 @@ class GraphSinkSpec extends GraftSuite {
     val recorded = manifest.select("bucket", "triple_count", "checksum")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(recomputed === recorded)
+  }
+
+  test("writeResumable leaves the session's partitionOverwriteMode alone: " +
+      "an index rebuilt after a sink write holds only the build epoch") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    def doc(seed: Int) = (seed until seed + 30).map(i => s"w$i").mkString(" ")
+    val corpus = (0 until 6).map(i => (i.toLong, doc(i * 100))).toDF("doc_id", "text")
+    val idx = tmp()
+    try {
+      Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
+      Dedup.appendToMinhashIndex(Seq((100L, doc(5000))).toDF("doc_id", "text"),
+        "doc_id", "text", idx, epoch = 1L)
+      GraphSink.writeResumable(
+        Pipeline.triples(spark, Pipeline.Config(nConvs = 4, nBase = 32)).toDF(),
+        tmp(), "conf_leak", nBuckets = 4)
+      assert(spark.conf.get(key) === before)
+      Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
+      for (table <- Seq("meta", "bands", "docs")) {
+        val epochs = spark.read.parquet(s"$idx/$table")
+          .select(col("epoch").cast("long")).distinct().as[Long].collect().toSeq
+        assert(epochs === Seq(0L), table)
+      }
+    } finally spark.conf.set(key, before)
   }
 }

@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.util.Par
 
@@ -30,5 +33,34 @@ class ParSpec extends AnyFunSuite {
     assert(intercept[RuntimeException](
       Par.concurrently(throw boom, slowly(bDone))) eq boom)
     assert(bDone.get)
+  }
+
+  test("concurrently: interrupting the caller during a Spark job in `a` " +
+      "cancels that job and waits for `a` to end") {
+    val sc = SparkTestBase.spark.sparkContext
+    val started = new CountDownLatch(1)
+    @volatile var aThread: Thread = null
+    @volatile var thrown: Throwable = null
+    val caller = new Thread(() =>
+      try Par.concurrently({
+        aThread = Thread.currentThread()
+        started.countDown()
+        // ~20 s per task; a cancelled task stops at its next record
+        sc.parallelize(1 to 8000, 4).foreach(_ => Thread.sleep(10))
+      }, ())
+      catch { case x: Throwable => thrown = x })
+    caller.start()
+    assert(started.await(60, TimeUnit.SECONDS))
+    eventually(timeout(60.seconds)) {
+      assert(sc.statusTracker.getActiveJobIds().nonEmpty)
+    }
+    caller.interrupt()
+    caller.join(60000)
+    assert(!caller.isAlive)
+    assert(thrown.isInstanceOf[InterruptedException])
+    assert(!aThread.isAlive)
+    eventually(timeout(60.seconds)) {
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    }
   }
 }

@@ -439,10 +439,18 @@ class Round5Spec extends GraftSuite {
     // foreign debris the sweep must not choke on (ADVICE r4)
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/triples/bucket=__HIVE_DEFAULT_PARTITION__"))
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/triples/bucket=not_a_number"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/triples/_temporary/0"))
+    Files.createFile(java.nio.file.Paths.get(s"$dir/triples/_SUCCESS"))
     GraphSink.writeResumable(triples, dir, "junk_tolerant", nBuckets = 4)
     assert(GraphSink.readTriples(spark, dir).count() == triples.count())
     // the junk dirs are outside the contract: left alone, never read back
     assert(new java.io.File(s"$dir/triples/bucket=not_a_number").exists())
+    assert(new java.io.File(s"$dir/triples/bucket=__HIVE_DEFAULT_PARTITION__").exists())
+    assert(new java.io.File(s"$dir/triples/_temporary/0").exists())
+    // the shared partition listing sees only the numeric bucket dirs
+    val buckets = graft.util.PartitionedParquet.partitionIds(spark, s"$dir/triples", "bucket")
+    assert(buckets.sorted == GraphSink.readTriples(spark, dir)
+      .select("bucket").distinct().collect().map(_.getLong(0)).toSeq.sorted)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.operators._
 import graft.streaming.StreamingDedup
+import graft.util.PartitionedParquet
 import org.apache.spark.sql.functions._
 
 /** Round-7 fixes: the fold/compact fence enforced in CODE (VERDICT r6 next
@@ -36,10 +37,10 @@ class Round7Spec extends GraftSuite {
     Dedup.appendToMinhashIndex(
       Seq((100L, doc("fe", 50000, 40))).toDF("doc_id", "text"),
       "doc_id", "text", src, epoch = 1L)
-    assert(Dedup.minNextEpoch(spark, src) == 1L) // never compacted
+    assert(PartitionedParquet.minNextEpoch(spark, src) == 1L) // never compacted
     Dedup.compactMinhashIndex(spark, src, dst)
     // folded epochs 0 and 1 → the smallest legal append epoch is 2
-    assert(Dedup.minNextEpoch(spark, dst) == 2L)
+    assert(PartitionedParquet.minNextEpoch(spark, dst) == 2L)
     val late = Seq((200L, doc("fe", 60000, 40))).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
       Dedup.appendToMinhashIndex(late, "doc_id", "text", dst, epoch = 1L)
@@ -55,7 +56,7 @@ class Round7Spec extends GraftSuite {
     assert(Dedup.indexedDocCount(spark, dst) == 8)
     // a second compaction carries max(committed)+1 = 3 forward
     Dedup.compactMinhashIndex(spark, dst, dst2)
-    assert(Dedup.minNextEpoch(spark, dst2) == 3L)
+    assert(PartitionedParquet.minNextEpoch(spark, dst2) == 3L)
     rmAll(src, dst, dst2)
   }
 
@@ -88,7 +89,7 @@ class Round7Spec extends GraftSuite {
       "doc_id", "text").count()
     assert(pairs == 0) // 50000-series never committed
     // a compaction fence exists even though only epoch 0 was committed
-    assert(Dedup.minNextEpoch(spark, dst) == 1L)
+    assert(PartitionedParquet.minNextEpoch(spark, dst) == 1L)
     rmAll(src, dst)
   }
 
@@ -267,9 +268,9 @@ class Round7Spec extends GraftSuite {
       "embedding", src, nCentroids = 6)
     Similarity.appendToIvfIndex(base.filter($"vec_id" >= 90 && $"vec_id" < 105),
       "vec_id", "embedding", src, epoch = 1L)
-    assert(Similarity.minNextVectorEpoch(spark, src) == 1L) // never compacted
+    assert(PartitionedParquet.minNextEpoch(spark, src) == 1L) // never compacted
     Similarity.compactVectorIndex(spark, src, dst, "ivf_cid")
-    assert(Similarity.minNextVectorEpoch(spark, dst) == 2L)
+    assert(PartitionedParquet.minNextEpoch(spark, dst) == 2L)
     val late = base.filter($"vec_id" >= 105)
     val e = intercept[IllegalArgumentException] {
       Similarity.appendToIvfIndex(late, "vec_id", "embedding", dst, epoch = 1L)

@@ -17,7 +17,7 @@ class Round8Spec extends GraftSuite {
     for (bits <- Seq(4, 8, 12)) {
       val mism = emb
         .select(Similarity.lshSignature(col("embedding"), bits).as("n"),
-          Similarity.lshSignatureHof(col("embedding"), bits).as("h"))
+          HofReference.lshSignatureHof(col("embedding"), bits).as("h"))
         .filter(col("n") =!= col("h")).count()
       assert(mism == 0L, s"bits=$bits float-vector parity")
     }
@@ -26,7 +26,7 @@ class Round8Spec extends GraftSuite {
     val q = Seq(0.5, -1.25, 0.0, 3.75, -0.001, 2.0)
     val row = spark.range(1)
       .select(Similarity.lshSignature(array(q.map(lit): _*), 12).as("n"),
-        Similarity.lshSignatureHof(array(q.map(lit): _*), 12).as("h"))
+        HofReference.lshSignatureHof(array(q.map(lit): _*), 12).as("h"))
       .head()
     assert(row.getLong(0) == row.getLong(1), "double-vector parity")
   }

@@ -23,7 +23,7 @@ class SignatureParitySpec extends GraftSuite {
   test("simhash64 native == HOF on corpus + edge cases") {
     val diff = corpora
       .select(SignatureExprs.simhash64(col("text")).as("a"),
-        Dedup.simhash64(col("text")).as("b"))
+        HofReference.simhash64(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
@@ -31,7 +31,7 @@ class SignatureParitySpec extends GraftSuite {
   test("shingleHashes native == HOF shingles on corpus + edge cases") {
     val diff = corpora
       .select(SignatureExprs.shingleHashes(col("text"), 3).as("a"),
-        Dedup.shingles(col("text"), 3).as("b"))
+        HofReference.shingles(col("text"), 3).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
@@ -39,7 +39,7 @@ class SignatureParitySpec extends GraftSuite {
   test("minhashSig native == HOF minhashSignature on corpus + edge cases") {
     val diff = corpora
       .select(SignatureExprs.minhashSig(col("text"), 32, 3).as("a"),
-        Dedup.minhashSignature(col("text"), 32, 3).as("b"))
+        HofReference.minhashSignature(col("text"), 32, 3).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
@@ -56,7 +56,7 @@ class SignatureParitySpec extends GraftSuite {
     val q = array((1 to 64).map(i => lit(i / 64.0)): _*)
     val diff = emb
       .select(Similarity.cosine(col("v"), q).as("a"),
-        Similarity.cosineHof(col("v"), q).as("b"))
+        HofReference.cosineHof(col("v"), q).as("b"))
       .filter(!(col("a") <=> col("b"))).count() // bit-exact: no tolerance
     assert(diff == 0)
   }
