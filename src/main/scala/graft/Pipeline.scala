@@ -119,8 +119,8 @@ object Pipeline {
     * at 8 cores — zstd's extra compression CPU is repaid on both sides.
     * (At mult=64 the A/B read a wash — the page cache absorbed the write;
     * codec choices must be A/B'd at a scale where bytes actually hit
-    * disk.) Tunable via `graft.stage.codec`. */
-  private val StageCodec = sys.props.getOrElse("graft.stage.codec", "zstd")
+    * disk.) */
+  private val StageCodec = "zstd"
 
   private[graft] def stageTable(stageDir: String, name: String): String =
     s"graft_stage_${name}_${java.lang.Integer.toHexString(stageDir.hashCode)}"

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.operators.Similarity.{Ivf, Lsh}
 
 /** Committed recall-vs-scan-fraction curves for both pruned ANN paths
   * (VERDICT r5 next #6) plus the Lloyd-iteration saturation point (next
@@ -10,14 +11,15 @@ import graft.operators.Similarity
   * what fraction of the table scanned, and how much codebook refinement is
   * worth paying for".
   *
-  * Protocol = the driver recall rows' exactly: 20 fixed queries
-  * (vec_id < 20), recall@5 vs the exact top-5 (ties broken by id), indexes
-  * built with the registered params (IVF nCentroids=16, LSH bits=12 /
-  * prefixBits=6). Sweeps: IVF nProbe ∈ {1,2,4,8,16} at the registered
-  * lloydIters=1 codebook; LSH probeHamming ∈ {0,1,2,3}; IVF lloydIters ∈
-  * {0,1,2} at the registered nProbe=4 (where refinement saturates). Scan
-  * fraction = mean over queries of (rows in probed lists / corpus rows) —
-  * [[Similarity.ivfScanFraction]] / [[Similarity.lshScanFraction]].
+  * Protocol = the driver recall rows' exactly: the same 20 fixed queries
+  * ([[SparkEntry.fixedQueryVecs]], vec_id < 20), recall@5 vs the exact
+  * top-5 (ties broken by id), indexes built with the registered params
+  * (IVF nCentroids=16, LSH bits=12 / prefixBits=6). Sweeps: IVF nProbe
+  * ∈ {1,2,4,8,16} at the registered lloydIters=1 codebook; LSH
+  * probeHamming ∈ {0,1,2,3}; IVF lloydIters ∈ {0,1,2} at the registered
+  * nProbe=4 (where refinement saturates). Scan fraction = mean over queries of (rows in probed lists / corpus rows) —
+  * [[Similarity.scanFraction]]. Index dirs come from [[SparkEntry.tmpDir]],
+  * deleted with their contents at JVM exit.
   *
   * Usage: `runMain graft.RecallCurve <sfDir> [<sfDir> ...]`; prints ONE
   * JSON line (saved as `bench_runs/r6_recall_curve.json`). nProbe=16 of 16
@@ -32,46 +34,39 @@ object RecallCurve {
       val sf = dir.split('/').last
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val n = emb.count()
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id"), col("embedding")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toSeq))
-        .toSeq.sortBy(_._1)
+      val queries = SparkEntry.fixedQueryVecs(emb, 20)
       def meanRecall(df: org.apache.spark.sql.DataFrame): Double =
         df.agg(avg(col("recall"))).head().getDouble(0)
 
       // ---- IVF: nProbe sweep at the registered codebook (lloydIters=1)
-      val ivfIdx = java.nio.file.Files.createTempDirectory("graft_rc_ivf_")
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(ivfIdx.toFile)
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", ivfIdx.toString)
+      val ivfIdx = SparkEntry.tmpDir("graft_rc_ivf_")
+      Similarity.buildVectorIndex(emb, "vec_id", "embedding", ivfIdx, Ivf())
       val ivfCurve = Seq(1, 2, 4, 8, 16).map { nProbe =>
-        val rec = meanRecall(Similarity.ivfRecallIndexed(spark,
-          ivfIdx.toString, "vec_id", "embedding", queries, 5, nProbe))
-        val frac = Similarity.ivfScanFraction(spark, ivfIdx.toString,
-          queries, nProbe)
+        val rec = meanRecall(Similarity.recallIndexed(spark, ivfIdx,
+          "vec_id", "embedding", queries, 5, Ivf(nProbe = nProbe)))
+        val frac = Similarity.scanFraction(spark, ivfIdx, queries,
+          Ivf(nProbe = nProbe))
         f"""{"n_probe":$nProbe,"recall":$rec%.4f,"scan_fraction":$frac%.4f}"""
       }
 
       // ---- LSH: probeHamming sweep at the registered bits=12/prefixBits=6
-      val lshIdx = java.nio.file.Files.createTempDirectory("graft_rc_lsh_")
-      org.apache.commons.io.FileUtils.forceDeleteOnExit(lshIdx.toFile)
-      Similarity.buildLshIndex(emb, "vec_id", "embedding", lshIdx.toString)
+      val lshIdx = SparkEntry.tmpDir("graft_rc_lsh_")
+      Similarity.buildVectorIndex(emb, "vec_id", "embedding", lshIdx, Lsh())
       val lshCurve = Seq(0, 1, 2, 3).map { ham =>
-        val rec = meanRecall(Similarity.lshRecallIndexed(spark,
-          lshIdx.toString, "vec_id", "embedding", queries, 5,
-          probeHamming = ham))
-        val frac = Similarity.lshScanFraction(spark, lshIdx.toString,
-          queries, probeHamming = ham)
+        val rec = meanRecall(Similarity.recallIndexed(spark, lshIdx,
+          "vec_id", "embedding", queries, 5, Lsh(probeHamming = ham)))
+        val frac = Similarity.scanFraction(spark, lshIdx, queries,
+          Lsh(probeHamming = ham))
         f"""{"probe_hamming":$ham,"recall":$rec%.4f,"scan_fraction":$frac%.4f}"""
       }
 
       // ---- Lloyd saturation: iters ∈ {0,1,2} at the registered nProbe=4
       val lloydPts = Seq(0, 1, 2).map { iters =>
-        val idx = java.nio.file.Files.createTempDirectory(s"graft_rc_ll$iters")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(idx.toFile)
-        Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx.toString,
-          lloydIters = iters)
-        val rec = meanRecall(Similarity.ivfRecallIndexed(spark,
-          idx.toString, "vec_id", "embedding", queries, 5, nProbe = 4))
+        val idx = SparkEntry.tmpDir(s"graft_rc_ll$iters")
+        Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx,
+          Ivf(lloydIters = iters))
+        val rec = meanRecall(Similarity.recallIndexed(spark, idx,
+          "vec_id", "embedding", queries, 5, Ivf(nProbe = 4)))
         f"""{"lloyd_iters":$iters,"recall":$rec%.4f}"""
       }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.operators.Similarity.{Ivf, Lsh}
 import graft.sources.Gazetteer
 import graft.util.{Par, PartitionedParquet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -41,17 +42,18 @@ object SparkEntry {
   /** A fresh temp dir, deleted with its contents at JVM exit: the frames
     * the queries return read these dirs lazily, so they must outlive the
     * query. */
-  private def tmpDir(prefix: String): String = {
+  private[graft] def tmpDir(prefix: String): String = {
     val f = java.nio.file.Files.createTempDirectory(prefix).toFile
     sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(f))
     f.toString
   }
 
-  /** The fixed query-vector set of BOTH ANN recall surfaces (vec_id < n,
-    * id-sorted) — one definition so sim_ivf_recall and sim_lsh_recall
-    * cannot drift onto different query sets while claiming a shared
-    * protocol. Bounded driver collect: n rows by construction. */
-  private def fixedQueryVecs(emb: DataFrame, n: Int): Seq[(Long, Seq[Double])] =
+  /** The fixed query-vector set of BOTH ANN recall surfaces and of
+    * [[RecallCurve]] (vec_id < n, id-sorted) — one definition so
+    * sim_ivf_recall, sim_lsh_recall and the curve cannot drift onto
+    * different query sets while claiming a shared protocol. Bounded driver
+    * collect: n rows by construction. */
+  private[graft] def fixedQueryVecs(emb: DataFrame, n: Int): Seq[(Long, Seq[Double])] =
     emb.filter(col("vec_id") < n)
       .select(col("vec_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toSeq))
@@ -875,7 +877,7 @@ object SparkEntry {
     // rows-only (non-SQL-expressible): LSH / signature / stubbed-decode ops
     Query("sim_lsh_topk", None, (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(emb, "vec_id", "embedding", queryVec0(emb), 5)
+      Similarity.annTopK(emb, "vec_id", "embedding", queryVec0(emb), 5, Lsh())
     }),
     Query("dd_minhash", None, (s, dir) =>
       Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
@@ -927,11 +929,11 @@ object SparkEntry {
     }),
     // held to the exact answer at FULL probing (the sim_ivf_indexed /
     // sim_lsh_indexed contract: assignment + rerank lose nothing); the
-    // partial-probe pruned path is subset- and plan-asserted in Round3Spec
+    // partial-probe pruned path is subset- and plan-asserted in VectorIndexSpec
     Query("sim_ivf_topk", Some(exactTop5CosineSql), (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, "vec_id", "embedding", queryVec0(emb), 5, nCentroids = 16,
-        nProbe = 16)
+      Similarity.annTopK(emb, "vec_id", "embedding", queryVec0(emb), 5,
+        Ivf(nCentroids = 16, lloydIters = 0, nProbe = 16))
     }),
     // the full binary-payload plumbing (synthAssets → typed Dataset →
     // batched mapPartitions decode) driver-oracle-checked: the fake decode
@@ -1093,26 +1095,26 @@ object SparkEntry {
     // top-k — the synthetic embeddings are near-random, so partial-probe
     // recall is corpus luck, not a property worth gating on); the PRUNED
     // path's plan (PartitionFilters + 2-of-16 partitions read) and its
-    // subset-correctness are asserted in Round3Spec
+    // subset-correctness are asserted in VectorIndexSpec
     Query("sim_ivf_indexed", Some(exactTop5CosineSql), (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tmpDir("graft_ivf")
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx)
-      Similarity.ivfTopKIndexed(s, idx, "vec_id", "embedding", queryVec0(emb), 5,
-        nProbe = 16)
+      Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, Ivf())
+      Similarity.annTopKIndexed(s, idx, "vec_id", "embedding", queryVec0(emb), 5,
+        Ivf(nProbe = 16))
     }),
 
     // persisted LSH signature index: signatures written once
     // partitionBy(lsh_prefix); the driver-checked invariant is
     // losslessness (full probing == exact top-k, the sim_ivf_indexed
     // contract); the pruned multi-probe path (partition-pruned plan +
-    // equality with the in-flight lshTopK) is asserted in Round4Spec
+    // equality with the in-flight annTopK) is asserted in VectorIndexSpec
     Query("sim_lsh_indexed", Some(exactTop5CosineSql), (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tmpDir("graft_lshidx")
-      Similarity.buildLshIndex(emb, "vec_id", "embedding", idx)
-      Similarity.lshTopKIndexed(s, idx, "vec_id", "embedding", queryVec0(emb), 5,
-        probeAll = true)
+      Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, Lsh())
+      Similarity.annTopKIndexed(s, idx, "vec_id", "embedding", queryVec0(emb), 5,
+        Lsh(probeHamming = 12))
     }),
 
     // MEASURED recall@5 of the pruned ANN paths vs exact: 20 fixed queries
@@ -1135,16 +1137,16 @@ object SparkEntry {
     Query("sim_ivf_recall", Some(recallOracleSql(ivfHitPairs)), (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tmpDir("graft_ivf_rec")
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx)
-      Similarity.ivfRecallIndexed(s, idx, "vec_id", "embedding",
-        fixedQueryVecs(emb, 20), 5, nProbe = 4, detail = true)
+      Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, Ivf())
+      Similarity.recallIndexed(s, idx, "vec_id", "embedding",
+        fixedQueryVecs(emb, 20), 5, Ivf(nProbe = 4), detail = true)
     }),
     Query("sim_lsh_recall", Some(recallOracleSql(lshHitPairs)), (s, dir) => {
       val emb = t(s, dir, "embeddings")
       val idx = tmpDir("graft_lsh_rec")
-      Similarity.buildLshIndex(emb, "vec_id", "embedding", idx)
-      Similarity.lshRecallIndexed(s, idx, "vec_id", "embedding",
-        fixedQueryVecs(emb, 20), 5, probeHamming = 2, detail = true)
+      Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, Lsh())
+      Similarity.recallIndexed(s, idx, "vec_id", "embedding",
+        fixedQueryVecs(emb, 20), 5, Lsh(probeHamming = 2), detail = true)
     }),
 
     // ---- KG pipeline over the SQL-visible documents table: the reference

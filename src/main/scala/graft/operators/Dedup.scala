@@ -423,25 +423,14 @@ object Dedup {
     // tokenize+shingle kernel re-ran per consumer (~6× at sf0.1)
     val sh = shingleTable(corpusSrc(df, idCol, textCol), idCol, textCol, k)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // candidate ids only through the join+distinct — shingle ARRAYS are
-    // re-attached afterwards so the dedup shuffle moves 16-byte pairs, not
-    // full shingle sets
+    // the rare-shingle postings are the buckets: candidate ids come from
+    // their self-join (persisted, both sides) and the shared verify tail
+    // re-attaches the shingle arrays, already persisted above
     val inv = sh.select(col("id"), explode(col("sh")).as("s"))
     val dfCount = inv.groupBy("s").agg(count(lit(1)).as("df"))
     val rare = inv.join(dfCount.filter(col("df") <= maxDf), "s").select("s", "id")
-      .persist(StorageLevel.MEMORY_AND_DISK) // both sides of the self-join
-    val pairIds = rare.select(col("s"), col("id").as("id_a"))
-      .join(rare.select(col("s"), col("id").as("id_b")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    pairIds
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        graft.functions.SignatureExprs.jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyTrueJaccardSh(bucketPairIds(rare, Seq("s")), sh, threshold,
+      cacheSh = false)
   }
 
   // ------------------------------------------------------------------
@@ -453,7 +442,7 @@ object Dedup {
   // shards the delta's own band keys hash to. Reference analogue: the
   // persisted ES index + supersede semantics (src/app.py:1191-1208) —
   // re-expressed as a partitioned parquet index, the same layout family
-  // as LexicalIndex.buildIndex / Similarity.buildLshIndex.
+  // as LexicalIndex.buildIndex / Similarity.buildVectorIndex.
   // ------------------------------------------------------------------
 
   /** Build the persisted index of a corpus. Layout:

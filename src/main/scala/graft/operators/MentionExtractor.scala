@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.model.{GazRow, Mention, Segment}
-import graft.util.DetHash
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
 
@@ -320,9 +319,4 @@ object MentionExtractor {
       }
     }
   }
-
-  /** Deterministic mention id for voting/CC nodes (no uuid4 — F3). */
-  def mentionId(m: Mention): Long =
-    DetHash.h(DetHash.hs(m.conv_id), m.turn_idx.toLong, m.try_index.toLong,
-      m.start.toLong, m.end.toLong, DetHash.hs(m.source + ":" + m.code))
 }

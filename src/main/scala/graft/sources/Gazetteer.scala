@@ -92,7 +92,4 @@ object Gazetteer {
 
   /** Number of concepts (base + acute) for a given nBase. */
   def nConcepts(nBase: Int): Int = nBase + nBase / 4
-
-  /** For the test oracle: cui -> (sab, code) of the concept's own vocabulary. */
-  def conceptOf(k: Int): (String, String, String) = (cuiOf(k), sabOf(k), codeOf(k))
 }

@@ -173,8 +173,4 @@ object SynthTranscripts {
       }
     }.toDF("conv_id", "turn_idx", "role", "tool", "ts")
   }
-
-  /** Total turn count for sizing/throughput math (driver-side arithmetic). */
-  def totalTurns(nConvs: Int): Long =
-    (0L until nConvs.toLong).map(c => convSize(c, nConvs).toLong).sum
 }

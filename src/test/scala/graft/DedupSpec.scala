@@ -99,7 +99,8 @@ class DedupSpec extends GraftSuite {
     assert(brute.head.getLong(0) === 0L) // self-similarity = 1.0 tops the list
     assert(math.abs(brute.head.getDouble(1) - 1.0) < 1e-6)
     val scores = brute.map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", q, 5).collect()
+    val lsh = Similarity.annTopK(emb, "vec_id", "embedding", q, 5, Similarity.Lsh())
+      .collect()
     assert(lsh.nonEmpty)
     lsh.foreach { r =>
       // every LSH hit's score equals the exact cosine (rerank is exact)

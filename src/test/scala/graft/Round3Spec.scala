@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-3 fixes: multi-code preferred ranking, the guarded faceted
   * broadcast, the bounded automaton cache, as-of null contract, tiling
-  * validation, dedup drop audit, and the persisted IVF index. */
+  * validation, dedup drop audit, and the persisted lexical index. */
 class Round3Spec extends GraftSuite {
   import spark.implicits._
 
@@ -202,30 +202,6 @@ class Round3Spec extends GraftSuite {
       .select($"shard").distinct().count()
     assert(scan.selectedPartitions.partitionCount < totalShards,
       s"expected pruning below $totalShards shards")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
-
-  test("persisted IVF index: partition-pruned probes, exact at full probing") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q = emb.filter($"vec_id" === 0).select($"embedding").head()
-      .getSeq[Float](0).map(_.toDouble)
-    val dir = Files.createTempDirectory("graft_ivf_test").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nCentroids = 8)
-    // full probing == brute force (the index is lossless, only partitioned)
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val full = Similarity.ivfTopKIndexed(spark, dir, "vec_id", "embedding", q,
-      10, nProbe = 8).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(full == bf)
-    // partial probing must PRUNE: the ivf_cid filter lands in the scan's
-    // PartitionFilters and strictly fewer partitions are read
-    val part = Similarity.ivfTopKIndexed(spark, dir, "vec_id", "embedding", q,
-      10, nProbe = 2)
-    val scan = part.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    assert(scan.metadata("PartitionFilters").contains("ivf_cid"))
-    assert(scan.selectedPartitions.partitionCount == 2)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

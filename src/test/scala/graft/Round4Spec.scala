@@ -6,9 +6,8 @@ import graft.operators._
 import org.apache.spark.sql.functions._
 
 /** Round-4 fixes: the resumable-sink stale-bucket wedge, the guarded
-  * indexed-linking collect, the star-contraction CC fallback, the persisted
-  * LSH signature index, the simhash recall surface, and the hash-range
-  * centroid sample. */
+  * indexed-linking collect, the star-contraction CC fallback, and the
+  * simhash recall surface. */
 class Round4Spec extends GraftSuite {
   import spark.implicits._
 
@@ -128,38 +127,6 @@ class Round4Spec extends GraftSuite {
       && byStar(31L) == 30L)
   }
 
-  test("persisted LSH index: pruned multi-probe == in-flight lshTopK; " +
-      "exact at probeAll; partition pruning in the plan") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q = emb.filter($"vec_id" === 0).select($"embedding").head()
-      .getSeq[Float](0).map(_.toDouble)
-    val dir = Files.createTempDirectory("graft_lsh_idx_").toString
-    Similarity.buildLshIndex(emb, "vec_id", "embedding", dir,
-      bits = 12, prefixBits = 6)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // probeAll == brute force: the index is lossless, only partitioned
-    assert(rows(Similarity.lshTopKIndexed(spark, dir, "vec_id", "embedding",
-        q, 10, probeAll = true))
-      == rows(Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)))
-    // pruned multi-probe == the in-flight path (same probes by construction)
-    val pruned = Similarity.lshTopKIndexed(spark, dir, "vec_id", "embedding",
-      q, 5, bits = 12, prefixBits = 6)
-    assert(rows(pruned)
-      == rows(Similarity.lshTopK(emb, "vec_id", "embedding", q, 5, bits = 12)))
-    // the probe filter lands in PartitionFilters; ≤ prefixBits+1 of the
-    // 2^prefixBits prefixes are read
-    val scan = pruned.queryExecution.executedPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
-    assert(scan.metadata("PartitionFilters").contains("lsh_prefix"))
-    val totalPrefixes = spark.read.parquet(s"$dir/vectors")
-      .select($"lsh_prefix").distinct().count()
-    assert(scan.selectedPartitions.partitionCount <= 7 &&
-      scan.selectedPartitions.partitionCount < totalPrefixes)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
-
   test("simhash recall surface == minhash recall surface == exact pairs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id", $"text")
@@ -181,22 +148,6 @@ class Round4Spec extends GraftSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(bySimhash == exact, "simhash 8×8 blocking must recall every exact pair")
     assert(byMinhash == exact)
-  }
-
-  test("sampleCentroids: hash-range pre-filter == full sort; tiny slice " +
-      "falls back") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    // sliceShift=1 keeps ~half the rows — enough for 8 centroids, so the
-    // pre-filtered path answers; it must equal the exhaustive sort
-    val full = Similarity.sampleCentroids(emb, "vec_id", "embedding", 8,
-      sliceShift = 0)
-    val sliced = Similarity.sampleCentroids(emb, "vec_id", "embedding", 8,
-      sliceShift = 1)
-    assert(sliced.toSeq == full.toSeq && full.length == 8)
-    // a slice too thin for 8 survivors must fall back, same answer again
-    val fallback = Similarity.sampleCentroids(emb, "vec_id", "embedding", 8,
-      sliceShift = 40)
-    assert(fallback.toSeq == full.toSeq)
   }
 
   test("manifest mixing pre-r3 (4-column) and current rows reads as the " +

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-6 fixes: the streaming fold-and-retire lifecycle (VERDICT r5 next
   * #3), meta-as-commit-marker epoch gating in the index probe (ADVICE r5),
-  * IVF compaction parity (ADVICE r5), and the Hadoop-FS port of the
+  * and the Hadoop-FS port of the
   * streaming filesystem walks exercised through an explicit `file:` scheme
   * path (VERDICT r5 next #7). */
 class Round6Spec extends GraftSuite {
@@ -194,78 +194,5 @@ class Round6Spec extends GraftSuite {
     Dedup.appendToMinhashIndex(delta, "doc_id", "text", idx, epoch = 1L)
     assert(pairs() == Set((100L, 300L)))
     rmAll(idx)
-  }
-
-  test("recall detail rows aggregate to the summary form and carry exactly " +
-      "k exact-neighbor rows per query (the DuckDB-recomputable denominator)") {
-    def doc(seed: Int, dims: Int = 12) = (0 until dims)
-      .map(d => (((seed * 31 + d * 7) % 19).toDouble / 19.0 - 0.5).toFloat).toSeq
-    val emb = (0 until 60).map(i => (i.toLong, doc(i))).toDF("vec_id", "embedding")
-      .cache(); emb.count()
-    val queries = (0 until 4).map { i =>
-      (i.toLong, doc(i).map(_.toDouble).toSeq)
-    }
-    val idx = Files.createTempDirectory("graft_r6_detail_").toString
-    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx, nCentroids = 4)
-    val detail = Similarity.ivfRecallIndexed(spark, idx, "vec_id", "embedding",
-      queries, 5, nProbe = 2, detail = true)
-    // exactly k rows per query — every query's full exact top-5, hit or not
-    assert(detail.groupBy($"query_id").count()
-      .filter($"count" =!= 5).count() == 0)
-    // detail aggregates to the summary form exactly
-    val fromDetail = detail.groupBy($"query_id")
-      .agg(sum($"hit").cast("long").as("n_hits"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val summary = Similarity.ivfRecallIndexed(spark, idx, "vec_id", "embedding",
-        queries, 5, nProbe = 2)
-      .select($"query_id", $"n_hits")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fromDetail == summary)
-    // the detail's (query_id, vec_id, cos) triples ARE the exact top-5:
-    // parity with bruteForceTopK per query
-    val q0 = queries.head._2
-    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q0, 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val det0 = detail.filter($"query_id" === 0L)
-      .select($"vec_id", $"cos")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(det0 == exact)
-    rmAll(idx)
-    emb.unpersist()
-  }
-
-  test("IVF index compaction preserves the codebook and probe parity " +
-      "(src vs dst, pruned and full probing)") {
-    def clustered(n: Int, nClusters: Int, dims: Int = 16) = {
-      def h(i: Int, j: Int): Double =
-        (((i * 2654435761L + j * 40503L) % 1000L).toDouble / 1000.0 - 0.5) * 0.1
-      (0 until n).map { i =>
-        val c = i % nClusters
-        val base = Array.tabulate(dims)(d => if (d == c) 1.0 else 0.0)
-        (i.toLong, base.zipWithIndex.map { case (v, d) => (v + h(i, d)).toFloat }.toSeq)
-      }.toDF("vec_id", "embedding")
-    }
-    val base = clustered(120, 6).cache(); base.count()
-    val src = Files.createTempDirectory("graft_ivfc_src_").toString
-    val dst = Files.createTempDirectory("graft_ivfc_dst_").toString + "/idx"
-    Similarity.buildIvfIndex(base.filter($"vec_id" < 90), "vec_id",
-      "embedding", src, nCentroids = 6)
-    Similarity.appendToIvfIndex(base.filter($"vec_id" >= 90), "vec_id",
-      "embedding", src, epoch = 1L)
-    Similarity.compactVectorIndex(spark, src, dst, "ivf_cid")
-    // codebook copied verbatim (it is what routes probes)
-    def cb(p: String) = spark.read.parquet(s"$p/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
-    assert(cb(dst) == cb(src))
-    assert(spark.read.parquet(s"$dst/vectors").count() == 120)
-    val q = base.filter($"vec_id" === 93).head().getSeq[Float](1)
-      .map(_.toDouble).toSeq
-    def top(p: String, nProbe: Int) = Similarity.ivfTopKIndexed(spark, p,
-        "vec_id", "embedding", q, 7, nProbe = nProbe)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(top(dst, 1) == top(src, 1)) // pruned probe parity
-    assert(top(dst, 6) == top(src, 6)) // full probe parity
-    rmAll(src, dst)
-    base.unpersist()
   }
 }

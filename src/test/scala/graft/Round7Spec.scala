@@ -223,8 +223,8 @@ class Round7Spec extends GraftSuite {
     rmAll(stage)
   }
 
-  test("stage tables are written with the configured codec (zstd default): " +
-      "the parquet footers say so, not just the option string") {
+  test("stage tables are written zstd: the parquet footers say so, not " +
+      "just the option string") {
     val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
     val stage = Files.createTempDirectory("graft_codec_stage").toString
     Pipeline.writeLinkedStage(spark, cfg, stage)
@@ -247,58 +247,6 @@ class Round7Spec extends GraftSuite {
     }
     Pipeline.dropStageTables(spark, stage)
     rmAll(stage)
-  }
-
-  test("vector-index compaction fence (IVF + LSH parity with the minhash " +
-      "fence): a below-fence append fails loudly, an at-fence append works, " +
-      "probe parity is preserved") {
-    def clustered(n: Int, nClusters: Int, dims: Int = 16) = {
-      def h(i: Int, j: Int): Double =
-        (((i * 2654435761L + j * 40503L) % 1000L).toDouble / 1000.0 - 0.5) * 0.1
-      (0 until n).map { i =>
-        val c = i % nClusters
-        val base = Array.tabulate(dims)(d => if (d == c) 1.0 else 0.0)
-        (i.toLong, base.zipWithIndex.map { case (v, d) => (v + h(i, d)).toFloat }.toSeq)
-      }.toDF("vec_id", "embedding")
-    }
-    val base = clustered(120, 6).cache(); base.count()
-    val src = Files.createTempDirectory("graft_vf_src_").toString
-    val dst = Files.createTempDirectory("graft_vf_dst_").toString + "/idx"
-    Similarity.buildIvfIndex(base.filter($"vec_id" < 90), "vec_id",
-      "embedding", src, nCentroids = 6)
-    Similarity.appendToIvfIndex(base.filter($"vec_id" >= 90 && $"vec_id" < 105),
-      "vec_id", "embedding", src, epoch = 1L)
-    assert(PartitionedParquet.minNextEpoch(spark, src) == 1L) // never compacted
-    Similarity.compactVectorIndex(spark, src, dst, "ivf_cid")
-    assert(PartitionedParquet.minNextEpoch(spark, dst) == 2L)
-    val late = base.filter($"vec_id" >= 105)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(late, "vec_id", "embedding", dst, epoch = 1L)
-    }
-    assert(e.getMessage.contains("compaction fence"))
-    assert(spark.read.parquet(s"$dst/vectors").count() == 105) // nothing added
-    Similarity.appendToIvfIndex(late, "vec_id", "embedding", dst, epoch = 2L)
-    assert(spark.read.parquet(s"$dst/vectors").count() == 120)
-    // probing still works across the fence-carrying copy
-    val q = base.filter($"vec_id" === 93).head().getSeq[Float](1)
-      .map(_.toDouble).toSeq
-    assert(Similarity.ivfTopKIndexed(spark, dst, "vec_id", "embedding",
-      q, 7, nProbe = 6).count() == 7)
-    // LSH twin: the same fence via the shared compaction path
-    val lsrc = Files.createTempDirectory("graft_vf_lsrc_").toString
-    val ldst = Files.createTempDirectory("graft_vf_ldst_").toString + "/idx"
-    Similarity.buildLshIndex(base.filter($"vec_id" < 90), "vec_id",
-      "embedding", lsrc, bits = 8, prefixBits = 3)
-    Similarity.appendToLshIndex(base.filter($"vec_id" >= 90), "vec_id",
-      "embedding", lsrc, epoch = 1L, bits = 8, prefixBits = 3)
-    Similarity.compactVectorIndex(spark, lsrc, ldst, "lsh_prefix")
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.appendToLshIndex(late, "vec_id", "embedding", ldst,
-        epoch = 1L, bits = 8, prefixBits = 3)
-    }
-    assert(e2.getMessage.contains("compaction fence"))
-    rmAll(src, dst, lsrc, ldst)
-    base.unpersist()
   }
 
   test("bench exclusivity lock: held-by-live-pid refuses, dead-pid lock is " +

@@ -29,6 +29,19 @@ class Round8Spec extends GraftSuite {
         HofReference.lshSignatureHof(array(q.map(lit): _*), 12).as("h"))
       .head()
     assert(row.getLong(0) == row.getLong(1), "double-vector parity")
+    // the driver-side query signature that routes LSH probes == the kernel
+    // column on the same vectors (corpus floats widened to doubles, and
+    // the double literal above)
+    for (bits <- Seq(4, 8, 12)) {
+      val lsh = Similarity.Lsh(bits = bits, prefixBits = 1)
+      val mismRows = emb
+        .select(col("embedding"), Similarity.lshSignature(col("embedding"), bits))
+        .collect().count(r =>
+          lsh.signatureOf(r.getSeq[Float](0).map(_.toDouble).toSeq) != r.getLong(1))
+      assert(mismRows == 0, s"bits=$bits driver-side float-vector parity")
+    }
+    assert(Similarity.Lsh().signatureOf(q) == row.getLong(0),
+      "driver-side double-vector parity")
   }
 
   test("native jaccard == size(array_intersect)/union form on corpus shingles") {

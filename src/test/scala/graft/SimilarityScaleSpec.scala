@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.Similarity.Ivf
 import org.apache.spark.sql.functions._
 
 /** Scale paths of the similarity suite: IVF ANN and the exact all-pairs
@@ -17,12 +18,12 @@ class SimilarityScaleSpec extends GraftSuite {
   test("ivfTopK with full probing equals brute force; partial probing is a sound subset") {
     val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryVec, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val full = Similarity.ivfTopK(emb, "vec_id", "embedding", queryVec, 10,
-      nCentroids = 8, nProbe = 8)
+    val full = Similarity.annTopK(emb, "vec_id", "embedding", queryVec, 10,
+      Ivf(nCentroids = 8, lloydIters = 0, nProbe = 8))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(full.toSeq == bf.toSeq) // probing every list == exact
-    val part = Similarity.ivfTopK(emb, "vec_id", "embedding", queryVec, 10,
-      nCentroids = 8, nProbe = 2)
+    val part = Similarity.annTopK(emb, "vec_id", "embedding", queryVec, 10,
+      Ivf(nCentroids = 8, lloydIters = 0, nProbe = 2))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val bfMap = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queryVec, 1000000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
