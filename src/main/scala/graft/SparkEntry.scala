@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.operators.Dedup.{Minhash, Simhash}
 import graft.operators.Similarity.{Ivf, Lsh}
 import graft.sources.Gazetteer
 import graft.util.{Par, PartitionedParquet}
@@ -880,11 +881,12 @@ object SparkEntry {
       Similarity.annTopK(emb, "vec_id", "embedding", queryVec0(emb), 5, Lsh())
     }),
     Query("dd_minhash", None, (s, dir) =>
-      Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-        m = 32, bands = 16, threshold = 0.2)
+      Dedup.estimatePairs(t(s, dir, "documents"), "doc_id", "text", Minhash,
+        threshold = 0.2)
         .orderBy("id_a", "id_b")),
     Query("dd_simhash", None, (s, dir) =>
-      Dedup.simhashPairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 12)
+      Dedup.estimatePairs(t(s, dir, "documents"), "doc_id", "text", Simhash(4),
+        threshold = 12)
         .orderBy("id_a", "id_b")),
     // the rare-shingle inverted join is ALSO exact-recall on this corpus
     // (verified: no pair at J ≥ 0.05 is reachable only through shingles
@@ -893,7 +895,7 @@ object SparkEntry {
     Query("dd_ngram_jaccard", Some(exactJaccardPairsSql.replace("j >= 0.5", "j >= 0.05")),
       (s, dir) =>
       Dedup.ngramJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        k = 3, threshold = 0.05, maxDf = 100)
+        threshold = 0.05, maxDf = 100)
         .orderBy("id_a", "id_b")),
     // bits=4: near-orthogonal pairs (cos≈0.4 ⇒ per-bit agree p≈0.63) still
     // co-bucket with p≈0.16 — nonzero recall on this corpus; raise bits as
@@ -968,23 +970,23 @@ object SparkEntry {
             .as("avg_f0"))
     }),
 
-    // LSH recall vs exact (Dedup.minhashLshTrueJaccardPairs scaladoc): the
+    // LSH recall vs exact (Dedup.trueJaccardPairs scaladoc): the
     // Spark plan is band-bucketed (never all-pairs); the DuckDB oracle is
     // the O(n²) exact answer — equality certifies recall=1 end to end
     Query("dd_minhash_recall", Some(exactJaccardPairsSql), (s, dir) =>
-      Dedup.minhashLshTrueJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        m = 32, bands = 16, trueThreshold = 0.5, k = 3)
+      Dedup.trueJaccardPairs(t(s, dir, "documents"), "doc_id", "text", Minhash,
+        trueThreshold = 0.5)
         .orderBy("id_a", "id_b")),
 
-    // SimHash-blocking recall vs exact (Dedup.simhashTrueJaccardPairs
+    // SimHash-blocking recall vs exact (Dedup.trueJaccardPairs
     // scaladoc): 8×8-bit blocks guarantee any pair within hamming ≤ 7
     // shares a block; the true near-dup pairs sit at hamming ≤ 5, so the
     // block-bucketed Spark plan must equal the O(n²) exact-Jaccard oracle
     // (the same oracle as dd_minhash_recall — both recall surfaces are held
     // to the same exact answer)
     Query("dd_simhash_recall", Some(exactJaccardPairsSql), (s, dir) =>
-      Dedup.simhashTrueJaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-        k = 3, trueThreshold = 0.5)
+      Dedup.trueJaccardPairs(t(s, dir, "documents"), "doc_id", "text", Simhash(8),
+        trueThreshold = 0.5)
         .orderBy("id_a", "id_b")),
 
     // keep-one-per-cluster dedup: CC over the verified near-dup pair graph

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.SignatureExprs
 import graft.util.{Par, PartitionedParquet}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -13,15 +14,86 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale strategy per operator:
   *  - exact:     one hash-groupBy (map-side partial agg collapses dups early)
-  *  - minhash:   signature = pure projection; LSH band join keys are
-  *               (band, band-hash) — candidate pairs ~ true-dup pairs, never
-  *               all-pairs; verification re-checks true Jaccard
-  *  - simhash:   64-bit signature projection + 4×16-bit band blocking +
-  *               bit_count(a^b) hamming verify
+  *  - blocked:   one implementation of each near-dup operation —
+  *               [[droppedBuckets]], [[estimatePairs]], [[trueJaccardPairs]]
+  *               — over a [[Blocking]] kind: [[Minhash]] (LSH bands of a
+  *               minhash signature) or [[Simhash]] (bit blocks of a 64-bit
+  *               simhash). Signature = pure projection; bucket join keys
+  *               are (band, bkey) — candidate pairs ~ true-dup pairs, never
+  *               all-pairs; verification re-checks the kind's estimate or
+  *               the true Jaccard
   *  - ngram:     rare-shingle inverted join (df-capped prefix filter) so hot
   *               shingles can't quadratically explode a bucket
   */
 object Dedup {
+
+  /** Width in words of every shingle: the minhash signature, the
+    * true-Jaccard verify, [[ngramJaccardPairs]] and the persisted index.
+    * The exact SQL oracles hard-code it. */
+  private val ShingleWords = 3
+
+  /** Shard count of the persisted index's `bands` table: a delta probe
+    * reads only the shards its own band keys hash to. */
+  private val IndexShards = 64L
+
+  /** The bucket key columns of every blocked table. */
+  private val BandKey = Seq("band", "bkey")
+
+  /** A near-dup blocking kind. Each kind supplies its signature kernel,
+    * its `nKeys` bucket keys per signature (a candidate pair shares at
+    * least one) and its pair estimate: the estimate of two signatures,
+    * output as `estimateCol`, and the predicate that keeps a pair at a
+    * threshold. */
+  sealed abstract class Blocking(private[graft] val nKeys: Int,
+      private[graft] val estimateCol: String) {
+    private[graft] def signature(text: Column): Column
+    /** Bucket key `i` (0-based) of signature `sig`. */
+    private[graft] def key(sig: Column, i: Column): Column
+    private[graft] def estimate(sigA: Column, sigB: Column): Column
+    private[graft] def keep(est: Column, threshold: Double): Column
+  }
+
+  /** MinHash + LSH: 32 minhashes of the 3-word shingle set in 16 bands ×
+    * 2 rows; the estimate is the matching-minhash fraction (rounded to 6
+    * places, which is exact: a multiple of 1/32 has at most 5), kept when
+    * ≥ threshold. A pair at Jaccard J misses every band with probability
+    * (1 − J²)^16, ~3e-12 at J = 0.9. The persisted index uses this
+    * banding too, so it can only be built, appended and probed with one
+    * layout. */
+  case object Minhash extends Blocking(16, "est_jaccard") {
+    private val hashes = 32
+    private val rows = hashes / nKeys
+    private[graft] def signature(text: Column): Column =
+      SignatureExprs.minhashSig(text, hashes, ShingleWords)
+    private[graft] def key(sig: Column, i: Column): Column =
+      xxhash64(slice(sig, i * rows + 1, lit(rows)).cast("string"), i)
+    private[graft] def estimate(sigA: Column, sigB: Column): Column =
+      round(size(filter(zip_with(sigA, sigB, (x, y) => x === y), eq => eq)) /
+        lit(hashes.toDouble), 6)
+    private[graft] def keep(est: Column, threshold: Double): Column =
+      est >= threshold
+  }
+
+  /** SimHash: a 64-bit simhash cut into `nBlocks` keys of 64/nBlocks bits
+    * (pigeonhole: a pair within hamming ≤ nBlocks−1 agrees exactly on ≥ 1
+    * block); the estimate is the hamming distance, kept when ≤ threshold.
+    * 4 blocks (16-bit keys) is the at-scale shape — wider keys prune
+    * harder; the recall surfaces use 8, whose guaranteed ball (hamming
+    * ≤ 7) covers the gate corpus's true pairs. */
+  final case class Simhash(nBlocks: Int) extends Blocking(nBlocks, "hamming") {
+    require(nBlocks > 0 && 64 % nBlocks == 0,
+      s"nBlocks must be a positive divisor of 64, got $nBlocks")
+    private val width = 64 / nBlocks
+    private val mask = if (width == 64) -1L else (1L << width) - 1
+    private[graft] def signature(text: Column): Column =
+      SignatureExprs.simhash64(text)
+    private[graft] def key(sig: Column, i: Column): Column =
+      call_function("shiftright", sig, (i * width).cast("int")).bitwiseAND(lit(mask))
+    private[graft] def estimate(sigA: Column, sigB: Column): Column =
+      bit_count(sigA.bitwiseXOR(sigB))
+    private[graft] def keep(est: Column, threshold: Double): Column =
+      est <= threshold
+  }
 
   /** Normalized word array of a text column. */
   def words(text: Column): Column =
@@ -32,8 +104,11 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("dup_count"))
 
+  private def bucketSizes(keys: DataFrame): DataFrame =
+    keys.groupBy(BandKey.map(col): _*).agg(count(lit(1)).as("bucket_n"))
+
   /** Drop bucket keys whose member count exceeds `maxBucket`, returning the
-    * surviving (bucket-key..., id) rows. A degenerate corpus — k identical
+    * surviving (id, band, bkey) rows. A degenerate corpus — k identical
     * or boilerplate docs — puts k ids in ONE bucket and the self-join emits
     * k² candidate pairs; the cap bounds any bucket's contribution to
     * maxBucket². The contract is exact-dedup-first (identical texts collapse
@@ -42,12 +117,11 @@ object Dedup {
     * exact/doc-level dedup already covers. Same prefix-filter idea as
     * [[ngramJaccardPairs]]' maxDf.
     *
-    * The drop is NOT silent by contract: audit it with
-    * [[minhashDroppedBuckets]] / [[simhashDroppedBuckets]], which return the
-    * over-cap buckets (and how many docs each held) for the same inputs —
-    * zero rows certifies that the cap dropped nothing. */
-  private def capBuckets(exploded: DataFrame, keyCols: Seq[String],
-      maxBucket: Int, cache: Boolean = true): DataFrame = {
+    * The drop is NOT silent by contract: audit it with [[droppedBuckets]],
+    * which returns the over-cap buckets (and how many docs each held) for
+    * the same inputs — zero rows certifies that the cap dropped nothing. */
+  private def capBuckets(exploded: DataFrame, maxBucket: Int,
+      cache: Boolean = true): DataFrame = {
     // corpus-scale callers persist: the exploded bucket table feeds BOTH
     // the size aggregation and the join below (and the caller's
     // self-join), so the signature kernel would otherwise re-run per
@@ -57,23 +131,17 @@ object Dedup {
     // cache-build barriers measured as a net loss per micro-batch.
     val e = if (cache) exploded.persist(StorageLevel.MEMORY_AND_DISK)
       else exploded
-    val keys = keyCols.map(col)
-    val sizes = e.groupBy(keys: _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
     // both sides shuffle on the bucket key — co-partitioned join, and the
     // downstream self-join reuses the same partitioning
-    e.join(sizes, keyCols)
+    e.join(bucketSizes(e).filter(col("bucket_n") <= maxBucket).drop("bucket_n"),
+      BandKey)
   }
 
   /** Candidate id pairs from a bucketed self-join: dedup happens on BARE
     * id pairs (16 bytes) before any payload is re-attached, so the
     * distinct() shuffle never carries signature arrays. */
-  private def bucketPairIds(buckets: DataFrame, keyCols: Seq[String],
-      cache: Boolean = true): DataFrame = {
-    val b = if (cache) buckets.persist(StorageLevel.MEMORY_AND_DISK)
-      else buckets
+  private def bucketPairIds(buckets: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val b = buckets.persist(StorageLevel.MEMORY_AND_DISK)
     b.select(keyCols.map(col) :+ col("id").as("id_a"): _*)
       .join(b.select(keyCols.map(col) :+ col("id").as("id_b"): _*), keyCols)
       .filter(col("id_a") < col("id_b"))
@@ -81,32 +149,27 @@ object Dedup {
       .distinct() // a pair can collide in several buckets
   }
 
-  /** Over-cap bucket sizes (the audit surface of [[capBuckets]]). */
-  private def droppedBuckets(exploded: DataFrame, keyCols: Seq[String],
-      maxBucket: Int): DataFrame =
-    exploded.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
+  /** Column `c` of an (id, c) table joined onto both sides of (id_a, id_b)
+    * pairs as `c_a` / `c_b`. */
+  private def attach(pairIds: DataFrame, t: DataFrame, c: String): DataFrame =
+    pairIds
+      .join(t.select(col("id").as("id_a"), col(c).as(s"${c}_a")), Seq("id_a"))
+      .join(t.select(col("id").as("id_b"), col(c).as(s"${c}_b")), Seq("id_b"))
 
-  /** Effective bucket cap of the RECALL surfaces (VERDICT r4 next #3):
-    * `maxBucket` if positive, else CORPUS-SIZED — max(1000, ⌈nDocs/2⌉).
-    * A recall surface whose cap can silently bind is a recall leak: at
-    * sf0.1 the 8×8-bit simhash blocking put 1460 docs in one bucket and
-    * the fixed cap=1000 dropped three buckets' candidates (recorded in the
-    * r4 bench audit, recall knowably < 1 at bench scale). A bucket larger
-    * than nDocs/2 means > 25% of ALL pairs share one bucket — a degenerate
-    * corpus that violated the exact-dedup-first contract — so the
-    * corpus-sized cap never binds on sane input while still bounding the
-    * blowup a pathological one could cause. The at-scale surfaces
-    * ([[minhashLshPairs]], [[simhashPairs]]) keep their fixed caps: their
-    * contract is bounded work, audited drops. Costs one count() pass. */
-  private def effectiveCap(df: DataFrame, maxBucket: Int): Int =
-    if (maxBucket > 0) maxBucket else effectiveCapN(df.count(), maxBucket)
-
-  /** Count-form of [[effectiveCap]]. `nDocs` is by-name: when a caller
-    * passes a fixed positive cap, the (possibly job-launching) count is
-    * never evaluated. */
-  private def effectiveCapN(nDocs: => Long, maxBucket: Int): Int =
+  /** Effective bucket cap (VERDICT r4 next #3): `maxBucket` if positive,
+    * else CORPUS-SIZED — max(1000, ⌈nDocs/2⌉). A surface whose cap can
+    * silently bind is a recall leak: at sf0.1 the 8×8-bit simhash blocking
+    * put 1460 docs in one bucket and the fixed cap=1000 dropped three
+    * buckets' candidates (recorded in the r4 bench audit, recall knowably
+    * < 1 at bench scale). A bucket larger than nDocs/2 means > 25% of ALL
+    * pairs share one bucket — a degenerate corpus that violated the
+    * exact-dedup-first contract — so the corpus-sized cap never binds on
+    * sane input while still bounding the blowup a pathological one could
+    * cause. Every capped surface and its [[droppedBuckets]] audit resolve
+    * the cap here, so the audit always certifies the cap the surface ran
+    * with. `nDocs` is by-name: at a fixed positive cap the (possibly
+    * job-launching) count is never evaluated. */
+  private def effectiveCap(maxBucket: Int, nDocs: => Long): Int =
     if (maxBucket > 0) maxBucket
     else math.min(math.max(1000L, (nDocs + 1) / 2), Int.MaxValue.toLong).toInt
 
@@ -121,117 +184,112 @@ object Dedup {
   private def corpusSrc(df: DataFrame, idCol: String, textCol: String): DataFrame =
     Par.fanOut(df.select(col(idCol), col(textCol)))
 
-  /** (id, sig) minhash signature table — the shared head of the banding
-    * and the signature re-attach joins. */
-  private def minhashSigTable(df: DataFrame, idCol: String, textCol: String,
-      m: Int, k: Int): DataFrame =
+  /** (id, sig) signature table of a blocking kind — the shared head of the
+    * bucket keys and the signature re-attach joins. */
+  private def sigTable(df: DataFrame, idCol: String, textCol: String,
+      blocking: Blocking): DataFrame =
     df.select(col(idCol).as("id"), col(textCol).as("_text"))
-      .select(col("id"),
-        graft.functions.SignatureExprs.minhashSig(col("_text"), m, k).as("sig"))
+      .select(col("id"), blocking.signature(col("_text")).as("sig"))
 
-  /** The (band, bkey) banding projection over a signature table. */
-  private def bandsOfSig(sig: DataFrame, m: Int, bands: Int): DataFrame = {
-    val r = m / bands
-    sig.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("sig"), b * r + 1, lit(r)).cast("string"), b)))
-        .as(Seq("band", "bkey")))
-  }
+  /** The (id, band, bkey) bucket keys of a signature table. */
+  private def bucketKeys(sigs: DataFrame, blocking: Blocking): DataFrame =
+    sigs.select(col("id"),
+      posexplode(transform(sequence(lit(0), lit(blocking.nKeys - 1)),
+        i => blocking.key(col("sig"), i))).as(BandKey))
 
-  /** The (band, bkey) LSH banding of a corpus's minhash signatures. */
-  private def bandedMinhash(df: DataFrame, idCol: String, textCol: String,
-      m: Int, bands: Int, k: Int): DataFrame =
-    bandsOfSig(minhashSigTable(df, idCol, textCol, m, k), m, bands)
+  private def blocked(df: DataFrame, idCol: String, textCol: String,
+      blocking: Blocking): DataFrame =
+    bucketKeys(sigTable(df, idCol, textCol, blocking), blocking)
 
-  /** Buckets [[minhashLshPairs]] would skip at this `maxBucket` (same
-    * params ⇒ same banding): (band, bkey, bucket_n). Zero rows ⇒ the cap
-    * dropped no candidate pairs. `maxBucket` has NO default on purpose:
-    * the audited surfaces default differently (near-dup pairs 1000,
-    * recall surfaces 0 = corpus-sized), so an audit run with a defaulted
-    * cap could report drops the surface never makes — the caller must
-    * state the cap of the surface it is auditing. */
-  def minhashDroppedBuckets(df: DataFrame, idCol: String, textCol: String,
-      m: Int = 32, bands: Int = 8, k: Int = 3, maxBucket: Int): DataFrame =
-    droppedBuckets(bandedMinhash(corpusSrc(df, idCol, textCol), idCol,
-        textCol, m, bands, k),
-      Seq("band", "bkey"), effectiveCap(df, maxBucket))
+  /** Buckets [[estimatePairs]] or [[trueJaccardPairs]] would skip at this
+    * `blocking` and `maxBucket`: (band, bkey, bucket_n). Zero rows ⇒ the
+    * cap dropped no candidate pairs. Audit with the SAME blocking as the
+    * surface being certified — two blockings bucket differently.
+    * `maxBucket` has NO default on purpose: the audited surfaces default
+    * differently (near-dup pairs 1000, recall surfaces 0 = corpus-sized),
+    * so an audit run with a defaulted cap could report drops the surface
+    * never makes — the caller must state the cap of the surface it is
+    * auditing. */
+  def droppedBuckets(df: DataFrame, idCol: String, textCol: String,
+      blocking: Blocking, maxBucket: Int): DataFrame =
+    bucketSizes(blocked(corpusSrc(df, idCol, textCol), idCol, textCol, blocking))
+      .filter(col("bucket_n") > effectiveCap(maxBucket, df.count()))
 
-  /** MinHash+LSH near-dup pairs: band the signature (b bands × r rows),
-    * join on equal band hash, verify estimated Jaccard = matching minhash
-    * fraction ≥ `threshold`. Returns (id_a, id_b, est_jaccard), id_a < id_b.
-    * `maxBucket` caps any single band bucket's size (see [[capBuckets]];
-    * audit the drop with [[minhashDroppedBuckets]]). */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      m: Int = 32, bands: Int = 8, threshold: Double = 0.7, k: Int = 3,
-      maxBucket: Int = 1000): DataFrame = {
-    // native codegen'd signature kernel (graft.functions.SignatureExprs);
-    // bit-identical to its HOF reference form (parity-tested), ~10× faster.
-    // Computed ONCE (persist): banding + both re-attach joins share it
-    val sig = minhashSigTable(corpusSrc(df, idCol, textCol), idCol, textCol, m, k)
+  /** Near-dup pairs by signature estimate: join on equal bucket keys,
+    * keep the pairs whose estimate passes `threshold` — [[Minhash]]: the
+    * matching-minhash fraction ≥ threshold, as (id_a, id_b, est_jaccard);
+    * [[Simhash]]: hamming ≤ threshold, as (id_a, id_b, hamming). id_a <
+    * id_b. `maxBucket` caps any single bucket's size (see [[capBuckets]];
+    * 0 = corpus-sized; audit the drop with [[droppedBuckets]]). */
+  def estimatePairs(df: DataFrame, idCol: String, textCol: String,
+      blocking: Blocking, threshold: Double, maxBucket: Int = 1000): DataFrame = {
+    // native codegen'd signature kernels (graft.functions.SignatureExprs);
+    // bit-identical to their HOF reference forms (parity-tested).
+    // Computed ONCE (persist): the bucket keys + both re-attach joins share it
+    val sigs = sigTable(corpusSrc(df, idCol, textCol), idCol, textCol, blocking)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val banded = bandsOfSig(sig, m, bands)
-    bucketPairIds(capBuckets(banded, Seq("band", "bkey"), maxBucket),
-        Seq("band", "bkey"))
-      .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          eq => eq)) / lit(m.toDouble))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("est_jaccard"), 6).as("est_jaccard"))
+    attach(bucketPairIds(capBuckets(bucketKeys(sigs, blocking),
+        effectiveCap(maxBucket, df.count())), BandKey), sigs, "sig")
+      .withColumn(blocking.estimateCol,
+        blocking.estimate(col("sig_a"), col("sig_b")))
+      .filter(blocking.keep(col(blocking.estimateCol), threshold))
+      .select(col("id_a"), col("id_b"), col(blocking.estimateCol))
   }
 
-  /** LSH candidates verified by TRUE n-gram Jaccard (not the minhash
-    * estimate): band-join candidate pairs, re-attach the full shingle sets,
-    * compute exact |∩|/|∪|, keep pairs ≥ `trueThreshold`.
+  /** Blocked candidates verified by TRUE k-shingle Jaccard (not the
+    * signature estimate): bucket-join candidate pairs, re-attach the full
+    * shingle sets, compute exact |∩|/|∪|, keep pairs ≥ `trueThreshold`.
     *
-    * This is the driver-checkable RECALL surface: on a corpus whose
-    * near-dup pairs sit at high Jaccard, the result equals the exact
-    * all-pairs answer — P(all bands miss a pair | J) = (1 − J^r)^bands,
-    * ~3e-12 at J = 0.9 with 16 bands × 2 rows — so a plain-SQL exact-
-    * Jaccard oracle (O(n²) only on the oracle side) gates LSH recall end
-    * to end while the Spark plan stays bucket-joined, never all-pairs. */
-  def minhashLshTrueJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      m: Int = 32, bands: Int = 16, trueThreshold: Double = 0.5, k: Int = 3,
+    * This is the oracle-checkable RECALL surface: the Spark plan stays
+    * bucket-joined, never all-pairs, while a plain-SQL O(n²) exact-Jaccard
+    * oracle gates recall end to end. Recall of [[Minhash]] is
+    * probabilistic but ~1 at high Jaccard (see its scaladoc). Recall of
+    * [[Simhash]] is CERTAIN within the hamming ≤ nBlocks−1 ball (with 8
+    * blocks the gate corpus's true pairs sit at hamming ≤ 5, margin 2); a
+    * true pair BEYOND the ball is recalled only when it shares a block by
+    * luck (observed: sf0.001's J=0.889 pair at hamming 8 does) — watch the
+    * margin with [[simhashRecallMaxHamming]]. The bucket cap is
+    * CORPUS-SIZED by default (maxBucket = 0 → max(1000, ⌈nDocs/2⌉)) so it
+    * cannot silently bind at bench scale the way r4's fixed cap=1000 did
+    * (three over-cap buckets at sf0.1, recall knowably < 1) — audit with
+    * [[droppedBuckets]](maxBucket = 0). */
+  def trueJaccardPairs(df: DataFrame, idCol: String, textCol: String,
+      blocking: Blocking, trueThreshold: Double = 0.5,
       maxBucket: Int = 0): DataFrame = {
-    // docs shorter than k words carry no k-shingle and never pair (the
-    // signature kernel pads them to one short shingle for LSH bucketing,
-    // but "near-dup" is undefined below one full shingle — and the exact
-    // SQL oracles exclude them the same way)
+    // NOTE: no estimate pre-filter before the verify — tempting (8-byte
+    // simhash signatures vs ~100-element shingle arrays), but blocking also
+    // catches true pairs BEYOND the guaranteed hamming ≤ nBlocks−1 ball by
+    // bucket luck, and the recall gate is against pure Jaccard; a
+    // pre-filter measurably drops such a pair (sf0.001: J=0.889 at
+    // hamming 8) and turns a recall surface into a recall leak.
     val src = corpusSrc(df, idCol, textCol)
-    val banded = bandedMinhash(src, idCol, textCol, m, bands, k)
     verifyTrueJaccard(
-      bucketPairIds(capBuckets(banded, Seq("band", "bkey"),
-        effectiveCap(df, maxBucket)), Seq("band", "bkey")),
-      src, idCol, textCol, k, trueThreshold)
+      bucketPairIds(capBuckets(blocked(src, idCol, textCol, blocking),
+        effectiveCap(maxBucket, df.count())), BandKey),
+      shingleTable(src, idCol, textCol), trueThreshold)
   }
 
-  /** (id, sh) k-shingle-hash table of a corpus: docs shorter than k words
-    * carry no k-shingle and are excluded (matching the exact SQL oracles).
-    * The shared head of every true-Jaccard verify, and the `docs` side of
-    * the persisted incremental index ([[buildMinhashIndex]]) — one
-    * definition so the batch and incremental predicates can't drift. */
-  private def shingleTable(df: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame =
+  /** (id, sh) shingle-hash table of a corpus: docs shorter than one full
+    * shingle carry none and are excluded (near-dup is undefined below one
+    * shingle; the signature kernel's short-doc padding is for bucketing
+    * only, and the exact SQL oracles exclude them the same way). The
+    * shared head of every true-Jaccard verify, and the `docs` side of the
+    * persisted incremental index ([[buildMinhashIndex]]) — one definition
+    * so the batch and incremental predicates can't drift. */
+  private def shingleTable(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), col(textCol))
-      .filter(size(words(col(textCol))) >= k)
+      .filter(size(words(col(textCol))) >= ShingleWords)
       .select(col(idCol).as("id"),
-        graft.functions.SignatureExprs.shingleHashes(col(textCol), k).as("sh"))
+        SignatureExprs.shingleHashes(col(textCol), ShingleWords).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** Exact-k-shingle-Jaccard verification of candidate id pairs: re-attach
-    * the full shingle sets, compute |∩|/|∪|, keep ≥ `trueThreshold`. The
-    * shared tail of both recall surfaces ([[minhashLshTrueJaccardPairs]],
-    * [[simhashTrueJaccardPairs]]) — one definition, so the two paths'
-    * verified predicates can't drift apart. */
-  private def verifyTrueJaccard(pairIds: DataFrame, df: DataFrame,
-      idCol: String, textCol: String, k: Int, trueThreshold: Double): DataFrame =
-    verifyTrueJaccardSh(pairIds, shingleTable(df, idCol, textCol, k), trueThreshold)
-
-  /** [[verifyTrueJaccard]] over a precomputed (id, sh) shingle table —
-    * the incremental path verifies against INDEXED shingle sets (computed
-    * once at build) unioned with the delta's. */
-  private def verifyTrueJaccardSh(pairIds: DataFrame, sh: DataFrame,
+  /** Exact-shingle-Jaccard verification of candidate id pairs against an
+    * (id, sh) shingle table: re-attach the full shingle sets, compute
+    * |∩|/|∪|, keep ≥ `trueThreshold`. The shared tail of every
+    * true-Jaccard surface — one definition, so their verified predicates
+    * can't drift apart. The incremental path verifies against INDEXED
+    * shingle sets (computed once at build) unioned with the delta's. */
+  private def verifyTrueJaccard(pairIds: DataFrame, sh: DataFrame,
       trueThreshold: Double, cacheSh: Boolean = true): DataFrame = {
     // corpus callers persist: the shingle table is joined twice (sh_a,
     // sh_b) and the tokenize+shingle kernel would run once per side. The
@@ -242,11 +300,8 @@ object Dedup {
     // Signatures.jaccard scaladoc).
     val s = if (cacheSh) sh.persist(StorageLevel.MEMORY_AND_DISK)
       else sh
-    pairIds
-      .join(s.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(s.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        graft.functions.SignatureExprs.jaccard(col("sh_a"), col("sh_b")))
+    attach(pairIds, s, "sh")
+      .withColumn("jaccard", SignatureExprs.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= trueThreshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -257,7 +312,7 @@ object Dedup {
     * not enough; the chain shape is unit-tested since the synthetic corpus
     * only contains cliques), canonical id = least member by the id's own
     * ordering. Docs in no pair are their own canonical. Pairs come from
-    * [[minhashLshTrueJaccardPairs]] — the banded (never all-pairs)
+    * [[trueJaccardPairs]] over [[Minhash]] — the banded (never all-pairs)
     * candidate path — and the CC loop is the same iterative-DataFrame
     * operator the KG alias canonicalization uses, with the same id
     * treatment: any id TYPE works (ids ride the CC loop as 64-bit hashes —
@@ -266,12 +321,11 @@ object Dedup {
     * never silent row loss). Contract caveats: run exact dedup first
     * (capBuckets' boilerplate contract — a >maxBucket near-identical
     * cluster would otherwise split), and threshold well above the banding
-    * floor so pair recall is ~1 (see [[minhashLshTrueJaccardPairs]]). */
+    * floor so pair recall is ~1 (see [[Minhash]]). */
   def canonicalByNearDup(df: DataFrame, idCol: String, textCol: String,
-      m: Int = 32, bands: Int = 16, trueThreshold: Double = 0.5, k: Int = 3,
-      maxBucket: Int = 0): DataFrame = {
-    val pairs = minhashLshTrueJaccardPairs(df, idCol, textCol, m, bands,
-      trueThreshold, k, maxBucket)
+      trueThreshold: Double = 0.5, maxBucket: Int = 0): DataFrame = {
+    val pairs = trueJaccardPairs(df, idCol, textCol, Minhash, trueThreshold,
+      maxBucket)
     // NOT persisted (r8 A/B): ids/withComp recompute is a trivial distinct
     // + a join against the CC output, which ConnectedComponents already
     // localCheckpoints — two cache builds here measured +0.7 s at sf0.1
@@ -289,121 +343,19 @@ object Dedup {
       .select(col("orig").as(idCol), col("canonical_id"))
   }
 
-  /** The nBlocks × (64/nBlocks)-bit block keys of a corpus's simhash
-    * signatures (pigeonhole: a pair within hamming ≤ nBlocks−1 agrees
-    * exactly on ≥ 1 block). nBlocks=4 (16-bit keys) is the scale default —
-    * wider keys prune harder; more blocks widen the guaranteed hamming. */
-  /** (id, sig) simhash signature table. */
-  private def simhashSigTable(df: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    df.select(col(idCol).as("id"), col(textCol).as("_text"))
-      .select(col("id"),
-        graft.functions.SignatureExprs.simhash64(col("_text")).as("sig"))
-
-  /** The nBlocks block-key projection over a simhash signature table. */
-  private def blocksOfSig(sigs: DataFrame, nBlocks: Int): DataFrame = {
-    require(64 % nBlocks == 0, s"nBlocks must divide 64, got $nBlocks")
-    val w = 64 / nBlocks
-    val mask = if (w == 64) -1L else (1L << w) - 1
-    sigs.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(nBlocks - 1)),
-        b => call_function("shiftright", col("sig"), (b * w).cast("int"))
-          .bitwiseAND(lit(mask))))
-        .as(Seq("block", "bkey")))
-  }
-
-  private def blockedSimhash(df: DataFrame, idCol: String, textCol: String,
-      nBlocks: Int = 4): DataFrame =
-    blocksOfSig(simhashSigTable(df, idCol, textCol), nBlocks)
-
-  /** Buckets [[simhashPairs]] (nBlocks = 4) or [[simhashTrueJaccardPairs]]
-    * (nBlocks = 8) would skip at this `maxBucket`: (block, bkey, bucket_n).
-    * Zero rows ⇒ the cap dropped no candidate pairs. Audit with the SAME
-    * nBlocks as the surface being certified — the two blockings bucket
-    * differently. `maxBucket` has no default (see
-    * [[minhashDroppedBuckets]]): state the audited surface's cap. */
-  def simhashDroppedBuckets(df: DataFrame, idCol: String, textCol: String,
-      maxBucket: Int, nBlocks: Int = 4): DataFrame =
-    droppedBuckets(blockedSimhash(corpusSrc(df, idCol, textCol), idCol,
-        textCol, nBlocks),
-      Seq("block", "bkey"), effectiveCap(df, maxBucket))
-
-  /** SimHash near-dup pairs: block on 4×16-bit sub-keys (a pair within
-    * hamming distance ≤ 3 of 64 bits must agree exactly on ≥1 of 4 blocks),
-    * verify with bit_count(xor) ≤ maxHamming. `maxBucket` caps any single
-    * block bucket's size (see [[capBuckets]]; audit the drop with
-    * [[simhashDroppedBuckets]]). */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    // one persisted signature table feeds the blocking AND both re-attach
-    // joins (see minhashLshPairs)
-    val sigs = simhashSigTable(corpusSrc(df, idCol, textCol), idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val blocked = blocksOfSig(sigs, 4)
-    bucketPairIds(capBuckets(blocked, Seq("block", "bkey"), maxBucket),
-        Seq("block", "bkey"))
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** SimHash-blocked candidates verified by TRUE k-shingle Jaccard — the
-    * driver-checkable RECALL surface of the simhash blocking path (VERDICT
-    * r3 item 6; the analogue of [[minhashLshTrueJaccardPairs]]): the Spark
-    * plan stays block-bucketed (never all-pairs) while a plain-SQL O(n²)
-    * exact-Jaccard oracle gates recall end to end. `nBlocks` = 8 because
-    * 8 blocks of 8 bits GUARANTEE (pigeonhole) that any pair within
-    * hamming ≤ 7 shares a block — the 4×16 default of [[simhashPairs]]
-    * only guarantees hamming ≤ 3 and measurably drops true pairs at
-    * hamming 4-5. Honest recall statement: CERTAIN within the hamming ≤
-    * nBlocks−1 ball (the gate corpus's true pairs sit at hamming ≤ 5,
-    * margin 2); a true pair BEYOND the ball is recalled only when it
-    * shares a block by luck (observed: sf0.001's J=0.889 pair at hamming
-    * 8 does). The bucket cap is CORPUS-SIZED by default (maxBucket = 0 →
-    * [[effectiveCap]]: max(1000, ⌈nDocs/2⌉)) so it cannot silently bind at
-    * bench scale the way r4's fixed cap=1000 did (three over-cap buckets
-    * at sf0.1, recall knowably < 1) — audit with
-    * [[simhashDroppedBuckets]](nBlocks = 8, maxBucket = 0) and watch the
-    * hamming margin with [[simhashRecallMaxHamming]]. Narrower keys trade
-    * pruning for the wider guarantee; [[simhashPairs]] remains the
-    * at-scale shape. */
-  def simhashTrueJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, trueThreshold: Double = 0.5, nBlocks: Int = 8,
-      maxBucket: Int = 0): DataFrame = {
-    // NOTE: no hamming pre-filter before the verify — tempting (8-byte
-    // signatures vs ~100-element shingle arrays), but blocking also
-    // catches true pairs BEYOND the guaranteed hamming ≤ nBlocks−1 ball by
-    // bucket luck, and the recall gate is against pure Jaccard; a
-    // pre-filter measurably drops such a pair (sf0.001: J=0.889 at
-    // hamming 8) and turns a recall surface into a recall leak.
-    val src = corpusSrc(df, idCol, textCol)
-    val blocked = blockedSimhash(src, idCol, textCol, nBlocks)
-    verifyTrueJaccard(
-      bucketPairIds(capBuckets(blocked, Seq("block", "bkey"),
-        effectiveCap(df, maxBucket)), Seq("block", "bkey")),
-      src, idCol, textCol, k, trueThreshold)
-  }
-
-  /** Margin audit of [[simhashTrueJaccardPairs]] (ADVICE r4): the maximum
-    * simhash hamming distance among the pairs the recall surface emits.
-    * The blocking GUARANTEES recall only within hamming ≤ nBlocks−1; a
-    * max observed hamming at or beyond that edge means the corpus's true
-    * pairs are leaving the guaranteed ball and the oracle gate is standing
-    * on bucket luck — visible here BEFORE a corpus regeneration flips the
-    * gate red. One row: (max_hamming, n_pairs). */
+  /** Margin audit of [[trueJaccardPairs]] over `Simhash(8)`, the simhash
+    * recall surface (ADVICE r4): the maximum simhash hamming distance
+    * among the pairs it emits. The blocking GUARANTEES recall only within
+    * hamming ≤ 7; a max observed hamming at or beyond that edge means the
+    * corpus's true pairs are leaving the guaranteed ball and the oracle
+    * gate is standing on bucket luck — visible here BEFORE a corpus
+    * regeneration flips the gate red. One row: (max_hamming, n_pairs). */
   def simhashRecallMaxHamming(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, trueThreshold: Double = 0.5, nBlocks: Int = 8,
-      maxBucket: Int = 0): DataFrame = {
-    val pairs = simhashTrueJaccardPairs(df, idCol, textCol, k, trueThreshold,
-      nBlocks, maxBucket)
-    val sigs = df.select(col(idCol).as("id"),
-      graft.functions.SignatureExprs.simhash64(col(textCol)).as("sig"))
-    pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .agg(max(bit_count(col("sig_a").bitwiseXOR(col("sig_b")))).as("max_hamming"),
+      trueThreshold: Double = 0.5, maxBucket: Int = 0): DataFrame = {
+    val blocking = Simhash(8)
+    attach(trueJaccardPairs(df, idCol, textCol, blocking, trueThreshold, maxBucket),
+        sigTable(df, idCol, textCol, blocking), "sig")
+      .agg(max(blocking.estimate(col("sig_a"), col("sig_b"))).as("max_hamming"),
         count(lit(1)).as("n_pairs"))
   }
 
@@ -412,16 +364,11 @@ object Dedup {
     * against hot-shingle quadratic blowup); true Jaccard verified from the
     * full shingle sets. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, threshold: Double = 0.5, maxDf: Int = 50): DataFrame = {
-    // docs shorter than k words carry no full k-shingle and never pair —
-    // "near-dup" is undefined below one shingle, the signature kernel's
-    // short-doc padding is for LSH bucketing only, and the exact SQL
-    // oracle excludes them the same way (the other two true-Jaccard
-    // surfaces already filtered; this one silently paired padded shorties)
+      threshold: Double = 0.5, maxDf: Int = 50): DataFrame = {
     // one persisted shingle table (over the fanned-out corpus) feeds the
     // inverted index, the df count, and both verify joins — previously the
     // tokenize+shingle kernel re-ran per consumer (~6× at sf0.1)
-    val sh = shingleTable(corpusSrc(df, idCol, textCol), idCol, textCol, k)
+    val sh = shingleTable(corpusSrc(df, idCol, textCol), idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // the rare-shingle postings are the buckets: candidate ids come from
     // their self-join (persisted, both sides) and the shared verify tail
@@ -429,7 +376,7 @@ object Dedup {
     val inv = sh.select(col("id"), explode(col("sh")).as("s"))
     val dfCount = inv.groupBy("s").agg(count(lit(1)).as("df"))
     val rare = inv.join(dfCount.filter(col("df") <= maxDf), "s").select("s", "id")
-    verifyTrueJaccardSh(bucketPairIds(rare, Seq("s")), sh, threshold,
+    verifyTrueJaccard(bucketPairIds(rare, Seq("s")), sh, threshold,
       cacheSh = false)
   }
 
@@ -446,13 +393,13 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** Build the persisted index of a corpus. Layout:
-    *  - `path/bands` — (id, band, bkey) partitioned by `epoch` (0 at
-    *    build, the caller-supplied batch id per append) and
-    *    `bshard = pmod(bkey, nShards)`: a delta probe reads only the
-    *    shards its own band keys hash to (parquet partition pruning,
-    *    plan-asserted in Round5Spec — pruning on bshard is unaffected by
-    *    the epoch nesting). nShards trades pruning granularity for file
-    *    count — at cluster scale raise it with the corpus.
+    *  - `path/bands` — the (id, band, bkey) [[Minhash]] bucket keys,
+    *    partitioned by `epoch` (0 at build, the caller-supplied batch id
+    *    per append) and `bshard = pmod(bkey, 64)`: a delta probe reads
+    *    only the shards its own band keys hash to (parquet partition
+    *    pruning, plan-asserted in Round5Spec — pruning on bshard is
+    *    unaffected by the epoch nesting). The banding and shard count are
+    *    constants, so every build, append and probe of an index agree.
     *  - `path/docs` — the (id, sh) [[shingleTable]] the exact-Jaccard
     *    verify needs, computed once here, never re-derived from text;
     *    partitioned by `epoch` for the same replay scoping.
@@ -469,27 +416,26 @@ object Dedup {
     * Ids must be unique across corpus ∪ any future delta (the ingest
     * contract — Ingest.validate's duplicate-upload guard upstream). */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, m: Int = 32, bands: Int = 16, k: Int = 3,
-      nShards: Int = 64): Unit = {
+      path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // the signature kernel runs parallel (fan-out inside bandedMinhash)
-    // instead of on the source's scan splits; the bands write clusters by
-    // bshard (PartitionedParquet.writeEpoch) so each task holds whole shards
+    // the signature kernel runs parallel (fanned-out source) instead of on
+    // the source's scan splits; the bands write clusters by bshard
+    // (PartitionedParquet.writeEpoch) so each task holds whole shards
     val src = corpusSrc(df, idCol, textCol)
     // the bands and docs writes are INDEPENDENT jobs over the same source
     // — run them concurrently so one job's kernel/commit back-fills the
     // other's straggler tail (guide §2.6). meta is the commit marker and
     // stays strictly after both.
     Par.concurrently(
-      PartitionedParquet.writeEpoch(bandedMinhash(src, idCol, textCol, m, bands, k)
-          .withColumn("bshard", pmod(col("bkey"), lit(nShards.toLong))),
+      PartitionedParquet.writeEpoch(
+        blocked(src, idCol, textCol, Minhash).withColumn("bshard", shardOf),
         s"$path/bands", 0L, Some("bshard")),
-      PartitionedParquet.writeEpoch(shingleTable(src, idCol, textCol, k),
+      PartitionedParquet.writeEpoch(shingleTable(src, idCol, textCol),
         s"$path/docs", 0L))
     // FULL doc count (short docs included — `docs` excludes them), so the
     // incremental cap is computed on the same corpus∪delta count as the
-    // batch path's effectiveCap(df) and the equality contract holds on
+    // batch path's effectiveCap and the equality contract holds on
     // short-doc-heavy corpora too
     PartitionedParquet.writeEpoch(
       Seq((df.count(), -1L)).toDF("n_docs", "fold_upto"), s"$path/meta", 0L)
@@ -544,13 +490,16 @@ object Dedup {
     * public so callers that assemble the basis themselves (the streaming
     * loop: index + seen tail + batch) use the SAME cap arithmetic as the
     * batch surfaces. */
-  def capForDocs(nDocs: Long): Int = effectiveCapN(nDocs, 0)
+  def capForDocs(nDocs: Long): Int = effectiveCap(0, nDocs)
+
+  /** The index shard of a `bkey` column. */
+  private def shardOf: Column = pmod(col("bkey"), lit(IndexShards))
 
   /** Append a delta batch to an existing index (the accept-and-extend half
     * of the supersede loop: probe first with
     * [[incrementalTrueJaccardPairs]] / [[incrementalNewDocs]], then append
-    * what you kept). Same banding params as the build or the index is
-    * corrupt — appended == rebuilt is equality-tested in Round5Spec.
+    * what you kept). Appended == rebuilt is equality-tested in
+    * Round5Spec.
     *
     * `epoch` must uniquely identify this delta batch (> 0; 0 is the
     * build). The write is a dynamic partition overwrite scoped to this
@@ -570,21 +519,20 @@ object Dedup {
     *
     * Compaction fence (r7, VERDICT r6 next #3): an epoch below the index's
     * fence ([[graft.util.PartitionedParquet.minNextEpoch]]) was already
-    * folded into this compacted copy — a late retry of it would re-add its rows and duplicate the index, so it
-    * FAILS LOUDLY here instead. `foldUpto` is set only by
+    * folded into this compacted copy — a late retry of it would re-add
+    * its rows and duplicate the index, so it FAILS LOUDLY here instead. `foldUpto` is set only by
     * [[graft.streaming.StreamingDedup.foldAndRetire]]: the highest stream
     * batch this epoch covers, recorded in the meta row so the fold
     * watermark commits atomically with the epoch (meta is written last). */
   def appendToMinhashIndex(delta: DataFrame, idCol: String, textCol: String,
-      path: String, epoch: Long, m: Int = 32, bands: Int = 16, k: Int = 3,
-      nShards: Int = 64, foldUpto: Long = -1L): Unit = {
+      path: String, epoch: Long, foldUpto: Long = -1L): Unit = {
     val spark = delta.sparkSession
     PartitionedParquet.requireAppendable(spark, path, epoch)
     import spark.implicits._
-    PartitionedParquet.writeEpoch(bandedMinhash(delta, idCol, textCol, m, bands, k)
-        .withColumn("bshard", pmod(col("bkey"), lit(nShards.toLong))),
+    PartitionedParquet.writeEpoch(
+      blocked(delta, idCol, textCol, Minhash).withColumn("bshard", shardOf),
       s"$path/bands", epoch, Some("bshard"))
-    PartitionedParquet.writeEpoch(shingleTable(delta, idCol, textCol, k),
+    PartitionedParquet.writeEpoch(shingleTable(delta, idCol, textCol),
       s"$path/docs", epoch)
     PartitionedParquet.writeEpoch(
       Seq((delta.count(), foldUpto)).toDF("n_docs", "fold_upto"), s"$path/meta", epoch)
@@ -648,20 +596,19 @@ object Dedup {
 
   /** Verified near-dup pairs TOUCHING the delta: delta×corpus plus the
     * delta's internal pairs, exact-Jaccard ≥ `trueThreshold`, id_a < id_b.
-    * Equals the batch [[minhashLshTrueJaccardPairs]] over corpus ∪ delta
+    * Equals the batch [[trueJaccardPairs]] over [[Minhash]] and corpus ∪ delta
     * restricted to pairs with a delta side (oracle row dd_incremental;
     * also property-tested) — candidate buckets match because a bucket with
     * no delta key contributes no delta pair, the union's bucket contents
     * within a probed shard are complete (bshard is a function of bkey),
     * and the cap is computed on the same corpus∪delta doc count.
     * Scale shape: the index is read partition-pruned to the delta's
-    * shards; the only driver materialization is the ≤ nShards shard-id
+    * shards; the only driver materialization is the ≤ 64 shard-id
     * list. The delta side is joined, not broadcast-forced — AQE picks
     * broadcast when the delta is small. */
   def incrementalTrueJaccardPairs(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, textCol: String,
-      m: Int = 32, bands: Int = 16, trueThreshold: Double = 0.5, k: Int = 3,
-      nShards: Int = 64, maxBucket: Int = 0,
+      trueThreshold: Double = 0.5, maxBucket: Int = 0,
       meta: Option[Array[(Long, Long)]] = None): DataFrame = {
     // the delta is read ≥3 times below (banding, shingles, count) and its
     // upstream may be an arbitrary transformation: one eager local
@@ -671,11 +618,10 @@ object Dedup {
     val d = delta.select(col(idCol), col(textCol)).localCheckpoint()
     // the delta banding feeds the shard-list collect AND the pair join:
     // persist so the delta's signatures are computed once
-    val deltaBanded = bandedMinhash(d, idCol, textCol, m, bands, k)
+    val deltaBanded = blocked(d, idCol, textCol, Minhash)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // bounded driver collect: at most nShards values by construction
-    val shards = deltaBanded
-      .select(pmod(col("bkey"), lit(nShards.toLong)).as("bshard"))
+    // bounded driver collect: at most IndexShards values by construction
+    val shards = deltaBanded.select(shardOf.as("bshard"))
       .distinct().collect().map(_.getLong(0))
     // meta is written LAST by build/append — its epochs are the commit
     // markers (ADVICE r5): bands/docs rows from a crashed half-append
@@ -701,8 +647,8 @@ object Dedup {
     // basis as the batch path (the `docs` shingle table undercounts by the
     // short docs); by-name, so a fixed positive maxBucket skips the
     // delta count entirely
-    val cap = effectiveCapN(metaRows.map(_._2).sum + d.count(), maxBucket)
-    val sh = idxDocs.unionByName(shingleTable(d, idCol, textCol, k))
+    val cap = effectiveCap(maxBucket, metaRows.map(_._2).sum + d.count())
+    val sh = idxDocs.unionByName(shingleTable(d, idCol, textCol))
     deltaPairsFromBanded(idxBanded, deltaBanded, sh, cap, trueThreshold)
   }
 
@@ -715,17 +661,17 @@ object Dedup {
       trueThreshold: Double): DataFrame = {
     val union = corpusBanded.withColumn("is_delta", lit(false))
       .unionByName(deltaBanded.withColumn("is_delta", lit(true)))
-    val capped = capBuckets(union, Seq("band", "bkey"), cap, cache = false)
-    val keys = Seq(col("band"), col("bkey"))
+    val capped = capBuckets(union, cap, cache = false)
+    val keys = BandKey.map(col)
     val pairIds = capped
       .select(keys :+ col("id").as("id_a") :+ col("is_delta").as("del_a"): _*)
       .join(capped.select(
-        keys :+ col("id").as("id_b") :+ col("is_delta").as("del_b"): _*), Seq("band", "bkey"))
+        keys :+ col("id").as("id_b") :+ col("is_delta").as("del_b"): _*), BandKey)
       .filter(col("id_a") < col("id_b"))
       .filter(col("del_a") || col("del_b"))
       .select(col("id_a"), col("id_b"))
       .distinct()
-    verifyTrueJaccardSh(pairIds, sh, trueThreshold, cacheSh = false)
+    verifyTrueJaccard(pairIds, sh, trueThreshold, cacheSh = false)
   }
 
   /** [[incrementalTrueJaccardPairs]]' predicate with BOTH sides in-flight
@@ -735,15 +681,13 @@ object Dedup {
     * compaction into the index
     * ([[graft.streaming.StreamingDedup]]). */
   def deltaTrueJaccardPairs(corpus: DataFrame, delta: DataFrame,
-      idCol: String, textCol: String, m: Int = 32, bands: Int = 16,
-      trueThreshold: Double = 0.5, k: Int = 3, maxBucket: Int = 0): DataFrame = {
-    val cap = effectiveCapN(corpus.count() + delta.count(), maxBucket)
-    val sh = shingleTable(corpus, idCol, textCol, k)
-      .unionByName(shingleTable(delta, idCol, textCol, k))
-    deltaPairsFromBanded(
-      bandedMinhash(corpus, idCol, textCol, m, bands, k),
-      bandedMinhash(delta, idCol, textCol, m, bands, k),
-      sh, cap, trueThreshold)
+      idCol: String, textCol: String, trueThreshold: Double = 0.5,
+      maxBucket: Int = 0): DataFrame = {
+    val cap = effectiveCap(maxBucket, corpus.count() + delta.count())
+    val sh = shingleTable(corpus, idCol, textCol)
+      .unionByName(shingleTable(delta, idCol, textCol))
+    deltaPairsFromBanded(blocked(corpus, idCol, textCol, Minhash),
+      blocked(delta, idCol, textCol, Minhash), sh, cap, trueThreshold)
   }
 
   /** The delta docs that SURVIVE incremental dedup — the left_anti last
@@ -756,13 +700,12 @@ object Dedup {
     * semantics). Returns the surviving delta rows (all delta columns). */
   def incrementalNewDocs(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, textCol: String,
-      m: Int = 32, bands: Int = 16, trueThreshold: Double = 0.5, k: Int = 3,
-      nShards: Int = 64, maxBucket: Int = 0,
+      trueThreshold: Double = 0.5, maxBucket: Int = 0,
       meta: Option[Array[(Long, Long)]] = None): DataFrame = {
     // the verified pair set feeds BOTH victim branches below: persist so
     // the whole probe DAG (index scan + banding + verify) runs once
     val pairs = incrementalTrueJaccardPairs(spark, path, delta, idCol,
-      textCol, m, bands, trueThreshold, k, nShards, maxBucket, meta)
+      textCol, trueThreshold, maxBucket, meta)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deltaIds = delta.select(col(idCol).as("did"))
     // victims: the greater side of any pair is always dropped when it is

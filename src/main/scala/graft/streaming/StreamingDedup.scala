@@ -212,7 +212,8 @@ object StreamingDedup {
     *     batch at or below the folded max, so a crash after this step
     *     cannot double-count.
     *  2. append ALL covered seen docs (accepted AND rejected) to the index
-    *     via [[Dedup.appendToMinhashIndex]] with
+    *     via [[Dedup.appendToMinhashIndex]] (the index's one banding,
+    *     [[Dedup.Minhash]], so the fold cannot corrupt it) with
     *     `epoch = max(uptoBatch + 1, fence, maxCommitted + 1)` and
     *     `foldUpto = uptoBatch` — THE COMMIT POINT (meta last). Dead docs
     *     must ride along: the batch rule kills a doc that pairs with any
@@ -245,8 +246,7 @@ object StreamingDedup {
     * duplicates rows. No-op when no un-folded seen batches `<= uptoBatch`
     * exist. */
   def foldAndRetire(spark: SparkSession, indexPath: String, outDir: String,
-      uptoBatch: Long, idCol: String = "doc_id", textCol: String = "text",
-      m: Int = 32, bands: Int = 16, k: Int = 3, nShards: Int = 64): Unit = {
+      uptoBatch: Long, idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val seenDir = s"$outDir/seen"
     val accDir = s"$outDir/accepted"
     val lastFolded = Dedup.foldWatermark(spark, indexPath)
@@ -278,8 +278,7 @@ object StreamingDedup {
           .parquet(s"$outDir/accepted_folded")
     }
     Dedup.appendToMinhashIndex(seen.select(col(idCol), col(textCol)),
-      idCol, textCol, indexPath, epoch, m, bands, k, nShards,
-      foldUpto = uptoBatch)
+      idCol, textCol, indexPath, epoch, foldUpto = uptoBatch)
     retire(covered.toSet)
   }
 

@@ -1,14 +1,15 @@
 package graft
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.Dedup.{Minhash, Simhash}
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends GraftSuite {
+  import spark.implicits._
 
-  private def docs(rows: (Long, String)*) = {
-    import spark.implicits._
-    rows.toDF("doc_id", "text")
-  }
+  private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+
+  private val sf0001Docs = "/root/testdata/sf0.001/documents.parquet"
 
   test("exact dedup collapses identical texts to the min id") {
     val d = docs((1L, "a b c"), (2L, "a b c"), (3L, "x y z"))
@@ -21,9 +22,9 @@ class DedupSpec extends GraftSuite {
     val base = (1 to 60).map(i => s"word$i").mkString(" ")
     val nearDup = (1 to 57).map(i => s"word$i").mkString(" ") + " altered tail here"
     val other = (100 to 160).map(i => s"token$i").mkString(" ")
-    val got = Dedup.minhashLshPairs(
-      docs((1L, base), (2L, nearDup), (3L, other)), "doc_id", "text",
-      m = 32, bands = 16, threshold = 0.4).collect()
+    val got = Dedup.estimatePairs(
+      docs((1L, base), (2L, nearDup), (3L, other)), "doc_id", "text", Minhash,
+      threshold = 0.4).collect()
     assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     val est = got.head.getDouble(2)
     assert(est > 0.4 && est <= 1.0)
@@ -39,8 +40,8 @@ class DedupSpec extends GraftSuite {
     assert(sigs(1L) === sigs(2L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sigs(1L), sigs(3L)) < ham(sigs(1L), sigs(4L)))
-    val pairs = Dedup.simhashPairs(
-      docs((1L, base), (2L, base)), "doc_id", "text", maxHamming = 0)
+    val pairs = Dedup.estimatePairs(
+      docs((1L, base), (2L, base)), "doc_id", "text", Simhash(4), threshold = 0)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet ===
       Set((1L, 2L, 0)))
@@ -56,18 +57,18 @@ class DedupSpec extends GraftSuite {
     val nearDup = (1 to 57).map(i => s"word$i").mkString(" ") + " altered tail here"
     val degenerate = (10L until 510L).map(i => (i, boiler))
     val d = docs(degenerate :+ (1L -> base) :+ (2L -> nearDup): _*)
-    val mh = Dedup.minhashLshPairs(d, "doc_id", "text",
-      m = 32, bands = 16, threshold = 0.4, maxBucket = 100)
+    val mh = Dedup.estimatePairs(d, "doc_id", "text", Minhash,
+      threshold = 0.4, maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mh === Set((1L, 2L))) // boiler pairs capped away, honest pair kept
-    val sh = Dedup.simhashPairs(d, "doc_id", "text",
-      maxHamming = 10, maxBucket = 100)
+    val sh = Dedup.estimatePairs(d, "doc_id", "text", Simhash(4),
+      threshold = 10, maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!sh.exists { case (a, b) => a >= 10L && b >= 10L })
     // and with the cap above the corpus size, the quadratic bucket is back
     // (sanity that the cap is what kills it)
-    val uncapped = Dedup.minhashLshPairs(d.filter(col("doc_id") < 60),
-      "doc_id", "text", m = 32, bands = 16, threshold = 0.4, maxBucket = 100000)
+    val uncapped = Dedup.estimatePairs(d.filter(col("doc_id") < 60),
+      "doc_id", "text", Minhash, threshold = 0.4, maxBucket = 100000)
     assert(uncapped.count() >= 48L * 49 / 2)
   }
 
@@ -76,9 +77,161 @@ class DedupSpec extends GraftSuite {
     // jaccard = 1/3
     val got = Dedup.ngramJaccardPairs(
       docs((1L, "a b c d"), (2L, "a b c e")), "doc_id", "text",
-      k = 3, threshold = 0.2, maxDf = 10).collect()
+      threshold = 0.2, maxDf = 10).collect()
     assert(got.length === 1)
     assert(math.abs(got.head.getDouble(2) - 1.0 / 3) < 1e-6)
+  }
+
+  test("dedup bucket-cap drop is auditable, not silent") {
+    // 4 identical texts co-bucket in every band; cap 3 drops them all
+    val docs = (0L until 4L).map(i => (i, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    val dropped = Dedup.droppedBuckets(docs, "doc_id", "text", Minhash,
+      maxBucket = 3)
+    assert(dropped.count() > 0)
+    assert(Dedup.estimatePairs(docs, "doc_id", "text", Minhash,
+      threshold = 0.5, maxBucket = 3).count() == 0)
+    // uncapped: all 6 pairs found, and the audit reports nothing dropped
+    assert(Dedup.droppedBuckets(docs, "doc_id", "text", Minhash,
+      maxBucket = 1000).count() == 0)
+    assert(Dedup.estimatePairs(docs, "doc_id", "text", Minhash,
+      threshold = 0.5).count() == 6)
+  }
+
+  test("canonicalByNearDup resolves transitive chains; id types preserved") {
+    // a PATH-shaped cluster — J(a,b)=J(b,c)=0.6, J(a,c)=0.33 — that only
+    // transitive closure merges (the synthetic corpus holds cliques only,
+    // so this shape is exactly what the oracle can't exercise)
+    val w = (1 to 26).map(i => f"tok$i%02d")
+    val a = w.slice(0, 18).mkString(" ")   // words 1..18
+    val b = w.slice(4, 22).mkString(" ")   // words 5..22: J(a,b)=12/20=0.6
+    val c = w.slice(8, 26).mkString(" ")   // words 9..26: J(b,c)=0.6, J(a,c)=8/24=0.33
+    val far = (1 to 18).map(i => s"other$i").mkString(" ")
+    val docs = Seq(("dA", a), ("dB", b), ("dC", c), ("dD", far))
+      .toDF("doc_id", "text") // STRING ids — must survive untouched
+    val out = Dedup.canonicalByNearDup(docs, "doc_id", "text",
+        trueThreshold = 0.5)
+      .as[(String, String)].collect().toMap
+    assert(out == Map("dA" -> "dA", "dB" -> "dA", "dC" -> "dA", "dD" -> "dD"))
+  }
+
+  test("ngramJaccardPairs never pairs docs shorter than one full shingle") {
+    val docs = Seq((1L, "hello world"), (2L, "hello world"),
+      (3L, "alpha beta gamma delta"), (4L, "alpha beta gamma epsilon"))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+      threshold = 0.1, maxDf = 10)
+      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+    // the identical 2-word docs must NOT pair (padded short shingles are
+    // for LSH bucketing, not a Jaccard surface — and the exact SQL oracle
+    // excludes sub-k docs); the real 3-shingle pair still does
+    assert(pairs == Set((3L, 4L)))
+  }
+
+  test("simhash recall surface == minhash recall surface == exact pairs") {
+    val docs = spark.read.parquet(sf0001Docs)
+      .select($"doc_id", $"text")
+    // exact O(n²) oracle, computed naively in-test (50 docs)
+    val sh = docs.filter(size(Dedup.words($"text")) >= 3)
+      .select($"doc_id".as("id"),
+        graft.functions.SignatureExprs.shingleHashes($"text", 3).as("sh"))
+    val exact = sh.as("a").join(sh.as("b"), $"a.id" < $"b.id")
+      .select($"a.id".as("id_a"), $"b.id".as("id_b"),
+        (size(array_intersect($"a.sh", $"b.sh")) /
+          (size($"a.sh") + size($"b.sh") - size(array_intersect($"a.sh", $"b.sh")))
+            .cast("double")).as("j"))
+      .filter($"j" >= 0.5)
+      .select($"id_a", $"id_b", round($"j", 6).as("jaccard"))
+      .collect().map(_.toString).sorted.toSeq
+    val bySimhash = Dedup.trueJaccardPairs(docs, "doc_id", "text", Simhash(8))
+      .collect().map(_.toString).sorted.toSeq
+    val byMinhash = Dedup.trueJaccardPairs(docs, "doc_id", "text", Minhash)
+      .collect().map(_.toString).sorted.toSeq
+    assert(bySimhash == exact, "simhash 8×8 blocking must recall every exact pair")
+    assert(byMinhash == exact)
+  }
+
+  test("corpus-sized recall cap never drops what a tight fixed cap would") {
+    // 40 near-identical docs: one simhash block bucket holds all of them
+    val docs = (0L until 40L)
+      .map(i => (i, s"shared boilerplate text body repeated across documents v$i"))
+      .toDF("doc_id", "text")
+    // a tight fixed cap drops the bucket…
+    assert(Dedup.droppedBuckets(docs, "doc_id", "text", Simhash(8),
+      maxBucket = 10).count() > 0)
+    val capped = Dedup.trueJaccardPairs(docs, "doc_id", "text", Simhash(8),
+      trueThreshold = 0.3, maxBucket = 10)
+    // …the corpus-sized sentinel (maxBucket = 0 → max(1000, ⌈n/2⌉)) does not
+    assert(Dedup.droppedBuckets(docs, "doc_id", "text", Simhash(8),
+      maxBucket = 0).count() == 0)
+    val sentinel = Dedup.trueJaccardPairs(docs, "doc_id", "text", Simhash(8),
+      trueThreshold = 0.3, maxBucket = 0)
+    assert(sentinel.count() > capped.count())
+    assert(sentinel.count() == 40L * 39 / 2) // every pair is a true near-dup
+  }
+
+  test("simhashRecallMaxHamming reports the emitted pairs' margin") {
+    // long docs differing in ONE word: the signature hamming stays small
+    // (each word is a small fraction of the bit-counter mass), so the pair
+    // is inside the guaranteed 8×8 ball and must be emitted
+    val base = (1 to 40).map(i => s"w$i").mkString(" ")
+    val docs = Seq(
+      (1L, base + " ending"),
+      (2L, base + " different"),
+      (3L, (101 to 140).map(i => s"u$i").mkString(" "))).toDF("doc_id", "text")
+    val r = Dedup.simhashRecallMaxHamming(docs, "doc_id", "text",
+      trueThreshold = 0.3).head()
+    assert(r.getLong(1) == 1L) // exactly the (1,2) pair
+    val ham = r.getInt(0)
+    assert(ham >= 0 && ham <= 7, s"near-dup pair hamming $ham outside the 8x8 ball")
+  }
+
+  test("restructured dd surfaces still match their pre-r8 row sets (spot: minhash recall + ngram)") {
+    val docs = spark.read.parquet(sf0001Docs)
+    // pre-r8 formulations restated inline as the oracle
+    val mh = Dedup.trueJaccardPairs(docs, "doc_id", "text", Minhash,
+      trueThreshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val sh = docs.filter(size(Dedup.words(col("text"))) >= 3)
+      .select(col("doc_id").as("id"),
+        graft.functions.SignatureExprs.shingleHashes(col("text"), 3).as("sh"))
+    val naive = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
+      .crossJoin(sh.select(col("id").as("id_b"), col("sh").as("sh_b")))
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("j", col("inter") /
+        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
+      .filter(col("j") >= 0.5)
+      .select(col("id_a"), col("id_b"), round(col("j"), 6))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(mh == naive && naive.nonEmpty)
+    val ng = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+      threshold = 0.5, maxDf = 1000)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(ng == naive)
+  }
+
+  test("maxBucket = 0 is the corpus-sized cap on the estimate surfaces and their audit") {
+    // the planted-pair corpus of the minhash test: one true near-dup pair,
+    // in buckets far below any cap — 0 must not read as "keep nothing"
+    val base = (1 to 60).map(i => s"word$i").mkString(" ")
+    val nearDup = (1 to 57).map(i => s"word$i").mkString(" ") + " altered tail here"
+    val other = (100 to 160).map(i => s"token$i").mkString(" ")
+    val d = docs((1L, base), (2L, nearDup), (3L, other))
+    for ((blocking, threshold) <- Seq((Minhash, 0.4), (Simhash(4), 10.0))) {
+      def pairs(maxBucket: Int) =
+        Dedup.estimatePairs(d, "doc_id", "text", blocking, threshold, maxBucket)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs(1000) == Set((1L, 2L)), blocking)
+      assert(pairs(0) == pairs(1000), blocking)
+      assert(Dedup.droppedBuckets(d, "doc_id", "text", blocking, maxBucket = 0)
+        .count() == 0, blocking)
+    }
+  }
+
+  test("Simhash rejects a block count that is not a positive divisor of 64") {
+    for (n <- Seq(0, -4, 3)) intercept[IllegalArgumentException](Simhash(n))
+    assert(Simhash(4).nKeys == 4 && Simhash(64).nKeys == 64)
   }
 
   test("cosine expression matches a driver-side computation") {

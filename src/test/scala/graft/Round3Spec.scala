@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-3 fixes: multi-code preferred ranking, the guarded faceted
   * broadcast, the bounded automaton cache, as-of null contract, tiling
-  * validation, dedup drop audit, and the persisted lexical index. */
+  * validation, and the persisted lexical index. */
 class Round3Spec extends GraftSuite {
   import spark.implicits._
 
@@ -113,39 +113,6 @@ class Round3Spec extends GraftSuite {
     assert(SpanTable.tilingViolations(good, turns).count() == 0)
     val bad = SpanTable.tile(spans(Seq((0, 4), (2, 6))), turns)
     assert(SpanTable.tilingViolations(bad, turns).count() > 0)
-  }
-
-  test("dedup bucket-cap drop is auditable, not silent") {
-    // 4 identical texts co-bucket in every band; cap 3 drops them all
-    val docs = (0L until 4L).map(i => (i, "alpha beta gamma delta epsilon zeta"))
-      .toDF("doc_id", "text")
-    val dropped = Dedup.minhashDroppedBuckets(docs, "doc_id", "text",
-      m = 32, bands = 8, maxBucket = 3)
-    assert(dropped.count() > 0)
-    assert(Dedup.minhashLshPairs(docs, "doc_id", "text",
-      m = 32, bands = 8, threshold = 0.5, maxBucket = 3).count() == 0)
-    // uncapped: all 6 pairs found, and the audit reports nothing dropped
-    assert(Dedup.minhashDroppedBuckets(docs, "doc_id", "text",
-      m = 32, bands = 8, maxBucket = 1000).count() == 0)
-    assert(Dedup.minhashLshPairs(docs, "doc_id", "text",
-      m = 32, bands = 8, threshold = 0.5).count() == 6)
-  }
-
-  test("canonicalByNearDup resolves transitive chains; id types preserved") {
-    // a PATH-shaped cluster — J(a,b)=J(b,c)=0.6, J(a,c)=0.33 — that only
-    // transitive closure merges (the synthetic corpus holds cliques only,
-    // so this shape is exactly what the oracle can't exercise)
-    val w = (1 to 26).map(i => f"tok$i%02d")
-    val a = w.slice(0, 18).mkString(" ")   // words 1..18
-    val b = w.slice(4, 22).mkString(" ")   // words 5..22: J(a,b)=12/20=0.6
-    val c = w.slice(8, 26).mkString(" ")   // words 9..26: J(b,c)=0.6, J(a,c)=8/24=0.33
-    val far = (1 to 18).map(i => s"other$i").mkString(" ")
-    val docs = Seq(("dA", a), ("dB", b), ("dC", c), ("dD", far))
-      .toDF("doc_id", "text") // STRING ids — must survive untouched
-    val out = Dedup.canonicalByNearDup(docs, "doc_id", "text",
-        trueThreshold = 0.5)
-      .as[(String, String)].collect().toMap
-    assert(out == Map("dA" -> "dA", "dB" -> "dA", "dC" -> "dA", "dD" -> "dD"))
   }
 
   test("sink manifest carries the HLL distinct-subject metric, near exact") {

@@ -6,8 +6,7 @@ import graft.operators._
 import org.apache.spark.sql.functions._
 
 /** Round-4 fixes: the resumable-sink stale-bucket wedge, the guarded
-  * indexed-linking collect, the star-contraction CC fallback, and the
-  * simhash recall surface. */
+  * indexed-linking collect, and the star-contraction CC fallback. */
 class Round4Spec extends GraftSuite {
   import spark.implicits._
 
@@ -49,19 +48,6 @@ class Round4Spec extends GraftSuite {
     GraphSink.writeResumable(triples, dir, "full", nBuckets = 4)
     assert(GraphSink.readTriples(spark, dir).filter($"bucket" === 99L).count() == 0)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
-
-  test("ngramJaccardPairs never pairs docs shorter than one full shingle") {
-    val docs = Seq((1L, "hello world"), (2L, "hello world"),
-      (3L, "alpha beta gamma delta"), (4L, "alpha beta gamma epsilon"))
-      .toDF("doc_id", "text")
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      k = 3, threshold = 0.1, maxDf = 10)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    // the identical 2-word docs must NOT pair (padded short shingles are
-    // for LSH bucketing, not a Jaccard surface — and the exact SQL oracle
-    // excludes sub-k docs); the real 3-shingle pair still does
-    assert(pairs == Set((3L, 4L)))
   }
 
   test("indexed linkBySurface over the surface cap: no driver collect of " +
@@ -125,29 +111,6 @@ class Round4Spec extends GraftSuite {
     assert(byStar == byMinLabel)
     assert(byStar(4L) == 1L && byStar(12L) == 10L && byStar(20L) == 20L
       && byStar(31L) == 30L)
-  }
-
-  test("simhash recall surface == minhash recall surface == exact pairs") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select($"doc_id", $"text")
-    // exact O(n²) oracle, computed naively in-test (50 docs)
-    val sh = docs.filter(size(Dedup.words($"text")) >= 3)
-      .select($"doc_id".as("id"),
-        graft.functions.SignatureExprs.shingleHashes($"text", 3).as("sh"))
-    val exact = sh.as("a").join(sh.as("b"), $"a.id" < $"b.id")
-      .select($"a.id".as("id_a"), $"b.id".as("id_b"),
-        (size(array_intersect($"a.sh", $"b.sh")) /
-          (size($"a.sh") + size($"b.sh") - size(array_intersect($"a.sh", $"b.sh")))
-            .cast("double")).as("j"))
-      .filter($"j" >= 0.5)
-      .select($"id_a", $"id_b", round($"j", 6).as("jaccard"))
-      .collect().map(_.toString).sorted.toSeq
-    val bySimhash = Dedup.simhashTrueJaccardPairs(docs, "doc_id", "text")
-      .collect().map(_.toString).sorted.toSeq
-    val byMinhash = Dedup.minhashLshTrueJaccardPairs(docs, "doc_id", "text")
-      .collect().map(_.toString).sorted.toSeq
-    assert(bySimhash == exact, "simhash 8×8 blocking must recall every exact pair")
-    assert(byMinhash == exact)
   }
 
   test("manifest mixing pre-r3 (4-column) and current rows reads as the " +

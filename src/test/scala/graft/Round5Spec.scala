@@ -6,46 +6,10 @@ import graft.operators._
 import graft.streaming.StreamingDedup
 import org.apache.spark.sql.functions._
 
-/** Round-5 fixes: corpus-sized recall-surface caps, the simhash
-  * hamming-margin audit, incremental and streaming dedup, minhash index
+/** Round-5 fixes: incremental and streaming dedup, minhash index
   * compaction, and the bucket-name parse guard in the resumable sink. */
 class Round5Spec extends GraftSuite {
   import spark.implicits._
-
-  test("corpus-sized recall cap never drops what a tight fixed cap would") {
-    // 40 near-identical docs: one simhash block bucket holds all of them
-    val docs = (0L until 40L)
-      .map(i => (i, s"shared boilerplate text body repeated across documents v$i"))
-      .toDF("doc_id", "text")
-    // a tight fixed cap drops the bucket…
-    assert(Dedup.simhashDroppedBuckets(docs, "doc_id", "text",
-      maxBucket = 10, nBlocks = 8).count() > 0)
-    val capped = Dedup.simhashTrueJaccardPairs(docs, "doc_id", "text",
-      trueThreshold = 0.3, maxBucket = 10)
-    // …the corpus-sized sentinel (maxBucket = 0 → max(1000, ⌈n/2⌉)) does not
-    assert(Dedup.simhashDroppedBuckets(docs, "doc_id", "text",
-      maxBucket = 0, nBlocks = 8).count() == 0)
-    val sentinel = Dedup.simhashTrueJaccardPairs(docs, "doc_id", "text",
-      trueThreshold = 0.3, maxBucket = 0)
-    assert(sentinel.count() > capped.count())
-    assert(sentinel.count() == 40L * 39 / 2) // every pair is a true near-dup
-  }
-
-  test("simhashRecallMaxHamming reports the emitted pairs' margin") {
-    // long docs differing in ONE word: the signature hamming stays small
-    // (each word is a small fraction of the bit-counter mass), so the pair
-    // is inside the guaranteed 8×8 ball and must be emitted
-    val base = (1 to 40).map(i => s"w$i").mkString(" ")
-    val docs = Seq(
-      (1L, base + " ending"),
-      (2L, base + " different"),
-      (3L, (101 to 140).map(i => s"u$i").mkString(" "))).toDF("doc_id", "text")
-    val r = Dedup.simhashRecallMaxHamming(docs, "doc_id", "text",
-      trueThreshold = 0.3).head()
-    assert(r.getLong(1) == 1L) // exactly the (1,2) pair
-    val ham = r.getInt(0)
-    assert(ham >= 0 && ham <= 7, s"near-dup pair hamming $ham outside the 8x8 ball")
-  }
 
   test("incremental dedup vs persisted index == batch restricted to delta; " +
       "supersede survivors; append == rebuild; pruned index read") {
@@ -71,7 +35,7 @@ class Round5Spec extends GraftSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inc = Dedup.incrementalTrueJaccardPairs(spark, dir, delta,
       "doc_id", "text")
-    val batchRestricted = Dedup.minhashLshTrueJaccardPairs(all, "doc_id", "text")
+    val batchRestricted = Dedup.trueJaccardPairs(all, "doc_id", "text", Dedup.Minhash)
       .filter($"id_a".isin(deltaIds: _*) || $"id_b".isin(deltaIds: _*))
     assert(pairSet(inc) == pairSet(batchRestricted))
     assert(pairSet(inc).map(p => (p._1, p._2)) == Set((1L, 110L), (112L, 113L)))

@@ -1,12 +1,12 @@
 package graft
 
-import graft.operators.{Dedup, RangeJoin, Similarity}
+import graft.operators.{RangeJoin, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Round-8 optimization invariants: the new native kernels are
   * bit-identical to the HOF executable specs they replace, and the
-  * restructured candidate plans (canonical-band range join, persisted
-  * signature/shingle tables) emit exactly the same rows as before.
+  * restructured canonical-band range join emits exactly the same rows as
+  * before (the dedup surfaces' row-set check lives in DedupSpec).
   */
 class Round8Spec extends GraftSuite {
 
@@ -88,30 +88,5 @@ class Round8Spec extends GraftSuite {
     // canonical band must make each pair unique by construction)
     assert(got.toSet == naive.toSet && naive.nonEmpty)
     assert(got.length == got.toSet.size, "a pair was emitted more than once")
-  }
-
-  test("restructured dd surfaces still match their pre-r8 row sets (spot: minhash recall + ngram)") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    // pre-r8 formulations restated inline as the oracle
-    val mh = Dedup.minhashLshTrueJaccardPairs(docs, "doc_id", "text",
-      m = 32, bands = 16, trueThreshold = 0.5, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val sh = docs.filter(size(Dedup.words(col("text"))) >= 3)
-      .select(col("doc_id").as("id"),
-        graft.functions.SignatureExprs.shingleHashes(col("text"), 3).as("sh"))
-    val naive = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-      .crossJoin(sh.select(col("id").as("id_b"), col("sh").as("sh_b")))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("j", col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .filter(col("j") >= 0.5)
-      .select(col("id_a"), col("id_b"), round(col("j"), 6))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(mh == naive && naive.nonEmpty)
-    val ng = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      k = 3, threshold = 0.5, maxDf = 1000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(ng == naive)
   }
 }
