@@ -38,8 +38,8 @@ object Pipeline {
   /** Full run: returns the triples dataset (lazy — caller writes/counts).
     *
     * Deliberately NOT cached: the four predicate branches of [[Triples.all]]
-    * do recompute turn synthesis (cheap) and extraction (the agg exchange is
-    * reused where shapes allow), but persisting the wide text rows was
+    * recompute turn synthesis (cheap) and share one extraction→perTurn
+    * exchange, and persisting the wide text rows was
     * MEASURED slower than recomputation (cache serialization ≈ synthesis
     * cost) — at production scale the materialized stage tables (GraphSink)
     * play that role instead. */
@@ -49,15 +49,13 @@ object Pipeline {
     val l = linked(spark, cfg, m)
     // NOT materialized, deliberately — re-measured in round 2 at mult=32,
     // local[32], 16g heap (KgTime): recompute 17.7s vs eager
-    // MEMORY_AND_DISK persist 23.8s vs eager localCheckpoint 21.4s. The
-    // self-referencing union defeats AQE stage reuse, so the mentions and
-    // asserts branches DO both run extraction (~190s CPU each at that
-    // scale) — but the two extraction stages run CONCURRENTLY in one job
-    // at near-full core utilization, while any eager materialization
-    // serializes fill-job → read-job and pays an 8M-row block write/read
-    // on top. On one box, overlap beats dedup; on a cluster, the stage
-    // tables ([[triplesStaged]]) are the split that makes extraction run
-    // once durably.
+    // MEMORY_AND_DISK persist 23.8s vs eager localCheckpoint 21.4s. Nor is
+    // it needed: Triples.all's key filter makes the mentions and asserts
+    // branches canonicalize equal, so the extraction→perTurn exchange is
+    // written once and reused (PipelineSpec pins the one ReusedExchange)
+    // and extraction runs once per pass. On a cluster, the stage tables
+    // ([[triplesStaged]]) are the split that makes extraction run once
+    // durably.
     val turnAgg = Aggregation.perTurn(l)
     // the predicate branches read only turn METADATA — hand them the
     // text-free generator (generator-side column pruning; Triples.all

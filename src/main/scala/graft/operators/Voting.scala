@@ -28,8 +28,6 @@ import scala.collection.mutable
   */
 object Voting {
 
-  val NumModels = 3
-
   /** F4 IoU as a pure column expression (`voting.py:1-9`). */
   def iouExpr(aS: String, aE: String, bS: String, bE: String) = {
     val inter = greatest(lit(0), least(col(aE), col(bE)) - greatest(col(aS), col(bS)))
@@ -68,7 +66,7 @@ object Voting {
         val clusters = (0 until n).groupBy(find)
         clusters.toSeq.sortBy(_._1).iterator.flatMap { case (_, idxs) =>
           val cm = idxs.map(ms)
-          val support = cm.map(_.try_index).distinct.size.toDouble / NumModels
+          val support = cm.map(_.try_index).distinct.size.toDouble / Aggregation.Rounds
           if (support >= voteThreshold) {
             val votes = mutable.LinkedHashMap.empty[String, Double]
             cm.foreach { m => val k = conceptKey(m.source, m.code); votes.update(k, votes.getOrElse(k, 0.0) + m.acc) }
@@ -118,7 +116,8 @@ object Voting {
     val m = withK.join(comp, withK("k") === comp("id")).drop("id")
 
     val support = m.groupBy("conv_id", "turn_idx", "comp")
-      .agg((countDistinct(col("try_index")) / lit(NumModels.toDouble)).as("support"),
+      .agg((Aggregation.roundSupport(col("try_index")) /
+          lit(Aggregation.Rounds.toDouble)).as("support"),
         min(col("start")).as("c_start"), max(col("end")).as("c_end"))
       .filter(col("support") >= lit(voteThreshold))
 

@@ -130,7 +130,7 @@ object StreamingTriples {
           touched.iterator.map { key =>
             val (n, tries) = counts(key)
             ConvConceptSupport(conv, key, n, tries.size,
-              tries.size / graft.operators.Aggregation.TotalRetry.toDouble)
+              tries.size / graft.operators.Aggregation.Rounds.toDouble)
           }
       }
   }
