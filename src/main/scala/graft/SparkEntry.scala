@@ -1021,8 +1021,8 @@ object SparkEntry {
     // each deduped vs the corpus index + every doc the stream has already
     // SEEN (accepted or not — dedup vs accepted-only would resurrect dup
     // chains across batch boundaries; see StreamingDedup's scaladoc and
-    // Round5Spec's chain test) + itself (replay idempotence is
-    // Round5Spec-tested). With id-ordered batches the arrival-order
+    // StreamingDedupSpec's chain test) + itself (replay idempotence is
+    // StreamingDedupSpec-tested). With id-ordered batches the arrival-order
     // supersede equals the batch min-id rule, so the accepted set is
     // gated by the SAME survivors SQL as dd_incremental_new
     Query("dd_stream", Some(deltaSurvivorsSql), (s, dir) => {
@@ -1068,7 +1068,7 @@ object SparkEntry {
     // (the 100 TB shape: dedup a new batch against the corpus, never the
     // corpus against itself). corpus = doc_id % 5 != 4 indexed once;
     // delta = % 5 == 4 probed against it through a partition-pruned read
-    // of only the delta's band-key shards (plan-asserted in Round5Spec).
+    // of only the delta's band-key shards (plan-asserted in DedupSpec).
     // The pair set must equal the BATCH exact-Jaccard pairs over
     // corpus ∪ delta restricted to pairs touching the delta — the same
     // O(n²) oracle SQL as the recall surfaces, kept to pairs with a delta

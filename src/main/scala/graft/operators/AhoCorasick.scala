@@ -32,26 +32,12 @@ final class AhoCorasick private (
     if (n == -1) 0 else n
   }
 
-  /** Run over a token-id sequence; emit (startTokenIdx, endTokenIdxExclusive,
-    * patternId) for EVERY match (overlaps included — resolution is the
-    * caller's longest-match policy). Unknown tokens (-1) reset the state. */
-  def findAll(toks: Array[Int]): mutable.ArrayBuffer[(Int, Int, Int)] = {
-    val packed = findAllPacked(toks)
-    val hits = new mutable.ArrayBuffer[(Int, Int, Int)](packed.size)
-    var i = 0
-    while (i < packed.size) {
-      val h = packed.buf(i)
-      hits += ((AhoCorasick.hitStart(h), AhoCorasick.hitEnd(h),
-        AhoCorasick.hitPid(h)))
-      i += 1
-    }
-    hits
-  }
-
-  /** The allocation-free form of [[findAll]] (r7 hot path): hits packed as
-    * start(20b) | endExclusive(20b) | patternId(24b) longs. Segment token
-    * counts are bounded by the ≤10-line chunking upstream; the packing
-    * limits are asserted, not assumed. */
+  /** Run over a token-id sequence; emit every match (overlaps included —
+    * resolution is the caller's longest-match policy) as a packed
+    * start | endExclusive | patternId long ([[AhoCorasick.packHit]]),
+    * allocation-free (r7 hot path). Unknown tokens (-1) reset the state.
+    * Segment token counts are bounded by the ≤10-line chunking upstream;
+    * the packing limits are asserted, not assumed. */
   def findAllPacked(toks: Array[Int]): LongBuf = {
     require(toks.length < (1 << AhoCorasick.TokBits),
       s"segment of ${toks.length} tokens exceeds the 2^${AhoCorasick.TokBits}" +

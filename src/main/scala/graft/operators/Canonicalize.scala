@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * same real-world entity when they share a CUI (the reference's crosswalk
   * bridge, `app.py:891-917`) or share a normalized alias string. The
   * canonical id of each component is its lexicographically-least member —
-  * deterministic, no coordinator.
+  * deterministic, no coordinator ([[ConnectedComponents.canonicalIds]]).
   *
   * Scale notes: the two edge-inducing self-joins go through `groupBy` on
   * the bridging key first, so a mega-alias hub (one string shared by k
@@ -22,33 +22,19 @@ object Canonicalize {
 
   def normAlias = regexp_replace(lower(col("str")), "[^a-z0-9]+", " ")
 
-  /** Edges between concept ids induced by a shared bridging key: instead of
-    * a pairwise self-join (k² for a hub of degree k), connect every member
-    * to the MIN member of its key group (k-1 star edges, same components). */
-  private def starEdges(nodesWithKey: DataFrame): DataFrame = {
-    val mins = nodesWithKey.groupBy("bridge").agg(min(col("node")).as("rep"))
-    nodesWithKey.join(mins, "bridge")
-      .filter(col("node") =!= col("rep"))
-      .select(col("node").as("src_node"), col("rep").as("dst_node"))
-  }
-
   /** gazetteer -> (concept_id, canonical_id). */
   def canonicalConcepts(gaz: DataFrame): DataFrame = {
     val nodes = gaz.select(conceptId.as("node"), col("cui"), normAlias.as("alias"))
-    val byCui = starEdges(nodes.select(col("node"), col("cui").as("bridge")).distinct())
-    val byAlias = starEdges(nodes.select(col("node"), col("alias").as("bridge")).distinct())
-    val allNodes = nodes.select(col("node")).distinct()
-
-    // map string node ids to stable longs for the CC loop
-    val edgesL = byCui.union(byAlias).distinct()
-      .select(xxhash64(col("src_node")).as("src"), xxhash64(col("dst_node")).as("dst"))
-      .union(allNodes.select(xxhash64(col("node")).as("src"), xxhash64(col("node")).as("dst")))
-    val comp = ConnectedComponents.run(edgesL)
-
-    val withComp = allNodes
-      .withColumn("id", xxhash64(col("node")))
-      .join(comp, "id")
-    val canon = withComp.groupBy("comp").agg(min(col("node")).as("canonical_id"))
-    withComp.join(canon, "comp").select(col("node").as("concept_id"), col("canonical_id"))
+    // instead of a pairwise self-join (k² for a hub of degree k), connect
+    // every member of a bridging-key group to the group's MIN member
+    // (k-1 star edges, same components)
+    def starEdges(bridge: String): DataFrame = {
+      val keyed = nodes.select(col("node"), col(bridge).as("bridge")).distinct()
+      keyed.join(keyed.groupBy("bridge").agg(min(col("node")).as("rep")), "bridge")
+        .filter(col("node") =!= col("rep"))
+        .select(col("node").as("src"), col("rep").as("dst"))
+    }
+    ConnectedComponents.canonicalIds(nodes, starEdges("cui").union(starEdges("alias")))
+      .select(col("node").as("concept_id"), col("canonical_id"))
   }
 }

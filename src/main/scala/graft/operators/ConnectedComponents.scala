@@ -51,6 +51,27 @@ object ConnectedComponents {
       runStarContraction(edges)
     }
 
+  /** Canonical id of every node: `nodes` (a `node` column of any type,
+    * duplicates allowed) and `edges` (src, dst) over node values →
+    * (node, canonical_id), the canonical id being the least member of the
+    * node's component by the node type's own ordering. Every node enters
+    * as a self-loop, so a node in no edge is its own canonical. Nodes ride
+    * [[run]] as 64-bit hashes of their string form: a collision merges two
+    * components with probability ~n²/2^64 — negligible and never silent
+    * row loss. Not persisted: the node distinct and the joins against
+    * [[run]]'s already-checkpointed output recompute cheaply (two cache
+    * builds here measured +0.7 s on near-dup canonicalization at sf0.1). */
+  def canonicalIds(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    def hash(c: String) = xxhash64(col(c).cast("string"))
+    val ids = nodes.select(col("node")).distinct().withColumn("id", hash("node"))
+    val withComp = ids
+      .join(run(edges.select(hash("src").as("src"), hash("dst").as("dst"))
+        .unionByName(ids.select(col("id").as("src"), col("id").as("dst")))), "id")
+      .select(col("node"), col("comp"))
+    withComp.join(withComp.groupBy("comp").agg(min(col("node")).as("canonical_id")), "comp")
+      .select(col("node"), col("canonical_id"))
+  }
+
   /** Min-label propagation; None when not converged within `maxIter`. */
   private def minLabel(edges: DataFrame, maxIter: Int): Option[DataFrame] = {
     val sym = edges.select(col("src"), col("dst"))

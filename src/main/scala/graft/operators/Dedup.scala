@@ -188,8 +188,7 @@ object Dedup {
     * bucket keys and the signature re-attach joins. */
   private def sigTable(df: DataFrame, idCol: String, textCol: String,
       blocking: Blocking): DataFrame =
-    df.select(col(idCol).as("id"), col(textCol).as("_text"))
-      .select(col("id"), blocking.signature(col("_text")).as("sig"))
+    df.select(col(idCol).as("id"), blocking.signature(col(textCol)).as("sig"))
 
   /** The (id, band, bkey) bucket keys of a signature table. */
   private def bucketKeys(sigs: DataFrame, blocking: Blocking): DataFrame =
@@ -313,35 +312,18 @@ object Dedup {
     * only contains cliques), canonical id = least member by the id's own
     * ordering. Docs in no pair are their own canonical. Pairs come from
     * [[trueJaccardPairs]] over [[Minhash]] — the banded (never all-pairs)
-    * candidate path — and the CC loop is the same iterative-DataFrame
-    * operator the KG alias canonicalization uses, with the same id
-    * treatment: any id TYPE works (ids ride the CC loop as 64-bit hashes —
-    * [[Canonicalize.canonicalConcepts]] precedent; a hash collision merges
-    * two clusters with probability ~n²/2^64, negligible and documented,
-    * never silent row loss). Contract caveats: run exact dedup first
-    * (capBuckets' boilerplate contract — a >maxBucket near-identical
-    * cluster would otherwise split), and threshold well above the banding
-    * floor so pair recall is ~1 (see [[Minhash]]). */
+    * candidate path — and the components-to-canonical step is
+    * [[ConnectedComponents.canonicalIds]], the one the KG alias
+    * canonicalization uses: any id TYPE works. Contract caveats: run exact
+    * dedup first (capBuckets' boilerplate contract — a >maxBucket
+    * near-identical cluster would otherwise split), and threshold well
+    * above the banding floor so pair recall is ~1 (see [[Minhash]]). */
   def canonicalByNearDup(df: DataFrame, idCol: String, textCol: String,
-      trueThreshold: Double = 0.5, maxBucket: Int = 0): DataFrame = {
-    val pairs = trueJaccardPairs(df, idCol, textCol, Minhash, trueThreshold,
-      maxBucket)
-    // NOT persisted (r8 A/B): ids/withComp recompute is a trivial distinct
-    // + a join against the CC output, which ConnectedComponents already
-    // localCheckpoints — two cache builds here measured +0.7 s at sf0.1
-    val ids = df.select(col(idCol).as("orig")).distinct()
-      .withColumn("nid", xxhash64(col("orig").cast("string")))
-    val edges = pairs
-      .select(xxhash64(col("id_a").cast("string")).as("src"),
-        xxhash64(col("id_b").cast("string")).as("dst"))
-      .unionByName(ids.select(col("nid").as("src"), col("nid").as("dst")))
-    val withComp = ids
-      .join(ConnectedComponents.run(edges), ids("nid") === col("id"))
-      .select(col("orig"), col("comp"))
-    val canon = withComp.groupBy("comp").agg(min(col("orig")).as("canonical_id"))
-    withComp.join(canon, "comp")
-      .select(col("orig").as(idCol), col("canonical_id"))
-  }
+      trueThreshold: Double = 0.5, maxBucket: Int = 0): DataFrame =
+    ConnectedComponents.canonicalIds(df.select(col(idCol).as("node")),
+        trueJaccardPairs(df, idCol, textCol, Minhash, trueThreshold, maxBucket)
+          .select(col("id_a").as("src"), col("id_b").as("dst")))
+      .select(col("node").as(idCol), col("canonical_id"))
 
   /** Margin audit of [[trueJaccardPairs]] over `Simhash(8)`, the simhash
     * recall surface (ADVICE r4): the maximum simhash hamming distance
@@ -397,94 +379,77 @@ object Dedup {
     *    partitioned by `epoch` (0 at build, the caller-supplied batch id
     *    per append) and `bshard = pmod(bkey, 64)`: a delta probe reads
     *    only the shards its own band keys hash to (parquet partition
-    *    pruning, plan-asserted in Round5Spec — pruning on bshard is
+    *    pruning, plan-asserted in DedupSpec — pruning on bshard is
     *    unaffected by the epoch nesting). The banding and shard count are
     *    constants, so every build, append and probe of an index agree.
     *  - `path/docs` — the (id, sh) [[shingleTable]] the exact-Jaccard
     *    verify needs, computed once here, never re-derived from text;
     *    partitioned by `epoch` for the same replay scoping.
-    *  - `path/meta` — one (n_docs, fold_upto) row per epoch: full doc
-    *    counts (summed by the probe's cap arithmetic) plus the stream-fold
-    *    watermark (-1 for the build and plain appends; the covered
-    *    `uptoBatch` when the epoch was written by
-    *    [[graft.streaming.StreamingDedup.foldAndRetire]]). Riding in meta
-    *    makes the watermark ATOMIC with the epoch's commit marker — meta
-    *    is written last, so a crashed fold never advances the watermark.
+    *  - `path/meta` — one (n_docs, fold_upto) row per epoch, read only
+    *    through [[readIndexMeta]]: full doc counts (summed by the probe's
+    *    cap arithmetic) plus the stream-fold watermark (-1 for the build
+    *    and plain appends; the covered `uptoBatch` when the epoch was
+    *    written by [[graft.streaming.StreamingDedup.foldAndRetire]]).
+    *    Riding in meta makes the watermark ATOMIC with the epoch's commit
+    *    marker — meta is written last, so a crashed fold never advances
+    *    the watermark.
     *  - `path/fence` — written only by [[compactMinhashIndex]]: the
-    *    smallest epoch id a post-compaction append may use (r7, VERDICT r6
-    *    next #3 — the quiesce contract enforced in code, not scaladoc).
+    *    smallest epoch id a post-compaction append may use (the quiesce
+    *    contract enforced in code, not scaladoc).
     * Ids must be unique across corpus ∪ any future delta (the ingest
-    * contract — Ingest.validate's duplicate-upload guard upstream). */
+    * contract — Ingest.validate's duplicate-upload guard upstream). The
+    * build fans the corpus across the session's cores ([[corpusSrc]]). */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // the signature kernel runs parallel (fanned-out source) instead of on
-    // the source's scan splits; the bands write clusters by bshard
-    // (PartitionedParquet.writeEpoch) so each task holds whole shards
-    val src = corpusSrc(df, idCol, textCol)
-    // the bands and docs writes are INDEPENDENT jobs over the same source
-    // — run them concurrently so one job's kernel/commit back-fills the
-    // other's straggler tail (guide §2.6). meta is the commit marker and
-    // stays strictly after both.
+      path: String): Unit =
+    writeIndexEpoch(df, corpusSrc(df, idCol, textCol), idCol, textCol, path,
+      0L, -1L)
+
+  /** The one index epoch writer: bands ‖ docs, then meta LAST. The bands
+    * and docs writes are INDEPENDENT jobs over the same source — run
+    * concurrently so one job's kernel/commit back-fills the other's
+    * straggler tail; the bands write clusters by bshard
+    * ([[PartitionedParquet.writeEpoch]]) so each task holds whole shards.
+    * The meta row is the epoch's COMMIT MARKER: a crash before it leaves
+    * bands/docs rows whose epoch is absent from meta, and every reader
+    * (the probe, compaction) reads only meta-committed epochs, so the
+    * partial epoch stays invisible until a retry completes it. `n_docs` is
+    * the FULL doc count of `df` (short docs included — `docs` excludes
+    * them), so the incremental cap is computed on the same corpus∪delta
+    * count as the batch path's effectiveCap. */
+  private def writeIndexEpoch(df: DataFrame, src: DataFrame, idCol: String,
+      textCol: String, path: String, epoch: Long, foldUpto: Long): Unit = {
     Par.concurrently(
       PartitionedParquet.writeEpoch(
         blocked(src, idCol, textCol, Minhash).withColumn("bshard", shardOf),
-        s"$path/bands", 0L, Some("bshard")),
+        s"$path/bands", epoch, Some("bshard")),
       PartitionedParquet.writeEpoch(shingleTable(src, idCol, textCol),
-        s"$path/docs", 0L))
-    // FULL doc count (short docs included — `docs` excludes them), so the
-    // incremental cap is computed on the same corpus∪delta count as the
-    // batch path's effectiveCap and the equality contract holds on
-    // short-doc-heavy corpora too
-    PartitionedParquet.writeEpoch(
-      Seq((df.count(), -1L)).toDF("n_docs", "fold_upto"), s"$path/meta", 0L)
+        s"$path/docs", epoch))
+    PartitionedParquet.writeEpoch(df.sparkSession.createDataFrame(
+      Seq((df.count(), foldUpto))).toDF("n_docs", "fold_upto"), s"$path/meta", epoch)
   }
+
+  /** The index meta, one bounded read: (epoch, n_docs, fold_upto) per
+    * committed epoch. Its epochs are the commit-epoch gate, its doc counts
+    * the cap basis, its max `fold_upto` the [[foldWatermark]]. Callers
+    * that need more than one of these (the streaming micro-batch: cap +
+    * probe) read it once and hand it on via `meta`, instead of paying a
+    * meta listing+collect job per use (fixed per-job latency is the
+    * streaming path's dominant term). */
+  def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): Array[(Long, Long, Long)] =
+    spark.read.parquet(s"$path/meta")
+      .select(col("epoch").cast("long"), col("n_docs"), col("fold_upto"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
   /** The stream-fold watermark: the highest `uptoBatch` any committed
     * fold epoch covers (-1 if none). Derived from meta — the epoch commit
     * marker — so a fold crashed before its meta write never advances it,
     * and [[graft.streaming.StreamingDedup.foldAndRetire]] re-covers
-    * exactly the batches whose index rows never committed (ADVICE r6:
-    * a fold retried at a HIGHER uptoBatch after an append-then-crash must
-    * not re-append the already-committed batches). Tolerates legacy meta
-    * without the column — read with mergeSchema: a parquet read samples ONE
-    * file's footer by default, so a meta dir mixing legacy (no `fold_upto`)
-    * and folded epochs could silently resolve to the legacy schema and read
-    * the watermark as -1, making a crashed-then-retried fold re-append its
-    * already-committed batches (the r7-review hazard). Meta is one tiny row
-    * per epoch; the merged-footer read is free. */
-  def foldWatermark(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val meta = spark.read.option("mergeSchema", "true").parquet(s"$path/meta")
-    if (!meta.columns.contains("fold_upto")) -1L
-    else {
-      val r = meta.agg(max(col("fold_upto"))).head()
-      if (r.isNullAt(0)) -1L else math.max(-1L, r.getLong(0))
-    }
-  }
-
-  /** Sum of the index's recorded FULL doc counts (build + every appended
-    * epoch) — the corpus side of the incremental cap basis, and the
-    * count [[graft.streaming.StreamingDedup]] folds into its own
-    * corpus∪seen∪batch basis. */
-  def indexedDocCount(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long =
-    spark.read.parquet(s"$path/meta")
-      .agg(sum(col("n_docs"))).head().getLong(0)
-
-  /** One bounded read of the index meta — (epoch, n_docs) per committed
-    * append. Callers that need BOTH the commit-epoch gate and the doc-count
-    * cap basis (the streaming micro-batch: cap + probe) read it once and
-    * hand it to [[incrementalTrueJaccardPairs]] / [[incrementalNewDocs]]
-    * via `meta`, instead of paying a second meta listing+collect job per
-    * micro-batch (guide §1.2: fixed per-job latency is the streaming
-    * path's dominant term). */
-  def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[(Long, Long)] =
-    spark.read.parquet(s"$path/meta")
-      .select(col("epoch").cast("long"), col("n_docs").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    * exactly the batches whose index rows never committed (a fold retried
+    * at a HIGHER uptoBatch after an append-then-crash must not re-append
+    * the already-committed batches). */
+  def foldWatermark(meta: Array[(Long, Long, Long)]): Long =
+    meta.map(_._3).foldLeft(-1L)(math.max)
 
   /** The corpus-sized bucket cap for an explicitly-known doc count —
     * public so callers that assemble the basis themselves (the streaming
@@ -498,8 +463,9 @@ object Dedup {
   /** Append a delta batch to an existing index (the accept-and-extend half
     * of the supersede loop: probe first with
     * [[incrementalTrueJaccardPairs]] / [[incrementalNewDocs]], then append
-    * what you kept). Appended == rebuilt is equality-tested in
-    * Round5Spec.
+    * what you kept) through the build's epoch writer, unfanned (a delta is
+    * small — [[corpusSrc]]). Appended == rebuilt is equality-tested in
+    * DedupSpec.
     *
     * `epoch` must uniquely identify this delta batch (> 0; 0 is the
     * build). The write is a dynamic partition overwrite scoped to this
@@ -507,35 +473,19 @@ object Dedup {
     * of any scheduled ingest job) replaces its own previous output
     * instead of silently duplicating index rows — duplicated (id, sh)
     * rows would multiply verify-join rows and double-count the cap basis.
-    * Replay idempotence is Round5Spec-tested.
     *
-    * Crash window (ADVICE r5): the three tables are three separate jobs,
-    * written bands → docs → META LAST. The meta row is the epoch's COMMIT
-    * MARKER — a crash between jobs leaves bands/docs rows whose epoch is
-    * absent from meta, and the probe ([[incrementalTrueJaccardPairs]])
-    * reads only meta-committed epochs, so a partially-appended epoch is
-    * invisible (no silently-dropped verify joins, no undercounted cap
-    * basis) until the retry completes it.
-    *
-    * Compaction fence (r7, VERDICT r6 next #3): an epoch below the index's
-    * fence ([[graft.util.PartitionedParquet.minNextEpoch]]) was already
-    * folded into this compacted copy — a late retry of it would re-add
-    * its rows and duplicate the index, so it FAILS LOUDLY here instead. `foldUpto` is set only by
+    * Compaction fence: an epoch below the index's fence
+    * ([[graft.util.PartitionedParquet.minNextEpoch]]) was already folded
+    * into this compacted copy — a late retry of it would re-add its rows
+    * and duplicate the index, so it FAILS LOUDLY here, before any job.
+    * `foldUpto` is set only by
     * [[graft.streaming.StreamingDedup.foldAndRetire]]: the highest stream
     * batch this epoch covers, recorded in the meta row so the fold
     * watermark commits atomically with the epoch (meta is written last). */
   def appendToMinhashIndex(delta: DataFrame, idCol: String, textCol: String,
       path: String, epoch: Long, foldUpto: Long = -1L): Unit = {
-    val spark = delta.sparkSession
-    PartitionedParquet.requireAppendable(spark, path, epoch)
-    import spark.implicits._
-    PartitionedParquet.writeEpoch(
-      blocked(delta, idCol, textCol, Minhash).withColumn("bshard", shardOf),
-      s"$path/bands", epoch, Some("bshard"))
-    PartitionedParquet.writeEpoch(shingleTable(delta, idCol, textCol),
-      s"$path/docs", epoch)
-    PartitionedParquet.writeEpoch(
-      Seq((delta.count(), foldUpto)).toDF("n_docs", "fold_upto"), s"$path/meta", epoch)
+    PartitionedParquet.requireAppendable(delta.sparkSession, path, epoch)
+    writeIndexEpoch(delta, delta, idCol, textCol, path, epoch, foldUpto)
   }
 
   /** Fold a multi-epoch index (build + any number of appends) back into
@@ -549,48 +499,31 @@ object Dedup {
     * reference swaps ES aliases the same way, `src/app.py:1191-1208`) —
     * an in-place rewrite would have a crash window with no readable
     * index at all. Content equality with a from-scratch rebuild and
-    * probe-result equality are Round5Spec-tested.
+    * probe-result equality are DedupSpec-tested.
     *
-    * Quiesce contract — ENFORCED since r7 (VERDICT r6 next #3, ADVICE r6):
-    * the compacted copy carries a `fence` table with
-    * `min_next_epoch = max(committed src epoch) + 1`, and
+    * Quiesce contract, enforced: the compacted copy carries a `fence`
+    * table with `min_next_epoch = max(committed src epoch) + 1`, and
     * [[appendToMinhashIndex]] refuses any epoch below it — a late retry of
     * an epoch already folded into the compacted copy fails loudly instead
-    * of re-adding its rows. The rewrite reads ONLY meta-committed epochs
-    * (the same gate as the probe): a half-appended epoch — bands/docs
-    * present, no meta commit marker — must stay invisible post-compaction
-    * too, or compaction would silently "commit" it while the copied meta
-    * doc count excludes it (ADVICE r6 medium #1). The fold watermark
-    * (max `fold_upto`) is carried into the copy's meta so
+    * of re-adding its rows. ONE [[readIndexMeta]] feeds all three uses of
+    * the source meta: the rewrite reads ONLY its committed epochs (the
+    * same gate as the probe — a half-appended epoch must stay invisible
+    * post-compaction too, or compaction would silently "commit" it while
+    * the copied doc count excludes it), their doc counts are carried, and
+    * so is the [[foldWatermark]], so
     * [[graft.streaming.StreamingDedup.foldAndRetire]] stays idempotent
     * across a pointer flip. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String): Unit = {
-    import spark.implicits._
-    // ONE meta read (bounded collect: one tiny row per committed epoch)
-    // feeds all three uses — the committed-epoch gate, the carried doc
-    // count, and the carried fold watermark — instead of three separate
-    // scans of the same table (r7 review). mergeSchema for the same
-    // mixed-legacy-meta reason as [[foldWatermark]].
-    val metaDf = spark.read.option("mergeSchema", "true")
-      .parquet(s"$srcPath/meta")
-    val hasFold = metaDf.columns.contains("fold_upto")
-    val metaRows = metaDf.select(col("epoch").cast("long"),
-        col("n_docs").cast("long"),
-        (if (hasFold) col("fold_upto").cast("long") else lit(-1L))
-          .as("fold_upto"))
-      .collect()
-    val committed = metaRows.map(_.getLong(0))
-    val carriedDocs = metaRows.map(_.getLong(1)).sum
-    val carriedFold =
-      if (metaRows.isEmpty) -1L
-      else metaRows.map(r => if (r.isNullAt(2)) -1L else r.getLong(2)).max
+    val meta = readIndexMeta(spark, srcPath)
+    val committed = meta.map(_._1)
     PartitionedParquet.compactEpochs(spark, s"$srcPath/bands",
       s"$dstPath/bands", committed, Some("bshard"))
     PartitionedParquet.compactEpochs(spark, s"$srcPath/docs",
       s"$dstPath/docs", committed)
-    PartitionedParquet.writeEpoch(Seq((carriedDocs, carriedFold))
-      .toDF("n_docs", "fold_upto"), s"$dstPath/meta", 0L)
+    PartitionedParquet.writeEpoch(spark.createDataFrame(
+        Seq((meta.map(_._2).sum, foldWatermark(meta)))).toDF("n_docs", "fold_upto"),
+      s"$dstPath/meta", 0L)
     PartitionedParquet.writeFence(spark, srcPath, dstPath, committed)
   }
 
@@ -609,7 +542,7 @@ object Dedup {
   def incrementalTrueJaccardPairs(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, textCol: String,
       trueThreshold: Double = 0.5, maxBucket: Int = 0,
-      meta: Option[Array[(Long, Long)]] = None): DataFrame = {
+      meta: Option[Array[(Long, Long, Long)]] = None): DataFrame = {
     // the delta is read ≥3 times below (banding, shingles, count) and its
     // upstream may be an arbitrary transformation: one eager local
     // checkpoint evaluates that lineage exactly once (delta = an ingest
@@ -628,9 +561,9 @@ object Dedup {
     // carry an epoch absent from meta and must be invisible to the probe,
     // or the verify join silently drops that epoch's pairs while the cap
     // basis undercounts. Bounded collect: one meta row per append — ONE
-    // read serves both the epoch gate and the cap basis's doc count
-    // (previously two separate meta scans/jobs), and a caller that already
-    // read the meta (the streaming micro-batch's cap basis) hands it in.
+    // read serves both the epoch gate and the cap basis's doc count, and
+    // a caller that already read the meta (the streaming micro-batch's
+    // cap basis) hands it in.
     val metaRows = meta.getOrElse(readIndexMeta(spark, path))
     val committedEpochs = metaRows.map(_._1)
     // explicit selects: the index tables carry an `epoch` partition
@@ -701,7 +634,7 @@ object Dedup {
   def incrementalNewDocs(spark: org.apache.spark.sql.SparkSession,
       path: String, delta: DataFrame, idCol: String, textCol: String,
       trueThreshold: Double = 0.5, maxBucket: Int = 0,
-      meta: Option[Array[(Long, Long)]] = None): DataFrame = {
+      meta: Option[Array[(Long, Long, Long)]] = None): DataFrame = {
     // the verified pair set feeds BOTH victim branches below: persist so
     // the whole probe DAG (index scan + banding + verify) runs once
     val pairs = incrementalTrueJaccardPairs(spark, path, delta, idCol,

@@ -39,13 +39,13 @@ object GraphSink {
         bit_xor(xxhash64(col("subj"), col("pred"), col("obj"))).as("checksum"),
         approx_count_distinct(col("subj")).as("subj_approx_distinct"))
 
-  /** The manifest, read with mergeSchema: the schema gained
-    * subj_approx_distinct in r3, and without merging a directory mixing
-    * old 4-column and new 5-column footers resolves to whichever footer
-    * parquet picks first — consumers must see the union schema so old and
-    * new rows coexist (ADVICE r3). All manifest readers go through here. */
+  /** The manifest table: one row per committed bucket, ([[metrics]]'
+    * four columns, run_id). Its two writers — [[writeResumable]] and
+    * [[graft.streaming.StreamingTriples.commitBatch]] — write that one
+    * schema, so every footer agrees and a plain read is the whole
+    * manifest. All manifest readers go through here. */
   def readManifest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(manifestPath(dir))
+    spark.read.parquet(manifestPath(dir))
 
   def committedBuckets(spark: SparkSession, dir: String): DataFrame =
     if (PartitionedParquet.exists(spark, manifestPath(dir)))

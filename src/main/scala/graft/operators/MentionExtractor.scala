@@ -186,54 +186,18 @@ object MentionExtractor {
     }
   }
 
-  /** Match one segment with one variant; offsets in TURN coordinates. */
-  def matchSegment(seg: Segment, vIdx: Int, variant: Variant): Iterator[Mention] = {
-    val (toks0, starts, ends) = tokenize(seg.seg_text)
-    matchTokens(seg, vIdx, variant, toks0, starts, ends)
-  }
-
-  /** Variant matching over PRE-tokenized text: the ensemble runs 3 variants
-    * per segment and tokenization (substring + lowercase allocation) is the
-    * shared prefix — the caller tokenizes once, not once per variant. */
-  def matchTokens(seg: Segment, vIdx: Int, variant: Variant,
-      toks0: Array[String], starts: Array[Int], ends: Array[Int]): Iterator[Mention] = {
-    val toks = if (variant.stem) toks0.map(stemToken) else toks0
-    val ids = toks.map(variant.ac.tokenId)
-    sweep(seg, vIdx, variant.ac.findAll(ids), variant.payloads, variant.acc,
-      starts, ends)
-  }
-
   /** Longest-match-wins, leftmost-first, non-overlapping resolution of a
-    * raw hit list; every `payloads(pid)` of the hits passed in must be
-    * non-null (callers filter before a partial-payload sweep). */
-  private def sweep(seg: Segment, vIdx: Int,
-      hits: mutable.ArrayBuffer[(Int, Int, Int)], payloads: Array[Payload],
-      acc: Double, starts: Array[Int], ends: Array[Int]): Iterator[Mention] = {
-    if (hits.isEmpty) return Iterator.empty
-    val sorted = hits.sortBy { case (s, e, pid) => (s, -e, payloads(pid).ttyRank) }
-    val out = new mutable.ArrayBuffer[Mention]
-    var lastEnd = -1 // token index
-    sorted.foreach { case (ts, te, pid) =>
-      if (ts >= lastEnd) {
-        val p = payloads(pid)
-        out += Mention(seg.conv_id, seg.turn_idx, vIdx,
-          seg.seg_start + starts(ts), seg.seg_start + ends(te - 1),
-          seg.seg_text.substring(starts(ts), ends(te - 1)),
-          p.cui, p.source, p.code, p.alias, acc)
-        lastEnd = te
-      }
-    }
-    out.iterator
-  }
-
-  /** [[sweep]] over packed hits (r7 hot path): sort keys are single longs
+    * packed hit list (r7 hot path): sort keys are single longs
     * — start(19b) | inverted-end(19b) | ttyRank(2b) | pid(22b) — so the
     * (start asc, end desc, rank asc) resolution is one primitive
     * `Arrays.sort` with zero boxing (the tuple `sortBy` profiled at ~7% of
     * pipeline executor samples). The pid tail makes the key total; ties at
     * (start, end) cannot differ in pid (a span fixes the token-id sequence,
     * which fixes the pattern), so the emitted mentions are IDENTICAL to the
-    * legacy stable-sort path (equality-tested in MentionSpec). */
+    * stable-sort reference walk (test scope: `ExtractorReference`,
+    * equality-tested in Round4Spec). Every `payloads(pid)` of the hits
+    * passed in must be non-null (callers filter before a partial-payload
+    * sweep). */
   private def sweepPacked(seg: Segment, vIdx: Int, hits: LongBuf,
       payloads: Array[Payload], acc: Double,
       starts: Array[Int], ends: Array[Int]): Iterator[Mention] = {
@@ -274,8 +238,8 @@ object MentionExtractor {
   /** The operator: 3-variant ensemble NER as one narrow flatMap.
     *
     * Tries 0 and 1 share ONE automaton walk: variant 1's patterns (ISPREF
-    * rows only) are a subset of variant 0's, and [[AhoCorasick.findAll]]
-    * emits every occurrence of every pattern — so v0's hit list filtered
+    * rows only) are a subset of variant 0's, and
+    * [[AhoCorasick.findAllPacked]] emits every occurrence of every pattern — so v0's hit list filtered
     * to ISPREF-resident patterns (non-null `payloadsPref`) is exactly what
     * v1's own walk would produce, and each variant then runs its own
     * longest-match sweep with its own payload resolution. Saves one of

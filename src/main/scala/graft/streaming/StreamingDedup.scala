@@ -56,30 +56,6 @@ object StreamingDedup {
     * every readback emit an 'All paths were ignored' WARN). */
   private val SchemaSentinel = "schema_sentinel"
 
-  /** One-shot layout migration of a pre-r7 `accepted_folded` dir: r6 folds
-    * wrote `fold_epoch=E` partitions with `batch_id` as a data column; r7
-    * keys the partitions by `batch_id` (so a retried fold at ANY uptoBatch
-    * replaces exactly the same partitions) with `fold_epoch` riding along
-    * as lineage data. Writing the new layout NEXT TO legacy dirs would
-    * leave a dir parquet partition discovery refuses outright
-    * ("conflicting partition column names"), bricking every later
-    * readback — so the sole writer rewrites any legacy partitions into
-    * the new scheme first, then deletes them. Idempotent: a crash between
-    * the rewrite and the delete leaves a transiently mixed dir that the
-    * next fold's retry of this same migration heals (the rewrite is a
-    * dynamic overwrite of the same batch partitions). */
-  private def migrateLegacyFolded(spark: SparkSession, outDir: String): Unit = {
-    val root = s"$outDir/accepted_folded"
-    PartitionedParquet.partitionIds(spark, root, "fold_epoch").foreach { epoch =>
-      // reading the partition dir DIRECTLY strips fold_epoch: restore it
-      scopedOverwrite(spark.read.parquet(s"$root/fold_epoch=$epoch")
-          .withColumn("batch_id", col("batch_id").cast("long"))
-          .withColumn("fold_epoch", lit(epoch)), "batch_id")
-        .parquet(root)
-      deletePartitions(spark, root, "fold_epoch")(_ == epoch)
-    }
-  }
-
   /** One idempotent micro-batch: probe index → dedup vs prior seen →
     * within-batch supersede → journal the batch, write survivors. Also
     * drops a zero-row schema-sentinel parquet once, so [[readAccepted]]
@@ -108,8 +84,7 @@ object StreamingDedup {
     val prior = priorSeen(spark, outDir, batchId, idCol, textCol)
       .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // ONE meta read serves the cap basis here AND the probe's commit-epoch
-    // gate below (r8: previously indexedDocCount + the probe each paid a
-    // meta listing+collect job per micro-batch)
+    // gate below
     val meta = Dedup.readIndexMeta(spark, indexPath)
     val cap = Dedup.capForDocs(
       meta.map(_._2).sum
@@ -190,27 +165,28 @@ object StreamingDedup {
 
   /** Fold the stream's state for batches `<= uptoBatch` into the index
     * and retire the covered per-batch dirs — the maintenance operator
-    * that bounds the in-flight seen tail (VERDICT r5 next #3). IDEMPOTENT
-    * AT ANY `uptoBatch` (ADVICE r6 medium #2): the covered range is
-    * `(watermark, uptoBatch]` where the watermark —
+    * that bounds the in-flight seen tail. IDEMPOTENT AT ANY `uptoBatch`:
+    * the covered range is `(watermark, uptoBatch]` where the watermark —
     * [[Dedup.foldWatermark]], the max `fold_upto` in the index's meta —
     * commits ATOMICALLY with the index append (meta is written last), so
     * no crash window can re-append an already-committed batch, whatever
     * `uptoBatch` the retry chooses. Steps, ordered so every crash window
     * retries into the same end state:
     *
-    *  0. sweep leftovers: any `seen/accepted batch_id <= watermark` dir is
-    *     a previous fold that crashed between its commit and its retire —
-    *     its rows are already in the index and (accepted side) in
-    *     `accepted_folded`, so the dirs are pure garbage.
+    *  0. read the index meta once ([[Dedup.readIndexMeta]]): the watermark
+    *     and the highest committed epoch. Sweep leftovers: any
+    *     `seen/accepted batch_id <= watermark` dir is a previous fold that
+    *     crashed between its commit and its retire — its rows are already
+    *     in the index and (accepted side) in `accepted_folded`, so the
+    *     dirs are pure garbage.
     *  1. move the covered accepted rows into
     *     `outDir/accepted_folded/batch_id=N` (dynamic partition overwrite
     *     KEYED BY BATCH — a retried fold at any `uptoBatch` replaces
-    *     exactly the same batch partitions instead of duplicating them
-    *     under a second fold_epoch; fold_epoch rides along as a lineage
-    *     data column). [[readAccepted]] prefers the folded copy for every
-    *     batch at or below the folded max, so a crash after this step
-    *     cannot double-count.
+    *     exactly the same batch partitions instead of duplicating them;
+    *     fold_epoch rides along as a lineage data column).
+    *     [[readAccepted]] prefers the folded copy for every batch at or
+    *     below the folded max, so a crash after this step cannot
+    *     double-count.
     *  2. append ALL covered seen docs (accepted AND rejected) to the index
     *     via [[Dedup.appendToMinhashIndex]] (the index's one banding,
     *     [[Dedup.Minhash]], so the fold cannot corrupt it) with
@@ -233,24 +209,23 @@ object StreamingDedup {
     * the two agree because stream ids ascend across batches (the
     * documented stream==batch contract), so the folded doc is always the
     * smaller/earlier side. The cap basis is also unchanged: folded docs
-    * move from the `prior.count()` term into `indexedDocCount` meta.
+    * move from the `prior.count()` term into the meta `n_docs` term.
     *
     * Remaining operator contract: only fold batches that can never be
     * REDELIVERED — `uptoBatch` must be covered by the streaming
     * checkpoint's committed offsets (a replayed batch would find its own
-    * docs in the index and self-kill). The compaction side of the old
-    * scaladoc contract is now CODE: [[Dedup.compactMinhashIndex]] writes a
-    * fence and [[Dedup.appendToMinhashIndex]] refuses epochs below it, so
-    * a late fold retry against a compacted index either no-ops (its
-    * batches are under the carried watermark) or fails loudly — never
-    * duplicates rows. No-op when no un-folded seen batches `<= uptoBatch`
-    * exist. */
+    * docs in the index and self-kill). The compaction side is CODE:
+    * [[Dedup.compactMinhashIndex]] writes a fence and
+    * [[Dedup.appendToMinhashIndex]] refuses epochs below it, so a late
+    * fold retry against a compacted index either no-ops (its batches are
+    * under the carried watermark) or fails loudly — never duplicates rows.
+    * No-op when no un-folded seen batches `<= uptoBatch` exist. */
   def foldAndRetire(spark: SparkSession, indexPath: String, outDir: String,
       uptoBatch: Long, idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val seenDir = s"$outDir/seen"
     val accDir = s"$outDir/accepted"
-    val lastFolded = Dedup.foldWatermark(spark, indexPath)
-    migrateLegacyFolded(spark, outDir)
+    val meta = Dedup.readIndexMeta(spark, indexPath)
+    val lastFolded = Dedup.foldWatermark(meta)
     // step 0: safe by the fold's ordering — a batch at or under the
     // committed watermark has its rows in the index and its accepted rows
     // in `accepted_folded` (step 1 runs before the step-2 commit)
@@ -265,11 +240,9 @@ object StreamingDedup {
       .collect().map(_.getLong(0)).sorted
     if (covered.isEmpty) return
     // the highest committed epoch is the uniqueness floor when the index
-    // also received direct (non-fold) appends — read from meta's epoch
-    // directory names, no job
+    // also received direct (non-fold) appends
     val epoch = Seq(uptoBatch + 1,
-      PartitionedParquet.minNextEpoch(spark, indexPath),
-      PartitionedParquet.partitionIds(spark, s"$indexPath/meta", "epoch").max + 1).max
+      PartitionedParquet.minNextEpoch(spark, indexPath), meta.map(_._1).max + 1).max
     if (hasData(spark, accDir)) {
       val acc = readPartitioned(spark, accDir, "batch_id")
         .filter(col("batch_id") > lastFolded && col("batch_id") <= uptoBatch)

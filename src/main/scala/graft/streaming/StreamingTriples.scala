@@ -59,13 +59,21 @@ object StreamingTriples {
       .withColumn("batch_id", lit(batchId))
     PartitionedParquet.scopedOverwrite(triples, "batch_id", "bucket")
       .parquet(s"$dir/triples")
+    // The metrics come from the batch's WRITTEN partition, as in
+    // GraphSink.writeResumable: the manifest certifies the files on disk,
+    // and the unpersisted batch plan (segmentation through perTurn) is
+    // evaluated once, by the write. A batch that wrote no rows has no
+    // partition and gets no manifest rows.
+    val written = s"$dir/triples/batch_id=$batchId"
+    if (!PartitionedParquet.hasData(spark, written)) return
     // The manifest commit must be as idempotent as the data commit: a
     // redelivered batchId re-runs this whole function, and an APPEND here
     // would duplicate the batch's manifest rows (consumers summing
     // triple_count double-count). Partitioning by run_id + a scoped
     // overwrite makes the replay overwrite exactly its own rows.
-    PartitionedParquet.scopedOverwrite(GraphSink.metrics(triples)
-        .withColumn("run_id", concat(lit("batch-"), lit(batchId))), "run_id")
+    PartitionedParquet.scopedOverwrite(
+        GraphSink.metrics(PartitionedParquet.readPartitioned(spark, written, "bucket"))
+          .withColumn("run_id", concat(lit("batch-"), lit(batchId))), "run_id")
       .parquet(GraphSink.manifestPath(dir))
   }
 

@@ -1,13 +1,30 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.util.PartitionedParquet
 import graft.operators.Dedup.{Minhash, Simhash}
 import org.apache.spark.sql.functions._
 
+/** The batch dedup surfaces and the persisted minhash index: build,
+  * append, probe, compaction and its fence, and the meta commit marker. */
 class DedupSpec extends GraftSuite {
   import spark.implicits._
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+
+  private def rmAll(paths: String*): Unit = paths.foreach { p =>
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(p.stripPrefix("file://")))
+  }
+
+  private def doc(pre: String, seed: Int, n: Int) =
+    (seed until seed + n).map(i => s"$pre$i").mkString(" ")
+
+  /** The index's committed FULL doc count — the probe's cap basis. */
+  private def docCount(path: String): Long =
+    Dedup.readIndexMeta(spark, path).map(_._2).sum
 
   private val sf0001Docs = "/root/testdata/sf0.001/documents.parquet"
 
@@ -270,5 +287,220 @@ class DedupSpec extends GraftSuite {
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getString(2))).toMap
     assert(rows(1L) === ((6, "en")))
     assert(rows(2L) === ((4, "other")))
+  }
+
+  test("incremental dedup vs persisted index == batch restricted to delta; " +
+      "supersede survivors; append == rebuild; pruned index read") {
+    def doc(seed: Int, n: Int) = (seed to seed + n).map(i => s"t$i").mkString(" ")
+    // 30 unique corpus docs (so the 64-shard index has most shards
+    // populated and the pruning assert below has room to prune) + one
+    // corpus-corpus near-dup pair that must NOT appear in the delta view
+    val corpus = ((0 until 30).map(i => (i.toLong, doc(i * 1000, 40)))
+      :+ (30L, doc(0, 40) + " ctail")).toDF("doc_id", "text")
+    val delta = Seq(
+      (110L, doc(1000, 40) + " dtailA"), // near-dup of corpus doc 1
+      (111L, doc(50000, 40)),            // unique → survives
+      (112L, doc(60000, 40)),            // twin below; smaller id → survives
+      (113L, doc(60000, 40) + " dtailB"),// delta-delta dup → superseded
+      (114L, "short doc")                // < k words: never pairs, survives
+    ).toDF("doc_id", "text")
+    val all = corpus.unionByName(delta)
+    val dir = Files.createTempDirectory("graft_inc_idx_").toString
+    Dedup.buildMinhashIndex(corpus, "doc_id", "text", dir)
+    val deltaIds = Seq(110L, 111L, 112L, 113L, 114L)
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id_a".cast("long"), $"id_b".cast("long"), $"jaccard")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val inc = Dedup.incrementalTrueJaccardPairs(spark, dir, delta,
+      "doc_id", "text")
+    val batchRestricted = Dedup.trueJaccardPairs(all, "doc_id", "text", Dedup.Minhash)
+      .filter($"id_a".isin(deltaIds: _*) || $"id_b".isin(deltaIds: _*))
+    assert(pairSet(inc) == pairSet(batchRestricted))
+    assert(pairSet(inc).map(p => (p._1, p._2)) == Set((1L, 110L), (112L, 113L)))
+    // supersede survivors: 110 dies to corpus, 113 dies to smaller delta
+    // twin 112; the unique, the twin-keeper and the short doc survive
+    val surv = Dedup.incrementalNewDocs(spark, dir, delta, "doc_id", "text")
+      .select($"doc_id").as[Long].collect().toSet
+    assert(surv == Set(111L, 112L, 114L))
+    // the index read is partition-pruned to the delta's band-key shards
+    val scans = {
+      def rec(p: org.apache.spark.sql.execution.SparkPlan):
+          Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          rec(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => rec(q.plan)
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+        case o => o.children.flatMap(rec) ++ o.subqueries.flatMap(rec)
+      }
+      inc.count()
+      rec(inc.queryExecution.executedPlan)
+    }
+    val bandScan = scans
+      .find(_.metadata.get("Location").exists(_.contains("bands"))).get
+    assert(bandScan.metadata("PartitionFilters").contains("bshard"))
+    val totalShards = spark.read.parquet(s"$dir/bands")
+      .select($"bshard").distinct().count()
+    // 5 delta docs × 16 bands = ≤ 80 keys, but the pruning contract is
+    // per-key: selected shards ≤ distinct delta shards < total populated
+    assert(bandScan.selectedPartitions.partitionCount < totalShards)
+    // append == rebuild: same banding params ⇒ identical index content;
+    // appending the same epoch TWICE (a retried ingest job) must too —
+    // the epoch-scoped dynamic overwrite replaces, never duplicates
+    Dedup.appendToMinhashIndex(delta, "doc_id", "text", dir, epoch = 1L)
+    Dedup.appendToMinhashIndex(delta, "doc_id", "text", dir, epoch = 1L)
+    val dir2 = Files.createTempDirectory("graft_inc_idx2_").toString
+    Dedup.buildMinhashIndex(all, "doc_id", "text", dir2)
+    def bandsOf(p: String) = spark.read.parquet(s"$p/bands")
+      .select($"id".cast("long"), $"band", $"bkey", $"bshard".cast("long"))
+      .collect().map(_.toSeq).toSet
+    def docsOf(p: String) = spark.read.parquet(s"$p/docs")
+      .select($"id".cast("long"), $"sh")
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
+    assert(bandsOf(dir) == bandsOf(dir2))
+    assert(docsOf(dir) == docsOf(dir2))
+    // set equality would mask duplicated rows — row counts and the meta
+    // doc-count sum (the cap basis) must ALSO match the clean rebuild
+    for (sub <- Seq("bands", "docs"))
+      assert(spark.read.parquet(s"$dir/$sub").count()
+        == spark.read.parquet(s"$dir2/$sub").count(), sub)
+    assert(docCount(dir)
+      == docCount(dir2))
+    Seq(dir, dir2).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
+  test("index compaction folds multi-epoch indexes to one epoch, one file " +
+      "per shard, identical probe results") {
+    def doc(seed: Int, n: Int) = (seed to seed + n).map(i => s"s$i").mkString(" ")
+    val corpus = (0 until 8).map(i => (i.toLong, doc(i * 1000, 40)))
+      .toDF("doc_id", "text")
+    val src = Files.createTempDirectory("graft_cmp_src_").toString
+    val dst = Files.createTempDirectory("graft_cmp_dst_").toString + "/idx"
+    Dedup.buildMinhashIndex(corpus, "doc_id", "text", src)
+    Dedup.appendToMinhashIndex(
+      Seq((100L, doc(0, 40) + " t1"), (101L, doc(50000, 40)))
+        .toDF("doc_id", "text"), "doc_id", "text", src, epoch = 1L)
+    Dedup.appendToMinhashIndex(
+      Seq((200L, doc(1000, 40) + " t2")).toDF("doc_id", "text"),
+      "doc_id", "text", src, epoch = 2L)
+    Dedup.compactMinhashIndex(spark, src, dst)
+    // identical probe results against the compacted copy
+    val probe = Seq((300L, doc(0, 40) + " q"), (301L, doc(50000, 40) + " q2"))
+      .toDF("doc_id", "text")
+    def pairs(p: String) = Dedup.incrementalTrueJaccardPairs(spark, p, probe,
+        "doc_id", "text")
+      .select($"id_a".cast("long"), $"id_b".cast("long"), $"jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(pairs(dst) == pairs(src) && pairs(dst).nonEmpty)
+    assert(docCount(dst) == docCount(src))
+    // single epoch dir, exactly one parquet file per bshard
+    def dirs(p: String, pre: String) = new java.io.File(p).listFiles()
+      .filter(_.getName.startsWith(pre))
+    assert(dirs(s"$dst/bands", "epoch=").map(_.getName).toSeq == Seq("epoch=0"))
+    assert(dirs(s"$dst/bands/epoch=0", "bshard=").forall(
+      _.listFiles().count(_.getName.endsWith(".parquet")) == 1))
+    Seq(src, dst).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+  }
+
+  test("a half-appended epoch (no meta commit marker) is invisible to the " +
+      "probe; the retried append completes it") {
+    def doc(seed: Int, n: Int) = (seed to seed + n).map(i => s"h$i").mkString(" ")
+    val corpus = (0 until 6).map(i => (i.toLong, doc(i * 1000, 40)))
+      .toDF("doc_id", "text")
+    val idx = Files.createTempDirectory("graft_half_idx_").toString
+    Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
+    val delta = Seq((100L, doc(50000, 40))).toDF("doc_id", "text")
+    val probe = Seq((300L, doc(50000, 40) + " q")).toDF("doc_id", "text")
+    def pairs() = Dedup.incrementalTrueJaccardPairs(spark, idx, probe,
+        "doc_id", "text")
+      .select($"id_a".cast("long"), $"id_b".cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs() == Set.empty) // 50000-series not indexed yet
+    // simulate the append crashing AFTER bands+docs, BEFORE meta (meta is
+    // written last = the commit marker): append fully, then remove the
+    // epoch's meta partition
+    Dedup.appendToMinhashIndex(delta, "doc_id", "text", idx, epoch = 1L)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$idx/meta/epoch=1"))
+    // bands/docs rows for epoch 1 exist on disk…
+    assert(spark.read.parquet(s"$idx/bands")
+      .filter($"epoch" === 1).count() > 0)
+    // …but the probe must not see them (no partial-epoch candidates, and
+    // the cap basis == the committed doc count)
+    assert(pairs() == Set.empty)
+    assert(docCount(idx) == 6)
+    // the retried append completes the epoch; the probe now pairs
+    Dedup.appendToMinhashIndex(delta, "doc_id", "text", idx, epoch = 1L)
+    assert(pairs() == Set((100L, 300L)))
+    rmAll(idx)
+  }
+
+  test("compaction fence: an append below min_next_epoch fails loudly; " +
+      "appends at/above the fence work; the fence carries across a second " +
+      "compaction") {
+    val corpus = (0 until 6).map(i => (i.toLong, doc("fe", i * 1000, 40)))
+      .toDF("doc_id", "text")
+    val src = Files.createTempDirectory("graft_fence_src_").toString
+    val dst = Files.createTempDirectory("graft_fence_dst_").toString + "/idx"
+    val dst2 = Files.createTempDirectory("graft_fence_dst2_").toString + "/idx"
+    Dedup.buildMinhashIndex(corpus, "doc_id", "text", src)
+    Dedup.appendToMinhashIndex(
+      Seq((100L, doc("fe", 50000, 40))).toDF("doc_id", "text"),
+      "doc_id", "text", src, epoch = 1L)
+    assert(PartitionedParquet.minNextEpoch(spark, src) == 1L) // never compacted
+    Dedup.compactMinhashIndex(spark, src, dst)
+    // folded epochs 0 and 1 → the smallest legal append epoch is 2
+    assert(PartitionedParquet.minNextEpoch(spark, dst) == 2L)
+    val late = Seq((200L, doc("fe", 60000, 40))).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.appendToMinhashIndex(late, "doc_id", "text", dst, epoch = 1L)
+    }
+    assert(e.getMessage.contains("compaction fence"))
+    // the refused append added NOTHING (no partial rows either: the fence
+    // check runs before any job starts)
+    assert(docCount(dst) == 7)
+    assert(spark.read.parquet(s"$dst/docs")
+      .filter($"id" === 200L).count() == 0)
+    // the same append at the fence epoch is legal
+    Dedup.appendToMinhashIndex(late, "doc_id", "text", dst, epoch = 2L)
+    assert(docCount(dst) == 8)
+    // a second compaction carries max(committed)+1 = 3 forward
+    Dedup.compactMinhashIndex(spark, dst, dst2)
+    assert(PartitionedParquet.minNextEpoch(spark, dst2) == 3L)
+    rmAll(src, dst, dst2)
+  }
+
+  test("compaction reads only meta-committed epochs: a half-appended epoch " +
+      "(bands/docs, no commit marker) stays invisible post-compaction " +
+      "instead of being silently committed") {
+    val corpus = (0 until 6).map(i => (i.toLong, doc("hc", i * 1000, 40)))
+      .toDF("doc_id", "text")
+    val src = Files.createTempDirectory("graft_hcmp_src_").toString
+    val dst = Files.createTempDirectory("graft_hcmp_dst_").toString + "/idx"
+    Dedup.buildMinhashIndex(corpus, "doc_id", "text", src)
+    // simulate the crash-before-meta half-append (meta is written last)
+    Dedup.appendToMinhashIndex(
+      Seq((100L, doc("hc", 50000, 40))).toDF("doc_id", "text"),
+      "doc_id", "text", src, epoch = 1L)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$src/meta/epoch=1"))
+    Dedup.compactMinhashIndex(spark, src, dst)
+    // the uncommitted doc is NOT in the compacted copy — docs rows equal
+    // the meta cap basis again (ADVICE r6: the old unfiltered copy folded
+    // it into epoch 0, breaking the commit-marker invariant)
+    assert(spark.read.parquet(s"$dst/docs").filter($"id" === 100L).count() == 0)
+    assert(spark.read.parquet(s"$dst/bands").filter($"id" === 100L).count() == 0)
+    assert(docCount(dst) == 6)
+    assert(spark.read.parquet(s"$dst/docs").count() ==
+      spark.read.parquet(s"$src/docs").filter($"epoch" === 0).count())
+    // ...and the probe on the compacted copy agrees with the committed src
+    val probe = Seq((300L, doc("hc", 50000, 40) + " q")).toDF("doc_id", "text")
+    val pairs = Dedup.incrementalTrueJaccardPairs(spark, dst, probe,
+      "doc_id", "text").count()
+    assert(pairs == 0) // 50000-series never committed
+    // a compaction fence exists even though only epoch 0 was committed
+    assert(PartitionedParquet.minNextEpoch(spark, dst) == 1L)
+    rmAll(src, dst)
   }
 }

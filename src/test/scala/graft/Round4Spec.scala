@@ -113,26 +113,6 @@ class Round4Spec extends GraftSuite {
       && byStar(31L) == 30L)
   }
 
-  test("manifest mixing pre-r3 (4-column) and current rows reads as the " +
-      "union schema") {
-    val cfg = Pipeline.Config(nConvs = 8, nBase = 32)
-    val triples = Pipeline.triples(spark, cfg).toDF()
-    val dir = Files.createTempDirectory("graft_sink_mix_").toString
-    // a pre-r3 writer's manifest rows: no subj_approx_distinct column
-    Seq((0L, 10L, 123L, "old_run"))
-      .toDF("bucket", "triple_count", "checksum", "run_id")
-      .write.parquet(GraphSink.manifestPath(dir))
-    GraphSink.writeResumable(triples, dir, "new_run", nBuckets = 4)
-    val m = GraphSink.readManifest(spark, dir)
-    // union schema: the new column is visible, null on the old row
-    assert(m.columns.contains("subj_approx_distinct"))
-    assert(m.filter($"run_id" === "old_run")
-      .select($"subj_approx_distinct").head().isNullAt(0))
-    // and the old row's bucket was honoured as committed by the resume
-    assert(m.filter($"run_id" === "new_run" && $"bucket" === 0L).count() == 0)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
-
   test("merged v0/v1 extractor walk == three independent variant walks") {
     import graft.model.{GazRow, Segment}
     // gazetteer exercising the subset relation: ISPREF and non-ISPREF rows
@@ -149,11 +129,12 @@ class Round4Spec extends GraftSuite {
     val gazB = spark.sparkContext.broadcast(gaz)
     val merged = MentionExtractor.extract(segs.toDS(), gazB)
       .collect().map(_.toString).sorted.toSeq
-    // the spec path: each variant with its OWN automaton (matchSegment)
+    // the spec path: each variant with its OWN automaton, walked by the
+    // unpacked reference form
     val fp = MentionExtractor.gazFingerprint(gaz)
     val independent = segs.flatMap { s =>
       (0 to 2).flatMap(v =>
-        MentionExtractor.matchSegment(s, v,
+        ExtractorReference.matchSegment(s, v,
           MentionExtractor.variantFor(fp, gaz, v)))
     }.map(_.toString).sorted
     assert(merged == independent && merged.nonEmpty)

@@ -74,6 +74,31 @@ class StreamingSpec extends GraftSuite {
     assert(manifestSum == mBefore)
   }
 
+  test("commitBatch evaluates the batch plan once: the manifest is computed " +
+      "from the written partition, not by re-running the pipeline") {
+    val dir = Files.createTempDirectory("kgstream_once").toString
+    val reads = spark.sparkContext.longAccumulator("batch_rows_evaluated")
+    // a batch frame whose every evaluation of a source row is counted
+    val batch = spark.createDataset(spark.sparkContext.parallelize(allTurns, 4)
+      .map { t => reads.add(1); t }).toDF()
+    def evaluated(body: => Unit): Long = { reads.reset(); body; reads.value }
+    // one evaluation of the batch's triples plan (several branches read
+    // the turns, so this is a multiple of the row count)
+    val once = evaluated {
+      Triples.all(Aggregation.perTurn(Linking.link(Pipeline.mentions(spark, cfg, batch),
+        gazDf)), batch).write.format("noop").mode("overwrite").save()
+    }
+    assert(once >= allTurns.size)
+    val commit = evaluated(StreamingTriples.commitBatch(gaz, gazDf, dir)(batch, 0L))
+    // + the emptiness probe's limit(1), at most one row per partition
+    assert(commit <= once + 4, s"commitBatch read $commit source rows, one plan reads $once")
+    // and the manifest still certifies exactly what was written
+    import org.apache.spark.sql.functions.{col, sum}
+    assert(GraphSink.readManifest(spark, dir).agg(sum(col("triple_count"))).head().getLong(0)
+      == StreamingTriples.readTriples(spark, dir).count())
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("stateful per-conv support converges to the batch aggregate across micro-batches") {
     import org.apache.spark.sql.functions._
     val (b1, b2) = allTurns.partition(t => t.turn_idx % 2 == 0) // convs SPLIT across batches
