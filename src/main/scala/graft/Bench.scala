@@ -601,7 +601,7 @@ object Bench {
     * (VERDICT r6 next #6: the cluster-scale claim — two full-data
     * shuffles deleted at 100 TB — travels in the artifact the driver
     * replays, not just in a test). THE SAME traversal as the PipelineSpec/
-    * Round7Spec plan asserts — [[graft.util.PlanOps]], one definition. */
+    * PipelineSpec plan asserts — [[graft.util.PlanOps]], one definition. */
   private def stagedReadbackExchanges(sfDir: String): Int = {
     val s = Sessions.local(8)
     val dir = java.nio.file.Files.createTempDirectory("graft_bench_rb")

@@ -908,9 +908,9 @@ object SparkEntry {
     // this near-orthogonal threshold — honest, and documented rather than
     // implied). The FULL join makes a subset-of-exact violation visible to
     // the gate itself (a non-exact LSH pair would surface as a null-cos row
-    // and redden the hash); Round5Spec asserts subset corpus-independently.
-    // Any change to the signature algebra reddens this row until
-    // re-measured.
+    // and redden the hash); SimilarityScaleSpec asserts subset
+    // corpus-independently. Any change to the signature algebra reddens
+    // this row until re-measured.
     Query("dd_embed_neardup_lsh", Some(
       s"""SELECT p.id_a, p.id_b, p.cos,
          |  CAST(CASE WHEN f.id_a IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS found
@@ -1132,7 +1132,7 @@ object SparkEntry {
     // the raw vectors (recallOracleSql); only the 100 hit flags are a
     // measured pin (deterministic: fixed corpus + seeded index — on
     // isotropic random vectors this IS the information-theoretic regime for
-    // sublinear ANN; clustered data prunes far better, Round5Spec gates
+    // sublinear ANN; clustered data prunes far better, VectorIndexSpec gates
     // Lloyd's non-decrease on a clustered corpus). Any drift in the
     // signature/codebook algebra OR in the exact-side cosine reddens these
     // rows until re-measured.

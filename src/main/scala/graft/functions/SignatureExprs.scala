@@ -98,8 +98,9 @@ object SignatureExprs {
   }
 
   /** Random-hyperplane LSH signature kernel (r8): the native form of
-    * HofReference.lshSignatureHof (bit-parity asserted in Round8Spec) — the
-    * HOF form allocated one sequence + one zip array per plane per row. */
+    * HofReference.lshSignatureHof (bit-parity asserted in
+    * SignatureParitySpec) — the HOF form allocated one sequence + one zip
+    * array per plane per row. */
   case class LshSigExpr(child: Expression, bits: Int)
       extends UnaryExpression {
     override def dataType: DataType = LongType

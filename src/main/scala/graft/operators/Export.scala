@@ -5,16 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** §3.3 batch export (reference `labeling_transform.py:134-165`,
   * `labeling_transform_db.py:152-207`): reshape the per-unit concept
-  * aggregate into the labeling JSON hierarchy and its flat-CSV twin.
+  * aggregate into the labeling JSON hierarchy.
   *
   * The reference walks files one by one, re-queries ES per entity for the
   * ICD10CM crosswalk, escapes newlines in `text`, adds the fixed review
-  * fields (correctness/insurance_related/remark), and emits nested JSON +
-  * CSV. Spark restatement: the crosswalk is already joined upstream (L4,
+  * fields (correctness/insurance_related/remark), and emits nested JSON.
+  * Spark restatement: the crosswalk is already joined upstream (L4,
   * [[Linking.link]]); the hierarchy build is one groupBy + sorted
   * collect_list; JSON encoding is `to_json` — all narrow after a single
-  * shuffle, and the files are `df.write.json/csv` partitions instead of a
-  * driver loop. */
+  * shuffle, and the files are `df.write` partitions instead of a driver
+  * loop. */
 object Export {
 
   /** The reconstructed entity struct (`labeling_transform.py:140-156`):
@@ -44,46 +44,4 @@ object Export {
       .agg(sort_array(collect_list(entityStruct)).as("entities"))
       .select(col("conv_id"),
         to_json(struct(col("entities"))).as("json"))
-
-  /** F9 SQL-string escaping (`labeling_transform_db.py:272-275`): the
-    * reference doubles single quotes inside string literals. */
-  def sqlQuote(c: Column): Column =
-    concat(lit("'"), regexp_replace(c, "'", "''"), lit("'"))
-
-  private def sqlLit(c: Column): Column =
-    when(c.isNull, lit("NULL")).otherwise(sqlQuote(c))
-
-  /** Bulk-SQL export rows (`labeling_transform_db.py:262-291`): one
-    * `(...)` VALUES tuple per entity for the reference's `entities` table.
-    * The crosswalk-missing case writes NULL (not 'N/A'); entity ids are
-    * deterministic hashes, not uuid4 (F3). One narrow projection — the SQL
-    * text never round-trips through a driver loop. */
-  def entityInsertValues(convAgg: DataFrame): DataFrame =
-    convAgg.select(col("conv_id"),
-      concat(lit("("),
-        sqlQuote(concat(lit("ent-"), format_string("%016x",
-          xxhash64(col("conv_id"), col("source"), col("code"))))), lit(", "),
-        sqlQuote(col("conv_id")), lit(", "),
-        sqlQuote(col("source")), lit(", "),
-        sqlQuote(col("code")), lit(", "),
-        sqlQuote(col("concept_name")), lit(", "),
-        sqlQuote(regexp_replace(col("text"), "\n", "\\\\n")), lit(", "),
-        sqlLit(col("icd10_code")), lit(", "),
-        sqlLit(col("icd10_name")), lit(", "),
-        col("unique_count").cast("string"), lit(", "),
-        col("total_count").cast("string"), lit(", "),
-        col("confidence").cast("string"),
-        lit(")")).as("values_sql"))
-
-  /** Flat CSV twin (`labeling_transform.py:162-165`): the same entities,
-    * one row per entity with the icd10cm struct flattened. */
-  def conceptFlat(convAgg: DataFrame): DataFrame =
-    convAgg.select(col("conv_id"), entityStruct.as("e"))
-      .select(col("conv_id"), col("e.source"), col("e.code"),
-        col("e.code_name"), col("e.text"),
-        col("e.icd10cm.code").as("icd10cm_code"),
-        col("e.icd10cm.name").as("icd10cm_name"),
-        col("e.unique").as("unique"), col("e.confidence"),
-        col("e.count").as("count"), col("e.correctness"),
-        col("e.insurance_related"), col("e.remark"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,41 +30,6 @@ object Ingest {
       .when(col("text").isNull || length(col("text")) === 0, "empty_text")
       .when(col("ts").isNull, "null_ts")
       .otherwise(lit(null).cast("string"))
-  }
-
-  /** F11 pointer-key grammar (reference Redis keys
-    * `latest_sqe:{file_id}-{sqe}-{type}`, `src/app.py:285,1049`): parse a
-    * key string into its typed (file_id, sqe, type) struct — the inverse of
-    * the reference's f-string, for ingesting legacy key-value dumps into
-    * struct-keyed tables. Malformed keys parse to null (callers quarantine
-    * via [[reasonCol]]-style handling). One regexp per row, codegen'd. */
-  def parseLatestKey(key: Column): Column = {
-    // sqe bounded to 9 digits: always fits Int, so the cast can never throw
-    // under ANSI mode — a longer digit run simply fails the grammar -> null
-    val re = "^latest_sqe:(.+)-(\\d{1,9})-(ER|HR|LR|Full)$"
-    when(key.rlike(re), struct(
-      regexp_extract(key, re, 1).as("file_id"),
-      regexp_extract(key, re, 2).cast("int").as("sqe"),
-      regexp_extract(key, re, 3).as("type")))
-      .otherwise(lit(null).cast("struct<file_id:string,sqe:int,type:string>"))
-  }
-
-  /** P5 dedicated column remap (reference type-code mapping
-    * `src/app.py:1171-1181`): value -> mapped value via one when-chain,
-    * unmapped values -> `default` (None keeps the original value). Stays a
-    * narrow codegen'd projection whatever the mapping size. */
-  def remapColumn(df: DataFrame, column: String,
-      mapping: Map[String, String], default: Option[String] = None): DataFrame = {
-    val c = col(column)
-    val chain = mapping.toSeq.sortBy(_._1).foldLeft(Option.empty[Column]) {
-      case (acc, (from, to)) =>
-        Some(acc.fold(when(c === from, to))(_.when(c === from, to)))
-    }
-    val mapped = chain match {
-      case Some(ch) => ch.otherwise(default.map(lit).getOrElse(c))
-      case None     => default.map(lit(_).cast("string")).getOrElse(c)
-    }
-    df.withColumn(column, mapped)
   }
 
   /** (valid turns — exactly one row per (conv_id, turn_idx), latest ts wins;

@@ -195,7 +195,7 @@ object MentionExtractor {
     * (start, end) cannot differ in pid (a span fixes the token-id sequence,
     * which fixes the pattern), so the emitted mentions are IDENTICAL to the
     * stable-sort reference walk (test scope: `ExtractorReference`,
-    * equality-tested in Round4Spec). Every `payloads(pid)` of the hits
+    * equality-tested in MentionSpec). Every `payloads(pid)` of the hits
     * passed in must be non-null (callers filter before a partial-payload
     * sweep). */
   private def sweepPacked(seg: Segment, vIdx: Int, hits: LongBuf,

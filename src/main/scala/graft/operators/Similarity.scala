@@ -40,8 +40,8 @@ object Similarity {
 
   /** `bits`-bit random-hyperplane signature of a vector column — the
     * native codegen'd kernel (r8; graft.functions.SignatureExprs.LshSigExpr,
-    * bit-identical to its HOF reference form, parity-tested in Round8Spec):
-    * the HOF form allocated one sequence + one zip array per plane per
+    * bit-identical to its HOF reference form, parity-tested in
+    * SignatureParitySpec): the HOF form allocated one sequence + one zip array per plane per
     * row and evaluated `bits` separate aggregates. */
   def lshSignature(vec: Column, bits: Int): Column =
     graft.functions.SignatureExprs.lshSig(vec, bits)

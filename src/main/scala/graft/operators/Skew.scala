@@ -30,7 +30,7 @@ object Skew {
     */
   def saltedAgg(df: DataFrame, keys: Seq[String], salt: Column, nSalts: Int)(
       partial: Seq[Column], merge: Seq[Column]): DataFrame = {
-    val withSalt = df.withColumn("_salt", pmod(xxhash64(salt), lit(nSalts)))
+    val withSalt = df.withColumn("_salt", saltCol(salt, nSalts))
     val partialAgg = withSalt
       .groupBy((keys.map(col) :+ col("_salt")): _*)
       .agg(partial.head, partial.tail: _*)

@@ -95,9 +95,8 @@ object SpanTable {
     * the extractor's longest-match-wins output guarantees this, but VOTED /
     * merged mentions fed back in may overlap, which silently breaks the
     * gap-free invariant (a span starting before the fold's cursor emits a
-    * mis-lengthed row) and corrupts read-back offsets. Gate untrusted
-    * input with [[tilingViolations]] — zero rows certifies the invariant
-    * (Σ orig_len(chunk) == length(text) for every artifact). */
+    * mis-lengthed row) and corrupts read-back offsets. The invariant is
+    * Σ orig_len(chunk) == length(text) for every artifact. */
   def tile(mentions: DataFrame, turns: DataFrame, nTries: Int = 3): DataFrame = {
     val spans = mentions.groupBy(col("conv_id"), col("turn_idx"), col("try_index"))
       .agg(collect_list(struct(col("start"), col("end"), col("cui"),
@@ -118,25 +117,6 @@ object SpanTable {
         col("r.code").as("code"), col("r.term").as("term"),
         col("r.acc").as("acc"), col("r.is_entity").as("is_entity"))
   }
-
-  /** Debug/validation surface for [[tile]]'s non-overlap precondition:
-    * artifacts whose tiled chunks do NOT reconstruct the turn text length —
-    * (conv_id, turn_idx, try_index, tiled_len, text_len). Zero rows ⇔ the
-    * gap-free invariant holds. One extra aggregation over the tiles; run it
-    * on untrusted span sources, not in the hot path. */
-  def tilingViolations(tiles: DataFrame, turns: DataFrame): DataFrame =
-    tiles.groupBy("conv_id", "turn_idx", "try_index")
-      .agg(sum(origLen(col("chunk"))).as("tiled_len"))
-      .join(turns.select(col("conv_id"), col("turn_idx"),
-        length(col("text")).cast("long").as("text_len")), Seq("conv_id", "turn_idx"))
-      .filter(col("tiled_len") =!= col("text_len"))
-
-  /** Render tiled rows as the reference's pipe-delimited line grammar
-    * (`src/app.py:1484-1491`): index|chunk|cui|source|code|string|acc. */
-  def renderLine: Column =
-    concat_ws("|", col("idx"), col("chunk"), col("cui"), col("source"),
-      col("code"), col("term"),
-      when(col("is_entity"), col("acc").cast("string")).otherwise("-"))
 
   /** §3.2 read-back: per-entity GLOBAL offsets across the per-round
     * artifacts of one turn, laid end to end with the 8-char separator

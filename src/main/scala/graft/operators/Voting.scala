@@ -23,8 +23,8 @@ import scala.collection.mutable
   *    the reference's `bisect` window (`voting.py:55-57`) is the same
   *    pruning, single-node.
   *  - [[voteDistributed]]: generic IoU self-join + iterative-DataFrame
-  *    connected components — the shape that also handles cross-row edge
-  *    relations (used by alias canonicalization, see [[Canonicalize]]).
+  *    connected components — the reference form [[vote]] is checked
+  *    against in the specs; no query runs it.
   */
 object Voting {
 

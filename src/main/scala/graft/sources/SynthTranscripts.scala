@@ -119,12 +119,8 @@ object SynthTranscripts {
   /** Partitions per core for the heavy text-synthesis/extraction stage.
     * Per-turn work varies ~20× (1-18 lines), so coarse waves leave a
     * straggler tail at high core counts; more, smaller tasks smooth it
-    * (dev knob for measuring — default chosen by measurement). */
-  def genPartsMult: Int =
-    sys.env.get("SPARK_GRAFT_GEN_PARTS_MULT")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(4)
+    * (4 chosen by measurement). */
+  val GenPartsMult = 4
 
   /** Distributed generation in two phases: a cheap per-conv flatMap emits
     * (conv, turn-range) block DESCRIPTORS, a hash repartition on
@@ -148,7 +144,7 @@ object SynthTranscripts {
       // byte-sized coalescing would collapse this shuffle to one partition
       // and serialize the heavy expansion downstream — partition count must
       // track the post-expansion work, not the shuffle payload
-      .repartition(spark.sparkContext.defaultParallelism * genPartsMult,
+      .repartition(spark.sparkContext.defaultParallelism * GenPartsMult,
         col("c"), col("t0"))
       .as[(Long, Int, Int)]
       .flatMap { case (c, t0, t1) =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Physical-plan instrumentation shared by the bench artifact and the plan
-  * asserts (`Bench.stagedReadbackExchanges`, PipelineSpec, Round7Spec).
+  * asserts (`Bench.stagedReadbackExchanges`, PipelineSpec).
   * One definition so "same traversal as the test assert" is true by
   * construction — a Spark upgrade that changes the AQE node shapes is
   * fixed here once, not in three drifting copies.

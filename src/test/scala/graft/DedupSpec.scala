@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.util.PartitionedParquet
 import graft.operators.Dedup.{Minhash, Simhash}
@@ -13,11 +11,6 @@ class DedupSpec extends GraftSuite {
   import spark.implicits._
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
-
-  private def rmAll(paths: String*): Unit = paths.foreach { p =>
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(p.stripPrefix("file://")))
-  }
 
   private def doc(pre: String, seed: Int, n: Int) =
     (seed until seed + n).map(i => s"$pre$i").mkString(" ")
@@ -305,7 +298,7 @@ class DedupSpec extends GraftSuite {
       (114L, "short doc")                // < k words: never pairs, survives
     ).toDF("doc_id", "text")
     val all = corpus.unionByName(delta)
-    val dir = Files.createTempDirectory("graft_inc_idx_").toString
+    val dir = SparkEntry.tmpDir("graft_inc_idx_")
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", dir)
     val deltaIds = Seq(110L, 111L, 112L, 113L, 114L)
     def pairSet(df: org.apache.spark.sql.DataFrame) =
@@ -348,7 +341,7 @@ class DedupSpec extends GraftSuite {
     // the epoch-scoped dynamic overwrite replaces, never duplicates
     Dedup.appendToMinhashIndex(delta, "doc_id", "text", dir, epoch = 1L)
     Dedup.appendToMinhashIndex(delta, "doc_id", "text", dir, epoch = 1L)
-    val dir2 = Files.createTempDirectory("graft_inc_idx2_").toString
+    val dir2 = SparkEntry.tmpDir("graft_inc_idx2_")
     Dedup.buildMinhashIndex(all, "doc_id", "text", dir2)
     def bandsOf(p: String) = spark.read.parquet(s"$p/bands")
       .select($"id".cast("long"), $"band", $"bkey", $"bshard".cast("long"))
@@ -365,8 +358,6 @@ class DedupSpec extends GraftSuite {
         == spark.read.parquet(s"$dir2/$sub").count(), sub)
     assert(docCount(dir)
       == docCount(dir2))
-    Seq(dir, dir2).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("index compaction folds multi-epoch indexes to one epoch, one file " +
@@ -374,8 +365,8 @@ class DedupSpec extends GraftSuite {
     def doc(seed: Int, n: Int) = (seed to seed + n).map(i => s"s$i").mkString(" ")
     val corpus = (0 until 8).map(i => (i.toLong, doc(i * 1000, 40)))
       .toDF("doc_id", "text")
-    val src = Files.createTempDirectory("graft_cmp_src_").toString
-    val dst = Files.createTempDirectory("graft_cmp_dst_").toString + "/idx"
+    val src = SparkEntry.tmpDir("graft_cmp_src_")
+    val dst = SparkEntry.tmpDir("graft_cmp_dst_") + "/idx"
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", src)
     Dedup.appendToMinhashIndex(
       Seq((100L, doc(0, 40) + " t1"), (101L, doc(50000, 40)))
@@ -399,8 +390,6 @@ class DedupSpec extends GraftSuite {
     assert(dirs(s"$dst/bands", "epoch=").map(_.getName).toSeq == Seq("epoch=0"))
     assert(dirs(s"$dst/bands/epoch=0", "bshard=").forall(
       _.listFiles().count(_.getName.endsWith(".parquet")) == 1))
-    Seq(src, dst).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("a half-appended epoch (no meta commit marker) is invisible to the " +
@@ -408,7 +397,7 @@ class DedupSpec extends GraftSuite {
     def doc(seed: Int, n: Int) = (seed to seed + n).map(i => s"h$i").mkString(" ")
     val corpus = (0 until 6).map(i => (i.toLong, doc(i * 1000, 40)))
       .toDF("doc_id", "text")
-    val idx = Files.createTempDirectory("graft_half_idx_").toString
+    val idx = SparkEntry.tmpDir("graft_half_idx_")
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
     val delta = Seq((100L, doc(50000, 40))).toDF("doc_id", "text")
     val probe = Seq((300L, doc(50000, 40) + " q")).toDF("doc_id", "text")
@@ -433,7 +422,6 @@ class DedupSpec extends GraftSuite {
     // the retried append completes the epoch; the probe now pairs
     Dedup.appendToMinhashIndex(delta, "doc_id", "text", idx, epoch = 1L)
     assert(pairs() == Set((100L, 300L)))
-    rmAll(idx)
   }
 
   test("compaction fence: an append below min_next_epoch fails loudly; " +
@@ -441,9 +429,9 @@ class DedupSpec extends GraftSuite {
       "compaction") {
     val corpus = (0 until 6).map(i => (i.toLong, doc("fe", i * 1000, 40)))
       .toDF("doc_id", "text")
-    val src = Files.createTempDirectory("graft_fence_src_").toString
-    val dst = Files.createTempDirectory("graft_fence_dst_").toString + "/idx"
-    val dst2 = Files.createTempDirectory("graft_fence_dst2_").toString + "/idx"
+    val src = SparkEntry.tmpDir("graft_fence_src_")
+    val dst = SparkEntry.tmpDir("graft_fence_dst_") + "/idx"
+    val dst2 = SparkEntry.tmpDir("graft_fence_dst2_") + "/idx"
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", src)
     Dedup.appendToMinhashIndex(
       Seq((100L, doc("fe", 50000, 40))).toDF("doc_id", "text"),
@@ -468,7 +456,6 @@ class DedupSpec extends GraftSuite {
     // a second compaction carries max(committed)+1 = 3 forward
     Dedup.compactMinhashIndex(spark, dst, dst2)
     assert(PartitionedParquet.minNextEpoch(spark, dst2) == 3L)
-    rmAll(src, dst, dst2)
   }
 
   test("compaction reads only meta-committed epochs: a half-appended epoch " +
@@ -476,8 +463,8 @@ class DedupSpec extends GraftSuite {
       "instead of being silently committed") {
     val corpus = (0 until 6).map(i => (i.toLong, doc("hc", i * 1000, 40)))
       .toDF("doc_id", "text")
-    val src = Files.createTempDirectory("graft_hcmp_src_").toString
-    val dst = Files.createTempDirectory("graft_hcmp_dst_").toString + "/idx"
+    val src = SparkEntry.tmpDir("graft_hcmp_src_")
+    val dst = SparkEntry.tmpDir("graft_hcmp_dst_") + "/idx"
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", src)
     // simulate the crash-before-meta half-append (meta is written last)
     Dedup.appendToMinhashIndex(
@@ -501,6 +488,5 @@ class DedupSpec extends GraftSuite {
     assert(pairs == 0) // 50000-series never committed
     // a compaction fence exists even though only epoch 0 was committed
     assert(PartitionedParquet.minNextEpoch(spark, dst) == 1L)
-    rmAll(src, dst)
   }
 }

@@ -9,8 +9,7 @@ class PartitionedParquetSpec extends GraftSuite {
 
   private val modeKey = "spark.sql.sources.partitionOverwriteMode"
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_pp_").toString
+  private def tmp(): String = SparkEntry.tmpDir("graft_pp_")
 
   private def rows(dir: String, partCol: String): Set[(Long, String)] =
     PartitionedParquet.readPartitioned(spark, dir, partCol)

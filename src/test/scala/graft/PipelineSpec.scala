@@ -78,6 +78,12 @@ object NaiveTripleOracle {
 
 class PipelineSpec extends GraftSuite {
 
+  // the SAME traversal the bench artifact ships (graft.util.PlanOps — one
+  // definition, so the test assert and staged_readback_exchanges cannot
+  // drift)
+  private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
+    graft.util.PlanOps.executedShuffleExchanges(df)
+
   test("end-to-end triples match the independent oracle with P/R >= 0.95") {
     import spark.implicits._
     val cfg = Pipeline.Config(nConvs = 30, nBase = 48)
@@ -109,38 +115,81 @@ class PipelineSpec extends GraftSuite {
 
   test("staged (stage-table) pipeline emits exactly the recompute pipeline's triples") {
     val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage_test")
-    val staged = Pipeline.triplesStaged(spark, cfg, stage.toString).collect().toSet
+    val stage = SparkEntry.tmpDir("graft_stage_test")
+    val staged = Pipeline.triplesStaged(spark, cfg, stage).collect().toSet
     val recompute = Pipeline.triples(spark, cfg).collect().toSet
     assert(staged === recompute)
     // the stage tables really are the split point: both exist and are read back
-    assert(new java.io.File(stage.toFile, "linked").exists())
-    assert(new java.io.File(stage.toFile, "turn_agg").exists())
-    org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
+    assert(new java.io.File(stage, "linked").exists())
+    assert(new java.io.File(stage, "turn_agg").exists())
   }
 
   test("bucketed stage tables delete the read-back shuffle: per-turn agg over " +
       "linked and per-conv merge over turn_agg plan ZERO exchanges") {
-    // the SAME traversal the bench artifact ships (graft.util.PlanOps —
-    // one definition, so the test assert and staged_readback_exchanges
-    // cannot drift)
-    def shuffles(df: org.apache.spark.sql.DataFrame): Int =
-      graft.util.PlanOps.executedShuffleExchanges(df)
     val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage_plan")
-    Pipeline.writeLinkedStage(spark, cfg, stage.toString)
-    Pipeline.writeTurnAggStage(spark, cfg, stage.toString)
+    val stage = SparkEntry.tmpDir("graft_stage_plan")
+    Pipeline.writeLinkedStage(spark, cfg, stage)
+    Pipeline.writeTurnAggStage(spark, cfg, stage)
     // phase 2's agg: keys (conv,turn,source,code) ⊇ bucket key conv_id —
     // the bucketed scan's HashPartitioning satisfies the clustering, so
     // the r5 read-back Exchange (a full-data shuffle at 100 TB) is GONE
     val agg = graft.operators.Aggregation.perTurn(
-      spark.table(Pipeline.stageTable(stage.toString, "linked")))
+      spark.table(Pipeline.stageTable(stage, "linked")))
     assert(shuffles(agg) === 0)
     // phase 3's per-conv merge over the bucketed turn_agg: same mechanism
     val conv = graft.operators.Aggregation.perConv(
-      spark.table(Pipeline.stageTable(stage.toString, "turn_agg")))
+      spark.table(Pipeline.stageTable(stage, "turn_agg")))
     assert(shuffles(conv) === 0)
-    org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
+  }
+
+  test("stage tables are cross-session artifacts again: a fresh catalog " +
+      "re-registers the bucketed tables from the parquet dir and the " +
+      "read-back still plans ZERO shuffles") {
+    val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
+    val stage = SparkEntry.tmpDir("graft_xsession_stage")
+    val expected = Pipeline.triples(spark, cfg).collect().toSet
+    Pipeline.writeLinkedStage(spark, cfg, stage)
+    Pipeline.writeTurnAggStage(spark, cfg, stage)
+    // simulate "another session": drop the catalog entries (ADVICE r6 —
+    // they are also what a long-lived session must not accumulate), so the
+    // only remaining state is the stage DIR itself
+    Pipeline.dropStageTables(spark, stage)
+    assert(!spark.catalog.tableExists(Pipeline.stageTable(stage, "turn_agg")))
+    // the read path re-registers from the dir and produces identical rows
+    val reread = Pipeline.triplesFromStage(spark, cfg, stage)
+    assert(reread.collect().toSet == expected)
+    // ...and the re-registered table still carries the bucket spec: the
+    // per-conv merge over it plans zero exchanges, same as the writer's
+    // session (the assert above, now across the catalog boundary)
+    val conv = graft.operators.Aggregation.perConv(
+      spark.table(Pipeline.stageTable(stage, "turn_agg")))
+    assert(shuffles(conv) === 0)
+    Pipeline.dropStageTables(spark, stage)
+  }
+
+  test("stage tables are written zstd: the parquet footers say so, not " +
+      "just the option string") {
+    val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
+    val stage = SparkEntry.tmpDir("graft_codec_stage")
+    Pipeline.writeLinkedStage(spark, cfg, stage)
+    val hconf = spark.sessionState.newHadoopConf()
+    val dir = new org.apache.hadoop.fs.Path(s"$stage/linked")
+    val fs = dir.getFileSystem(hconf)
+    val parts = fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
+      try {
+        val codecs = reader.getFooter.getBlocks.get(0).getColumns
+          .asInstanceOf[java.util.List[
+            org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]]
+        assert(codecs.get(0).getCodec.toString === "ZSTD",
+          s"stage file $p not zstd-compressed")
+      } finally reader.close()
+    }
+    Pipeline.dropStageTables(spark, stage)
   }
 
   test("the mentions and asserts branches share one extraction exchange, " +

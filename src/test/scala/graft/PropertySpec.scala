@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{ConnectedComponents, Segmentation}
-import graft.util.Alignment
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
@@ -87,17 +86,6 @@ class PropertySpec extends GraftSuite {
     })
   }
 
-  test("alignment: deletion-only rewrites map every surviving char back exactly") {
-    val gen = for {
-      a <- Gen.listOfN(40, Gen.oneOf('a', 'b', ' ', '\n')).map(_.mkString)
-      keep <- Gen.listOfN(a.length, Gen.prob(0.7))
-    } yield (a, a.zip(keep).collect { case (c, true) => c }.mkString)
-    check("alignment", Prop.forAll(gen) { case (a, b) =>
-      val ops = Alignment.opcodes(a, b)
-      (0 until b.length).forall(j => a.charAt(Alignment.mapPosition(ops, j)) == b.charAt(j))
-    })
-  }
-
   test("span tiling + read-back invariants hold on 30 random (text, spans) cases (one Spark job)") {
     import graft.model.Mention
     import graft.operators.SpanTable
@@ -163,8 +151,8 @@ class PropertySpec extends GraftSuite {
       .as[(Long, Long)].collect().toMap
     // the star-contraction fallback must reach the SAME fixpoint on the
     // same composite graph (it is the at-scale path for high diameters —
-    // Round4Spec covers the auto-switch; this covers answer equality on
-    // 40 random topologies in one job)
+    // ConnectedComponentsSpec covers the auto-switch; this covers answer
+    // equality on 40 random topologies in one job)
     val gotStar = ConnectedComponents.runStarContraction(allEdges)
       .as[(Long, Long)].collect().toMap
     assert(gotStar == got)

@@ -4,8 +4,8 @@ import graft.operators.Skew
 import org.apache.spark.sql.functions._
 
 /** Explicit scale techniques (SURVEY §4): salted aggregation equivalence,
-  * bucketed co-located joins (shuffle-free), and JSON artifact round-trip
-  * (F8). */
+  * bucketed co-located joins (shuffle-free), as-of and banded range joins,
+  * and the JSON artifact round-trips (F8, §3.3). */
 class ScaleTechniquesSpec extends GraftSuite {
   import spark.implicits._
 
@@ -61,7 +61,7 @@ class ScaleTechniquesSpec extends GraftSuite {
     }
   }
 
-  test("§3.3 export: nested JSON hierarchy round-trips and matches the flat CSV twin") {
+  test("§3.3 export: nested JSON hierarchy round-trips and matches the per-conv aggregate") {
     import graft.operators.{Aggregation, Export}
     import org.apache.spark.sql.types._
     val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
@@ -69,9 +69,8 @@ class ScaleTechniquesSpec extends GraftSuite {
       Pipeline.mentions(spark, cfg, Pipeline.turns(spark, cfg).toDF()))
     val convAgg = Aggregation.perConv(Aggregation.perTurn(l)).cache()
     val json = Export.conceptJson(convAgg)
-    val flat = Export.conceptFlat(convAgg)
     assert(json.count() == convAgg.select("conv_id").distinct().count())
-    // parse the JSON back: per-conv entity count equals the flat twin's
+    // parse the JSON back: one entity per aggregate row, fields intact
     val entSchema = StructType(Seq(StructField("entities", ArrayType(StructType(Seq(
       StructField("source", StringType), StructField("code", StringType),
       StructField("code_name", StringType), StructField("text", StringType),
@@ -85,43 +84,22 @@ class ScaleTechniquesSpec extends GraftSuite {
     val a = parsed.select(col("conv_id"), col("e.source"), col("e.code"),
         col("e.count"), col("e.icd10cm.code"))
       .collect().map(_.toString).sorted.toSeq
-    val b = flat.select(col("conv_id"), col("source"), col("code"),
-        col("count"), col("icd10cm_code"))
+    val b = convAgg.select(col("conv_id"), col("source"), col("code"),
+        col("total_count").cast("int"), coalesce(col("icd10_code"), lit("N/A")))
       .collect().map(_.toString).sorted.toSeq
     assert(a == b && a.nonEmpty)
     // the review defaults are pinned as the reference writes them
-    val defaults = flat.select("correctness", "insurance_related", "remark").distinct().collect()
+    val defaults = parsed.select("e.correctness", "e.insurance_related", "e.remark")
+      .distinct().collect()
     assert(defaults.map(_.toString).toSet == Set("[true,false,]"))
     // S5 ndjson bulk sink: one JSON doc per line, parseable on read-back
-    val dir = java.nio.file.Files.createTempDirectory("ndjson").toString
+    val dir = SparkEntry.tmpDir("ndjson")
     json.select("json").write.mode("overwrite").text(dir)
     val lines = spark.read.text(dir)
     assert(lines.count() == json.count())
     assert(lines.select(from_json(col("value"), entSchema).as("t"))
       .filter(col("t").isNull).count() == 0) // every line parses
     convAgg.unpersist()
-  }
-
-  test("F9: SQL VALUES export doubles quotes and NULLs missing crosswalks") {
-    import graft.operators.Export
-    val agg = Seq(
-      ("cv1", "SNOMEDCT_US", "100", "o'brien's sign", "seen o'brien today",
-        3, 2, 2.0 / 3, Some("A10.1"), Some("o'brien dx")),
-      ("cv1", "RXNORM", "R1", "aspirin", "aspirin", 1, 1, 1.0 / 3,
-        None: Option[String], None: Option[String])
-    ).toDF("conv_id", "source", "code", "concept_name", "text",
-      "total_count", "unique_count", "confidence", "icd10_code", "icd10_name")
-    val rows = Export.entityInsertValues(agg)
-      .select("values_sql").as[String].collect().sorted
-    // quote doubling exactly like the reference's replace("'", "''")
-    assert(rows.exists(_.contains("'o''brien''s sign'")))
-    assert(rows.exists(_.contains("'seen o''brien today'")))
-    // crosswalk miss -> bare NULL literals, not quoted strings
-    assert(rows.exists(_.contains(", NULL, NULL,")))
-    // deterministic entity ids (no uuid4): same input, same id
-    val again = Export.entityInsertValues(agg)
-      .select("values_sql").as[String].collect().sorted
-    assert(rows.sameElements(again))
   }
 
   test("asOf join == naive maximal at-or-before lookup (incl. equal-ts and no-match)") {
@@ -149,6 +127,25 @@ class ScaleTechniquesSpec extends GraftSuite {
     assert(got.size == 120)
   }
 
+  test("asOf drops null-ts right rows (documented contract enforced)") {
+    import graft.operators.AsOfJoin
+    import java.sql.Timestamp
+    val left = Seq(("u1", Timestamp.valueOf("2024-01-01 00:00:10"), "click"))
+      .toDF("user_id", "ts", "ev")
+    val right = Seq(
+      ("u1", None: Option[Timestamp], "phantom"),
+      ("u1", Some(Timestamp.valueOf("2024-01-01 00:00:05")), "real"))
+      .toDF("user_id", "ts", "payload")
+    val out = AsOfJoin.asOf(left, right, Seq("user_id"), "ts")
+      .select($"asof.payload").as[String].collect().toSeq
+    assert(out == Seq("real"))
+    // ONLY a null-ts right row: no match at all, not a phantom carry-forward
+    val onlyNull = right.filter($"payload" === "phantom")
+    val none = AsOfJoin.asOf(left, onlyNull, Seq("user_id"), "ts")
+      .select($"asof").collect()
+    assert(none.length == 1 && none.head.isNullAt(0))
+  }
+
   test("banded range join == naive all-pairs overlap; band width doesn't change results") {
     import graft.operators.RangeJoin
     val rnd = new scala.util.Random(13)
@@ -166,6 +163,26 @@ class ScaleTechniquesSpec extends GraftSuite {
     assert(run(5.0) == naive && naive.nonEmpty)
     // band width is a performance knob, not a semantics knob
     assert(run(0.7) == naive && run(40.0) == naive)
+  }
+
+  test("canonical-band overlapPairs emits each overlapping pair exactly once") {
+    import graft.operators.RangeJoin
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 200).map { i =>
+      val s = rnd.nextDouble() * 50
+      (s"k${rnd.nextInt(2)}", i, s, s + rnd.nextDouble() * 8)
+    }
+    val df = rows.toDF("key", "id", "start", "end")
+    val got = RangeJoin.overlapPairs(df, Seq("key"), "id", "start", "end", 3.0)
+      .select("id_a", "id_b").collect().map(r => (r.getInt(0), r.getInt(1)))
+    val naive = (for {
+      a <- rows; b <- rows
+      if a._1 == b._1 && a._2 < b._2 && a._3 < b._4 && b._3 < a._4
+    } yield (a._2, b._2))
+    // set equality AND multiplicity 1 (the distinct() was removed — the
+    // canonical band must make each pair unique by construction)
+    assert(got.toSet == naive.toSet && naive.nonEmpty)
+    assert(got.length == got.toSet.size, "a pair was emitted more than once")
   }
 
   test("F8: triple qualifiers round-trip through to_json/from_json") {

@@ -66,4 +66,15 @@ class SimilarityScaleSpec extends GraftSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
     lsh.foreach { case (k, v) => assert(exact(k) == v) }
   }
+
+  test("LSH-bucketed embedding near-dup pairs ⊆ exact pairs (corpus-" +
+      "independent safety behind dd_embed_neardup_lsh's measured literal)") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh = pairs(Similarity.cosineNearDupPairs(emb, "vec_id", "embedding",
+      threshold = 0.4, bits = 4))
+    val exact = pairs(Similarity.cosineExactPairs(emb, "vec_id", "embedding",
+      threshold = 0.4))
+    assert(lsh.nonEmpty && lsh.subsetOf(exact))
+  }
 }

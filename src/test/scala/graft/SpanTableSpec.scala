@@ -89,8 +89,12 @@ class SpanTableSpec extends GraftSuite {
   }
 
   test("golden: rendered pipe rows == literal port of the reference writer loop") {
+    // the reference's pipe line grammar (`src/app.py:1484-1491`):
+    // index|chunk|cui|source|code|string|acc, acc only on entity rows
     val got = fixtureTiles
-      .withColumn("line", SpanTable.renderLine)
+      .withColumn("line", concat_ws("|", col("idx"), col("chunk"), col("cui"),
+        col("source"), col("code"), col("term"),
+        when(col("is_entity"), col("acc").cast("string")).otherwise("-")))
       .orderBy("try_index", "row_idx")
       .select("try_index", "line").as[(Int, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toVector).toMap

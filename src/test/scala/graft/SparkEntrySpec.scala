@@ -33,7 +33,7 @@ class SparkEntrySpec extends GraftSuite {
   test("dd_stream leaves no persisted RDD behind") {
     // 40 docs: ids < 30 repeat eight texts (near-dups across corpus and
     // delta), the rest are unique, so the stream both rejects and accepts
-    val dir = java.nio.file.Files.createTempDirectory("sparkentry_docs").toString
+    val dir = SparkEntry.tmpDir("sparkentry_docs")
     spark.range(40).select(col("id").as("doc_id"),
         concat_ws(" ", lit("alpha beta gamma"),
           when(col("id") < 30, col("id") % 8).otherwise(col("id")).cast("string"),

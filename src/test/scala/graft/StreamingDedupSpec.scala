@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Dedup
 import graft.streaming.StreamingDedup
 
@@ -11,11 +9,6 @@ import graft.streaming.StreamingDedup
   * and the blue/green compaction pointer flip under a running stream. */
 class StreamingDedupSpec extends GraftSuite {
   import spark.implicits._
-
-  private def rmAll(paths: String*): Unit = paths.foreach { p =>
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(p.stripPrefix("file://")))
-  }
 
   private def doc(pre: String, seed: Int, n: Int) =
     (seed until seed + n).map(i => s"$pre$i").mkString(" ")
@@ -35,7 +28,7 @@ class StreamingDedupSpec extends GraftSuite {
     def doc(seed: Int, n: Int) = (seed to seed + n).map(i => s"s$i").mkString(" ")
     val corpus = (0 until 10).map(i => (i.toLong, doc(i * 1000, 40)))
       .toDF("doc_id", "text")
-    val idx = Files.createTempDirectory("graft_sdd_idx_").toString
+    val idx = SparkEntry.tmpDir("graft_sdd_idx_")
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
     val b1 = Seq(
       (100L, doc(2000, 40) + " x"), // near-dup of corpus 2 → dies (index)
@@ -46,8 +39,8 @@ class StreamingDedupSpec extends GraftSuite {
       (201L, doc(5000, 40) + " z"),  // near-dup of corpus 5 → dies (index)
       (202L, doc(90000, 40)),        // unique → accepted
       (203L, doc(90000, 40) + " w")) // near-dup of 202 → dies (within batch)
-    val out = Files.createTempDirectory("graft_sdd_out_").toString
-    val ck = Files.createTempDirectory("graft_sdd_ck_").toString
+    val out = SparkEntry.tmpDir("graft_sdd_out_")
+    val ck = SparkEntry.tmpDir("graft_sdd_ck_")
     val ms = MemoryStream[(Long, String)]
     val q = StreamingDedup.start(
       ms.toDF.select($"_1".as("doc_id"), $"_2".as("text")), idx, out, ck)
@@ -70,8 +63,6 @@ class StreamingDedupSpec extends GraftSuite {
     StreamingDedup.commitBatch(idx, out, "doc_id", "text")(
       b2.toDF("doc_id", "text"), 1L)
     assert(accepted() == Set(101L, 102L, 202L))
-    Seq(idx, out, ck).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("streaming dedup kills a dup chain spanning micro-batches (dead doc's " +
@@ -92,10 +83,10 @@ class StreamingDedupSpec extends GraftSuite {
       .mkString(" ")
     val corpus = Seq((0L, aText), (1L, words(90000, 40).mkString(" ")))
       .toDF("doc_id", "text")
-    val idx = Files.createTempDirectory("graft_sdc_idx_").toString
+    val idx = SparkEntry.tmpDir("graft_sdc_idx_")
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
-    val out = Files.createTempDirectory("graft_sdc_out_").toString
-    val ck = Files.createTempDirectory("graft_sdc_ck_").toString
+    val out = SparkEntry.tmpDir("graft_sdc_out_")
+    val ck = SparkEntry.tmpDir("graft_sdc_ck_")
     val ms = MemoryStream[(Long, String)]
     val q = StreamingDedup.start(
       ms.toDF.select($"_1".as("doc_id"), $"_2".as("text")), idx, out, ck)
@@ -117,13 +108,11 @@ class StreamingDedupSpec extends GraftSuite {
         "doc_id", "text")
       .select($"doc_id").as[Long].collect().toSet
     assert(batchSurv == accepted)
-    Seq(idx, out, ck).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
   }
 
   test("readAccepted returns a typed empty frame when every committed " +
       "batch was empty (the _schema sentinel)") {
-    val out = Files.createTempDirectory("graft_sde_out_").toString
+    val out = SparkEntry.tmpDir("graft_sde_out_")
     // an empty batch journals nothing (dynamic overwrite of an empty
     // frame writes no files) — only the sentinel gives readback a schema
     StreamingDedup.commitBatch("/nonexistent_index", out, "doc_id", "text")(
@@ -131,7 +120,6 @@ class StreamingDedupSpec extends GraftSuite {
     val acc = StreamingDedup.readAccepted(spark, out)
     assert(acc.count() == 0)
     assert(acc.columns.toSet == Set("doc_id", "text", "batch_id"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("fold-and-retire: stream 4 batches, fold after 2, stream 2 more — " +
@@ -166,15 +154,15 @@ class StreamingDedupSpec extends GraftSuite {
       (401L, doc(62000, 40)))        // unique → accepted
     // two identical indexes: `idx` is streamed against (and mutated by the
     // fold); `idx0` stays pristine for the one-shot batch-rule oracle
-    val idx = Files.createTempDirectory("graft_fold_idx_").toString
-    val idx0 = Files.createTempDirectory("graft_fold_idx0_").toString
+    val idx = SparkEntry.tmpDir("graft_fold_idx_")
+    val idx0 = SparkEntry.tmpDir("graft_fold_idx0_")
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx0)
     // the streaming state dir goes through an EXPLICIT file: scheme so the
     // Hadoop-FS port is exercised with a real URI, not a bare local path
-    val outLocal = Files.createTempDirectory("graft_fold_out_").toString
+    val outLocal = SparkEntry.tmpDir("graft_fold_out_")
     val out = s"file://$outLocal"
-    val ck = Files.createTempDirectory("graft_fold_ck_").toString
+    val ck = SparkEntry.tmpDir("graft_fold_ck_")
     val ms = MemoryStream[(Long, String)]
     val stream = ms.toDF.select($"_1".as("doc_id"), $"_2".as("text"))
     val q1 = StreamingDedup.start(stream, idx, out, ck)
@@ -221,7 +209,6 @@ class StreamingDedupSpec extends GraftSuite {
       .select($"doc_id").as[Long].collect().toSet
     assert(acceptedIds == oneShot)
     assert(acceptedIds == Set(101L, 201L, 301L, 401L))
-    rmAll(idx, idx0, outLocal, ck)
   }
 
   test("full index lifecycle: stream -> fold -> blue/green compact -> " +
@@ -237,13 +224,13 @@ class StreamingDedupSpec extends GraftSuite {
     val b3 = Seq((300L, doc(60000, 40) + " y"), // dies vs FOLDED+COMPACTED 101
                  (301L, doc(62000, 40)))        // accepted
     val b4 = Seq((400L, doc(62000, 40) + " z")) // dies vs post-flip tail 301
-    val idx = Files.createTempDirectory("graft_lc_idx_").toString
-    val idx0 = Files.createTempDirectory("graft_lc_idx0_").toString
-    val idx2 = Files.createTempDirectory("graft_lc_idx2_").toString + "/green"
+    val idx = SparkEntry.tmpDir("graft_lc_idx_")
+    val idx0 = SparkEntry.tmpDir("graft_lc_idx0_")
+    val idx2 = SparkEntry.tmpDir("graft_lc_idx2_") + "/green"
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx0)
-    val out = Files.createTempDirectory("graft_lc_out_").toString
-    val ck = Files.createTempDirectory("graft_lc_ck_").toString
+    val out = SparkEntry.tmpDir("graft_lc_out_")
+    val ck = SparkEntry.tmpDir("graft_lc_ck_")
     val ms = MemoryStream[(Long, String)]
     val stream = ms.toDF.select($"_1".as("doc_id"), $"_2".as("text"))
     val q1 = StreamingDedup.start(stream, idx, out, ck)
@@ -275,7 +262,6 @@ class StreamingDedupSpec extends GraftSuite {
       .select($"doc_id").as[Long].collect().toSet
     assert(acceptedIds == oneShot)
     assert(acceptedIds == Set(101L, 200L, 301L))
-    rmAll(idx, idx0, idx2, out, ck)
   }
 
   test("fold watermark: a fold retried at a HIGHER uptoBatch after an " +
@@ -288,12 +274,12 @@ class StreamingDedupSpec extends GraftSuite {
     val b1 = Seq((100L, doc("fw", 0, 40) + " x"), // dies vs corpus 0
                  (101L, doc("fw", 60000, 40)))    // accepted
     val b2 = Seq((200L, doc("fw", 70000, 40)))    // accepted
-    val idx = Files.createTempDirectory("graft_fw_idx_").toString
-    val idx0 = Files.createTempDirectory("graft_fw_idx0_").toString
+    val idx = SparkEntry.tmpDir("graft_fw_idx_")
+    val idx0 = SparkEntry.tmpDir("graft_fw_idx0_")
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx0)
-    val out = Files.createTempDirectory("graft_fw_out_").toString
-    val ck = Files.createTempDirectory("graft_fw_ck_").toString
+    val out = SparkEntry.tmpDir("graft_fw_out_")
+    val ck = SparkEntry.tmpDir("graft_fw_ck_")
     val ms = MemoryStream[(Long, String)]
     val stream = ms.toDF.select($"_1".as("doc_id"), $"_2".as("text"))
     val q = StreamingDedup.start(stream, idx, out, ck)
@@ -304,7 +290,7 @@ class StreamingDedupSpec extends GraftSuite {
     // stash batch 0's dirs, fold it, then RESTORE them — the exact state a
     // fold leaves when it crashes between its commit (the index append's
     // meta, which carries the watermark) and its retire step
-    val stash = Files.createTempDirectory("graft_fw_stash_").toString
+    val stash = SparkEntry.tmpDir("graft_fw_stash_")
     for (sub <- Seq("seen", "accepted"))
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(s"$out/$sub/batch_id=0"),
@@ -337,7 +323,6 @@ class StreamingDedupSpec extends GraftSuite {
       .select($"doc_id").as[Long].collect().toSet
     assert(acceptedIds == oneShot)
     assert(acceptedIds == Set(101L, 200L))
-    rmAll(idx, idx0, out, ck, stash)
   }
 
   test("late fold retry against a COMPACTED index: batches under the " +
@@ -347,17 +332,17 @@ class StreamingDedupSpec extends GraftSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val corpus = Seq((0L, doc("lc", 0, 40))).toDF("doc_id", "text")
     val b1 = Seq((100L, doc("lc", 60000, 40)))
-    val idx = Files.createTempDirectory("graft_lr_idx_").toString
-    val green = Files.createTempDirectory("graft_lr_green_").toString + "/idx"
+    val idx = SparkEntry.tmpDir("graft_lr_idx_")
+    val green = SparkEntry.tmpDir("graft_lr_green_") + "/idx"
     Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
-    val out = Files.createTempDirectory("graft_lr_out_").toString
-    val ck = Files.createTempDirectory("graft_lr_ck_").toString
+    val out = SparkEntry.tmpDir("graft_lr_out_")
+    val ck = SparkEntry.tmpDir("graft_lr_ck_")
     val ms = MemoryStream[(Long, String)]
     val stream = ms.toDF.select($"_1".as("doc_id"), $"_2".as("text"))
     val q = StreamingDedup.start(stream, idx, out, ck)
     try { ms.addData(b1); q.processAllAvailable() } finally q.stop()
     // stash the batch dirs (the late retry's leftover state), fold, compact
-    val stash = Files.createTempDirectory("graft_lr_stash_").toString
+    val stash = SparkEntry.tmpDir("graft_lr_stash_")
     for (sub <- Seq("seen", "accepted"))
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(s"$out/$sub/batch_id=0"),
@@ -377,6 +362,5 @@ class StreamingDedupSpec extends GraftSuite {
     assert(spark.read.parquet(s"$green/docs")
       .groupBy($"id").count().filter($"count" > 1).count() == 0)
     assert(!new java.io.File(s"$out/seen/batch_id=0").exists())
-    rmAll(idx, green, out, ck, stash)
   }
 }

@@ -5,10 +5,9 @@ import graft.operators._
 import graft.sources.{Gazetteer, SynthTranscripts}
 import graft.streaming.StreamingTriples
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 
-/** Structured-Streaming surface (SURVEY.md §2.10): narrow stages run
-  * unchanged on an unbounded Dataset; foreachBatch commits are idempotent
+/** Structured-Streaming surface (SURVEY.md §2.10): foreachBatch commits
+  * equal the batch pipeline, read each micro-batch once and are idempotent
   * under micro-batch replay; watermarked dedup absorbs duplicate arrivals. */
 class StreamingSpec extends GraftSuite {
   import spark.implicits._
@@ -30,21 +29,9 @@ class StreamingSpec extends GraftSuite {
       .collect().map(_.toString).sorted.toSeq
   }
 
-  test("streaming mention detection == batch mention detection") {
-    val ms = MemoryStream[Turn]
-    ms.addData(allTurns)
-    val q = StreamingTriples.mentionsStream(ms.toDF(), gaz)
-      .writeStream.format("memory").queryName("m_stream").outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("m_stream").collect().map(_.toString).sorted.toSeq
-    val want = Pipeline.mentions(spark, cfg, allTurns.toDS().toDF())
-      .collect().map(_.toString).sorted.toSeq
-    assert(got == want)
-  }
-
   test("incremental foreachBatch commits == batch pipeline; replay is idempotent") {
-    val dir = Files.createTempDirectory("kgstream").toString
-    val ckpt = Files.createTempDirectory("kgckpt").toString
+    val dir = SparkEntry.tmpDir("kgstream")
+    val ckpt = SparkEntry.tmpDir("kgckpt")
     // conversation-complete micro-batches (the ingest contract)
     val (b1, b2) = allTurns.partition(t => math.abs(t.conv_id.hashCode) % 2 == 0)
     assert(b1.nonEmpty && b2.nonEmpty)
@@ -76,7 +63,7 @@ class StreamingSpec extends GraftSuite {
 
   test("commitBatch evaluates the batch plan once: the manifest is computed " +
       "from the written partition, not by re-running the pipeline") {
-    val dir = Files.createTempDirectory("kgstream_once").toString
+    val dir = SparkEntry.tmpDir("kgstream_once")
     val reads = spark.sparkContext.longAccumulator("batch_rows_evaluated")
     // a batch frame whose every evaluation of a source row is counted
     val batch = spark.createDataset(spark.sparkContext.parallelize(allTurns, 4)
@@ -90,82 +77,19 @@ class StreamingSpec extends GraftSuite {
     }
     assert(once >= allTurns.size)
     val commit = evaluated(StreamingTriples.commitBatch(gaz, gazDf, dir)(batch, 0L))
-    // + the emptiness probe's limit(1), at most one row per partition
-    assert(commit <= once + 4, s"commitBatch read $commit source rows, one plan reads $once")
+    // the batch is persisted once: the emptiness probe and every branch of
+    // the plan read the cached rows, so each source row is evaluated once
+    assert(commit <= allTurns.size,
+      s"commitBatch read $commit source rows for ${allTurns.size} turns; one plan reads $once")
     // and the manifest still certifies exactly what was written
     import org.apache.spark.sql.functions.{col, sum}
     assert(GraphSink.readManifest(spark, dir).agg(sum(col("triple_count"))).head().getLong(0)
       == StreamingTriples.readTriples(spark, dir).count())
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
-
-  test("stateful per-conv support converges to the batch aggregate across micro-batches") {
-    import org.apache.spark.sql.functions._
-    val (b1, b2) = allTurns.partition(t => t.turn_idx % 2 == 0) // convs SPLIT across batches
-    val ms = MemoryStream[Turn]
-    val q = StreamingTriples.statefulConvSupport(
-        StreamingTriples.mentionsStream(ms.toDF(), gaz))
-      .writeStream.format("memory").queryName("conv_support")
-      .outputMode("update").start()
-    ms.addData(b1); q.processAllAvailable()
-    ms.addData(b2); q.processAllAvailable()
-    q.stop()
-    // Update mode re-emits a conv's concept row whenever it changes; the
-    // counts are monotone, so max-per-key IS the final emission
-    val got = spark.table("conv_support")
-      .groupBy("conv_id", "concept")
-      .agg(max("total_count").cast("int").as("total_count"),
-        max("unique_count").cast("int").as("unique_count"))
-      .collect().map(_.toString).sorted.toSeq
-    val batchMentions = Pipeline.mentions(spark, cfg, allTurns.toDS().toDF())
-    val want = batchMentions
-      .groupBy(col("conv_id"), concat_ws(":", col("source"), col("code")).as("concept"))
-      .agg(count(lit(1)).cast("int").as("total_count"),
-        countDistinct(col("try_index")).cast("int").as("unique_count"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(got == want)
-  }
-
-  test("windowed agg: streaming complete-mode == batch; append emits only watermark-closed windows") {
-    import org.apache.spark.sql.functions._
-    val ms = MemoryStream[Turn]
-    val q = StreamingTriples.windowedTurnStats(ms.toDF())
-      .writeStream.format("memory").queryName("win_complete")
-      .outputMode("complete").start()
-    val (b1, b2) = allTurns.partition(_.turn_idx % 2 == 0)
-    ms.addData(b1); q.processAllAvailable()
-    ms.addData(b2); q.processAllAvailable()
-    q.stop()
-    val got = spark.table("win_complete").collect().map(_.toString).sorted.toSeq
-    val want = StreamingTriples.windowedTurnStats(allTurns.toDS().toDF())
-      .collect().map(_.toString).sorted.toSeq
-    assert(got == want && got.nonEmpty)
-
-    // append mode: only windows the watermark has passed are emitted
-    val ms2 = MemoryStream[Turn]
-    val q2 = StreamingTriples.windowedTurnStats(ms2.toDF())
-      .writeStream.format("memory").queryName("win_append")
-      .outputMode("append").start()
-    ms2.addData(allTurns); q2.processAllAvailable()
-    // watermark advances only on the NEXT batch after max(ts) is seen
-    ms2.addData(Seq.empty[Turn]); q2.processAllAvailable()
-    q2.stop()
-    val appended = spark.table("win_append").collect().map(_.toString).toSet
-    val all = want.toSet
-    assert(appended.subsetOf(all))
-    // every window strictly before max(ts) - watermark must have flushed
-    val maxTs = allTurns.map(_.ts.getTime).max
-    val horizon = maxTs - 30 * 60 * 1000
-    val expectClosed = StreamingTriples.windowedTurnStats(allTurns.toDS().toDF())
-      .filter(col("w_start") + expr("INTERVAL 1 HOUR") <= lit(new java.sql.Timestamp(horizon)))
-      .collect().map(_.toString).toSet
-    assert(expectClosed.subsetOf(appended))
-    assert(appended.size < all.size) // the still-open windows are withheld
   }
 
   test("watermarked dedup absorbs duplicate turn arrivals") {
-    val dir = Files.createTempDirectory("kgstream2").toString
-    val ckpt = Files.createTempDirectory("kgckpt2").toString
+    val dir = SparkEntry.tmpDir("kgstream2")
+    val ckpt = SparkEntry.tmpDir("kgckpt2")
     val (b1, _) = allTurns.partition(t => math.abs(t.conv_id.hashCode) % 2 == 0)
     val ms = MemoryStream[Turn]
     val q = StreamingTriples.start(ms.toDF(), gaz, gazDf, dir, ckpt)

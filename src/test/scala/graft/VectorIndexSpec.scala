@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators.Similarity
 import graft.operators.Similarity.{Ivf, Lsh}
 import graft.util.PartitionedParquet
@@ -16,10 +14,6 @@ class VectorIndexSpec extends GraftSuite {
   import spark.implicits._
 
   private val sfEmb = "/root/testdata/sf0.001/embeddings.parquet"
-
-  private def rmAll(paths: String*): Unit = paths.foreach { p =>
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-  }
 
   /** Deterministic clustered embedding corpus: `n` vectors in `nClusters`
     * well-separated axis clusters with small hash-seeded noise — the data
@@ -49,7 +43,7 @@ class VectorIndexSpec extends GraftSuite {
   test("persisted IVF index: partition-pruned probes, exact at full probing") {
     val emb = spark.read.parquet(sfEmb)
     val q = queryOf(emb, 0L)
-    val dir = Files.createTempDirectory("graft_ivf_test").toString
+    val dir = SparkEntry.tmpDir("graft_ivf_test")
     Similarity.buildVectorIndex(emb, "vec_id", "embedding", dir, Ivf(nCentroids = 8))
     // full probing == brute force (the index is lossless, only partitioned)
     val bf = rows(Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10))
@@ -65,14 +59,13 @@ class VectorIndexSpec extends GraftSuite {
     }.get
     assert(scan.metadata("PartitionFilters").contains("ivf_cid"))
     assert(scan.selectedPartitions.partitionCount == 2)
-    rmAll(dir)
   }
 
   test("persisted LSH index: pruned multi-probe == in-flight annTopK; " +
       "exact at full probing; partition pruning in the plan") {
     val emb = spark.read.parquet(sfEmb)
     val q = queryOf(emb, 0L)
-    val dir = Files.createTempDirectory("graft_lsh_idx_").toString
+    val dir = SparkEntry.tmpDir("graft_lsh_idx_")
     val lsh = Lsh(bits = 12, prefixBits = 6)
     Similarity.buildVectorIndex(emb, "vec_id", "embedding", dir, lsh)
     // full probing (the whole hamming ball) == brute force: the index is
@@ -95,7 +88,6 @@ class VectorIndexSpec extends GraftSuite {
       .select($"lsh_prefix").distinct().count()
     assert(scan.selectedPartitions.partitionCount <= 7 &&
       scan.selectedPartitions.partitionCount < totalPrefixes)
-    rmAll(dir)
   }
 
   test("sampleCentroids: hash-range pre-filter == full sort; tiny slice " +
@@ -120,13 +112,11 @@ class VectorIndexSpec extends GraftSuite {
     emb.count()
     val queries = (0 until 8).map(i => (i.toLong, queryOf(emb, i.toLong)))
     def meanRecall(lloyd: Int): Double = {
-      val idx = Files.createTempDirectory(s"graft_r5_ivf$lloyd").toString
+      val idx = SparkEntry.tmpDir(s"graft_r5_ivf$lloyd")
       val ivf = Ivf(nCentroids = 8, lloydIters = lloyd, nProbe = 1)
       Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, ivf)
-      val out = Similarity.recallIndexed(spark, idx, "vec_id", "embedding",
+      Similarity.recallIndexed(spark, idx, "vec_id", "embedding",
         queries, 5, ivf).agg(avg($"recall")).head().getDouble(0)
-      rmAll(idx)
-      out
     }
     val r0 = meanRecall(0)
     val r1 = meanRecall(1)
@@ -135,7 +125,7 @@ class VectorIndexSpec extends GraftSuite {
     // true centroids and make nProbe=1 exact
     assert(r1 == 1.0, s"refined codebook nProbe=1 recall $r1 != 1.0 on clustered data")
     // full-probe exactness is centroid-independent — refined index included
-    val idx = Files.createTempDirectory("graft_r5_ivf_full").toString
+    val idx = SparkEntry.tmpDir("graft_r5_ivf_full")
     val ivf = Ivf(nCentroids = 8, lloydIters = 1, nProbe = 8)
     Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, ivf)
     val q0 = queries.head._2
@@ -144,7 +134,6 @@ class VectorIndexSpec extends GraftSuite {
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q0, 5)
       .collect().toSeq
     assert(full == exact)
-    rmAll(idx)
     emb.unpersist()
   }
 
@@ -152,19 +141,18 @@ class VectorIndexSpec extends GraftSuite {
     val emb = clustered(80, 4).cache()
     emb.count()
     val queries = (0 until 4).map(i => (i.toLong, queryOf(emb, i.toLong)))
-    val ivfIdx = Files.createTempDirectory("graft_r5_ivf_cov").toString
+    val ivfIdx = SparkEntry.tmpDir("graft_r5_ivf_cov")
     val ivfAll = Ivf(nCentroids = 4, nProbe = 4) // every list probed
     Similarity.buildVectorIndex(emb, "vec_id", "embedding", ivfIdx, ivfAll)
     val ivf = Similarity.recallIndexed(spark, ivfIdx, "vec_id", "embedding",
       queries, 5, ivfAll)
     assert(ivf.filter($"recall" =!= 1.0).count() == 0)
-    val lshIdx = Files.createTempDirectory("graft_r5_lsh_cov").toString
+    val lshIdx = SparkEntry.tmpDir("graft_r5_lsh_cov")
     val lshAll = Lsh(bits = 4, prefixBits = 2, probeHamming = 4) // 2^4 probes = all
     Similarity.buildVectorIndex(emb, "vec_id", "embedding", lshIdx, lshAll)
     val lsh = Similarity.recallIndexed(spark, lshIdx, "vec_id", "embedding",
       queries, 5, lshAll)
     assert(lsh.filter($"recall" =!= 1.0).count() == 0)
-    rmAll(ivfIdx, lshIdx)
     emb.unpersist()
   }
 
@@ -184,7 +172,7 @@ class VectorIndexSpec extends GraftSuite {
     base.count()
     val corpus = base.filter($"vec_id" < 90)
     val delta = base.filter($"vec_id" >= 90)
-    val ivfDir = Files.createTempDirectory("graft_ivf_app_").toString
+    val ivfDir = SparkEntry.tmpDir("graft_ivf_app_")
     val ivf = Ivf(nCentroids = 6, nProbe = 6)
     Similarity.buildVectorIndex(corpus, "vec_id", "embedding", ivfDir, ivf)
     Similarity.appendToVectorIndex(delta, "embedding", ivfDir, 1L, ivf)
@@ -199,8 +187,8 @@ class VectorIndexSpec extends GraftSuite {
         "embedding", q, 7, ivf))
       == rows(Similarity.bruteForceTopK(base, "vec_id", "embedding", q, 7)))
     // LSH: signature is data-independent ⇒ append is EXACTLY a rebuild
-    val d1 = Files.createTempDirectory("graft_lsh_app1_").toString
-    val d2 = Files.createTempDirectory("graft_lsh_app2_").toString
+    val d1 = SparkEntry.tmpDir("graft_lsh_app1_")
+    val d2 = SparkEntry.tmpDir("graft_lsh_app2_")
     val lsh = Lsh(bits = 8, prefixBits = 3)
     Similarity.buildVectorIndex(corpus, "vec_id", "embedding", d1, lsh)
     Similarity.appendToVectorIndex(delta, "embedding", d1, 1L, lsh)
@@ -215,15 +203,14 @@ class VectorIndexSpec extends GraftSuite {
     assert(spark.read.parquet(s"$d1/vectors").count()
       == spark.read.parquet(s"$d2/vectors").count())
     assert(spark.read.parquet(s"$ivfDir/vectors").count() == 120)
-    rmAll(ivfDir, d1, d2)
     base.unpersist()
   }
 
   test("LSH index compaction folds a multi-epoch index to one epoch with " +
       "identical content and top-k") {
     val base = clustered(120, 6).cache(); base.count()
-    val v1 = Files.createTempDirectory("graft_cmp_v1_").toString
-    val v2 = Files.createTempDirectory("graft_cmp_v2_").toString + "/idx"
+    val v1 = SparkEntry.tmpDir("graft_cmp_v1_")
+    val v2 = SparkEntry.tmpDir("graft_cmp_v2_") + "/idx"
     val lsh = Lsh(bits = 8, prefixBits = 3)
     Similarity.buildVectorIndex(base.filter($"vec_id" < 90), "vec_id",
       "embedding", v1, lsh)
@@ -236,7 +223,6 @@ class VectorIndexSpec extends GraftSuite {
     def top(p: String) = rows(Similarity.annTopKIndexed(spark, p, "vec_id",
       "embedding", q, 7, lsh.copy(probeHamming = 8)))
     assert(top(v2) == top(v1))
-    rmAll(v1, v2)
     base.unpersist()
   }
 
@@ -249,7 +235,7 @@ class VectorIndexSpec extends GraftSuite {
     val queries = (0 until 4).map { i =>
       (i.toLong, doc(i).map(_.toDouble).toSeq)
     }
-    val idx = Files.createTempDirectory("graft_r6_detail_").toString
+    val idx = SparkEntry.tmpDir("graft_r6_detail_")
     val ivf = Ivf(nCentroids = 4, nProbe = 2)
     Similarity.buildVectorIndex(emb, "vec_id", "embedding", idx, ivf)
     val detail = Similarity.recallIndexed(spark, idx, "vec_id", "embedding",
@@ -272,15 +258,14 @@ class VectorIndexSpec extends GraftSuite {
     val exact = rows(Similarity.bruteForceTopK(emb, "vec_id", "embedding", q0, 5)).toSet
     val det0 = rows(detail.filter($"query_id" === 0L).select($"vec_id", $"cos")).toSet
     assert(det0 == exact)
-    rmAll(idx)
     emb.unpersist()
   }
 
   test("IVF index compaction preserves the codebook and probe parity " +
       "(src vs dst, pruned and full probing)") {
     val base = clustered(120, 6).cache(); base.count()
-    val src = Files.createTempDirectory("graft_ivfc_src_").toString
-    val dst = Files.createTempDirectory("graft_ivfc_dst_").toString + "/idx"
+    val src = SparkEntry.tmpDir("graft_ivfc_src_")
+    val dst = SparkEntry.tmpDir("graft_ivfc_dst_") + "/idx"
     val ivf = Ivf(nCentroids = 6)
     Similarity.buildVectorIndex(base.filter($"vec_id" < 90), "vec_id",
       "embedding", src, ivf)
@@ -297,7 +282,6 @@ class VectorIndexSpec extends GraftSuite {
       "vec_id", "embedding", q, 7, ivf.copy(nProbe = nProbe)))
     assert(top(dst, 1) == top(src, 1)) // pruned probe parity
     assert(top(dst, 6) == top(src, 6)) // full probe parity
-    rmAll(src, dst)
     base.unpersist()
   }
 
@@ -305,8 +289,8 @@ class VectorIndexSpec extends GraftSuite {
       "fence): a below-fence append fails loudly, an at-fence append works, " +
       "probe parity is preserved") {
     val base = clustered(120, 6).cache(); base.count()
-    val src = Files.createTempDirectory("graft_vf_src_").toString
-    val dst = Files.createTempDirectory("graft_vf_dst_").toString + "/idx"
+    val src = SparkEntry.tmpDir("graft_vf_src_")
+    val dst = SparkEntry.tmpDir("graft_vf_dst_") + "/idx"
     val ivf = Ivf(nCentroids = 6, nProbe = 6)
     Similarity.buildVectorIndex(base.filter($"vec_id" < 90), "vec_id",
       "embedding", src, ivf)
@@ -328,8 +312,8 @@ class VectorIndexSpec extends GraftSuite {
     assert(Similarity.annTopKIndexed(spark, dst, "vec_id", "embedding",
       q, 7, ivf).count() == 7)
     // LSH: the same fence via the shared compaction path
-    val lsrc = Files.createTempDirectory("graft_vf_lsrc_").toString
-    val ldst = Files.createTempDirectory("graft_vf_ldst_").toString + "/idx"
+    val lsrc = SparkEntry.tmpDir("graft_vf_lsrc_")
+    val ldst = SparkEntry.tmpDir("graft_vf_ldst_") + "/idx"
     val lsh = Lsh(bits = 8, prefixBits = 3)
     Similarity.buildVectorIndex(base.filter($"vec_id" < 90), "vec_id",
       "embedding", lsrc, lsh)
@@ -340,7 +324,6 @@ class VectorIndexSpec extends GraftSuite {
       Similarity.appendToVectorIndex(late, "embedding", ldst, 1L, lsh)
     }
     assert(e2.getMessage.contains("compaction fence"))
-    rmAll(src, dst, lsrc, ldst)
     base.unpersist()
   }
 }
