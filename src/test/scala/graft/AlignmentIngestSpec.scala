@@ -1,34 +1,15 @@
 package graft
 
 import graft.operators.{Ingest, Linking}
-import graft.util.Alignment
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** F5 position re-mapping, P4/P6 ingest quarantine, and L1-L3 lexical
-  * surface linking (SURVEY §2.8 F5, §2.2 P4, §2.11 L1-L3). */
+/** P4/P6 ingest quarantine and L1-L3 lexical surface linking (SURVEY §2.2
+  * P4, §2.11 L1-L3). The F5 position re-mapping tests left with
+  * `util/Alignment`; filing these under IngestSpec and LinkingSpec is
+  * ROADMAP direction 7. */
 class AlignmentIngestSpec extends GraftSuite {
   import spark.implicits._
-
-  test("alignment: identity, whitespace-collapse, and insert-clamp mappings") {
-    val a = "patient  has   acute    renal failure"
-    val b = a.replaceAll("\\s+", " ") // "patient has acute renal failure"
-    // identity
-    assert(Alignment.mapSpan(a, a, 4, 11) == ((4, 11)))
-    // every non-deleted char maps back to the identical char
-    val ops = Alignment.opcodes(a, b)
-    (0 until b.length).foreach { j =>
-      assert(a.charAt(Alignment.mapPosition(ops, j)) == b.charAt(j), s"pos $j")
-    }
-    // span over "renal failure" in b maps to the original offsets
-    val s = b.indexOf("renal failure")
-    val (ms, me) = Alignment.mapSpan(a, b, s, s + "renal failure".length)
-    assert(a.substring(ms, me) == "renal failure")
-    // positions inside text that exists only in b clamp to the region start
-    val c = "renal SOMETHING failure"
-    val opsC = Alignment.opcodes("renal failure", c)
-    assert(Alignment.mapPosition(opsC, c.indexOf("SOMETHING") + 3) <= "renal ".length)
-  }
 
   test("ingest: reasons, latest-wins supersede, nothing silently dropped") {
     val ts = (s: Long) => new Timestamp(1700000000000L + s * 1000)
@@ -51,33 +32,6 @@ class AlignmentIngestSpec extends GraftSuite {
     assert(q == Map("bad_role" -> 2, "empty_text" -> 1, "null_conv_id" -> 1,
       "bad_turn_idx" -> 1, "superseded_duplicate" -> 1))
     assert(valid.count() + quarantine.count() == rows.count()) // conservation
-  }
-
-  test("parseLatestKey: round-trips the reference key grammar; malformed -> null") {
-    val keys = Seq(
-      "latest_sqe:fileA-12-ER", "latest_sqe:f-b-7-0-HR", // file_id may contain '-'
-      "latest_sqe:x-3-Full", "latest_sqe:x-3-XX", "not a key", "latest_sqe:x--ER",
-      "latest_sqe:x-4294967296-ER") // Int-overflow digits must fail the GRAMMAR,
-                                    // not throw from the ANSI cast
-      .toDF("k")
-    val got = keys.select(Ingest.parseLatestKey(col("k")).as("p"))
-      .select("p.file_id", "p.sqe", "p.type")
-      .collect().map(r => (r.getString(0), if (r.isNullAt(1)) -1 else r.getInt(1), r.getString(2)))
-    assert(got(0) == (("fileA", 12, "ER")))
-    assert(got(1) == (("f-b-7", 0, "HR"))) // greedy file_id, last two fields win
-    assert(got(2) == (("x", 3, "Full")))
-    assert(got.drop(3).forall(_ == ((null, -1, null))))
-  }
-
-  test("remapColumn: mapped, unmapped-with-default, unmapped-passthrough, null") {
-    val d = Seq(("ER"), ("HR"), ("LR"), ("XX"), (null: String)).toDF("type")
-    val m = Map("ER" -> "Entity", "HR" -> "High", "LR" -> "Low")
-    val mapped = Ingest.remapColumn(d, "type", m, default = Some("Full"))
-      .as[String].collect().toSeq
-    assert(mapped == Seq("Entity", "High", "Low", "Full", "Full"))
-    val passthrough = Ingest.remapColumn(d, "type", m)
-      .as[String].collect().toSeq
-    assert(passthrough == Seq("Entity", "High", "Low", "XX", null))
   }
 
   test("linkBySurface: idf-overlap scoring, top-k, deterministic selection") {

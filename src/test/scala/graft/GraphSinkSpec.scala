@@ -5,16 +5,13 @@ import java.nio.file.{Files, Paths}
 import graft.operators.{Dedup, GraphSink}
 import org.apache.spark.sql.functions._
 
-/** The manifest-committed resumable sink: idempotent resume, stale and
-  * foreign bucket dirs, the per-bucket manifest metrics, and the session
-  * conf it must leave alone. */
+/** The manifest-committed resumable sink: idempotent resume, foreign
+  * bucket dirs, the per-bucket manifest metrics, and the session conf it
+  * must leave alone. */
 class GraphSinkSpec extends GraftSuite {
   import spark.implicits._
 
   private def tmp(): String = SparkEntry.tmpDir("graft_sink_")
-
-  private lazy val smallTriples =
-    Pipeline.triples(spark, Pipeline.Config(nConvs = 12, nBase = 32)).toDF()
 
   test("resume after partial write ≡ fresh full run (idempotent commit)") {
     val cfg = Pipeline.Config(nConvs = 20, nBase = 48)
@@ -75,42 +72,6 @@ class GraphSinkSpec extends GraftSuite {
     } finally spark.conf.set(key, before)
   }
 
-  test("writeResumable survives stale files in an uncommitted bucket (no wedge)") {
-    val triples = smallTriples
-    val dir = tmp()
-    // a crashed prior attempt left output in a bucket id this run's data
-    // never produces (nBuckets = 4 ⇒ real buckets are 0..3): under the r3
-    // code the metrics read-back counted these rows (recorded != written)
-    // and EVERY retry aborted — a permanent wedge (ADVICE r3)
-    triples.limit(7).withColumn("bucket", lit(99L))
-      .write.partitionBy("bucket").mode("append").parquet(s"$dir/triples")
-    val n = GraphSink.writeResumable(triples, dir, "run_after_crash", nBuckets = 4)
-    assert(n == 4L)
-    // the stale bucket is gone; what's on disk is exactly this run's output
-    val onDisk = GraphSink.readTriples(spark, dir)
-    assert(onDisk.filter($"bucket" === 99L).count() == 0)
-    assert(onDisk.count() == triples.count())
-    // and the manifest certifies it
-    val m = spark.read.parquet(GraphSink.manifestPath(dir))
-    assert(m.agg(sum($"triple_count")).head().getLong(0) == triples.count())
-  }
-
-  test("onlyBuckets-restricted run sweeps ONLY its own stale buckets " +
-      "(disjoint concurrent writers stay safe)") {
-    val triples = smallTriples
-    val dir = tmp()
-    // a sibling writer's in-flight (uncommitted) output in bucket 99 …
-    triples.limit(5).withColumn("bucket", lit(99L))
-      .write.partitionBy("bucket").mode("append").parquet(s"$dir/triples")
-    // … must survive a run restricted to other buckets
-    GraphSink.writeResumable(triples, dir, "scoped", nBuckets = 4,
-      onlyBuckets = Some(Seq(0L, 1L)))
-    assert(GraphSink.readTriples(spark, dir).filter($"bucket" === 99L).count() == 5)
-    // an UNRESTRICTED run then sweeps it (the wedge fix)
-    GraphSink.writeResumable(triples, dir, "full", nBuckets = 4)
-    assert(GraphSink.readTriples(spark, dir).filter($"bucket" === 99L).count() == 0)
-  }
-
   test("writeResumable skips unparseable bucket directories instead of crashing") {
     val cfg = Pipeline.Config(nConvs = 8, nBase = 32)
     val triples = Pipeline.triples(spark, cfg).toDF()
@@ -134,7 +95,8 @@ class GraphSinkSpec extends GraftSuite {
 
   test("sink manifest carries the HLL distinct-subject metric, near exact") {
     val dir = tmp()
-    GraphSink.writeResumable(smallTriples, dir, "hll_run", nBuckets = 4)
+    val triples = Pipeline.triples(spark, Pipeline.Config(nConvs = 12, nBase = 32)).toDF()
+    GraphSink.writeResumable(triples, dir, "hll_run", nBuckets = 4)
     val m = spark.read.parquet(GraphSink.manifestPath(dir))
     val approx = m.agg(sum($"subj_approx_distinct")).head().getLong(0)
     val exact = GraphSink.readTriples(spark, dir)

@@ -149,35 +149,4 @@ class MentionSpec extends GraftSuite {
     assert(again eq MentionExtractor.variantFor(fps.last, gaz4, 0))
   }
 
-  test("merged v0/v1 extractor walk == three independent variant walks") {
-    import graft.model.Segment
-    import spark.implicits._
-    // gazetteer exercising the subset relation: ISPREF and non-ISPREF rows
-    // for the same pattern (payload resolution differs between variants),
-    // an SY-only surface (variant 1 must MISS it), and an ambiguous alias
-    val gaz = Array(
-      GazRow("C2", "SNOMEDCT_US", "SY", "N", "200", "renal failure"),
-      GazRow("C1", "SNOMEDCT_US", "PT", "Y", "100", "renal failure"),
-      GazRow("C3", "SNOMEDCT_US", "SY", "N", "300", "kidney stones"),
-      GazRow("C4", "SNOMEDCT_US", "PT", "Y", "400", "acute renal failure"))
-    val segs = Seq(
-      Segment("cv", 0, 0, 0, "patient has acute renal failure and kidney stones"),
-      Segment("cv", 1, 0, 0, "renal failure noted; kidney stone present"))
-    val gazB = spark.sparkContext.broadcast(gaz)
-    val merged = MentionExtractor.extract(segs.toDS(), gazB)
-      .collect().map(_.toString).sorted.toSeq
-    // the spec path: each variant with its OWN automaton, walked by the
-    // unpacked reference form
-    val fp = MentionExtractor.gazFingerprint(gaz)
-    val independent = segs.flatMap { s =>
-      (0 to 2).flatMap(v =>
-        ExtractorReference.matchSegment(s, v,
-          MentionExtractor.variantFor(fp, gaz, v)))
-    }.map(_.toString).sorted
-    assert(merged == independent && merged.nonEmpty)
-    // and variant 1 really does miss the SY-only surface
-    val m1codes = MentionExtractor.extract(segs.toDS(), gazB)
-      .filter($"try_index" === 1).select($"code").as[String].collect().toSet
-    assert(!m1codes.contains("300") && m1codes.contains("400"))
-  }
 }

@@ -1,19 +1,20 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.operators._
 import org.apache.spark.sql.functions._
 
-/** Round-4 fixes: the resumable-sink stale-bucket wedge, the guarded
-  * indexed-linking collect, and the star-contraction CC fallback. */
+/** Regression tests for one review round's fixes: the resumable-sink
+  * stale-bucket wedge, the guarded indexed-linking collect, the
+  * star-contraction CC fallback, the merged extractor walk, the bench
+  * headline and the `mm_features` decode. Filing them under their
+  * operators' specs is ROADMAP direction 7. */
 class Round4Spec extends GraftSuite {
   import spark.implicits._
 
   test("writeResumable survives stale files in an uncommitted bucket (no wedge)") {
     val cfg = Pipeline.Config(nConvs = 12, nBase = 32)
     val triples = Pipeline.triples(spark, cfg).toDF()
-    val dir = Files.createTempDirectory("graft_sink_stale_").toString
+    val dir = SparkEntry.tmpDir("graft_sink_stale_")
     // a crashed prior attempt left output in a bucket id this run's data
     // never produces (nBuckets = 4 ⇒ real buckets are 0..3): under the r3
     // code the metrics read-back counted these rows (recorded != written)
@@ -29,14 +30,13 @@ class Round4Spec extends GraftSuite {
     // and the manifest certifies it
     val m = spark.read.parquet(GraphSink.manifestPath(dir))
     assert(m.agg(sum($"triple_count")).head().getLong(0) == triples.count())
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("onlyBuckets-restricted run sweeps ONLY its own stale buckets " +
       "(disjoint concurrent writers stay safe)") {
     val cfg = Pipeline.Config(nConvs = 12, nBase = 32)
     val triples = Pipeline.triples(spark, cfg).toDF()
-    val dir = Files.createTempDirectory("graft_sink_scope_").toString
+    val dir = SparkEntry.tmpDir("graft_sink_scope_")
     // a sibling writer's in-flight (uncommitted) output in bucket 99 …
     triples.limit(5).withColumn("bucket", lit(99L))
       .write.partitionBy("bucket").mode("append").parquet(s"$dir/triples")
@@ -47,7 +47,6 @@ class Round4Spec extends GraftSuite {
     // an UNRESTRICTED run then sweeps it (the wedge fix)
     GraphSink.writeResumable(triples, dir, "full", nBuckets = 4)
     assert(GraphSink.readTriples(spark, dir).filter($"bucket" === 99L).count() == 0)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("indexed linkBySurface over the surface cap: no driver collect of " +
@@ -62,7 +61,7 @@ class Round4Spec extends GraftSuite {
     val mentions = ((0 until 40).map(i => ("cv", i, 0, 0, 9, s"freeform surface $i"))
       :+ (("cv", 99, 0, 5, 18, "renal failure")))
       .toDF("conv_id", "turn_idx", "try_index", "start", "end", "surface")
-    val dir = Files.createTempDirectory("graft_lex_guard_").toString
+    val dir = SparkEntry.tmpDir("graft_lex_guard_")
     LexicalIndex.build(gaz, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"mention_key", $"surface", $"code", $"score", $"rn", $"selected")
@@ -85,7 +84,6 @@ class Round4Spec extends GraftSuite {
     val scan = scans(guarded.queryExecution.executedPlan)
       .find(_.metadata.get("Location").exists(_.contains("postings"))).get
     assert(scan.metadata("PartitionFilters").contains("shard"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("CC: 100-node path exceeds min-label maxIter, run() falls back to " +

@@ -4,15 +4,11 @@ import java.nio.file.Files
 
 import graft.operators._
 
-/** Round-7 fixes: the cross-session stage-table registration (ADVICE r6
-  * low) and the bench's exclusivity lock + co-tenancy probe (VERDICT r6
-  * next #1/#2). */
+/** Regression tests for one review round's fixes: the cross-session
+  * stage-table registration and the bench's exclusivity lock and
+  * co-tenancy probe. Filing them under their operators' specs is ROADMAP
+  * direction 7. */
 class Round7Spec extends GraftSuite {
-
-  private def rmAll(paths: String*): Unit = paths.foreach { p =>
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(p.stripPrefix("file://")))
-  }
 
   test("stage tables are cross-session artifacts again: a fresh catalog " +
       "re-registers the bucketed tables from the parquet dir and the " +
@@ -20,7 +16,7 @@ class Round7Spec extends GraftSuite {
     def shuffles(df: org.apache.spark.sql.DataFrame): Int =
       graft.util.PlanOps.executedShuffleExchanges(df)
     val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
-    val stage = Files.createTempDirectory("graft_xsession_stage").toString
+    val stage = SparkEntry.tmpDir("graft_xsession_stage")
     val expected = Pipeline.triples(spark, cfg).collect().toSet
     Pipeline.writeLinkedStage(spark, cfg, stage)
     Pipeline.writeTurnAggStage(spark, cfg, stage)
@@ -39,13 +35,12 @@ class Round7Spec extends GraftSuite {
       spark.table(Pipeline.stageTable(stage, "turn_agg")))
     assert(shuffles(conv) === 0)
     Pipeline.dropStageTables(spark, stage)
-    rmAll(stage)
   }
 
   test("stage tables are written zstd: the parquet footers say so, not " +
       "just the option string") {
     val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
-    val stage = Files.createTempDirectory("graft_codec_stage").toString
+    val stage = SparkEntry.tmpDir("graft_codec_stage")
     Pipeline.writeLinkedStage(spark, cfg, stage)
     val hconf = spark.sessionState.newHadoopConf()
     val dir = new org.apache.hadoop.fs.Path(s"$stage/linked")
@@ -65,7 +60,6 @@ class Round7Spec extends GraftSuite {
       } finally reader.close()
     }
     Pipeline.dropStageTables(spark, stage)
-    rmAll(stage)
   }
 
   test("bench exclusivity lock: held-by-live-pid refuses, dead-pid lock is " +

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Mention
-import graft.operators.Voting
+import graft.operators.{ConnectedComponents, Voting}
 
 class VotingSpec extends GraftSuite {
 
@@ -74,5 +74,30 @@ class VotingSpec extends GraftSuite {
     val dist = Voting.voteDistributed(all, 0.3, 0.5)
       .as[graft.model.VotedMention].collect().map(_.toString).sorted.toSeq
     assert(local.nonEmpty && local == dist)
+  }
+
+  test("connected components: chain, clique, isolated node") {
+    import spark.implicits._
+    val edges = Seq(
+      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L), // chain
+      (10L, 11L), (11L, 12L), (10L, 12L),                         // triangle
+      (20L, 20L))                                                 // isolated
+      .toDF("src", "dst")
+    val comp = ConnectedComponents.run(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((1L to 7L).map(comp).toSet === Set(1L))
+    assert((10L to 12L).map(comp).toSet === Set(10L))
+    assert(comp(20L) === 20L)
+  }
+
+  test("CC is idempotent: running on its own output changes nothing") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
+    val c1 = ConnectedComponents.run(edges)
+    val asEdges = c1.select(org.apache.spark.sql.functions.col("id").as("src"),
+      org.apache.spark.sql.functions.col("comp").as("dst"))
+    val c2 = ConnectedComponents.run(asEdges).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val c1m = c1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(c1m.forall { case (id, comp) => c2(id) == comp })
   }
 }
