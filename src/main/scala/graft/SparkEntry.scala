@@ -106,8 +106,13 @@ object SparkEntry {
     Seq(col("surface"), col("cui"), col("sab"), col("code"), col("str"),
       round(col("score"), 6).as("score"), col("rn"), col("selected"))
 
-  private def mentionsOf(s: SparkSession, cfg: Pipeline.Config): DataFrame =
-    Pipeline.mentions(s, cfg, Pipeline.turns(s, cfg).toDF())
+  /** The documents corpus through the KG chain as far as linking. */
+  private def kgdLinked(docs: DataFrame): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    Pipeline.linked(sources.DocCorpus.turns(docs), sources.DocCorpus.gaz.toArray,
+      sources.DocCorpus.gaz.toDF())
+  }
 
   /** Flagship: full KG construction — transcripts to triples, through the
     * production path end to end: stage tables (extraction runs once) and
@@ -1169,7 +1174,8 @@ object SparkEntry {
          |  FROM c, (VALUES (0),(1),(2)) t(try_index) WHERE n_window > 0
          |UNION ALL SELECT CAST(doc_id AS BIGINT), t.try_index, 'S100', n_stream
          |  FROM c, (VALUES (0),(2)) t(try_index) WHERE n_stream > 0""".stripMargin), (s, dir) =>
-      sources.DocCorpus.mentions(t(s, dir, "documents"))
+      Pipeline.mentions(sources.DocCorpus.turns(t(s, dir, "documents")),
+          sources.DocCorpus.gaz.toArray)
         .groupBy(col("turn_idx").cast("long").as("doc_id"),
           col("try_index"), col("code"))
         .agg(count(lit(1)).as("n"))),
@@ -1177,7 +1183,7 @@ object SparkEntry {
     // A1+A2 over the linked stream: per-doc concept support, unique-round
     // count, confidence=unique/3, preferred name + ICD10CM crosswalk (J1/J2)
     Query("kgd_support", Some(kgdSupportSql), (s, dir) =>
-      Aggregation.perTurn(sources.DocCorpus.linked(t(s, dir, "documents")))
+      Aggregation.perTurn(kgdLinked(t(s, dir, "documents")))
         .select(supportCols: _*)),
 
     // §2.10 driver-green: the SAME support surface computed INCREMENTALLY —
@@ -1202,7 +1208,7 @@ object SparkEntry {
           // with the SAME batchId and overwrites exactly its own batch_id
           // partition; a plain append would double-count the replayed rows
           PartitionedParquet.scopedOverwrite(
-              Aggregation.perTurn(sources.DocCorpus.linked(batch))
+              Aggregation.perTurn(kgdLinked(batch))
                 .withColumn("batch_id", lit(batchId)), "batch_id")
             .parquet(out)
           ()
@@ -1214,7 +1220,7 @@ object SparkEntry {
       val streamed =
         if (PartitionedParquet.hasData(s, out))
           PartitionedParquet.readPartitioned(s, out, "batch_id")
-        else Aggregation.perTurn(sources.DocCorpus.linked(docs.limit(0)))
+        else Aggregation.perTurn(kgdLinked(docs.limit(0)))
       streamed.select(supportCols: _*)
     }),
 
@@ -1229,7 +1235,7 @@ object SparkEntry {
          |  min(icd10_code) AS icd10_code, min(icd10_name) AS icd10_name
          |FROM sup GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin), (s, dir) =>
       Aggregation.perConv(
-          Aggregation.perTurn(sources.DocCorpus.linked(t(s, dir, "documents"))))
+          Aggregation.perTurn(kgdLinked(t(s, dir, "documents"))))
         .select(col("conv_id"), col("source"), col("code"), col("cui"),
           col("concept_name"), col("text"), col("total_count"),
           col("unique_count"), round(col("confidence"), 6).as("confidence"),
@@ -1270,10 +1276,10 @@ object SparkEntry {
          |  WHERE prev IS NOT NULL)
          |SELECT * FROM mt UNION ALL SELECT * FROM at
          |UNION ALL SELECT * FROM ut UNION ALL SELECT * FROM rt""".stripMargin), (s, dir) => {
-      val docs = t(s, dir, "documents")
-      Triples.all(
-          Aggregation.perTurn(sources.DocCorpus.linked(docs)),
-          sources.DocCorpus.turns(docs)).toDF()
+      import s.implicits._
+      val turns = sources.DocCorpus.turns(t(s, dir, "documents"))
+      Pipeline.triples(turns, sources.DocCorpus.gaz.toArray,
+          sources.DocCorpus.gaz.toDF(), turns).toDF()
         .select(col("subj"), col("pred"), col("obj"),
           round(col("confidence"), 6).as("confidence"),
           col("unique_count"), col("total_count"),
@@ -1333,8 +1339,8 @@ object SparkEntry {
     // sum, rank by score/length/code) reproduced in plain SQL
     Query("kgd_link", Some(kgdLinkSql), (s, dir) => {
       import s.implicits._
-      Linking.linkBySurface(sources.DocCorpus.mentions(t(s, dir, "documents")),
-          sources.DocCorpus.gaz.toDF())
+      Linking.linkBySurface(Pipeline.mentions(sources.DocCorpus.turns(t(s, dir, "documents")),
+          sources.DocCorpus.gaz.toArray), sources.DocCorpus.gaz.toDF())
         .select(linkCols: _*).distinct()
     }),
 
@@ -1346,7 +1352,8 @@ object SparkEntry {
       import s.implicits._
       val idx = tmpDir("graft_lex")
       LexicalIndex.build(sources.DocCorpus.gaz.toDF(), idx)
-      LexicalIndex.linkBySurface(sources.DocCorpus.mentions(docs), s, idx)
+      LexicalIndex.linkBySurface(Pipeline.mentions(sources.DocCorpus.turns(docs),
+          sources.DocCorpus.gaz.toArray), s, idx)
         .select(linkCols: _*).distinct()
     }),
 
@@ -1365,17 +1372,24 @@ object SparkEntry {
 
     // ---- KG pipeline (rows-only; ScalaTest oracle is the gate) ----
 
-    Query("kg_mentions", None, (s, dir) =>
-      mentionsOf(s, cfgOf(dir))
-        .orderBy("conv_id", "turn_idx", "try_index", "start")),
-    Query("kg_linked", None, (s, dir) => {
-      val cfg = cfgOf(dir)
-      Pipeline.linked(s, cfg, mentionsOf(s, cfg))
+    Query("kg_mentions", None, (s, dir) => {
+      val (turns, gaz, _) = Pipeline.synthetic(s, cfgOf(dir))
+      Pipeline.mentions(turns, gaz)
         .orderBy("conv_id", "turn_idx", "try_index", "start")
     }),
-    Query("kg_voted", None, (s, dir) =>
-      Pipeline.voted(s, cfgOf(dir)).toDF()
-        .orderBy("conv_id", "turn_idx", "start")),
+    Query("kg_linked", None, (s, dir) => {
+      val (turns, gaz, gazDf) = Pipeline.synthetic(s, cfgOf(dir))
+      Pipeline.linked(turns, gaz, gazDf)
+        .orderBy("conv_id", "turn_idx", "try_index", "start")
+    }),
+    // the reference's `dhp_fhir_tool1_v1voting.py` path: the mention
+    // stream voted at Voting's reference thresholds (IoU 0.3, vote 0.5)
+    Query("kg_voted", None, (s, dir) => {
+      import s.implicits._
+      val (turns, gaz, _) = Pipeline.synthetic(s, cfgOf(dir))
+      Voting.vote(Pipeline.mentions(turns, gaz).as[graft.model.Mention]).toDF()
+        .orderBy("conv_id", "turn_idx", "start")
+    }),
     Query("kg_triples", None, (s, dir) =>
       Pipeline.triples(s, cfgOf(dir)).toDF()
         .orderBy("pred", "subj", "obj")),
@@ -1397,7 +1411,7 @@ object SparkEntry {
     // L1-L3 lexical candidate linking (the ES multi_match analogue):
     // idf-overlap scoring against the broadcast alias index, top-10 + pick
     Query("kg_link_surface", None, (s, dir) => {
-      val cfg = cfgOf(dir)
+      val (turns, gaz, gazDf) = Pipeline.synthetic(s, cfgOf(dir))
       // linkBySurface consumes mentions twice (distinct surfaces + final
       // join-back); cache the extraction output as a stage table would.
       // EAGER fill (count) — a lazy cache races itself when both consumers
@@ -1405,9 +1419,9 @@ object SparkEntry {
       // compact (no text column), so the columnar cache write is cheap —
       // unlike the wide flagship rows where recompute-with-overlap wins
       // (Pipeline.triples scaladoc). Verify/Bench/BenchExtra sweep after.
-      val m = mentionsOf(s, cfg).cache()
+      val m = Pipeline.mentions(turns, gaz).cache()
       m.count()
-      Linking.linkBySurface(m, Pipeline.gazetteer(s, cfg)._1)
+      Linking.linkBySurface(m, gazDf)
         .filter(col("selected"))
         .groupBy(col("sab"), col("code")).agg(count(lit(1)).as("n"))
         .orderBy("sab", "code")
@@ -1416,8 +1430,8 @@ object SparkEntry {
     // hierarchy, review defaults pinned; round-trip-tested in
     // ScaleTechniquesSpec)
     Query("kg_export_json", None, (s, dir) => {
-      val cfg = cfgOf(dir)
-      val l = Pipeline.linked(s, cfg, mentionsOf(s, cfg))
+      val (turns, gaz, gazDf) = Pipeline.synthetic(s, cfgOf(dir))
+      val l = Pipeline.linked(turns, gaz, gazDf)
       Export.conceptJson(Aggregation.perConv(Aggregation.perTurn(l)))
         .orderBy("conv_id")
     }),
@@ -1425,15 +1439,15 @@ object SparkEntry {
     // mentions carry the reference's search-keyword dict analogue) —
     // selection shifts only where the facet keyword hits a candidate alias
     Query("kg_link_faceted", None, (s, dir) => {
-      val cfg = cfgOf(dir)
-      val m0 = mentionsOf(s, cfg).cache()
+      val (turns, gaz, gazDf) = Pipeline.synthetic(s, cfgOf(dir))
+      val m0 = Pipeline.mentions(turns, gaz).cache()
       m0.count() // eager: see kg_link_surface
       val m = m0
         .withColumn("facets",
           when(pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(2)) === 0,
             map(lit("severity"), array(lit("acute"))))
             .otherwise(expr("map()").cast("map<string,array<string>>")))
-      Linking.linkFaceted(m, Pipeline.gazetteer(s, cfg)._1)
+      Linking.linkFaceted(m, gazDf)
         .filter(col("selected"))
         .groupBy(col("sab"), col("code")).agg(count(lit(1)).as("n"))
         .orderBy("sab", "code")
@@ -1447,17 +1461,15 @@ object SparkEntry {
     // ensemble round (the reference pipe artifact; byte-level golden gate
     // in SpanTableSpec)
     Query("kg_span_tiles", None, (s, dir) => {
-      val cfg = cfgOf(dir)
-      val turnsDf = Pipeline.turns(s, cfg).toDF()
-      SpanTable.tile(Pipeline.mentions(s, cfg, turnsDf), turnsDf)
+      val (turns, gaz, _) = Pipeline.synthetic(s, cfgOf(dir))
+      SpanTable.tile(Pipeline.mentions(turns, gaz), turns)
         .orderBy("conv_id", "turn_idx", "try_index", "row_idx")
     }),
     // §3.2 read-back: conversation-global entity offsets spliced across the
     // three per-round artifacts (app.py:1496-1523 semantics)
     Query("kg_span_readback", None, (s, dir) => {
-      val cfg = cfgOf(dir)
-      val turnsDf = Pipeline.turns(s, cfg).toDF()
-      SpanTable.readBack(SpanTable.tile(Pipeline.mentions(s, cfg, turnsDf), turnsDf))
+      val (turns, gaz, _) = Pipeline.synthetic(s, cfgOf(dir))
+      SpanTable.readBack(SpanTable.tile(Pipeline.mentions(turns, gaz), turns))
         .orderBy("conv_id", "turn_idx", "try_index", "start_ind")
     })
   )

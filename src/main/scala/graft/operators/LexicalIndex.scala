@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted lexical candidate index — the analogue of the reference's
@@ -45,10 +44,7 @@ object LexicalIndex {
   def linkBySurface(mentions: DataFrame, spark: SparkSession, path: String,
       topK: Int = 10, maxBroadcastSurfaces: Long = 100000L): DataFrame = {
     val surfaces = mentions.select(col("surface")).distinct()
-    val qTok = surfaces
-      .select(col("surface"),
-        explode(expr("array_distinct(split(lower(surface), '[^a-z0-9]+'))")).as("token"))
-      .filter(length(col("token")) > 0)
+    val qTok = Linking.tokens(surfaces, "surface", "surface")
     // ONE pre-pass serves both the guard and the pruning: the distinct-
     // TOKENIZED-surface count (guard; ADVICE r4 — surfaces with no [a-z0-9]
     // token never reach qTok or perSurface, so they are exactly the rows
@@ -70,17 +66,8 @@ object LexicalIndex {
     val cand = qSide.join(postings, "token")
       .groupBy(col("surface"), col("cui"), col("sab"), col("code"), col("str"))
       .agg(round(sum(col("idf")), 9).as("score"))
-    val wTop = Window.partitionBy("surface")
-      .orderBy(col("score").desc, length(col("str")).asc, col("code").asc, col("sab").asc)
-    val perSurface = cand.withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= topK)
-      .withColumn("selected", col("rn") === 1)
+    val perSurface = Linking.topCandidates(cand, topK, "surface")
     val ranked = if (smallQuery) broadcast(perSurface) else perSurface
-    mentions
-      .withColumn("mention_key",
-        xxhash64(col("conv_id"), col("turn_idx"), col("try_index"),
-          col("start"), col("end")))
-      .select(col("mention_key"), col("surface"))
-      .join(ranked, "surface")
+    Linking.joinBack(mentions, ranked, Seq("surface"))
   }
 }

@@ -88,20 +88,37 @@ object Linking {
     val surfaces = mentions.select(col("surface")).distinct()
     val cand = clauseScores(surfaces.select(col("surface").as("q")), gaz)
       .withColumnRenamed("q", "surface")
+    joinBack(mentions, broadcast(topCandidates(cand, topK, "surface")), Seq("surface"))
+  }
 
-    val wTop = Window.partitionBy("surface")
+  /** One row per distinct non-empty lowercase `[a-z0-9]+` token of the
+    * string column `text`, as `token`, beside the `keep` columns: the
+    * alias and query tokenizer of every lexical scorer. */
+  private[operators] def tokens(df: DataFrame, text: String, keep: String*): DataFrame =
+    df.select(keep.map(col) :+
+        explode(expr(s"array_distinct(split(lower($text), '[^a-z0-9]+'))")).as("token"): _*)
+      .filter(length(col("token")) > 0)
+
+  /** The `topK` best candidates per `key`, ranked by (score desc,
+    * length(str), code, sab) into `rn`; rank 1 is `selected`. */
+  private[operators] def topCandidates(cand: DataFrame, topK: Int, key: String*): DataFrame = {
+    val w = Window.partitionBy(key.map(col): _*)
       .orderBy(col("score").desc, length(col("str")).asc, col("code").asc, col("sab").asc)
-    val perSurface = cand.withColumn("rn", row_number().over(wTop))
+    cand.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= topK)
       .withColumn("selected", col("rn") === 1)
+  }
 
+  /** Each mention's `mention_key` (a hash of its identity) and `key`
+    * columns, joined to the rankings on `key`. */
+  private[operators] def joinBack(mentions: DataFrame, ranked: DataFrame,
+      key: Seq[String]): DataFrame =
     mentions
       .withColumn("mention_key",
         xxhash64(col("conv_id"), col("turn_idx"), col("try_index"),
           col("start"), col("end")))
-      .select(col("mention_key"), col("surface"))
-      .join(broadcast(perSurface), "surface")
-  }
+      .select((col("mention_key") +: key.map(col)): _*)
+      .join(ranked, key)
 
   /** The scoring algebra's single source of truth: idf-weighted alias
     * postings (token, cui, sab, code, str, idf) with
@@ -111,10 +128,7 @@ object Linking {
     * score-identity contract can't drift out of sync. No driver actions:
     * the alias total joins in as a broadcast single-row aggregate. */
   def aliasPostings(gaz: DataFrame): DataFrame = {
-    val aliasTok = gaz
-      .select(col("cui"), col("sab"), col("code"), col("str"),
-        explode(expr("array_distinct(split(lower(str), '[^a-z0-9]+'))")).as("token"))
-      .filter(length(col("token")) > 0)
+    val aliasTok = tokens(gaz, "str", "cui", "sab", "code", "str")
     val nAliases = gaz.agg(count(lit(1)).cast("double").as("n_aliases"))
     val idf = aliasTok.groupBy("token")
       .agg(countDistinct(col("sab"), col("code"), col("str")).as("df"))
@@ -128,12 +142,8 @@ object Linking {
     * alias against each distinct query string `q` (the shared scoring core
     * of [[linkBySurface]] and [[linkFaceted]]). */
   def clauseScores(queries: DataFrame, gaz: DataFrame): DataFrame = {
-    val qTok = queries
-      .select(col("q"),
-        explode(expr("array_distinct(split(lower(q), '[^a-z0-9]+'))")).as("token"))
-      .filter(length(col("token")) > 0)
     // token-overlap join against the broadcast index, then two-phase agg
-    qTok.join(broadcast(aliasPostings(gaz)), "token")
+    tokens(queries, "q", "q").join(broadcast(aliasPostings(gaz)), "token")
       .groupBy(col("q"), col("cui"), col("sab"), col("code"), col("str"))
       .agg(round(sum(col("idf")), 9).as("score"))
   }
@@ -192,21 +202,11 @@ object Linking {
       .groupBy(col("qkey"), col("surface"), col("fentries"),
         col("cui"), col("sab"), col("code"), col("str"))
       .agg(round(sum(col("score")), 9).as("score"))
-    val wTop = Window.partitionBy(comboKey.map(col): _*)
-      .orderBy(col("score").desc, length(col("str")).asc, col("code").asc, col("sab").asc)
-    val perCombo = scored.withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= topK)
-      .withColumn("selected", col("rn") === 1)
+    val perCombo = topCandidates(scored, topK, comboKey: _*)
 
     val nCombos = combos.count()
     val ranked =
       if (nCombos <= maxBroadcastCombos) broadcast(perCombo) else perCombo
-    norm
-      .withColumn("mention_key",
-        xxhash64(col("conv_id"), col("turn_idx"), col("try_index"),
-          col("start"), col("end")))
-      .select(col("mention_key"), col("qkey"), col("surface"), col("fentries"))
-      .join(ranked, comboKey)
-      .drop("qkey", "fentries")
+    joinBack(norm, ranked, comboKey).drop("qkey", "fentries")
   }
 }

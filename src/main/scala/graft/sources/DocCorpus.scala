@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.model.GazRow
-import graft.operators.{MentionExtractor, Segmentation}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,8 +9,9 @@ import org.apache.spark.sql.functions._
   * shape so the WHOLE reference §3.1 path — segmentation, 3-round ensemble
   * NER (`/root/reference/src/app.py:957-1004`), linking + ICD10CM crosswalk
   * (`app.py:891-917`), support/confidence aggregation (`app.py:972-1004`)
-  * and 4-predicate triple materialization — runs end to end over data
-  * DuckDB can also see, making every stage oracle-checkable in plain SQL.
+  * and 4-predicate triple materialization, i.e. [[graft.Pipeline]]'s
+  * chain over [[turns]] and [[gaz]] — runs end to end over data DuckDB can
+  * also see, making every stage oracle-checkable in plain SQL.
   *
   * Why this is checkable: the corpus text is single-space-joined lowercase
   * words from a closed vocabulary, so token-occurrence counts equal
@@ -61,22 +61,6 @@ object DocCorpus {
       col("text"),
       when(col("doc_id") % 5 === 0, "search").otherwise(lit(null))
         .cast("string").as("tool"))
-
-  /** The real extraction path over the documents corpus: segmentation +
-    * 3-round broadcast-automaton ensemble NER (same operators the flagship
-    * transcript pipeline runs). */
-  def mentions(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val gazB = spark.sparkContext.broadcast(gaz.toArray)
-    MentionExtractor.extract(Segmentation.segments(turns(docs)), gazB).toDF()
-  }
-
-  /** Extraction + linking (preferred names per code + ICD10CM crosswalk). */
-  def linked(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.operators.Linking.link(mentions(docs), gaz.toDF())
-  }
 
   /** Inputs for the voting oracle (A4-A6): per doc, rounds 0 and 1 propose
     * COMPETING concepts (D100 at acc .99 / DA200 at acc .99) on the SAME

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.Pipeline
 import graft.model.GazRow
-import graft.operators._
+import graft.operators.GraphSink
 import graft.util.PartitionedParquet
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,9 +17,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - duplicate/late arrivals → event-time watermark +
   *    dropDuplicatesWithinWatermark on the turn key (the queue's
   *    duplicate-upload guard, `src/app.py:1232-1285`);
-  *  - per-unit processing → each micro-batch runs the batch pipeline
-  *    body (segment → extract → link → perTurn → triples) inside
-  *    foreachBatch, on a plain DataFrame;
+  *  - per-unit processing → each micro-batch runs the batch chain
+  *    ([[graft.Pipeline.triples]]: segment → extract → link → perTurn →
+  *    triples) inside foreachBatch, on a plain DataFrame;
   *  - commit/supersede → foreachBatch writes each micro-batch's triples
   *    under `(batch_id, bucket)` partitions with a scoped overwrite
   *    ([[graft.util.PartitionedParquet.scopedOverwrite]]), so a
@@ -50,10 +51,7 @@ object StreamingTriples {
     try {
       if (turns.isEmpty) return
       val spark = turns.sparkSession
-      val gazB = spark.sparkContext.broadcast(gaz)
-      val mentions = MentionExtractor.extract(Segmentation.segments(turns), gazB).toDF()
-      val linked = Linking.link(mentions, gazDf)
-      val triples = Triples.all(Aggregation.perTurn(linked), turns)
+      val triples = Pipeline.triples(turns, gaz, gazDf, turns)
         .withColumn("bucket", GraphSink.bucketCol(nBuckets))
         .withColumn("batch_id", lit(batchId))
       PartitionedParquet.scopedOverwrite(triples, "batch_id", "bucket")

@@ -2,64 +2,15 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators._
+/** The bench driver's own guards: the headline that nulls instead of
+  * shrinking on failure, the exclusivity lock and the co-tenancy probe. */
+class BenchSpec extends GraftSuite {
 
-/** Regression tests for one review round's fixes: the cross-session
-  * stage-table registration and the bench's exclusivity lock and
-  * co-tenancy probe. Filing them under their operators' specs is ROADMAP
-  * direction 7. */
-class Round7Spec extends GraftSuite {
-
-  test("stage tables are cross-session artifacts again: a fresh catalog " +
-      "re-registers the bucketed tables from the parquet dir and the " +
-      "read-back still plans ZERO shuffles") {
-    def shuffles(df: org.apache.spark.sql.DataFrame): Int =
-      graft.util.PlanOps.executedShuffleExchanges(df)
-    val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
-    val stage = SparkEntry.tmpDir("graft_xsession_stage")
-    val expected = Pipeline.triples(spark, cfg).collect().toSet
-    Pipeline.writeLinkedStage(spark, cfg, stage)
-    Pipeline.writeTurnAggStage(spark, cfg, stage)
-    // simulate "another session": drop the catalog entries (ADVICE r6 —
-    // they are also what a long-lived session must not accumulate), so the
-    // only remaining state is the stage DIR itself
-    Pipeline.dropStageTables(spark, stage)
-    assert(!spark.catalog.tableExists(Pipeline.stageTable(stage, "turn_agg")))
-    // the read path re-registers from the dir and produces identical rows
-    val reread = Pipeline.triplesFromStage(spark, cfg, stage)
-    assert(reread.collect().toSet == expected)
-    // ...and the re-registered table still carries the bucket spec: the
-    // per-conv merge over it plans zero exchanges, same as the writer's
-    // session (PipelineSpec's assert, now across the catalog boundary)
-    val conv = graft.operators.Aggregation.perConv(
-      spark.table(Pipeline.stageTable(stage, "turn_agg")))
-    assert(shuffles(conv) === 0)
-    Pipeline.dropStageTables(spark, stage)
-  }
-
-  test("stage tables are written zstd: the parquet footers say so, not " +
-      "just the option string") {
-    val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
-    val stage = SparkEntry.tmpDir("graft_codec_stage")
-    Pipeline.writeLinkedStage(spark, cfg, stage)
-    val hconf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(s"$stage/linked")
-    val fs = dir.getFileSystem(hconf)
-    val parts = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-    assert(parts.nonEmpty)
-    parts.foreach { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-      try {
-        val codecs = reader.getFooter.getBlocks.get(0).getColumns
-          .asInstanceOf[java.util.List[
-            org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]]
-        assert(codecs.get(0).getCodec.toString === "ZSTD",
-          s"stage file $p not zstd-compressed")
-      } finally reader.close()
-    }
-    Pipeline.dropStageTables(spark, stage)
+  test("bench headline: any failure nulls value instead of shrinking it") {
+    assert(Bench.headlineJson(0, 12.3456) == "\"value\":12.346")
+    val failed = Bench.headlineJson(2, 9.9)
+    assert(failed.contains("\"value\":null") &&
+      failed.contains("\"total_ok_queries\":9.900"))
   }
 
   test("bench exclusivity lock: held-by-live-pid refuses, dead-pid lock is " +

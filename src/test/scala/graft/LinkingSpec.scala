@@ -110,4 +110,92 @@ class LinkingSpec extends GraftSuite {
       s"expected pruning below $totalShards shards")
   }
 
+  test("indexed linkBySurface over the surface cap: no driver collect of " +
+      "surfaces, identical rows, shard pruning intact") {
+    val gaz = Seq(
+      ("C1", "SNOMEDCT_US", "PT", "Y", "100", "renal failure"),
+      ("C2", "SNOMEDCT_US", "PT", "Y", "200", "acute renal failure"),
+      ("C3", "RXNORM", "PT", "Y", "R1", "aspirin")
+    ).toDF("cui", "sab", "tty", "ispref", "code", "str")
+    // free-form caller: surfaces NOT in the gazetteer (the OOM hazard shape
+    // — ADVICE r3; under the old code these all landed on the driver)
+    val mentions = ((0 until 40).map(i => ("cv", i, 0, 0, 9, s"freeform surface $i"))
+      :+ (("cv", 99, 0, 5, 18, "renal failure")))
+      .toDF("conv_id", "turn_idx", "try_index", "start", "end", "surface")
+    val dir = SparkEntry.tmpDir("graft_lex_guard_")
+    LexicalIndex.build(gaz, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select($"mention_key", $"surface", $"code", $"score", $"rn", $"selected")
+      .collect().map(_.toString).sorted.toSeq
+    val broadcastPath = LexicalIndex.linkBySurface(mentions, spark, dir)
+    val guarded = LexicalIndex.linkBySurface(mentions, spark, dir,
+      maxBroadcastSurfaces = 4) // force the fallback
+    assert(rows(guarded) == rows(broadcastPath) && rows(guarded).nonEmpty)
+    // the fallback keeps the partition-pruned postings read: shard ids come
+    // from a distributed distinct bounded by NumShards, not from surfaces
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case o => o.children.flatMap(scans) ++ o.subqueries.flatMap(scans)
+    }
+    guarded.count()
+    val scan = scans(guarded.queryExecution.executedPlan)
+      .find(_.metadata.get("Location").exists(_.contains("postings"))).get
+    assert(scan.metadata("PartitionFilters").contains("shard"))
+  }
+
+  test("linkBySurface: idf-overlap scoring, top-k, deterministic selection") {
+    val gaz = Seq(
+      ("C1", "SNOMEDCT_US", "PT", "Y", "100", "renal failure"),
+      ("C2", "SNOMEDCT_US", "PT", "Y", "200", "acute renal failure"),
+      ("C3", "RXNORM", "PT", "Y", "R1", "aspirin")
+    ).toDF("cui", "sab", "tty", "ispref", "code", "str")
+    val mentions = Seq(("cv", 0, 0, 5, 18, "renal failure"))
+      .toDF("conv_id", "turn_idx", "try_index", "start", "end", "surface")
+    val out = Linking.linkBySurface(mentions, gaz, topK = 10)
+      .select("code", "score", "rn", "selected")
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getInt(2), r.getBoolean(3)))
+      .sortBy(_._3)
+    // both renal concepts are candidates; aspirin shares no token
+    assert(out.map(_._1).toSeq == Seq("100", "200"))
+    // identical token overlap => identical score; shorter alias wins
+    val expectedScore = BigDecimal(2 * math.log(1.0 + 3.0 / 2.0))
+      .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(out.forall(_._2 == expectedScore))
+    assert(out.head._1 == "100" && out.head._4) // selected = rank 1
+  }
+
+  test("linkFaceted: facet keywords flip the selected candidate (U4)") {
+    val gaz = Seq(
+      ("C1", "SNOMEDCT_US", "PT", "Y", "100", "renal failure"),
+      ("C2", "SNOMEDCT_US", "PT", "Y", "200", "acute renal failure"),
+      ("C3", "RXNORM", "PT", "Y", "R1", "aspirin")
+    ).toDF("cui", "sab", "tty", "ispref", "code", "str")
+    def mentions(facets: Map[String, Seq[String]]) =
+      Seq(("cv", 0, 0, 5, 18, "renal failure", facets))
+        .toDF("conv_id", "turn_idx", "try_index", "start", "end", "surface", "facets")
+    // no facets: surface-only semantics — shorter alias (code 100) wins
+    val plain = Linking.linkFaceted(mentions(Map.empty), gaz)
+      .filter(col("selected")).select("code").as[String].collect()
+    assert(plain.toSeq == Seq("100"))
+    // the reference's search-keyword should-clause: facet "severity: acute"
+    // scores against the alias STR and flips selection to the acute concept
+    val faceted = Linking.linkFaceted(mentions(Map("severity" -> Seq("acute"))), gaz)
+      .filter(col("selected")).select("code").as[String].collect()
+    assert(faceted.toSeq == Seq("200"))
+    // faceted-with-empty == surface-only scoring, candidate for candidate
+    val a = Linking.linkFaceted(mentions(Map.empty), gaz)
+      .select("code", "score", "rn").collect().map(_.toString).sorted.toSeq
+    val b = Linking.linkBySurface(mentions(Map.empty).drop("facets"), gaz)
+      .select("code", "score", "rn").collect().map(_.toString).sorted.toSeq
+    assert(a == b)
+    // a NULL keyword array inside the map degrades to surface-only scoring
+    // (not a dropped mention: flatten would null out on the nested null)
+    val nullKw = Linking.linkFaceted(mentions(Map("severity" -> null)), gaz)
+      .select("code", "score", "rn").collect().map(_.toString).sorted.toSeq
+    assert(nullKw == b)
+  }
 }

@@ -78,4 +78,16 @@ class MultimodalSpec extends GraftSuite {
     }
   }
 
+  test("mm_features fake decode: byte- and order-sensitive, SQL-shaped") {
+    val a = Multimodal.fakeDecode("abcd".getBytes("UTF-8"), 4)
+    val b = Multimodal.fakeDecode("abce".getBytes("UTF-8"), 4)
+    val c = Multimodal.fakeDecode("dcba".getBytes("UTF-8"), 4)
+    assert(a.toSeq != b.toSeq && a.toSeq != c.toSeq)
+    assert(Multimodal.fakeDecode("abcd".getBytes("UTF-8"), 4).toSeq == a.toSeq)
+    // the restated arithmetic: tap0 of "abcd" with dims=4 is 1*'a'=97,
+    // v = (97 * 2654435761 + 1) mod 2^31, f0 = v/2^31*2-1 as float
+    val v = ((97L % 2147483648L) * 2654435761L + 1L) % 2147483648L
+    assert(a(0) == (v.toDouble / 2147483648.0 * 2.0 - 1.0).toFloat)
+    assert(Multimodal.fakeDecode(Array.empty[Byte], 4).length == 4)
+  }
 }

@@ -105,9 +105,9 @@ class PipelineSpec extends GraftSuite {
     val t1 = Pipeline.triples(spark, cfg).collect().toSet
     val spark2 = spark
     import spark2.implicits._
-    val t = Pipeline.turns(spark, cfg).toDF().repartition(17)
-    val m = Pipeline.mentions(spark, cfg, t)
-    val l = Pipeline.linked(spark, cfg, m)
+    val (turns, gaz, gazDf) = Pipeline.synthetic(spark, cfg)
+    val t = turns.repartition(17)
+    val l = Pipeline.linked(t, gaz, gazDf)
     val t2 = graft.operators.Triples.all(graft.operators.Aggregation.perTurn(l), t)
       .collect().toSet
     assert(t1 === t2)
@@ -167,9 +167,8 @@ class PipelineSpec extends GraftSuite {
         h.expressions.collect { case a: Attribute => a.name }
       }.filter(_ == Seq("conv_id", "turn_idx", "source", "code"))
       assert(perTurnReuse.size === 1, plan.treeString)
-      val t = Pipeline.turns(spark, cfg).toDF()
-      val turnAgg = graft.operators.Aggregation.perTurn(
-        Pipeline.linked(spark, cfg, Pipeline.mentions(spark, cfg, t)))
+      val (t, gaz, gazDf) = Pipeline.synthetic(spark, cfg)
+      val turnAgg = graft.operators.Aggregation.perTurn(Pipeline.linked(t, gaz, gazDf))
       assert(turnAgg.count() > 0)
       assert(turnAgg.filter(col("conv_id").isNull || col("turn_idx").isNull)
         .count() === 0)
@@ -188,5 +187,70 @@ class PipelineSpec extends GraftSuite {
       .filter(_.pred == "mentions").collect().map(_.confidence).distinct.sorted
     assert(confs.forall(c => Set(1.0 / 3, 2.0 / 3, 1.0).exists(e => math.abs(c - e) < 1e-9)))
     assert(confs.length >= 2, "expected ensemble disagreement in the corpus")
+  }
+
+  test("stage tables are cross-session artifacts again: a fresh catalog " +
+      "re-registers the bucketed tables from the parquet dir and the " +
+      "read-back still plans ZERO shuffles") {
+    def shuffles(df: org.apache.spark.sql.DataFrame): Int =
+      graft.util.PlanOps.executedShuffleExchanges(df)
+    val cfg = Pipeline.Config(nConvs = 15, nBase = 48)
+    val stage = SparkEntry.tmpDir("graft_xsession_stage")
+    val expected = Pipeline.triples(spark, cfg).collect().toSet
+    Pipeline.writeLinkedStage(spark, cfg, stage)
+    Pipeline.writeTurnAggStage(spark, cfg, stage)
+    // simulate "another session": drop the catalog entries (ADVICE r6 —
+    // they are also what a long-lived session must not accumulate), so the
+    // only remaining state is the stage DIR itself
+    Pipeline.dropStageTables(spark, stage)
+    assert(!spark.catalog.tableExists(Pipeline.stageTable(stage, "turn_agg")))
+    // the read path re-registers from the dir and produces identical rows
+    val reread = Pipeline.triplesFromStage(spark, cfg, stage)
+    assert(reread.collect().toSet == expected)
+    // ...and the re-registered table still carries the bucket spec: the
+    // per-conv merge over it plans zero exchanges, same as the writer's
+    // session (PipelineSpec's assert, now across the catalog boundary)
+    val conv = graft.operators.Aggregation.perConv(
+      spark.table(Pipeline.stageTable(stage, "turn_agg")))
+    assert(shuffles(conv) === 0)
+    Pipeline.dropStageTables(spark, stage)
+  }
+
+  test("stage tables are written zstd: the parquet footers say so, not " +
+      "just the option string") {
+    val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
+    val stage = SparkEntry.tmpDir("graft_codec_stage")
+    Pipeline.writeLinkedStage(spark, cfg, stage)
+    val hconf = spark.sessionState.newHadoopConf()
+    val dir = new org.apache.hadoop.fs.Path(s"$stage/linked")
+    val fs = dir.getFileSystem(hconf)
+    val parts = fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
+      try {
+        val codecs = reader.getFooter.getBlocks.get(0).getColumns
+          .asInstanceOf[java.util.List[
+            org.apache.parquet.hadoop.metadata.ColumnChunkMetaData]]
+        assert(codecs.get(0).getCodec.toString === "ZSTD",
+          s"stage file $p not zstd-compressed")
+      } finally reader.close()
+    }
+    Pipeline.dropStageTables(spark, stage)
+  }
+
+  test("stage tables of two dirs whose path hashCodes collide stay apart") {
+    val root = SparkEntry.tmpDir("graft_stage_collide")
+    val (a, b) = (s"$root/Aa", s"$root/BB")
+    assert(a.hashCode == b.hashCode)
+    val small = Pipeline.Config(nConvs = 6, nBase = 32)
+    Pipeline.writeLinkedStage(spark, small, a)
+    Pipeline.writeLinkedStage(spark, small.copy(nConvs = 12), b)
+    Pipeline.writeTurnAggStage(spark, small, a)
+    try assert(Pipeline.triplesFromStage(spark, small, a).collect().toSet ===
+      Pipeline.triples(spark, small).collect().toSet)
+    finally Seq(a, b).foreach(Pipeline.dropStageTables(spark, _))
   }
 }

@@ -65,8 +65,8 @@ class ScaleTechniquesSpec extends GraftSuite {
     import graft.operators.{Aggregation, Export}
     import org.apache.spark.sql.types._
     val cfg = Pipeline.Config(nConvs = 8, nBase = 48)
-    val l = Pipeline.linked(spark, cfg,
-      Pipeline.mentions(spark, cfg, Pipeline.turns(spark, cfg).toDF()))
+    val (turns, gaz, gazDf) = Pipeline.synthetic(spark, cfg)
+    val l = Pipeline.linked(turns, gaz, gazDf)
     val convAgg = Aggregation.perConv(Aggregation.perTurn(l)).cache()
     val json = Export.conceptJson(convAgg)
     assert(json.count() == convAgg.select("conv_id").distinct().count())

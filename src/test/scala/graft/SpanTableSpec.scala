@@ -171,7 +171,7 @@ class SpanTableSpec extends GraftSuite {
   test("corpus: tiling holds on the real pipeline mentions (incl. zero-span turns)") {
     val cfg = Pipeline.Config(12, 48)
     val turns = Pipeline.turns(spark, cfg).toDF().cache()
-    val mentions = Pipeline.mentions(spark, cfg, turns)
+    val mentions = Pipeline.mentions(turns, sources.Gazetteer.rows(cfg.nBase).toArray)
     val tiles = SpanTable.tile(mentions, turns)
     val bad = tiles.groupBy("conv_id", "turn_idx", "try_index")
       .agg(sum(SpanTable.origLen(col("chunk"))).as("tiled"))

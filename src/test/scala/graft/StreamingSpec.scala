@@ -23,7 +23,7 @@ class StreamingSpec extends GraftSuite {
   /** Batch-reference triples over the given turns. */
   private def batchTriples(ts: Seq[Turn]): Seq[String] = {
     val tdf = ts.toDS().toDF()
-    val m = Pipeline.mentions(spark, cfg, tdf)
+    val m = Pipeline.mentions(tdf, gaz)
     Triples.all(Aggregation.perTurn(Linking.link(m, gazDf)), tdf)
       .select("subj", "pred", "obj", "confidence")
       .collect().map(_.toString).sorted.toSeq
@@ -72,7 +72,7 @@ class StreamingSpec extends GraftSuite {
     // one evaluation of the batch's triples plan (several branches read
     // the turns, so this is a multiple of the row count)
     val once = evaluated {
-      Triples.all(Aggregation.perTurn(Linking.link(Pipeline.mentions(spark, cfg, batch),
+      Triples.all(Aggregation.perTurn(Linking.link(Pipeline.mentions(batch, gaz),
         gazDf)), batch).write.format("noop").mode("overwrite").save()
     }
     assert(once >= allTurns.size)
