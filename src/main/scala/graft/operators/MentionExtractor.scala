@@ -4,6 +4,8 @@ import graft.model.{GazRow, Mention, Segment}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
 
+import java.util.Locale
+
 import scala.collection.mutable
 
 /** Mention detection (SURVEY.md §2.9): the dictionary-NER core. Three
@@ -38,7 +40,10 @@ object MentionExtractor {
     case "PT" => 0; case "FN" => 1; case _ => 2
   }
 
-  /** ASCII tokenizer with char offsets over the ORIGINAL text — matching
+  /** Tokenizer with char offsets over the ORIGINAL text, lowercased under
+    * `Locale.ROOT` as the ASCII hot path ([[AhoCorasick.tokenIdRange]])
+    * lowercases (a default-locale `toLowerCase` turns `I` into a dotless
+    * `ı` under a Turkish locale, and then no ASCII text matches) — matching
     * never mutates the text, so span offsets are exact by construction (the
     * reference needs difflib re-alignment `src/algorithms/llm_ner.py:185-256`
     * because its LLM rewrites text; we don't). */
@@ -47,7 +52,7 @@ object MentionExtractor {
     val toks = new Array[String](n)
     var i = 0
     while (i < n) {
-      toks(i) = text.substring(starts(i), ends(i)).toLowerCase
+      toks(i) = text.substring(starts(i), ends(i)).toLowerCase(Locale.ROOT)
       i += 1
     }
     (toks, starts, ends)

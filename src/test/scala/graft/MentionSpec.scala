@@ -4,6 +4,8 @@ import graft.model.{GazRow, Mention}
 import graft.operators.{MentionExtractor, Segmentation}
 import graft.sources.{Gazetteer, SynthTranscripts}
 
+import java.util.Locale
+
 /** Independent naive O(n*m) oracle matcher: no trie, no shared match code —
   * scans every token position against every alias (FIXTURES.md §3 oracle). */
 object NaiveMatcher {
@@ -179,5 +181,31 @@ class MentionSpec extends GraftSuite {
     val m1codes = MentionExtractor.extract(segs.toDS(), gazB)
       .filter($"try_index" === 1).select($"code").as[String].collect().toSet
     assert(!m1codes.contains("300") && m1codes.contains("400"))
+  }
+
+  test("extraction lowercases under Locale.ROOT whatever the default locale") {
+    // Under a Turkish default locale "I".toLowerCase() is a dotless "ı": a
+    // pattern built that way never matches ASCII text, which the hot path
+    // lowercases by ASCII rule. The rows are unique to this test, so the
+    // content-keyed automaton cache holds no variant built under another
+    // locale.
+    val gaz = Array(
+      GazRow("CLOCALE1", "SNOMEDCT_US", "PT", "Y", "LOC1", "Insulin Lispro Loctest"),
+      GazRow("CLOCALE2", "SNOMEDCT_US", "PT", "Y", "LOC2", "insülin aspart loctest"))
+    val text = "gave insulin lispro loctest then Insülin Aspart Loctest"
+    val saved = Locale.getDefault
+    try {
+      Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+      val fp = MentionExtractor.gazFingerprint(gaz)
+      Seq(0, 2).foreach { v =>
+        val variant = MentionExtractor.variantFor(fp, gaz, v)
+        val (starts, ends, n) = MentionExtractor.tokenRanges(text)
+        val ids = Array.tabulate(n)(i =>
+          variant.ac.tokenIdRange(text, starts(i), ends(i), variant.stem))
+        val codes = ExtractorReference.findAll(variant.ac, ids)
+          .map(h => variant.payloads(h._3).code)
+        assert(codes.sorted == Seq("LOC1", "LOC2"), s"variant $v")
+      }
+    } finally Locale.setDefault(saved)
   }
 }
