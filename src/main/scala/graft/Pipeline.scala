@@ -44,13 +44,17 @@ object Pipeline {
       turns.sparkSession.sparkContext.broadcast(gaz)).toDF()
 
   /** [[mentions]] with preferred names and the ICD10CM crosswalk joined
-    * from `gazDf`, the frame of the same gazetteer. */
+    * from `gazDf`, the frame of the same gazetteer. Lazy except for the
+    * lookup tables: the second call on a new gazetteer (or on one whose
+    * kept tables were unpersisted) runs the jobs that build them (see
+    * [[Linking.link]]). */
   def linked(turns: DataFrame, gaz: Array[GazRow], gazDf: DataFrame): DataFrame =
     Linking.link(mentions(turns, gaz), gazDf)
 
-  /** The triples of `turns` (lazy; the caller writes or counts). The
-    * predicate branches read turn metadata only, so `meta` may be a
-    * text-free frame of the same turns.
+  /** The triples of `turns` (lazy, the caller writes or counts, except
+    * that a call on a new gazetteer may run [[linked]]'s lookup-table
+    * build). The predicate branches read turn metadata only, so `meta` may
+    * be a text-free frame of the same turns.
     *
     * Deliberately NOT cached: the four predicate branches of [[Triples.all]]
     * recompute their turns input and share one extraction→perTurn

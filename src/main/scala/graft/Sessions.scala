@@ -51,9 +51,15 @@ object Sessions {
     * first: it removes the CacheManager entries, and an RDD-level unpersist
     * alone leaves a dead registration that turns the next `.cache()` of the
     * same plan into a silent no-op. The RDD sweep then catches
-    * `localCheckpoint` blocks, which live outside the catalog. */
+    * `localCheckpoint` blocks, which live outside the catalog. It spares
+    * the lookup tables [[graft.operators.Linking]] keeps per gazetteer: at
+    * most three gazetteers' worth, which the next query of the same
+    * gazetteer joins instead of rebuilding. */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    val kept = graft.operators.Linking.keptRddIds(spark.sparkContext)
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!kept(id)) rdd.unpersist(false)
+    }
   }
 }

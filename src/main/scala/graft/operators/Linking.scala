@@ -1,8 +1,16 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** Entity linking (SURVEY.md §2.3 J1/J2, §2.11 L1-L4).
   *
@@ -13,6 +21,14 @@ import org.apache.spark.sql.functions._
   * The one exception is [[linkFaceted]]'s per-combo ranking, whose
   * cardinality is caller-data-driven — it broadcasts only under a counted
   * threshold and falls back to a shuffle join above it.
+  *
+  * [[link]]'s two lookup tables ([[preferredPerCode]], [[icd10Crosswalk]])
+  * depend on the gazetteer alone, so like the reference's one `umls_df`
+  * per process they are built once per gazetteer content and kept, as
+  * local checkpoints, in a cache of [[CacheCapacity]] gazetteers (next to
+  * [[MentionExtractor]]'s automaton cache). Every later `link` of that
+  * gazetteer joins the kept tables instead of re-running their scan,
+  * shuffle, sort and window.
   */
 object Linking {
 
@@ -52,12 +68,19 @@ object Linking {
   }
 
   /** J1 + J2: enrich mentions with the preferred concept name of their own
-    * vocabulary and the ICD10CM crosswalk. Both joins broadcast. */
+    * vocabulary and the ICD10CM crosswalk. Both joins broadcast.
+    *
+    * The two lookup tables come from the gazetteer cache (see
+    * [[lookupTables]]): the first `link` of a gazetteer plans them from
+    * `gaz` like any other input, and a later one joins their kept local
+    * checkpoints. So a call may run Spark jobs before it returns: the
+    * second call on a new gazetteer builds its tables. */
   def link(mentions: DataFrame, gaz: DataFrame): DataFrame = {
-    val pref = preferredPerCode(gaz)
+    val (prefTable, xwalkTable) = lookupTables(gaz)
+    val pref = prefTable
       .withColumnRenamed("sab", "p_sab").withColumnRenamed("code", "p_code")
       .withColumnRenamed("cui", "p_cui")
-    val xwalk = icd10Crosswalk(gaz).withColumnRenamed("cui", "x_cui")
+    val xwalk = xwalkTable.withColumnRenamed("cui", "x_cui")
     mentions
       .join(broadcast(pref),
         mentions("cui") === pref("p_cui") &&
@@ -67,6 +90,123 @@ object Linking {
       .drop("p_cui", "p_sab", "p_code", "preferred_name")
       .join(broadcast(xwalk), mentions("cui") === xwalk("x_cui"), "left")
       .drop("x_cui")
+  }
+
+  /** One gazetteer's content: the SparkContext whose block managers hold
+    * its checkpoints, its canonicalized analyzed plan (a `LocalRelation`
+    * gazetteer carries its rows there), and every input file with its
+    * length and modification time, so a file gazetteer rewritten at the
+    * same path is a new key. */
+  private final case class GazKey(sc: SparkContext, plan: LogicalPlan,
+      files: Seq[(String, Long, Long)])
+
+  private def keyOf(gaz: DataFrame): GazKey = {
+    val sc = gaz.sparkSession.sparkContext
+    val files = gaz.inputFiles.toSeq.sorted.map { f =>
+      val p = new Path(f)
+      val st = p.getFileSystem(sc.hadoopConfiguration).getFileStatus(p)
+      (f, st.getLen, st.getModificationTime)
+    }
+    GazKey(sc, gaz.queryExecution.analyzed.canonicalized, files)
+  }
+
+  /** A gazetteer's two lookup tables, each a local checkpoint. */
+  private final class Tables(val pref: DataFrame, val xwalk: DataFrame,
+      val rdds: Seq[RDD[InternalRow]]) {
+    /** Each checkpoint's stored partitions, -1 once unregistered. Spark
+      * lists no storage for a checkpoint that stored no bytes (an empty
+      * crosswalk), so that one counts 0. */
+    private def stored: Seq[Int] = {
+      val sc = rdds.head.sparkContext
+      val cached = sc.getRDDStorageInfo.map(i => i.id -> i.numCachedPartitions).toMap
+      val registered = sc.getPersistentRDDs
+      rdds.map(r => if (registered.contains(r.id)) cached.getOrElse(r.id, 0) else -1)
+    }
+    private val built = stored
+    /** Both checkpoints still hold what their build stored: an unpersist
+      * drops an RDD's registration, a lost executor its blocks. */
+    def live: Boolean = stored == built
+    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
+  }
+
+  private def checkpointed(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val cp = df.localCheckpoint()
+    (cp, cp.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get)
+  }
+
+  /** Gazetteers whose tables are kept: 3, as many as
+    * [[MentionExtractor.CacheCapacity]] holds automaton sets for, so the
+    * driver memory and executor blocks held are bounded by three
+    * gazetteers' lookup tables (each far smaller than its gazetteer). */
+  private[graft] val CacheCapacity = 3
+
+  private def lru[V](onEvict: V => Unit) =
+    new java.util.LinkedHashMap[GazKey, V](8, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[GazKey, V]): Boolean =
+        size() > CacheCapacity && { onEvict(e.getValue); true }
+    }
+
+  /** Gazetteers linked once and not yet admitted to `tables`. Both maps
+    * are guarded by `tables`' lock. */
+  private val seen = lru[java.lang.Boolean](_ => ())
+  private val tables = lru[Tables](_.release())
+
+  /** Forgets, without unpersisting, every entry of a stopped SparkContext:
+    * its blocks went with it, an unpersist would call its stopped RPC
+    * environment, and a kept key would pin the context in driver memory. */
+  private def dropStopped(): Unit = {
+    seen.keySet.removeIf(_.sc.isStopped)
+    tables.keySet.removeIf(_.sc.isStopped)
+  }
+
+  /** The ids of the checkpointed RDDs `sc` keeps for linking.
+    * [[graft.Sessions.sweep]] spares them: the cache is bounded by
+    * [[CacheCapacity]] and later queries of that gazetteer join them. */
+  private[graft] def keptRddIds(sc: SparkContext): Set[Int] =
+    tables.synchronized {
+      tables.asScala.collect { case (k, t) if k.sc eq sc => t.rdds.map(_.id) }.flatten.toSet
+    }
+
+  /** `gaz`'s preferred-name and crosswalk tables.
+    *
+    * Admission on second use: the first call on a gazetteer returns the
+    * window plans over `gaz` and runs nothing, so a one-shot link pays no
+    * build; the second call builds the kept tables (two eager
+    * `localCheckpoint`s, i.e. Spark jobs on the calling thread) and every
+    * later call joins them. An entry whose blocks are gone (an unpersist
+    * of every RDD, a lost executor) is dropped, and the call plans the
+    * windows again as a first use would. A local checkpoint is not fault
+    * tolerant: a query already planned over the blocks of a lost executor
+    * fails ("Checkpoint block not found") and must be re-planned through
+    * `link`. An evicted entry, or the loser of two threads building the
+    * same gazetteer at once, is unpersisted. */
+  private def lookupTables(gaz: DataFrame): (DataFrame, DataFrame) = {
+    val key = keyOf(gaz)
+    // Right: a live entry; Left(build): none, build one now or not yet
+    val state = tables.synchronized {
+      dropStopped()
+      Option(tables.get(key)) match {
+        case Some(t) if t.live => Right(t)
+        case Some(t) => tables.remove(key); t.release(); seen.put(key, true); Left(false)
+        case None => Left(seen.remove(key) != null || { seen.put(key, true); false })
+      }
+    }
+    state match {
+      case Right(t) => (t.pref, t.xwalk)
+      case Left(false) => (preferredPerCode(gaz), icd10Crosswalk(gaz))
+      case Left(true) =>
+        // built outside the lock: the jobs take seconds on a big gazetteer
+        val (pref, p) = checkpointed(preferredPerCode(gaz))
+        val (xwalk, x) = checkpointed(icd10Crosswalk(gaz))
+        val built = new Tables(pref, xwalk, Seq(p, x))
+        val kept = tables.synchronized {
+          dropStopped()
+          val again = tables.get(key)
+          if (again != null && again.live) { built.release(); again }
+          else { Option(tables.put(key, built)).foreach(_.release()); built }
+        }
+        (kept.pref, kept.xwalk)
+    }
   }
 
   /** L1 candidate generation + L2 selection + L3 exact resolution, fully

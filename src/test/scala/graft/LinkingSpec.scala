@@ -4,11 +4,14 @@ import graft.operators.{LexicalIndex, Linking}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
-/** L1-L4 linking (SURVEY §2.11): preferred-term joins, faceted search's
-  * broadcast guard, and the persisted lexical index that must score exactly
-  * like the on-the-fly surface. */
+/** L1-L4 linking (SURVEY §2.11): preferred-term joins and their
+  * per-gazetteer lookup-table cache, faceted search's broadcast guard, and
+  * the persisted lexical index that must score exactly like the on-the-fly
+  * surface. */
 class LinkingSpec extends GraftSuite {
   import spark.implicits._
 
@@ -57,6 +60,140 @@ class LinkingSpec extends GraftSuite {
       .select($"code", $"concept_name").as[(String, String)].collect().toMap
     assert(out("100") == "renal failure")
     assert(out("101") == "renal insufficiency")
+  }
+
+  /** One mention of (`cui`, SNOMEDCT_US, `code`) whose alias is its
+    * concept_name until linking replaces it. */
+  private def mentionOf(cui: String, code: String): DataFrame =
+    Seq(("cv", 0, 0, 0, 5, "alias", cui, "SNOMEDCT_US", code, "alias", 0.99))
+      .toDF("conv_id", "turn_idx", "try_index", "start", "end", "surface",
+        "cui", "source", "code", "concept_name", "acc")
+
+  /** Every node of `df`'s final executed plan, through AQE stages; runs
+    * the query first so the final plan exists. */
+  private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  private def linkedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("link cache: the second link of a gazetteer joins kept tables, " +
+      "with no window and no gazetteer shuffle, and the same rows") {
+    val gaz = gazetteer(
+      ("C71", "SNOMEDCT_US", "SY", "N", "710", "cache alias"),
+      ("C71", "SNOMEDCT_US", "PT", "Y", "710", "cache preferred"),
+      ("C71", "ICD10CM", "PT", "Y", "X71", "cache icd"))
+    val m = mentionOf("C71", "710")
+    val first = Linking.link(m, gaz)
+    val second = Linking.link(m, gaz)
+    val (n1, n2) = (executedNodes(first), executedNodes(second))
+    assert(n1.exists(_.isInstanceOf[WindowExec]), "the first link plans the windows")
+    assert(n1.exists(_.isInstanceOf[ShuffleExchangeExec]))
+    assert(!n2.exists(_.isInstanceOf[WindowExec]), n2.mkString("\n"))
+    assert(!n2.exists(_.isInstanceOf[ShuffleExchangeExec]), n2.mkString("\n"))
+    assert(linkedRows(second) == linkedRows(first))
+    assert(second.select($"concept_name", $"icd10_code").as[(String, String)].collect()
+      .toSeq == Seq(("cache preferred", "X71")))
+  }
+
+  test("link cache: a parquet gazetteer rewritten in place at the same path " +
+      "links its new preferred name") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    val dir = SparkEntry.tmpDir("graft_link_rewrite")
+    def write(name: String, to: String): Unit =
+      gazetteer(("C72", "SNOMEDCT_US", "PT", "Y", "720", name))
+        .coalesce(1).write.parquet(to)
+    def part(d: String): Path = Files.list(java.nio.file.Paths.get(d)).toArray
+      .map(_.asInstanceOf[Path]).find(_.getFileName.toString.startsWith("part-")).get
+    val m = mentionOf("C72", "720")
+    def linkedName(): Seq[String] =
+      Linking.link(m, spark.read.parquet(s"$dir/gaz")).select($"concept_name").as[String]
+        .collect().toSeq
+    write("old name", s"$dir/gaz")
+    assert(linkedName() == Seq("old name"))
+    assert(linkedName() == Seq("old name")) // kept from here on
+    // new bytes under the old file names: only the files' length and
+    // modification time tell the two gazetteers apart
+    write("the new preferred name", s"$dir/next")
+    val (oldPart, newPart) = (part(s"$dir/gaz"), part(s"$dir/next"))
+    Thread.sleep(5) // a later modification time even on a coarse clock
+    Files.copy(newPart, oldPart, StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(newPart.resolveSibling(s".${newPart.getFileName}.crc"),
+      oldPart.resolveSibling(s".${oldPart.getFileName}.crc"),
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(linkedName() == Seq("the new preferred name"))
+  }
+
+  /** The ids of the RDDs persisted while `body` ran. */
+  private def newPersisted(body: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before).toSet
+  }
+
+  test("link cache: Sessions.sweep spares the kept tables, and once they " +
+      "are unpersisted link plans the windows, rebuilds, and the rows stay correct") {
+    val gaz = gazetteer(
+      ("C73", "SNOMEDCT_US", "SY", "N", "730", "sweep alias"),
+      ("C73", "SNOMEDCT_US", "PT", "Y", "730", "sweep preferred"))
+    val m = mentionOf("C73", "730")
+    val expected = linkedRows(Linking.link(m, gaz))
+    val kept = newPersisted(assert(linkedRows(Linking.link(m, gaz)) == expected))
+    assert(kept.nonEmpty)
+    Sessions.sweep(spark)
+    assert(kept.forall(spark.sparkContext.getPersistentRDDs.contains))
+    // the kept tables are joined, not released: the crosswalk of this
+    // gazetteer is empty and stores no bytes
+    assert(linkedRows(Linking.link(m, gaz)) == expected)
+    assert(kept.forall(spark.sparkContext.getPersistentRDDs.contains))
+    // what an unpersist of every RDD leaves, and a lost executor's blocks
+    kept.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+    assert(linkedRows(Linking.link(m, gaz)) == expected)
+    assert(newPersisted(assert(linkedRows(Linking.link(m, gaz)) == expected)).nonEmpty)
+  }
+
+  test("link cache: a 4th kept gazetteer evicts the oldest and unpersists " +
+      "its tables") {
+    val gazs = (1 to Linking.CacheCapacity + 1).map(i =>
+      gazetteer(("C74", "SNOMEDCT_US", "PT", "Y", "740", s"evict $i")))
+    val m = mentionOf("C74", "740")
+    def keep(g: DataFrame): Set[Int] =
+      newPersisted { Linking.link(m, g); Linking.link(m, g) }
+    def persisted(ids: Set[Int]): Boolean =
+      ids.forall(spark.sparkContext.getPersistentRDDs.contains)
+    val oldest = keep(gazs.head)
+    assert(oldest.nonEmpty && persisted(oldest))
+    gazs.tail.init.foreach(keep)
+    assert(persisted(oldest))
+    assert(keep(gazs.last).nonEmpty)
+    assert(!oldest.exists(spark.sparkContext.getPersistentRDDs.contains))
+  }
+
+  test("link cache: entries of a stopped SparkContext are dropped, not " +
+      "unpersisted, so later admissions evict without error") {
+    // a JVM runs one SparkContext at a time and the suites share theirs,
+    // so the two sessions run in a child JVM on this test's classpath
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        StoppedContextCheck.getClass.getName.stripSuffix("$"))
+    val log = new java.io.File(SparkEntry.tmpDir("graft_stopped_ctx"), "child.log")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(log).start()
+    val exited = proc.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)
+    if (!exited) proc.destroyForcibly().waitFor()
+    val out = scala.io.Source.fromFile(log).mkString
+    assert(exited && proc.exitValue == 0 && out.contains(StoppedContextCheck.Ok),
+      out.linesIterator.toSeq.takeRight(40).mkString("\n"))
   }
 
   test("linkFaceted over maxBroadcastCombos: shuffle join, identical results") {
@@ -197,5 +334,43 @@ class LinkingSpec extends GraftSuite {
     val nullKw = Linking.linkFaceted(mentions(Map("severity" -> null)), gaz)
       .select("code", "score", "rn").collect().map(_.toString).sorted.toSeq
     assert(nullKw == b)
+  }
+}
+
+/** The child-JVM half of LinkingSpec's stopped-context test: keeps one
+  * gazetteer's lookup tables in a session, stops it, then admits
+  * [[Linking.CacheCapacity]] new gazetteers in a second session, the last
+  * of which evicts the oldest entry. Prints [[Ok]] when all of it ran. */
+object StoppedContextCheck {
+  val Ok = "STOPPED-CONTEXT-OK"
+
+  private def keep(spark: org.apache.spark.sql.SparkSession, i: Int): Unit = {
+    import spark.implicits._
+    val gaz = Seq(("C75", "SNOMEDCT_US", "PT", "Y", "750", s"stopped $i"))
+      .toDF("cui", "sab", "tty", "ispref", "code", "str")
+    val m = Seq(("cv", 0, 0, 0, 5, "alias", "C75", "SNOMEDCT_US", "750", "alias", 0.99))
+      .toDF("conv_id", "turn_idx", "try_index", "start", "end", "surface",
+        "cui", "source", "code", "concept_name", "acc")
+    Linking.link(m, gaz).collect()
+    val got = Linking.link(m, gaz).select($"concept_name").as[String].collect().toSeq
+    require(got == Seq(s"stopped $i"), got)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val ran = scala.util.Try {
+      val first = Sessions.local(1)
+      keep(first, 0)
+      require(Linking.keptRddIds(first.sparkContext).nonEmpty)
+      first.stop()
+      val second = Sessions.local(1)
+      try {
+        (1 to Linking.CacheCapacity).foreach(i => keep(second, i))
+        require(Linking.keptRddIds(first.sparkContext).isEmpty)
+        require(Linking.keptRddIds(second.sparkContext).size == 2 * Linking.CacheCapacity)
+      } finally second.stop()
+    }
+    ran.failed.foreach(_.printStackTrace())
+    if (ran.isSuccess) println(Ok)
+    sys.exit(if (ran.isSuccess) 0 else 1)
   }
 }

@@ -175,6 +175,48 @@ class PipelineSpec extends GraftSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
+  test("with AQE on and the gazetteer's lookup tables kept, one evaluation " +
+      "of Pipeline.triples extracts once and reuses the perTurn exchange") {
+    // the benchmark's plan walk (its MentionExtractor.passes and
+    // Triples.reused_exchanges) over the final adaptive plan. A cached
+    // relation under the linking joins (a `.persist()` of the lookup
+    // tables) broke this reuse under AQE while the AQE-off plan kept it
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{MapPartitionsExec, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.types.ObjectType
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val cfg = Pipeline.Config(nConvs = 15, nBase = 40)
+    Pipeline.triples(spark, cfg)
+    Pipeline.triples(spark, cfg) // the second link keeps the tables
+    val triples = Pipeline.triples(spark, cfg)
+    triples.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case o => o +: (o.children ++ o.subqueries).flatMap(walk)
+    }
+    val nodes = walk(triples.queryExecution.executedPlan)
+    // the synthetic turn generator is a flatMap too: the extraction is the
+    // mapPartitions that emits mentions
+    assert(nodes.count {
+      case m: MapPartitionsExec =>
+        m.outputObjAttr.dataType == ObjectType(classOf[graft.model.Mention])
+      case _ => false
+    } === 1, nodes.mkString("\n"))
+    val reusedPerTurn = nodes.collect { case r: ReusedExchangeExec => r.outputPartitioning }
+      .collect { case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name } }
+      .filter(_ == Seq("conv_id", "turn_idx", "source", "code"))
+    assert(reusedPerTurn.size === 1, nodes.mkString("\n"))
+    // both linking broadcasts read the kept checkpoints
+    val kept = graft.operators.Linking.keptRddIds(spark.sparkContext)
+    assert(nodes.collect { case r: RDDScanExec => r.rdd.id }.count(kept) === 2,
+      nodes.mkString("\n"))
+  }
+
   test("entry(): staged pipeline through the resumable sink, read back, rows > 0") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
