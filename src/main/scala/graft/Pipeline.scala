@@ -106,22 +106,20 @@ object Pipeline {
     * scan deletes the read-back Exchange outright (plan-asserted in
     * PipelineSpec). The write repartitions by the bucket key first — one
     * healthy file per bucket (the shuffle-free alternative scatters
-    * nTasks × nBuckets tiny row groups and measured 1.35× slower end-to-
+    * nTasks × StageBuckets tiny row groups and measured 1.35× slower end-to-
     * end) — so the shuffle the r5 shape paid TWICE on read-back (agg +
     * join) is paid exactly ONCE, at write time. Bucketing needs the
     * session catalog, so stage tables get a dir-scoped table name next to
     * their parquet path. */
-  /** Bucket count for the stage tables. Tunable (`graft.stage.buckets`
-    * sys prop) because it fixes the zero-exchange read-back's parallelism
-    * (one task per bucket): a cluster deployment must size it to its
-    * total executor-core count, which this box cannot anticipate. On
+  /** Bucket count for the stage tables: a constant, because the
+    * zero-exchange read-back's parallelism is one task per bucket and a
+    * writer and any cross-session reader of the same stage dir must agree
+    * on it (the catalog re-declare in [[ensureStageTable]] uses it). On
     * local[32] an interleaved A/B of 32/64/128 buckets read a wash
     * (23.5/25.9/23.9s staged end-to-end at mult=64) — task-wave packing
-    * is not the local staged bottleneck — so the default stays 32 (= the
-    * bench's max core count). A writer and any cross-session reader of
-    * the same stage dir must use the same value (the catalog re-declare
-    * in [[ensureStageTable]] uses this constant). */
-  private val StageBuckets = sys.props.getOrElse("graft.stage.buckets", "32").toInt
+    * is not the local staged bottleneck — so it is 32 (= the bench's max
+    * core count). */
+  private val StageBuckets = 32
 
   /** Codec for the stage-table parquet. zstd, not Spark's snappy default:
     * stage tables are write-once/read-once intermediate data whose cost is

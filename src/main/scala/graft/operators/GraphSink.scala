@@ -7,50 +7,58 @@ import org.apache.spark.sql.functions._
 /** Checkpointed, resumable graph sink (SURVEY.md §2.10 + §2.11 T2; north
   * rule "resumable from checkpoint with per-partition lineage + metrics").
   *
-  * The triples table is hash-bucketed by conv_id into `nBuckets` partition
+  * The triples table is hash-bucketed by conv_id into [[Buckets]] partition
   * directories (parquet `partitionBy("bucket")` — the Iceberg-less
   * equivalent of a snapshot commit per partition; the sandbox has no
   * Iceberg jar, SURVEY §7.4 risk 5). A `manifest` table records one row
-  * per committed bucket: (run_id, bucket, triple_count, checksum,
-  * committed_at-free — no wall clock, the run_id is the lineage key).
+  * per committed bucket: (bucket, triple_count, checksum, run_id) — no
+  * wall clock, the run_id is the lineage key.
   *
-  * Resume = left_anti join of the bucket space against the manifest (J4):
+  * Resume = the bucket space less the manifest's buckets (J4):
   * already-committed buckets are skipped; re-running after a partial
   * failure is idempotent because each bucket directory is overwritten
   * atomically ([[PartitionedParquet.scopedOverwrite]]) and the manifest row is
   * written only after the data commit.
+  *
+  * Contract: one writer per sink dir. A run owns every bucket the manifest
+  * does not name, so two concurrent writers on one dir would sweep each
+  * other's in-flight output.
   */
 object GraphSink {
 
-  def bucketCol(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets))
+  /** The bucket count of every sink dir — a constant, like
+    * [[LexicalIndex.NumShards]], so every writer, resume and reader of a
+    * dir agree on which bucket a conversation's triples live in (a resume
+    * under a second count would rewrite the other count's uncommitted
+    * buckets and duplicate rows the manifest already certifies). */
+  val Buckets = 16
+
+  def bucketCol = pmod(xxhash64(col("conv_id")), lit(Buckets))
 
   def manifestPath(dir: String) = s"$dir/_manifest"
 
   /** Per-bucket metrics of an already-bucketed triples DataFrame (bucket,
-    * triple_count, checksum, subj_approx_distinct). The checksum is an
-    * order-independent sum of row hashes — verifiable without re-reading in
-    * any row order; the distinct-subject metric is HyperLogLog++
-    * (`approx_count_distinct`) — the only distinct that is mergeable and
-    * constant-memory at the 10^12-triple scale SURVEY §2.4 names. */
+    * triple_count, checksum). The checksum is an order-independent xor of
+    * row hashes — verifiable without re-reading in any row order. */
   def metrics(withBucket: DataFrame): DataFrame =
     withBucket.groupBy("bucket")
       .agg(count(lit(1)).as("triple_count"),
         // bit_xor: order-independent and immune to ANSI-mode long overflow
-        bit_xor(xxhash64(col("subj"), col("pred"), col("obj"))).as("checksum"),
-        approx_count_distinct(col("subj")).as("subj_approx_distinct"))
+        bit_xor(xxhash64(col("subj"), col("pred"), col("obj"))).as("checksum"))
 
   /** The manifest table: one row per committed bucket, ([[metrics]]'
-    * four columns, run_id). Its two writers — [[writeResumable]] and
+    * three columns, run_id). Its two writers — [[writeResumable]] and
     * [[graft.streaming.StreamingTriples.commitBatch]] — write that one
     * schema, so every footer agrees and a plain read is the whole
     * manifest. All manifest readers go through here. */
   def readManifest(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(manifestPath(dir))
 
-  def committedBuckets(spark: SparkSession, dir: String): DataFrame =
+  /** The buckets the manifest names — at most [[Buckets]] ids. */
+  def committedBuckets(spark: SparkSession, dir: String): Seq[Long] =
     if (PartitionedParquet.exists(spark, manifestPath(dir)))
-      readManifest(spark, dir).select("bucket").distinct()
-    else spark.emptyDataFrame.withColumn("bucket", lit(0L)).limit(0).select("bucket")
+      readManifest(spark, dir).select("bucket").distinct().collect().map(_.getLong(0)).toSeq
+    else Seq.empty
 
   /** Write only the not-yet-committed buckets; returns #buckets written.
     *
@@ -61,15 +69,13 @@ object GraphSink {
     * files — one partition-pruned scan of only the new buckets — so the
     * manifest certifies the bytes on disk, not the pre-write plan, and the
     * observed-vs-manifest cross-check now also catches a torn file. */
-  def writeResumable(triples: DataFrame, dir: String, runId: String,
-      nBuckets: Int = 16, onlyBuckets: Option[Seq[Long]] = None): Long = {
+  def writeResumable(triples: DataFrame, dir: String, runId: String): Long = {
     val spark = triples.sparkSession
-    // the committed-bucket set is tiny by construction (≤ nBuckets rows per
-    // completed run) — collected once, it drives BOTH the resume anti-filter
-    // and the pruned metrics read-back
-    val doneList = committedBuckets(spark, dir).collect().map(_.getLong(0)).toSeq
+    // the committed-bucket set drives the stale sweep, the resume
+    // anti-filter and the pruned metrics read-back
+    val done = committedBuckets(spark, dir)
     def notDone(c: org.apache.spark.sql.Column) =
-      if (doneList.isEmpty) lit(true) else !c.isin(doneList: _*)
+      if (done.isEmpty) lit(true) else !c.isin(done: _*)
     // Stale-output sweep (ADVICE r3): a crashed prior attempt can leave
     // files in a NOT-yet-committed bucket; the scoped overwrite only
     // rewrites buckets present in THIS run's output, so a stale bucket that
@@ -79,22 +85,13 @@ object GraphSink {
     // are garbage by the resume contract (no manifest row ⇒ never read),
     // so delete them up front: the post-write on-disk state of every
     // not-done bucket is then exactly this run's output. Committed buckets
-    // are never touched, and an `onlyBuckets`-restricted run sweeps ONLY
-    // its own bucket range — concurrent writers on disjoint onlyBuckets
-    // stay safe (an unrestricted sweep would destroy a sibling's in-flight
-    // output). Driver-side FS ops on ≤ nBuckets directories.
-    val done = doneList.toSet
-    PartitionedParquet.deletePartitions(spark, s"$dir/triples", "bucket")(b =>
-      !done.contains(b) && onlyBuckets.forall(_.contains(b)))
-    val withBucket = triples.withColumn("bucket", bucketCol(nBuckets))
-    val restricted = onlyBuckets match {
-      case Some(bs) => withBucket.filter(col("bucket").isin(bs: _*))
-      case None     => withBucket
-    }
+    // are never touched. Driver-side FS ops on ≤ Buckets directories.
+    PartitionedParquet.deletePartitions(spark, s"$dir/triples", "bucket")(!done.contains(_))
     // in-flight lineage metric (SURVEY §2.11 T2 `observe()`): rows counted
     // DURING the data write, then cross-checked against the manifest
     val obs = org.apache.spark.sql.Observation(s"graft_sink_$runId")
-    val todo = restricted.filter(notDone(col("bucket")))
+    val todo = triples.withColumn("bucket", bucketCol)
+      .filter(notDone(col("bucket")))
       .observe(obs, count(lit(1)).as("rows_written"))
     // the scoped overwrite promotes partition dirs on the DRIVER, so the
     // v2 task-side committer does not apply to this write (it does apply
@@ -105,14 +102,8 @@ object GraphSink {
     val written = obs.get.getOrElse("rows_written", 0L).asInstanceOf[Long]
     if (written == 0L) return 0L
     // metrics derived from the committed files via a bucket-pruned scan
-    val readBack = readTriples(spark, dir)
-      .filter(notDone(col("bucket")))
-    val newOnly = onlyBuckets match {
-      case Some(bs) => readBack.filter(col("bucket").isin(bs: _*))
-      case None     => readBack
-    }
-    val metricsDf = metrics(newOnly)
-    val metricRows = metricsDf.collect() // ≤ nBuckets rows by construction
+    val metricsDf = metrics(readTriples(spark, dir).filter(notDone(col("bucket"))))
+    val metricRows = metricsDf.collect() // ≤ Buckets rows by construction
     // the observed-vs-on-disk cross-check runs BEFORE the manifest append
     // (the commit point): a mismatch — torn file, stale leftovers in a
     // not-yet-committed bucket — must abort WITHOUT durably committing

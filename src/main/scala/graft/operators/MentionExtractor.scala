@@ -151,10 +151,6 @@ object MentionExtractor {
         size() > CacheCapacity
     }
 
-  private[graft] def cacheSize: Int = cache.synchronized(cache.size())
-  private[graft] def cacheContains(fp: Long, v: Int): Boolean =
-    cache.synchronized(cache.containsKey((fp, v)))
-
   /** Every payload-relevant field gets its own multiply-accumulate step:
     * sab/code/ispref affect Payload content and variant-1 filtering, and a
     * commutative `str.hashCode + tty.hashCode` would let distinct (str,tty)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.Triple
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,23 +17,37 @@ import org.apache.spark.sql.functions._
   */
 object Triples {
 
-  def turnNode(conv: org.apache.spark.sql.Column, idx: org.apache.spark.sql.Column) =
+  def turnNode(conv: Column, idx: Column) =
     concat_ws("#", conv, idx)
 
-  private def conceptNode(source: org.apache.spark.sql.Column, code: org.apache.spark.sql.Column) =
+  private def conceptNode(source: Column, code: Column) =
     concat_ws(":", source, code)
+
+  /** One triple row: (subj, pred, obj) then the qualifier tail. */
+  private def triple(subj: Column, pred: String, obj: Column, tail: Seq[Column]): Seq[Column] =
+    Seq(subj.as("subj"), lit(pred).as("pred"), obj.as("obj")) ++ tail
+
+  /** The qualifiers of a concept triple, from a perTurn/perConv aggregate. */
+  private def support: Seq[Column] = Seq(
+    col("conv_id"),
+    col("confidence"),
+    col("unique_count").cast("int").as("unique_count"),
+    col("total_count").cast("int").as("total_count"),
+    col("icd10_code"), col("icd10_name"))
+
+  /** The qualifiers of a structural triple: certain, counted once, no code. */
+  private def constant: Seq[Column] = Seq(
+    col("conv_id"),
+    lit(1.0).as("confidence"),
+    lit(1).as("unique_count"),
+    lit(1).as("total_count"),
+    lit(null).cast("string").as("icd10_code"),
+    lit(null).cast("string").as("icd10_name"))
 
   /** (turn) -[mentions]-> (concept), qualified, from the per-turn agg. */
   def mentionsTriples(turnAgg: DataFrame): DataFrame =
-    turnAgg.select(
-      turnNode(col("conv_id"), col("turn_idx")).as("subj"),
-      lit("mentions").as("pred"),
-      conceptNode(col("source"), col("code")).as("obj"),
-      col("conv_id"),
-      col("confidence"),
-      col("unique_count").cast("int").as("unique_count"),
-      col("total_count").cast("int").as("total_count"),
-      col("icd10_code"), col("icd10_name"))
+    turnAgg.select(triple(turnNode(col("conv_id"), col("turn_idx")), "mentions",
+      conceptNode(col("source"), col("code")), support): _*)
 
   /** (conv) -[asserts]-> (concept): conversation-level concept support from
     * ASSISTANT turns only (the reference's analogue: the merged cross-
@@ -43,29 +57,14 @@ object Triples {
     val assistantAgg = turnAgg
       .join(roles, Seq("conv_id", "turn_idx"))
       .filter(col("role") === "assistant")
-    Aggregation.perConv(assistantAgg.drop("role")).select(
-      col("conv_id").as("subj"),
-      lit("asserts").as("pred"),
-      conceptNode(col("source"), col("code")).as("obj"),
-      col("conv_id"),
-      col("confidence"),
-      col("unique_count").cast("int").as("unique_count"),
-      col("total_count").cast("int").as("total_count"),
-      col("icd10_code"), col("icd10_name"))
+    Aggregation.perConv(assistantAgg.drop("role")).select(triple(col("conv_id"), "asserts",
+      conceptNode(col("source"), col("code")), support): _*)
   }
 
   /** (turn) -[uses_tool]-> (tool) for turns with a non-null tool. */
   def usesToolTriples(turns: DataFrame): DataFrame =
-    turns.filter(col("tool").isNotNull).select(
-      turnNode(col("conv_id"), col("turn_idx")).as("subj"),
-      lit("uses_tool").as("pred"),
-      col("tool").as("obj"),
-      col("conv_id"),
-      lit(1.0).as("confidence"),
-      lit(1).as("unique_count"),
-      lit(1).as("total_count"),
-      lit(null).cast("string").as("icd10_code"),
-      lit(null).cast("string").as("icd10_name"))
+    turns.filter(col("tool").isNotNull).select(triple(
+      turnNode(col("conv_id"), col("turn_idx")), "uses_tool", col("tool"), constant): _*)
 
   /** (turn_i) -[replies_to]-> (turn_{i-1}) via a lag window (W6/J5) —
     * the as-of pairing the reference does with its char-offset cursor
@@ -75,16 +74,8 @@ object Triples {
     turns
       .withColumn("prev_idx", lag(col("turn_idx"), 1).over(w))
       .filter(col("prev_idx").isNotNull)
-      .select(
-        turnNode(col("conv_id"), col("turn_idx")).as("subj"),
-        lit("replies_to").as("pred"),
-        turnNode(col("conv_id"), col("prev_idx")).as("obj"),
-        col("conv_id"),
-        lit(1.0).as("confidence"),
-        lit(1).as("unique_count"),
-        lit(1).as("total_count"),
-        lit(null).cast("string").as("icd10_code"),
-        lit(null).cast("string").as("icd10_name"))
+      .select(triple(turnNode(col("conv_id"), col("turn_idx")), "replies_to",
+        turnNode(col("conv_id"), col("prev_idx")), constant): _*)
   }
 
   /** All four predicates unioned into one graph table.

@@ -21,12 +21,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    ([[graft.Pipeline.triples]]: segment → extract → link → perTurn →
   *    triples) inside foreachBatch, on a plain DataFrame;
   *  - commit/supersede → foreachBatch writes each micro-batch's triples
-  *    under `(batch_id, bucket)` partitions with a scoped overwrite
+  *    under `(batch_id, bucket)` partitions ([[graft.operators.GraphSink.Buckets]]
+  *    buckets, the batch sink's one layout) with a scoped overwrite
   *    ([[graft.util.PartitionedParquet.scopedOverwrite]]), so a
   *    replayed micro-batch (Spark redelivers the same batchId after a
   *    failure) overwrites exactly its own output — idempotent, and the
-  *    manifest row (one per batch × bucket, lineage = batch id) is written
-  *    only after the data commit, mirroring [[graft.operators.GraphSink]].
+  *    manifest row (one per batch × bucket, lineage = batch id, the batch
+  *    sink's manifest schema) is written only after the data commit,
+  *    mirroring [[graft.operators.GraphSink]]. One stream per sink dir.
   *
   * Windowed predicates (`replies_to` via lag) are computed within a
   * micro-batch; the ingest contract is conversation-complete batches
@@ -42,8 +44,8 @@ object StreamingTriples {
 
   /** One micro-batch of the full pipeline body: turns → triples, committed
     * idempotently under (batch_id, bucket) partitions + manifest row. */
-  def commitBatch(gaz: Array[GazRow], gazDf: DataFrame, dir: String,
-      nBuckets: Int = 16)(batch: DataFrame, batchId: Long): Unit = {
+  def commitBatch(gaz: Array[GazRow], gazDf: DataFrame, dir: String)(
+      batch: DataFrame, batchId: Long): Unit = {
     // Segmentation, the asserts branch's role join, uses_tool and
     // replies_to each scan the turns, and under `start` each scan would
     // re-run the watermarked dedup: read the micro-batch once.
@@ -52,7 +54,7 @@ object StreamingTriples {
       if (turns.isEmpty) return
       val spark = turns.sparkSession
       val triples = Pipeline.triples(turns, gaz, gazDf, turns)
-        .withColumn("bucket", GraphSink.bucketCol(nBuckets))
+        .withColumn("bucket", GraphSink.bucketCol)
         .withColumn("batch_id", lit(batchId))
       PartitionedParquet.scopedOverwrite(triples, "batch_id", "bucket")
         .parquet(s"$dir/triples")

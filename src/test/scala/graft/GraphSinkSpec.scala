@@ -3,11 +3,14 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.operators.{Dedup, GraphSink}
+import graft.streaming.StreamingTriples
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The manifest-committed resumable sink: idempotent resume, foreign
-  * bucket dirs, the per-bucket manifest metrics, and the session conf it
-  * must leave alone. */
+  * bucket dirs, the per-bucket manifest metrics, the one manifest schema
+  * and bucket layout it shares with the stream sink, and the session conf
+  * it must leave alone. */
 class GraphSinkSpec extends GraftSuite {
   import spark.implicits._
 
@@ -19,21 +22,22 @@ class GraphSinkSpec extends GraftSuite {
 
     // fresh full run
     val freshDir = tmp()
-    GraphSink.writeResumable(triples, freshDir, "run_full", nBuckets = 8)
+    GraphSink.writeResumable(triples, freshDir, "run_full")
     val fresh = GraphSink.readTriples(spark, freshDir).drop("bucket")
       .collect().toSet
 
-    // crashed run: only half the buckets committed, then resume
+    // crashed run: only the lower half of the buckets committed, then resume
     val resumeDir = tmp()
-    val n1 = GraphSink.writeResumable(triples, resumeDir, "run_a", nBuckets = 8,
-      onlyBuckets = Some(Seq(0L, 1L, 2L, 3L)))
-    assert(n1 <= 4)
-    val n2 = GraphSink.writeResumable(triples, resumeDir, "run_b", nBuckets = 8)
+    val half = GraphSink.Buckets / 2
+    val n1 = GraphSink.writeResumable(triples.filter(GraphSink.bucketCol < half),
+      resumeDir, "run_a")
+    assert(n1 <= half)
+    val n2 = GraphSink.writeResumable(triples, resumeDir, "run_b")
     val resumed = GraphSink.readTriples(spark, resumeDir).drop("bucket")
       .collect().toSet
     assert(resumed === fresh)
     // second resume is a no-op: every bucket already committed
-    val n3 = GraphSink.writeResumable(triples, resumeDir, "run_c", nBuckets = 8)
+    val n3 = GraphSink.writeResumable(triples, resumeDir, "run_c")
     assert(n3 === 0)
 
     // manifest lineage: per-bucket counts + checksums cover the whole table
@@ -61,7 +65,7 @@ class GraphSinkSpec extends GraftSuite {
         "doc_id", "text", idx, epoch = 1L)
       GraphSink.writeResumable(
         Pipeline.triples(spark, Pipeline.Config(nConvs = 4, nBase = 32)).toDF(),
-        tmp(), "conf_leak", nBuckets = 4)
+        tmp(), "conf_leak")
       assert(spark.conf.get(key) === before)
       Dedup.buildMinhashIndex(corpus, "doc_id", "text", idx)
       for (table <- Seq("meta", "bands", "docs")) {
@@ -81,7 +85,7 @@ class GraphSinkSpec extends GraftSuite {
     Files.createDirectories(Paths.get(s"$dir/triples/bucket=not_a_number"))
     Files.createDirectories(Paths.get(s"$dir/triples/_temporary/0"))
     Files.createFile(Paths.get(s"$dir/triples/_SUCCESS"))
-    GraphSink.writeResumable(triples, dir, "junk_tolerant", nBuckets = 4)
+    GraphSink.writeResumable(triples, dir, "junk_tolerant")
     assert(GraphSink.readTriples(spark, dir).count() == triples.count())
     // the junk dirs are outside the contract: left alone, never read back
     assert(new java.io.File(s"$dir/triples/bucket=not_a_number").exists())
@@ -93,31 +97,18 @@ class GraphSinkSpec extends GraftSuite {
       .select("bucket").distinct().collect().map(_.getLong(0)).toSeq.sorted)
   }
 
-  test("sink manifest carries the HLL distinct-subject metric, near exact") {
-    val dir = tmp()
-    val triples = Pipeline.triples(spark, Pipeline.Config(nConvs = 12, nBase = 32)).toDF()
-    GraphSink.writeResumable(triples, dir, "hll_run", nBuckets = 4)
-    val m = spark.read.parquet(GraphSink.manifestPath(dir))
-    val approx = m.agg(sum($"subj_approx_distinct")).head().getLong(0)
-    val exact = GraphSink.readTriples(spark, dir)
-      .groupBy($"bucket").agg(countDistinct($"subj").as("d"))
-      .agg(sum($"d")).head().getLong(0)
-    assert(approx > 0 && math.abs(approx - exact).toDouble / exact < 0.1,
-      s"HLL per-bucket distinct $approx vs exact $exact")
-  }
-
   test("writeResumable survives stale files in an uncommitted bucket (no wedge)") {
     val cfg = Pipeline.Config(nConvs = 12, nBase = 32)
     val triples = Pipeline.triples(spark, cfg).toDF()
     val dir = SparkEntry.tmpDir("graft_sink_stale_")
     // a crashed prior attempt left output in a bucket id this run's data
-    // never produces (nBuckets = 4 ⇒ real buckets are 0..3): under the r3
+    // never produces (real buckets are 0 until GraphSink.Buckets): under the r3
     // code the metrics read-back counted these rows (recorded != written)
     // and EVERY retry aborted — a permanent wedge (ADVICE r3)
     triples.limit(7).withColumn("bucket", lit(99L))
       .write.partitionBy("bucket").mode("append").parquet(s"$dir/triples")
-    val n = GraphSink.writeResumable(triples, dir, "run_after_crash", nBuckets = 4)
-    assert(n == 4L)
+    val n = GraphSink.writeResumable(triples, dir, "run_after_crash")
+    assert(n == triples.select(GraphSink.bucketCol).distinct().count())
     // the stale bucket is gone; what's on disk is exactly this run's output
     val onDisk = GraphSink.readTriples(spark, dir)
     assert(onDisk.filter($"bucket" === 99L).count() == 0)
@@ -127,20 +118,22 @@ class GraphSinkSpec extends GraftSuite {
     assert(m.agg(sum($"triple_count")).head().getLong(0) == triples.count())
   }
 
-  test("onlyBuckets-restricted run sweeps ONLY its own stale buckets " +
-      "(disjoint concurrent writers stay safe)") {
-    val cfg = Pipeline.Config(nConvs = 12, nBase = 32)
-    val triples = Pipeline.triples(spark, cfg).toDF()
-    val dir = SparkEntry.tmpDir("graft_sink_scope_")
-    // a sibling writer's in-flight (uncommitted) output in bucket 99 …
-    triples.limit(5).withColumn("bucket", lit(99L))
-      .write.partitionBy("bucket").mode("append").parquet(s"$dir/triples")
-    // … must survive a run restricted to other buckets
-    GraphSink.writeResumable(triples, dir, "scoped", nBuckets = 4,
-      onlyBuckets = Some(Seq(0L, 1L)))
-    assert(GraphSink.readTriples(spark, dir).filter($"bucket" === 99L).count() == 5)
-    // an UNRESTRICTED run then sweeps it (the wedge fix)
-    GraphSink.writeResumable(triples, dir, "full", nBuckets = 4)
-    assert(GraphSink.readTriples(spark, dir).filter($"bucket" === 99L).count() == 0)
+  test("the batch and stream sinks write one manifest schema and put each " +
+      "triple in the same bucket") {
+    val (turns, gaz, gazDf) = Pipeline.synthetic(spark, Pipeline.Config(nConvs = 8, nBase = 32))
+    val batchDir = tmp()
+    val streamDir = tmp()
+    GraphSink.writeResumable(Pipeline.triples(turns, gaz, gazDf, turns).toDF(),
+      batchDir, "batch")
+    StreamingTriples.commitBatch(gaz, gazDf, streamDir)(turns, 0L)
+    // one schema: a reader of either manifest reads the other unchanged
+    assert(GraphSink.readManifest(spark, batchDir).schema ===
+      GraphSink.readManifest(spark, streamDir).schema)
+    def placed(df: DataFrame) = df
+      .select(col("subj"), col("pred"), col("obj"), col("bucket").cast("long"))
+      .collect().map(_.toString).sorted.toSeq
+    val batch = placed(GraphSink.readTriples(spark, batchDir))
+    assert(batch.nonEmpty)
+    assert(placed(StreamingTriples.readTriples(spark, streamDir)) === batch)
   }
 }

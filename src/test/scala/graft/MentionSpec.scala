@@ -136,20 +136,26 @@ class MentionSpec extends GraftSuite {
   }
 
   test("automaton cache: LRU-bounded, recent gazetteers survive") {
-    val fps = (0 until 5).map { g =>
+    val built = (0 until 5).map { g =>
       val gaz = Array(GazRow(s"CX$g", "SNOMEDCT_US", "PT", "Y", s"K$g", s"term$g"))
       val fp = MentionExtractor.gazFingerprint(gaz)
-      (0 to 2).foreach(v => MentionExtractor.variantFor(fp, gaz, v))
-      fp
+      (fp, gaz, (0 to 2).map(v => MentionExtractor.variantFor(fp, gaz, v)))
     }
-    assert(MentionExtractor.cacheSize <= MentionExtractor.CacheCapacity)
+    // a cached variant is returned as the SAME instance, an evicted one is
+    // rebuilt as a new one. Newest first: a hit only reorders survivors,
+    // and the eviction a miss causes drops a variant already checked.
+    val cached = for (g <- 4 to 0 by -1; v <- 2 to 0 by -1) yield {
+      val (fp, gaz, vs) = built(g)
+      MentionExtractor.variantFor(fp, gaz, v) eq vs(v)
+    }
+    assert(cached.count(identity) <= MentionExtractor.CacheCapacity)
     // most-recent gazetteer fully cached; the first of the five evicted
-    (0 to 2).foreach(v => assert(MentionExtractor.cacheContains(fps.last, v)))
-    assert(!MentionExtractor.cacheContains(fps.head, 0))
+    assert(cached.take(3).forall(identity))
+    assert(!cached.last)
     // hot-path behavior unchanged: a hit returns the SAME instance
-    val gaz4 = Array(GazRow("CX4", "SNOMEDCT_US", "PT", "Y", "K4", "term4"))
-    val again = MentionExtractor.variantFor(fps.last, gaz4, 0)
-    assert(again eq MentionExtractor.variantFor(fps.last, gaz4, 0))
+    val (fp4, gaz4, _) = built(4)
+    val again = MentionExtractor.variantFor(fp4, gaz4, 0)
+    assert(again eq MentionExtractor.variantFor(fp4, gaz4, 0))
   }
 
   test("merged v0/v1 extractor walk == three independent variant walks") {
